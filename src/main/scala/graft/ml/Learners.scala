@@ -209,6 +209,45 @@ trait OnlineLearner extends Serializable {
   }
 }
 
+/** The held-out scoring rule, shared by the batch Trainer's evaluation and
+  * the spoke's Query answers (FlinkSpoke.scala:160-163). Per point it adds
+  * the loss and either a hit (classifiers) or a squared error; [[result]]
+  * turns the sums into (avg loss, score), where score is accuracy for
+  * classifiers, -mean distortion for clustering and -RMSE otherwise.
+  */
+object HeldOut {
+  /** (loss sum, hit or squared-error sum, count) over `points`, summed in
+    * point order; a null model scores nothing. */
+  def sums(learner: OnlineLearner, model: ModelState,
+      points: Iterator[(Array[Double], Double)]): (Double, Double, Long) = {
+    var ls = 0.0; var sc = 0.0; var n = 0L
+    if (model != null) points.foreach { case (x, y) =>
+      ls += learner.loss(model, x, y)
+      if (learner.isClassifier) { if (learner.predict(model, x) == y) sc += 1.0 }
+      else { val e = learner.predict(model, x) - y; sc += e * e }
+      n += 1
+    }
+    (ls, sc, n)
+  }
+
+  /** (avg loss, score) from [[sums]] (added up across rings); (0, 0) when
+    * nothing was scored. */
+  def result(learner: OnlineLearner, sums: (Double, Double, Long))
+      : (Double, Double) = {
+    val (ls, sc, n) = sums
+    if (n == 0) (0.0, 0.0)
+    else {
+      val avgLoss = ls / n
+      // type test, not name test: MiniBatchKMeans scores as clustering too
+      val score =
+        if (learner.isClassifier) sc / n
+        else if (learner.isInstanceOf[OnlineKMeans]) -avgLoss
+        else -math.sqrt(sc / n)
+      (avgLoss, score)
+    }
+  }
+}
+
 /** Passive-Aggressive binary classifier, PA-II variant (Crammer et al.,
   * JMLR 2006). Labels in {-1, +1}.
   */
@@ -646,9 +685,20 @@ final class MiniBatchKMeans(k0: Int) extends OnlineKMeans(k0) {
 }
 
 object MiniBatchKMeans {
-  /** The shared centroid seed the parallel fit requires (Trainer.fit
-    * enforces it): OnlineKMeans's own farthest-first rule applied ONCE over
-    * a small deterministic point prefix (a bounded driver-side set),
+  /** The parallel-fit contract both trainers enforce: with no shared seed,
+    * round-1 replicas farthest-first-seed independently and the
+    * count-weighted merge averages MISALIGNED cluster ids — silently wrong
+    * centroids. Fail loudly instead; [[sharedSeed]] builds the seed. */
+  def requireSharedSeed(learner: OnlineLearner, partitions: Int,
+      seeded: Boolean): Unit =
+    require(!(learner.isInstanceOf[MiniBatchKMeans] && partitions > 1 &&
+        !seeded),
+      "MiniBatchKMeans under parallel training requires a shared seed model " +
+        "(the trainer's init param) — see MiniBatchKMeans.sharedSeed")
+
+  /** The shared centroid seed the parallel fit requires (see
+    * [[requireSharedSeed]]): OnlineKMeans's own farthest-first rule applied
+    * ONCE over a small deterministic point prefix (a bounded driver-side set),
     * counters zeroed so the Trainer's fitted/loss accounting starts clean.
     * ml32, its probe and its suite test all build the seed here.
     */

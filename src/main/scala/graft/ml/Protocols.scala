@@ -1,5 +1,9 @@
 package graft.ml
 
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
+
 /** Distributed-training protocols, mirroring the reference's catalog
   * (MLNodeGenerator.scala:26-64): CentralizedTraining, SingleLearner,
   * Asynchronous, Synchronous, SSP, EASGD, GM, FGM.
@@ -53,8 +57,7 @@ sealed trait Protocol extends Serializable {
       learner: OnlineLearner, stats: ProtocolStats,
       totalReplicas: Long = -1L): ModelState = {
     val merged = learner.merge(replicas, prev)
-    stats.modelsShipped += replicas.length
-    stats.bytesShipped += replicas.map(_.params.length.toLong * 8L).sum
+    Protocols.charge(stats, replicas)
     merged
   }
 }
@@ -90,17 +93,11 @@ final case class SSP(s: Int) extends Protocol {
     val frontier = if (replicas.isEmpty) 0L else replicas.map(_.seedRound).max
     val admitted = replicas.filter(r => frontier - r.seedRound <= s.toLong)
     if (admitted.isEmpty) prev match {
-      // all replicas over-stale: global advances by zero, with zeroed
-      // per-round counters (same double-count hazard as DriftGated)
-      case Some(pm) =>
-        val keep = pm.deepCopy
-        keep.n = 0L
-        keep.cumLoss = 0.0
-        keep
+      // all replicas over-stale: the global advances by zero
+      case Some(pm) => Protocols.frozen(pm)
       case None => learner.merge(admitted, prev)
     } else {
-      stats.modelsShipped += admitted.length
-      stats.bytesShipped += admitted.map(_.params.length.toLong * 8L).sum
+      Protocols.charge(stats, admitted)
       learner.merge(admitted, prev)
     }
   }
@@ -128,8 +125,7 @@ final case class EASGD(alpha: Double) extends Protocol {
       learner: OnlineLearner, stats: ProtocolStats,
       totalReplicas: Long = -1L): ModelState = {
     val avg = learner.merge(replicas, prev)
-    stats.modelsShipped += replicas.length
-    stats.bytesShipped += replicas.map(_.params.length.toLong * 8L).sum
+    Protocols.charge(stats, replicas)
     prev match {
       case Some(center: LinearModel) =>
         val a = avg.asInstanceOf[LinearModel]
@@ -167,22 +163,12 @@ final case class DriftGated(override val name: String, threshold: Double)
     val shipped = replicas.filter(ships(_, prev))
     val total = if (totalReplicas >= 0) totalReplicas else replicas.length.toLong
     if (shipped.isEmpty) prev match {
-      // Nothing shipped: the hub's view advances by zero — return a copy of
-      // the previous global with ZERO per-round counters. Returning prev
-      // itself would feed its RUNNING totals back into the caller's
-      // `totalFitted += merged.n` accumulation, double-counting fitted
-      // points on every consecutive all-skipped round (the reference's hub
-      // only counts statistics that actually arrive).
-      case Some(pm) =>
-        val keep = pm.deepCopy
-        keep.n = 0L
-        keep.cumLoss = 0.0
-        keep
+      // nothing shipped: the hub's view advances by zero
+      case Some(pm) => Protocols.frozen(pm)
       case None => learner.merge(replicas, prev)
     }
     else {
-      stats.modelsShipped += shipped.length
-      stats.bytesShipped += shipped.map(_.params.length.toLong * 8L).sum
+      Protocols.charge(stats, shipped)
       val base = prev.toSeq.filterNot(_ => shipped.length.toLong == total)
       learner.merge(base ++ shipped, prev)
     }
@@ -207,11 +193,12 @@ final case class DriftGated(override val name: String, threshold: Double)
   * ZERO. T = 0 degenerates to Synchronous (every round a violation).
   *
   * The decision is GLOBAL (a sum over workers), so unlike GM it cannot be
-  * a map-side [[ships]] predicate: the batch AND streaming trainers run a
-  * real scalar phase between jobs (frozen rounds move k*8 bytes, never
-  * parameter vectors) and call [[decide]]/[[syncFold]]; [[aggregate]]
-  * keeps the identical one-shot semantics for callers that already hold
-  * every replica driver-side. The quantum is driver-held mutable state
+  * a map-side [[ships]] predicate: [[Protocols.round]], the one round step
+  * both trainers call, runs a real scalar phase first (frozen rounds move
+  * k*8 bytes, never parameter vectors) and calls [[decide]]; a confirmed
+  * violation then ships every replica through the same chunked path as
+  * every other protocol, and the inherited [[aggregate]] folds them
+  * (exactly the Synchronous merge). The quantum is driver-held mutable state
   * (like SSP's recent-globals window) — one double; FGM is deliberately a
   * PLAIN class, not a case class, so copy/equality can never silently
   * fork or discard that subround state (r9 advisor note).
@@ -252,19 +239,67 @@ final class FGM(val threshold: Double) extends Protocol {
       else { thetaV = -psi / (2.0 * k); false }
     }
   }
+}
 
-  /** The sync fold: everyone shipped, the global is their count-weighted
-    * average (exactly the Synchronous merge). */
-  def syncFold(replicas: Seq[ModelState], prev: Option[ModelState],
-      learner: OnlineLearner, stats: ProtocolStats): ModelState = {
-    stats.modelsShipped += replicas.length
-    stats.bytesShipped += replicas.map(_.params.length.toLong * 8L).sum
-    learner.merge(replicas, prev)
+object Protocols {
+  val names: Set[String] = Set("CentralizedTraining", "SingleLearner",
+    "Asynchronous", "Synchronous", "SSP", "EASGD", "GM", "FGM")
+
+  /** One protocol round: the hub's ship/merge step, shared by the batch
+    * Trainer and the streaming trainer. `replicas` holds this round's
+    * trained replicas (at most one per partition), `global` the previous
+    * global; returns the next global, or None when no replica trained.
+    *
+    * FGM with a global first runs its scalar phase: one drift norm per
+    * worker leaves the executors, and [[FGM.decide]] either freezes the
+    * round (zero parameter blocks move) or lets every replica ship. Every
+    * other round ships through the map-side [[Protocol.ships]] gate —
+    * replicas that stay home send a 1-row marker instead of O(params) —
+    * as <=maxMsgParams-double [[ParamBlock]]s, which are collected,
+    * reassembled in partition order and folded by [[Protocol.aggregate]].
+    */
+  def round(replicas: RDD[ModelState], global: Option[ModelState],
+      protocol: Protocol, learner: OnlineLearner, maxMsgParams: Int,
+      stats: ProtocolStats): Option[ModelState] = {
+    val bcGlobal = replicas.sparkContext.broadcast(global)
+    def ship(repl: RDD[ModelState]): Option[ModelState] = {
+      val collected = repl.mapPartitions { it =>
+        val pid = TaskContext.getPartitionId()
+        it.flatMap { m =>
+          if (protocol.ships(m, bcGlobal.value))
+            ModelWire.chunk(m, maxMsgParams, pid).iterator.map(Option(_))
+          else Iterator.single(Option.empty[ParamBlock])
+        }
+      }.collect()
+      val blocks = collected.flatten.toSeq
+      val shipped = ModelWire.reassemble(blocks,
+        (dim, ps) => learner.init(dim).loadWire(ps))
+      stats.blocks += blocks.length
+      if (collected.isEmpty) None
+      else Some(protocol.aggregate(shipped, global, learner, stats,
+        totalReplicas =
+          collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)))
+    }
+    (protocol, global) match {
+      case (fgm: FGM, Some(g)) =>
+        val repl = replicas.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val drifts = repl
+            .map(m => driftNorm(m.params, bcGlobal.value.get.params))
+            .collect()
+          if (drifts.isEmpty) None
+          else if (!fgm.decide(drifts.toSeq, stats)) Some(frozen(g))
+          else ship(repl)
+        } finally repl.unpersist(blocking = false)
+      case _ => ship(replicas)
+    }
   }
 
-  /** Zero-advance round: a copy of the previous global with zeroed
-    * per-round counters (the DriftGated all-skip shape — returning prev
-    * itself would double-count fitted points). */
+  /** Zero-advance round: a copy of the previous global with ZERO per-round
+    * counters. Returning prev itself would feed its RUNNING totals back
+    * into the trainers' `totalFitted += merged.n` accumulation,
+    * double-counting fitted points on every consecutive zero-advance round
+    * (the reference's hub only counts statistics that actually arrive). */
   def frozen(prev: ModelState): ModelState = {
     val keep = prev.deepCopy
     keep.n = 0L
@@ -272,26 +307,12 @@ final class FGM(val threshold: Double) extends Protocol {
     keep
   }
 
-  /** One-shot path for callers that already hold every replica driver-side
-    * (the streaming trainer): identical decision + fold, with the scalar
-    * phases charged as in the two-phase batch path. */
-  override def aggregate(replicas: Seq[ModelState], prev: Option[ModelState],
-      learner: OnlineLearner, stats: ProtocolStats,
-      totalReplicas: Long = -1L): ModelState = prev match {
-    case None => syncFold(replicas, prev, learner, stats) // round 1 bootstrap
-    case Some(pm) =>
-      if (replicas.isEmpty) frozen(pm)
-      else {
-        val drifts = replicas.map(r => Protocols.driftNorm(r.params, pm.params))
-        if (decide(drifts, stats)) syncFold(replicas, prev, learner, stats)
-        else frozen(pm)
-      }
+  /** Charge shipped replicas to the ledger: one model and 8 bytes per
+    * parameter each. */
+  def charge(stats: ProtocolStats, shipped: Seq[ModelState]): Unit = {
+    stats.modelsShipped += shipped.length
+    stats.bytesShipped += shipped.map(_.params.length.toLong * 8L).sum
   }
-}
-
-object Protocols {
-  val names: Set[String] = Set("CentralizedTraining", "SingleLearner",
-    "Asynchronous", "Synchronous", "SSP", "EASGD", "GM", "FGM")
 
   /** The l2 parameter drift shared by GM's ship gate, FGM's safe function,
     * and their oracles: ascending-index left-associated sum seeded 0.0

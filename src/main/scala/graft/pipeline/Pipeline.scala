@@ -106,15 +106,8 @@ object Trainer {
     protocol.maxParallelism.foreach { p =>
       if (tdata.getNumPartitions > p) tdata = tdata.coalesce(p)
     }
-    // the documented MiniBatchKMeans contract, enforced (r11 review): with
-    // no shared seed, round-1 replicas farthest-first-seed independently and
-    // the count-weighted merge averages MISALIGNED cluster ids — silently
-    // wrong centroids. Fail loudly instead; MiniBatchKMeans.sharedSeed
-    // builds the seed.
-    require(!(learner.isInstanceOf[MiniBatchKMeans] &&
-        tdata.getNumPartitions > 1 && init.isEmpty),
-      "MiniBatchKMeans under parallel training requires a shared seed model " +
-        "(Trainer.fit init param) — see MiniBatchKMeans.sharedSeed")
+    MiniBatchKMeans.requireSharedSeed(learner, tdata.getNumPartitions,
+      init.isDefined)
     tdata.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val dim = tdata.first()._1.length
@@ -153,10 +146,6 @@ object Trainer {
         // granularity. (Previously a documented collapse onto Synchronous;
         // the AsyncEqualsUnboundedSSP suite gate pins the new semantics.)
         case Asynchronous => Some(Int.MaxValue)
-        case _ => None
-      }
-      val fgmProto: Option[FGM] = protocol match {
-        case f: FGM => Some(f)
         case _ => None
       }
       val numParts = tdata.getNumPartitions
@@ -198,79 +187,27 @@ object Trainer {
           learner.finish(m)
           if (cnt == 0) Iterator.empty else Iterator.single(m)
         }
-        val mergedOpt: Option[ModelState] = if (fgmProto.isDefined &&
-            global.isDefined) {
-          // FGM two-level rounds (see Protocols.FGM): frozen rounds move
-          // only one 8-byte scalar per worker off the executors; parameter
-          // vectors travel ONLY on a confirmed global violation — and then
-          // every replica ships (all-or-nothing, never GM's partial fold).
-          // Round 1 (no global yet) bootstraps through the chunked path
-          // below, where FGM.ships is always true.
-          val fgm = fgmProto.get
-          val repl = replRdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            // counter phase: one drift norm per worker, partition order
-            val drifts = repl
-              .map(m => Protocols.driftNorm(m.params,
-                bcSeeds.value.head.get.params))
-              .collect()
-            if (drifts.isEmpty) None
-            else if (!fgm.decide(drifts.toSeq, stats))
-              Some(fgm.frozen(global.get))
-            else {
-              val maxP = spec.maxMsgParams
-              val blocks = repl.mapPartitions { it =>
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                it.flatMap(m => ModelWire.chunk(m, maxP, pid).iterator)
-              }.collect().toSeq
-              val shipped = ModelWire.reassemble(blocks,
-                (bdim, ps) => learner.init(bdim).loadWire(ps))
-              stats.blocks += blocks.length
-              Some(fgm.syncFold(shipped, global, learner, stats))
-            }
-          } finally repl.unpersist(blocking = false)
-        } else if (useTreeMerge) {
-            if (replRdd.isEmpty()) None
-            else {
-              val (m, k, bytes) = replRdd
-                .map(r => (r, 1L, r.params.length.toLong * 8L))
-                .treeReduce { case ((ma, ka, ba), (mb, kb, bb)) =>
-                  (learner.merge(Seq(ma, mb)), ka + kb, ba + bb)
-                }
-              stats.modelsShipped += k
-              stats.bytesShipped += bytes
-              // each replica enters the merge tree once, as
-              // ceil(payload/maxMsgParams) transport blocks
-              stats.blocks +=
-                k * ((m.wireParams.length.toLong + spec.maxMsgParams - 1) /
-                  spec.maxMsgParams).max(1L)
-              Some(m)
-            }
-          } else {
-            // Chunked ship path: the map-side gate drops non-drifted
-            // replicas on their executors (the driver receives a 1-row
-            // marker instead of O(params) per skipped replica); shipped
-            // replicas are split into <=maxMsgParams-double blocks so no
-            // single collected record exceeds the message cap, then
-            // reassembled before the protocol merge.
-            val maxP = spec.maxMsgParams
-            val collected = replRdd.mapPartitions { it =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              it.flatMap { m =>
-                if (protocol.ships(m, bcSeeds.value.head))
-                  ModelWire.chunk(m, maxP, pid).iterator.map(Option(_))
-                else Iterator.single(Option.empty[ParamBlock])
+        // plain averages over many partitions fold in the tree; every other
+        // round is the protocol round the streaming trainer shares
+        val mergedOpt: Option[ModelState] =
+          if (!useTreeMerge)
+            Protocols.round(replRdd, global, protocol, learner,
+              spec.maxMsgParams, stats)
+          else if (replRdd.isEmpty()) None
+          else {
+            val (m, k, bytes) = replRdd
+              .map(r => (r, 1L, r.params.length.toLong * 8L))
+              .treeReduce { case ((ma, ka, ba), (mb, kb, bb)) =>
+                (learner.merge(Seq(ma, mb)), ka + kb, ba + bb)
               }
-            }.collect()
-            val blocks = collected.flatten.toSeq
-            val shipped = ModelWire.reassemble(blocks,
-              (bdim, ps) => learner.init(bdim).loadWire(ps))
-            stats.blocks += blocks.length
-            val totalReplicas =
-              collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)
-            if (collected.isEmpty) None
-            else Some(protocol.aggregate(shipped, global, learner, stats,
-              totalReplicas = totalReplicas))
+            stats.modelsShipped += k
+            stats.bytesShipped += bytes
+            // each replica enters the merge tree once, as
+            // ceil(payload/maxMsgParams) transport blocks
+            stats.blocks +=
+              k * ((m.wireParams.length.toLong + spec.maxMsgParams - 1) /
+                spec.maxMsgParams).max(1L)
+            Some(m)
           }
         mergedOpt.foreach { merged =>
           totalFitted += merged.n
@@ -292,15 +229,14 @@ object Trainer {
     } finally tdata.unpersist(blocking = false)
   }
 
-  /** Replay the deterministic split and evaluate the model on the held-out
-    * ring contents: (avg test loss, score). Score = accuracy for
-    * classifiers, -RMSE for regressors, -mean distortion for clustering.
+  /** Replay the deterministic split and score the model on the held-out
+    * ring contents with [[HeldOut]]: (avg test loss, score).
     */
   private def evaluate(sc: org.apache.spark.SparkContext,
       tdata: RDD[(Array[Double], Double)], learner: OnlineLearner,
       model: ModelState, testCap: Int): (Double, Double) = {
     val bcModel = sc.broadcast(model)
-    val (lossSum, scoreSum, n) = tdata.mapPartitions { it =>
+    val sums = tdata.mapPartitions { it =>
       val ring = new Array[(Array[Double], Double)](testCap)
       var ringSize = 0; var ringPos = 0; var cnt = 0L
       it.foreach { case (x, y) =>
@@ -310,31 +246,11 @@ object Trainer {
         }
         cnt += 1
       }
-      val m = bcModel.value
-      var ls = 0.0; var sc2 = 0.0; var k = 0L
-      var i = 0
-      while (i < ringSize) {
-        val (x, y) = ring(i)
-        ls += learner.loss(m, x, y)
-        if (learner.isClassifier) { if (learner.predict(m, x) == y) sc2 += 1.0 }
-        else { val e = learner.predict(m, x) - y; sc2 += e * e }
-        k += 1
-        i += 1
-      }
-      Iterator.single((ls, sc2, k))
+      Iterator.single(HeldOut.sums(learner, bcModel.value,
+        ring.iterator.take(ringSize)))
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-    if (n == 0) (0.0, 0.0)
-    else {
-      val avgLoss = lossSum / n
-      val score =
-        if (learner.isClassifier) scoreSum / n
-        else if (learner.isInstanceOf[OnlineKMeans]) -avgLossSafe(lossSum, n)
-        else -math.sqrt(scoreSum / n)
-      (avgLoss, score)
-    }
+    HeldOut.result(learner, sums)
   }
-
-  private def avgLossSafe(s: Double, n: Long): Double = if (n == 0) 0.0 else s / n
 }
 
 /** The reference's PipelineMap (PipelineMap.scala:14-71): a validated

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ml.{Learners, ModelState, OnlineLearner}
+import graft.ml.{HeldOut, Learners, ModelState, OnlineLearner}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
@@ -55,9 +55,41 @@ object Streaming {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Create a streaming scratch directory under [[scratchBase]]. */
-  def scratchDir(prefix: String): String =
-    Files.createTempDirectory(scratchBase, prefix).toString
+  /** Every dir [[scratchDir]] created and [[cleanScratch]] has not yet
+    * deleted. */
+  private val scratchCreated =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** One JVM shutdown hook deletes whatever scratch is left: on tmpfs,
+    * leftover dirs hold RAM until the host reboots. */
+  private lazy val scratchHook: Unit = sys.addShutdownHook(cleanScratch())
+
+  /** Create a streaming scratch directory under [[scratchBase]], deleted
+    * at JVM exit. */
+  def scratchDir(prefix: String): String = {
+    scratchHook
+    val dir = Files.createTempDirectory(scratchBase, prefix).toString
+    scratchCreated.add(dir)
+    dir
+  }
+
+  /** Recursively delete `dirs` (default: every scratch dir still alive);
+    * paths [[scratchDir]] did not create are ignored. Best effort: a dir
+    * that something still writes into may survive. Memoized staging that
+    * points into a deleted dir is stale, so only the exit hook deletes
+    * them all. */
+  def cleanScratch(dirs: Iterable[String] = scratchCreated.toArray(
+      Array.empty[String]).toSeq): Unit =
+    dirs.filter(scratchCreated.remove).foreach { d =>
+      try {
+        val walk = Files.walk(java.nio.file.Paths.get(d))
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+      }
+    }
 
   private val stagedDirCache =
     scala.collection.concurrent.TrieMap[(String, String), String]()
@@ -218,31 +250,6 @@ object SpokeCore {
     ois.readObject().asInstanceOf[ModelState]
   }
 
-  /** Score a model against the held-out ring: (avg test loss, score).
-    * Score = accuracy for classifiers, -RMSE for regressors, -mean
-    * distortion for clustering — same contract as the batch Trainer.
-    */
-  def evalRing(learner: OnlineLearner, model: ModelState,
-      ring: Seq[(Seq[Double], Double)]): (Double, Double) = {
-    if (model == null || ring.isEmpty) return (0.0, 0.0)
-    var ls = 0.0; var sc = 0.0
-    ring.foreach { case (f, y) =>
-      val x = f.toArray
-      ls += learner.loss(model, x, y)
-      if (learner.isClassifier) { if (learner.predict(model, x) == y) sc += 1.0 }
-      else { val e = learner.predict(model, x) - y; sc += e * e }
-    }
-    val n = ring.length
-    val avgLoss = ls / n
-    val score =
-      if (learner.isClassifier) sc / n
-      // type test, not name test: MiniBatchKMeans must score as clustering
-      // too (same contract as the batch Trainer, Pipeline.scala)
-      else if (learner.isInstanceOf[graft.ml.OnlineKMeans]) -avgLoss
-      else -math.sqrt(sc / n)
-    (avgLoss, score)
-  }
-
   /** One trigger's worth of events for one pipeline.
     *
     * @param extBuffer when set, pre-Create buffering goes through it instead
@@ -298,7 +305,8 @@ object SpokeCore {
 
     def queryScore(): (Long, Double, Double, Double) = {
       val (n, cum) = if (model == null) (0L, 0.0) else (model.n, model.cumLoss)
-      val (tl, sc) = evalRing(learner, model, ring.toSeq)
+      val (tl, sc) = HeldOut.result(learner, HeldOut.sums(learner, model,
+        ring.iterator.map { case (f, y) => (f.toArray, y) }))
       (n, cum, tl, sc)
     }
 

@@ -102,22 +102,12 @@ object StreamingTrainer {
           case Some(p) if rdd.getNumPartitions > p => rdd.coalesce(p)
           case _ => rdd
         }
-        // the batch Trainer's MiniBatchKMeans shared-seed contract, mirrored
-        // here (r11 advisor, medium): with no shared global, multi-partition
-        // round-1 replicas each farthest-first self-seed and the
-        // count-weighted merge averages MISALIGNED cluster ids — silently
-        // wrong centroids. Fail loudly; pass `init =
-        // MiniBatchKMeans.sharedSeed(...)` to fitStream instead.
-        require(!(learner.isInstanceOf[MiniBatchKMeans] &&
-            data.getNumPartitions > 1 && global.isEmpty),
-          "MiniBatchKMeans under parallel streaming training requires a " +
-            "shared seed model (fitStream init param) — see " +
-            "MiniBatchKMeans.sharedSeed")
+        MiniBatchKMeans.requireSharedSeed(learner, data.getNumPartitions,
+          global.isDefined)
         val bcGlobal = spark.sparkContext.broadcast(global)
-        val maxP = spec.maxMsgParams
         // Per-partition replica training (seeded from the broadcast global,
-        // per-round counters zeroed) — the replica RDD is the batch
-        // Trainer's per-round shape, reused by both ship paths below.
+        // per-round counters zeroed); Protocols.round, the step the batch
+        // Trainer runs too, ships and folds the replicas.
         val replRdd = data.mapPartitions { it =>
           var model: ModelState = bcGlobal.value.map(_.deepCopy).orNull
           if (model != null) { model.n = 0L; model.cumLoss = 0.0 }
@@ -130,62 +120,8 @@ object StreamingTrainer {
           if (any) { learner.finish(model); Iterator.single(model) }
           else Iterator.empty
         }
-        val fgmWithGlobal: Option[FGM] = protocol match {
-          case f: FGM if global.isDefined => Some(f)
-          case _ => None
-        }
-        val mergedOpt: Option[ModelState] = fgmWithGlobal match {
-          case Some(fgm) =>
-            // FGM two-level micro-batches, mirroring the batch Trainer
-            // (Pipeline.scala): the scalar counter phase collects ONE drift
-            // norm per worker; parameter vectors leave the executors ONLY
-            // on a confirmed global violation. A frozen batch therefore
-            // moves k*8 bytes AND zero blocks — the bytes ledger st43
-            // gates and the blocks ledger now agree (r9 advisor fix).
-            val repl = replRdd.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val drifts = repl
-                .map(m => Protocols.driftNorm(m.params,
-                  bcGlobal.value.get.params))
-                .collect()
-              if (drifts.isEmpty) None
-              else if (!fgm.decide(drifts.toSeq, stats))
-                Some(fgm.frozen(global.get))
-              else {
-                val blocks = repl.mapPartitions { it =>
-                  val pid = org.apache.spark.TaskContext.getPartitionId()
-                  it.flatMap(m => ModelWire.chunk(m, maxP, pid).iterator)
-                }.collect().toSeq
-                val shipped = ModelWire.reassemble(blocks,
-                  (bdim, ps) => learner.init(bdim).loadWire(ps))
-                stats.blocks += blocks.length
-                Some(fgm.syncFold(shipped, global, learner, stats))
-              }
-            } finally repl.unpersist(blocking = false)
-          case None =>
-            // Same map-side ship gate + chunked ship path as the batch
-            // Trainer: drift-gated protocols keep non-drifted replicas on
-            // their executors, and shipped payloads travel as
-            // <=maxMsgParams-double ParamBlocks (block.dim carries the
-            // data-discovered input dim).
-            val collected = replRdd.mapPartitions { it =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              it.flatMap { model =>
-                if (protocol.ships(model, bcGlobal.value))
-                  ModelWire.chunk(model, maxP, pid).iterator.map(Option(_))
-                else Iterator.single(Option.empty[ParamBlock])
-              }
-            }.collect()
-            val blocks = collected.flatten.toSeq
-            val replicas = ModelWire.reassemble(blocks,
-              (bdim, ps) => learner.init(bdim).loadWire(ps))
-            stats.blocks += blocks.length
-            if (collected.isEmpty) None
-            else Some(protocol.aggregate(replicas, global, learner, stats,
-              totalReplicas =
-                collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)))
-        }
+        val mergedOpt = Protocols.round(replRdd, global, protocol, learner,
+          spec.maxMsgParams, stats)
         mergedOpt.foreach { merged =>
           totalFitted += merged.n
           totalCumLoss += merged.cumLoss

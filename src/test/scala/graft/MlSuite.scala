@@ -196,6 +196,35 @@ class MlSuite extends AnyFunSuite {
     assert(math.abs(out.b - 0.5) < 1e-12)
   }
 
+  test("held-out scoring rule: accuracy, -RMSE, -mean distortion, and " +
+    "(0, 0) with nothing to score") {
+    def score(l: OnlineLearner, m: ModelState, pts: Seq[(Array[Double], Double)]) =
+      HeldOut.result(l, HeldOut.sums(l, m, pts.iterator))
+    // PA: hinge losses 0, 0, 2, 0.5; three of four labels hit
+    val pa = new PAClassifier(0.05)
+    val lin = new LinearModel(Array(1.0, 0.0), 0.0)
+    assert(score(pa, lin, Seq((Array(1.0, 0.0), 1.0), (Array(-1.0, 0.0), -1.0),
+      (Array(1.0, 0.0), -1.0), (Array(0.5, 0.0), 1.0))) == ((0.625, 0.75)))
+    // RegressorPA (epsilon 0): errors 0, -1, 2
+    val reg = Learners.create("RegressorPA", Map("epsilon" -> 0.0))
+    val line = new LinearModel(Array(2.0), 0.0)
+    assert(score(reg, line, Seq((Array(1.0), 2.0), (Array(1.0), 3.0),
+      (Array(2.0), 2.0))) == ((1.0, -math.sqrt(5.0 / 3))))
+    // clustering scores the mean squared distance to the nearest centroid
+    // (1, 1, 16), not the RMSE of cluster ids, for both K-means learners
+    val km = new KMeansState(2, 1, Array(0.0, 10.0), Array(1L, 1L), 2)
+    km.buffer = null
+    val pts = Seq((Array(1.0), 0.0), (Array(9.0), 0.0), (Array(4.0), 0.0))
+    for (l <- Seq(new OnlineKMeans(2), new MiniBatchKMeans(2)))
+      assert(score(l, km, pts) == ((6.0, -6.0)), l.name)
+    // sums add up across rings before the result, as the Trainer does
+    val (a, b) = (HeldOut.sums(pa, lin, Iterator((Array(1.0, 0.0), 1.0))),
+      HeldOut.sums(pa, lin, Iterator((Array(1.0, 0.0), -1.0))))
+    assert(HeldOut.result(pa, (a._1 + b._1, a._2 + b._2, a._3 + b._3)) == ((1.0, 0.5)))
+    assert(score(pa, lin, Nil) == ((0.0, 0.0)))
+    assert(score(pa, null, Seq((Array(1.0, 0.0), 1.0))) == ((0.0, 0.0)))
+  }
+
   test("preprocessor transforms") {
     val poly = new FittedPolynomial(2)
     assert(poly.transform(Array(2.0, 3.0)).toSeq == Seq(2.0, 3.0, 4.0, 6.0, 9.0))

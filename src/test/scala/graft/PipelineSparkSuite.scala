@@ -237,6 +237,77 @@ class PipelineSparkSuite extends AnyFunSuite {
     assert(kept.params(0) == 7.0 && kept.n == 0L)
   }
 
+  test("Protocols.round matches a driver-side chunk/reassemble/aggregate " +
+    "replay for every ship pattern") {
+    val learner = new PAClassifier(0.05)
+    val maxP = 4 // 7 params per replica -> 2 ParamBlocks each
+    // drift from the zero global is 1.403 * scale
+    def replica(scale: Double, seedRound: Long = 0L): ModelState = {
+      val m = new LinearModel(Array.tabulate(6)(i => scale * (i + 1) / 7.0),
+        scale / 3.0)
+      m.n = (10 * scale).toLong + 1; m.cumLoss = scale / 5.0
+      m.seedRound = seedRound
+      m
+    }
+    val global = replica(0.0); global.n = 100L
+    // the hub's side of the round, one replica per partition pid
+    def replay(p: Protocol, reps: Seq[ModelState], prev: Option[ModelState],
+        stats: ProtocolStats): ModelState = {
+      val frozen = (p, prev) match {
+        case (f: FGM, Some(g)) =>
+          !f.decide(reps.map(r => Protocols.driftNorm(r.params, g.params)), stats)
+        case _ => false
+      }
+      if (frozen) Protocols.frozen(prev.get)
+      else {
+        val blocks = reps.zipWithIndex.filter(r => p.ships(r._1, prev))
+          .flatMap { case (m, pid) => ModelWire.chunk(m, maxP, pid) }
+        stats.blocks += blocks.length
+        val shipped = ModelWire.reassemble(blocks,
+          (dim, ps) => learner.init(dim).loadWire(ps))
+        p.aggregate(shipped, prev, learner, stats,
+          totalReplicas = reps.length.toLong)
+      }
+    }
+    // runs one round both ways, returns the round's ledger
+    def check(run: Protocol, ref: Protocol, reps: Seq[ModelState],
+        prev: Option[ModelState]): ProtocolStats = {
+      val (sRun, sRef) = (ProtocolStats(), ProtocolStats())
+      val got = Protocols.round(spark.sparkContext.parallelize(reps, reps.length),
+        prev, run, learner, maxP, sRun).get
+      val want = replay(ref, reps, prev, sRef)
+      assert(java.util.Arrays.equals(got.params, want.params),
+        s"${run.name}: ${got.params.toSeq} != ${want.params.toSeq}")
+      assert(got.n == want.n && got.cumLoss == want.cumLoss, run.name)
+      assert(sRun == sRef, s"${run.name}: $sRun != $sRef")
+      sRun
+    }
+    val reps = Seq(replica(0.5), replica(1.0), replica(2.0), replica(0.25))
+    assert(check(Synchronous, Synchronous, reps, None).blocks == 8)
+    assert(check(Synchronous, Synchronous, reps, Some(global)).modelsShipped == 4)
+    // frontier 3 with s = 1: the replica seeded at round 1 is skip-merged
+    val stale = Seq(replica(0.5, 3), replica(1.0, 3), replica(2.0, 2),
+      replica(0.25, 1))
+    assert(check(SSP(1), SSP(1), stale, Some(global)).modelsShipped == 3)
+    assert(check(EASGD(0.5), EASGD(0.5), reps, Some(global)).modelsShipped == 4)
+    // threshold 1.0 holds back the replicas of scale 0.5 and 0.25 on their
+    // executors: 2 markers, 2 shipped replicas
+    val gm = DriftGated("GM", 1.0)
+    val gmStats = check(gm, gm, reps, Some(global))
+    assert(gmStats.modelsShipped == 2 && gmStats.blocks == 4)
+    // FGM(1.0), quantum 0.5: small drifts sum to zero counters (frozen),
+    // then large drifts confirm a violation (everyone ships)
+    val (fRun, fRef) = (new FGM(1.0), new FGM(1.0))
+    val quiet = Seq(replica(0.1), replica(0.2), replica(0.3), replica(0.1))
+    val frozen = check(fRun, fRef, quiet, Some(global))
+    assert(frozen.blocks == 0 && frozen.modelsShipped == 0 && frozen.scalars == 4)
+    val next = Protocols.frozen(global)
+    val loud = Seq(replica(1.0), replica(2.0), replica(3.0), replica(2.0))
+    val sync = check(fRun, fRef, loud, Some(next))
+    assert(sync.blocks == 8 && sync.modelsShipped == 4 && sync.scalars == 8)
+    assert(fRun.theta == fRef.theta)
+  }
+
   test("maxMsgParams: big models ship in ceil(params/2000) blocks, weights unchanged") {
     // ml05 shape: MultiClassPA over PolynomialFeatures(64 dims) -> >21k
     // params per replica, far beyond the reference's 2000-param message cap

@@ -21,6 +21,20 @@ class StreamingSuite extends AnyFunSuite {
       GroupStateTimeout.NoTimeout, 0L,
       org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
 
+  test("cleanScratch deletes a scratch dir with its contents, and only " +
+    "dirs scratchDir created") {
+    import java.nio.file.{Files, Paths}
+    val dir = Streaming.scratchDir("graft_cleanup_test_")
+    Files.createDirectories(Paths.get(dir, "a", "b"))
+    Files.writeString(Paths.get(dir, "a", "b", "part.txt"), "x")
+    val other = Files.createTempDirectory("graft_not_scratch_")
+    try {
+      Streaming.cleanScratch(Seq(dir, other.toString))
+      assert(!Files.exists(Paths.get(dir)), s"$dir survived")
+      assert(Files.isDirectory(other), "a dir scratchDir did not create was deleted")
+    } finally Files.deleteIfExists(other)
+  }
+
   test("pre-Create data buffers, Create drains it into training") {
     val st = fresh()
     val out = Spoke.process(1, Iterator(
