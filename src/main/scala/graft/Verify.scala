@@ -1,14 +1,21 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and _verify.json (the requested
+  * query names and each failure message) so tools/check.py can tell a
+  * query that threw from one that was not requested. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query names (dev-only fast path).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.getOrElse(Set.empty).filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+      sys.exit(1)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -25,13 +32,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    Files.deleteIfExists(Paths.get(outDir, "_verify.json"))
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    selected.foreach { case (name, fn) =>
+      // an earlier run's output must not stand in for this run's
+      deleteTree(Paths.get(outDir, name))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e.getMessage)
       }
       // Release per-query session leftovers (cached dedup intermediates,
       // localCheckpoint RDDs, memory-sink views) so 110 sequential queries
@@ -55,6 +67,17 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/_verify.json"),
+      s"""{"requested": ${selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]")}, """ +
+        s""""failed": ${failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")}}""")
     spark.stop()
   }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+    }
 }

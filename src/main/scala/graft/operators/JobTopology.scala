@@ -188,16 +188,7 @@ object JobTopology {
     * Returns after the stream drains; outputs land under `out`.
     */
   private def runJob(s: SparkSession, wireDir: String, out: String): Unit = {
-    // transformWithState needs the RocksDB provider; isolate in a child
-    // session (the st31 pattern) instead of mutating the caller's conf
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the documented production default (PLANS.md r10): per-merge row-count
-    // maintenance GETs the whole merged value — O(buffer) per ListState
-    // append under load
-    s2.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    val s2 = Streaming.stateSession(s)
     Streaming.withStreamShuffle(s2) {
       val raw = s2.readStream
         .schema(StructType(Seq(StructField("value", StringType))))

@@ -158,8 +158,7 @@ object StreamOps {
       batch2.coalesce(1).write.mode("append").parquet(dir)
     }
 
-  /** Hash-gated lifecycle rollup shared by st04 (fMGWS spoke) and st31
-    * (transformWithState spoke on RocksDB): the oracle pins the exact
+  /** Hash-gated lifecycle rollup of st04/st31: the oracle pins the exact
     * per-kind traffic the staged lifecycle implies — ONE drain log (its
     * value = the 100 pre-Create buffered rows), exactly 50 predictions over
     * the contiguous forecasting id range, ONE Query response whose
@@ -213,6 +212,22 @@ object StreamOps {
       |  ('response', CAST(1 AS BIGINT), true, true, true))
       |  AS t(kind, n_rows, req_ids_ok, ids_exact, payload_ok)
       |ORDER BY kind""".stripMargin
+
+  /** Drain a staged envelope dir through [[TwsSpoke]] on RocksDB, one file
+    * per trigger; returns the spoke's events.
+    */
+  private def runSpoke(s: org.apache.spark.sql.SparkSession, dir: String,
+      prefix: String, testMode: Boolean = false): org.apache.spark.sql.DataFrame =
+    Streaming.runStream(Streaming.stateSession(s), dir,
+      org.apache.spark.sql.Encoders.product[Envelope].schema, uniq(prefix),
+      src => TwsSpoke.run(
+        src.as[Envelope](org.apache.spark.sql.Encoders.product[Envelope]),
+        testMode).toDF())
+
+  private val spokeLifecycle: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (s, d) =>
+    spokeLifecycleGate(runSpoke(s, stageSpokeLifecycle(s, d), "spoke"),
+      T.embeddings(s, d).count())
 
   val ops: Seq[Op] = Seq(
     // ------------------------------------------------------------------
@@ -699,16 +714,7 @@ object StreamOps {
         (creates ++ queries).toDS().unionByName(points)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      val src = s.readStream.schema(org.apache.spark.sql.Encoders.product[Envelope].schema)
-        .parquet(dir).as[Envelope]
-      val q = Streaming.withStreamShuffle(s) {
-        val name = uniq("st07")
-        val q0 = Spoke.run(src).writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
-      s.table(q.name)
+      runSpoke(s, dir, "st07")
         .filter(col("kind") === "response")
         .select(col("requestId"),
           (col("pipelineId") - 1024).as("worker"),
@@ -764,17 +770,8 @@ object StreamOps {
           .toDS().unionByName(points)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      val src = s.readStream.schema(org.apache.spark.sql.Encoders.product[Envelope].schema)
-        .parquet(dir).as[Envelope]
-      val q = Streaming.withStreamShuffle(s) {
-        val name = uniq("st17")
-        val q0 = Spoke.run(src, testMode = true).writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
       val w = org.apache.spark.sql.expressions.Window.orderBy("fitted")
-      s.table(q.name)
+      runSpoke(s, dir, "st17", testMode = true)
         .filter(col("kind") === "curve")
         .select(col("id").as("fitted"), col("value").as("score"),
           regexp_extract(col("info"), "testn=(\\d+)", 1).cast(LongType).as("testn"))
@@ -878,53 +875,9 @@ object StreamOps {
     // 100 data points BEFORE the Create (exercising the pre-Create buffer,
     // SpokeLogic.scala:28-35) plus the Create; batch 2 delivers the rest,
     // forecasting points, and a Query. Output: predictions + response + logs.
-    Op("st04_spoke_lifecycle", (s, d) => {
-      val dir = stageSpokeLifecycle(s, d)
-      val q = Streaming.withStreamShuffle(s) {
-        val name = uniq("st04")
-        val src = s.readStream
-          .schema(org.apache.spark.sql.Encoders.product[Envelope].schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir).as[Envelope](
-            org.apache.spark.sql.Encoders.product[Envelope])
-        val q0 = Spoke.run(src).writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
-      spokeLifecycleGate(s.table(q.name), T.embeddings(s, d).count())
-    }, Some(spokeLifecycleOracle)),
-    // ------------------------------------------------------------------
-    // st04's exact lifecycle driven through the Spark-4 transformWithState
-    // spoke on the ROCKSDB state store — the driver-gated end-to-end proof
-    // of the production state path (TwsSpoke: ValueState + O(1) ListState
-    // pre-Create buffer; RocksDB provider), not just the suite-level parity
-    // checks. Same staged envelopes, same rollup, same oracle as st04: the
-    // two bindings must be indistinguishable at the gate.
-    Op("st31_tws_spoke_lifecycle", (s, d) => {
-      val dir = stageSpokeLifecycle(s, d)
-      // the provider conf is read at query start: isolate it in a child
-      // session (shared SparkContext, own conf/catalog) instead of mutating
-      // the caller's session around a streaming query
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // production default (PLANS.md r10): row-count maintenance GETs the
-      // whole merged value per state write — O(buffer) per ListState append
-      s2.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      val q = Streaming.withStreamShuffle(s2) {
-        val name = uniq("st31")
-        val src = s2.readStream
-          .schema(org.apache.spark.sql.Encoders.product[Envelope].schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir).as[Envelope](
-            org.apache.spark.sql.Encoders.product[Envelope])
-        val q0 = TwsSpoke.run(src).writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
-      spokeLifecycleGate(s2.table(q.name), T.embeddings(s, d).count())
-    }, Some(spokeLifecycleOracle)),
+    // st04 and st31 run one body: the correctness ledger keys on both names.
+    Op("st04_spoke_lifecycle", spokeLifecycle, Some(spokeLifecycleOracle)),
+    Op("st31_tws_spoke_lifecycle", spokeLifecycle, Some(spokeLifecycleOracle)),
     // ------------------------------------------------------------------
     // STREAMING LM QUALITY SCORING (the serving path of t26's CCNet-style
     // filter): held-out documents arrive over multiple triggers; each
@@ -2247,28 +2200,9 @@ object StreamOps {
         sentinel(1100000100000L).coalesce(1).write.mode("append").parquet(dir)
         stamp(60000)
       }
-      // the provider conf is read at query start (the st31 pattern):
-      // isolate RocksDB in a child session
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // production default (PLANS.md r10): row-count maintenance GETs the
-      // whole merged value per state write — O(buffer) per ListState append
-      s2.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-      val q = Streaming.withStreamShuffle(s2) {
-        val name = uniq("st39")
-        val src = s2.readStream
-          .schema(implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir).as[StatEvent](
-            org.apache.spark.sql.Encoders.product[StatEvent])
-        val q0 = graft.streaming.TwsStatsOperator.run(src, timeoutMs = 30000L)
-          .writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
-      s2.table(q.name)
+      Streaming.runStream(Streaming.stateSession(s), dir,
+          implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema, uniq("st39"),
+          src => TwsStatsOperator.run(src.as[StatEvent], timeoutMs = 30000L).toDF())
         .filter(col("kind") === "job_statistics" && col("pipelineId") < 4)
         .select(col("pipelineId").as("pipeline_id"),
           col("value").as("score"),
@@ -3187,14 +3121,7 @@ object StreamOps {
       dir: String, schema: org.apache.spark.sql.types.StructType,
       provider: String): org.apache.spark.sql.DataFrame = {
     import scala.jdk.CollectionConverters._
-    val s2 = s.newSession()
-    if (provider == "rocksdb")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // production default (PLANS.md r10): row-count maintenance GETs the
-      // whole merged value per state write — O(buffer) per ListState append
-      s2.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    val s2 = if (provider == "rocksdb") Streaming.stateSession(s) else s.newSession()
     val out = Streaming.scratchDir(s"graft_crash_${provider}_")
     def runToQuiescence(): Unit = Streaming.withStreamShuffle(s2) {
       val q = s2.readStream.schema(schema)

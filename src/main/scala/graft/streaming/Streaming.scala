@@ -16,11 +16,12 @@ import scala.collection.mutable.ArrayBuffer
   *  - event-time windows + watermarks replace the reference's ingestion-time
   *    processing (the reference has none of these — §2.7 — so they come from
   *    Spark built-ins);
-  *  - [[Spoke]] is the K1/K2 analog: a keyed stateful processor
-  *    (flatMapGroupsWithState) holding per-pipeline model state, buffering
-  *    data that arrives before Create (SpokeLogic.scala:28-35), training on
-  *    the data path, answering Query with loss/count snapshots and emitting
-  *    Predictions for forecasting points.
+  *  - [[TwsSpoke]] is the K1/K2 analog: a keyed stateful processor
+  *    (transformWithState on RocksDB, see [[stateSession]]) holding
+  *    per-pipeline model state, buffering data that arrives before Create
+  *    (SpokeLogic.scala:28-35), training on the data path, answering Query
+  *    with loss/count snapshots and emitting Predictions for forecasting
+  *    points.
   *
   * Batch fixtures are staged into time-ranged parquet files read with
   * maxFilesPerTrigger=1, so a query really runs multiple triggers and the
@@ -33,6 +34,21 @@ import scala.collection.mutable.ArrayBuffer
   * an out-of-order file's data.
   */
 object Streaming {
+
+  /** A child session for the keyed-state operators ([[TwsSpoke]],
+    * [[TwsStatsOperator]]): shares the SparkContext, owns its conf and
+    * catalog, so the provider is set per query instead of on the caller's
+    * session. transformWithState needs the RocksDB provider. The provider's
+    * default row-count metric (`trackTotalNumberOfRows`) GETs the whole
+    * merged value on every state write, so it is off (PLANS.md r10).
+    */
+  def stateSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s2.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    s2
+  }
 
   /** Staged-events cache: the fixture staging (a full write of the events
     * table) is identical across the streaming ops, so stage once per
@@ -204,10 +220,11 @@ case class SpokeEvent(
   * append evicts the oldest point back INTO training. Query answers are
   * scored against the ring (FlinkSpoke.scala:160-163).
   *
-  * `buffered`/`bufferedCount` describe the pre-Create buffer. The fMGWS
-  * binding keeps the rows inline in `buffered`; the transformWithState
-  * binding keeps them in a separate ListState (O(1) appends) and leaves
-  * `buffered` Nil while tracking the size in `bufferedCount`.
+  * `buffered`/`bufferedCount` describe the pre-Create buffer. A caller that
+  * steps [[SpokeCore]] without a [[SpokeBuffer]] (the per-key replays) keeps
+  * the rows inline in `buffered`; [[TwsSpoke]] keeps them in chunked
+  * MapState and leaves `buffered` Nil while tracking the size in
+  * `bufferedCount`.
   */
 case class SpokeState(
     learnerName: String,
@@ -220,9 +237,9 @@ case class SpokeState(
     sampleCount: Int = 0,
     pollCount: Int = 0)
 
-/** Pre-Create buffer storage hook: the fMGWS binding buffers inside the
-  * [[SpokeState]] blob; the transformWithState binding plugs in ListState
-  * so an append never rewrites the whole buffer.
+/** Pre-Create buffer storage hook: without one, [[SpokeCore.step]] buffers
+  * inside [[SpokeState]]; [[TwsSpoke]] plugs in chunked MapState so an
+  * append never rewrites the whole buffer.
   */
 trait SpokeBuffer {
   def append(features: Seq[Double], target: Option[Double]): Unit
@@ -230,9 +247,8 @@ trait SpokeBuffer {
   def drain(): Seq[(Seq[Double], Option[Double])]
 }
 
-/** The spoke state machine, shared by both stateful-API bindings
-  * ([[Spoke]]: flatMapGroupsWithState; [[TwsSpoke]]: Spark 4
-  * transformWithState): pure (events, state) -> (outputs, state).
+/** The spoke state machine behind [[TwsSpoke]] and the per-key replays
+  * that check it: pure (events, state) -> (outputs, state).
   */
 object SpokeCore {
   val BufferCap = 100000 // reference record-buffer cap (SpokeLogic.scala:32)
@@ -253,7 +269,8 @@ object SpokeCore {
   /** One trigger's worth of events for one pipeline.
     *
     * @param extBuffer when set, pre-Create buffering goes through it instead
-    *                  of the in-state `buffered` seq (ListState binding).
+    *                  of the in-state `buffered` seq ([[TwsSpoke]]'s
+    *                  chunked MapState).
     * @param testMode  reference test mode: every [[PollEvery]] data records
     *                  emit a learning-curve point ("curve" event) scored
     *                  against the current ring — the Spark-native form of the
@@ -405,38 +422,9 @@ object SpokeCore {
   }
 }
 
-/** flatMapGroupsWithState binding of [[SpokeCore]] (works with the default
-  * HDFS-backed state store).
-  */
-object Spoke {
-  val BufferCap: Int = SpokeCore.BufferCap
-
-  def process(key: Int, it: Iterator[Envelope], state: GroupState[SpokeState]): Iterator[SpokeEvent] =
-    process(testMode = false, testCap = SpokeCore.TestCap)(key, it, state)
-
-  def process(testMode: Boolean, testCap: Int)(
-      key: Int, it: Iterator[Envelope], state: GroupState[SpokeState]): Iterator[SpokeEvent] = {
-    val (out, next) = SpokeCore.step(key, it, state.getOption,
-      testMode = testMode, testCap = testCap)
-    next.foreach(state.update)
-    out.iterator
-  }
-
-  /** Wire the processor over an envelope stream. */
-  def run(envelopes: Dataset[Envelope], testMode: Boolean = false,
-      testCap: Int = SpokeCore.TestCap): Dataset[SpokeEvent] = {
-    import envelopes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    envelopes.groupByKey(_.pipelineId)
-      .flatMapGroupsWithState[SpokeState, SpokeEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(process(testMode, testCap))
-  }
-}
-
 /** Spark 4 `transformWithState` binding of [[SpokeCore]] — the stateful API
-  * SURVEY §2.4 maps K1/K2 onto. Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass =
-  * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`).
+  * SURVEY §2.4 maps K1/K2 onto, and the only streaming spoke. Requires the
+  * RocksDB state store provider: run it in a [[Streaming.stateSession]].
   *
   * Buffer shape (r10 verdict #5 — structural fix for a measured RocksDB
   * trap): r10 stored the pre-Create buffer as one ListState and found that
@@ -453,7 +441,7 @@ object Spoke {
   * test). Appends within a trigger stage in task memory and flush once
   * after the step, so per-row state-store work is amortized O(1).
   */
-class TwsSpokeProcessor(testMode: Boolean = false, testCap: Int = SpokeCore.TestCap)
+class TwsSpokeProcessor(testMode: Boolean = false)
     extends org.apache.spark.sql.streaming.StatefulProcessor[Int, Envelope, SpokeEvent] {
   import org.apache.spark.sql.streaming.{MapState, TimerValues, TTLConfig, ValueState}
   import org.apache.spark.sql.{Encoders, streaming}
@@ -491,7 +479,7 @@ class TwsSpokeProcessor(testMode: Boolean = false, testCap: Int = SpokeCore.Test
         all
       }
     }
-    val (out, next) = SpokeCore.step(key, rows, prev, Some(ext), testMode, testCap)
+    val (out, next) = SpokeCore.step(key, rows, prev, Some(ext), testMode)
     if (pending.nonEmpty) {
       var nc = if (bufMeta.exists()) bufMeta.get() else 0L
       var tail =
@@ -530,17 +518,17 @@ object TwsSpoke {
     */
   val ChunkSize = 512
 
-  def run(envelopes: Dataset[Envelope], testMode: Boolean = false,
-      testCap: Int = SpokeCore.TestCap): Dataset[SpokeEvent] = {
+  /** Wire the processor over an envelope stream. */
+  def run(envelopes: Dataset[Envelope], testMode: Boolean = false): Dataset[SpokeEvent] = {
     import envelopes.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     envelopes.groupByKey(_.pipelineId)
-      .transformWithState(new TwsSpokeProcessor(testMode, testCap),
+      .transformWithState(new TwsSpokeProcessor(testMode),
         TimeMode.None(), OutputMode.Append())
   }
 }
 
-/** Per-pipeline statistics record flowing into [[StatsOperator]]
+/** Per-pipeline statistics record flowing into [[TwsStatsOperator]]
   * (the reference's (String, Statistics) hub output, FlinkHub.scala:96-156).
   */
 case class StatEvent(
@@ -556,98 +544,22 @@ case class StatsState(
     modelsShipped: Long, bytesShipped: Long, blocks: Long, fitted: Long,
     score: Double, firstTsMs: Long, lastTsMs: Long)
 
-/** The reference's StatisticsOperator (StatisticsOperator.scala:21-150):
-  * merges per-hub statistics per pipeline and uses a quiescence timeout —
-  * no new statistics for `timeoutMs` of EVENT time — to emit the final
-  * JobStatistics with the pipeline makespan and clear state. The reference
-  * registers `lastTimestamp + timeout` event-time timers
-  * (StatisticsOperator.scala:91,135-142); here that maps onto
-  * GroupStateTimeout.EventTimeTimeout with the timer keyed off watermark
-  * progress — quiescence is decided by the data's own clock, so replay and
-  * backfill behave identically to live ingestion (a processing-time timer
-  * would fire mid-backfill on wall-clock pauses).
-  */
-object StatsOperator {
-
-  def process(timeoutMs: Long)(
-      key: Int, it: Iterator[StatEvent], state: GroupState[StatsState]): Iterator[SpokeEvent] = {
-    if (state.hasTimedOut) {
-      val st = state.get
-      state.remove()
-      val makespan = st.lastTsMs - st.firstTsMs
-      Iterator.single(SpokeEvent(key, "job_statistics", -1, -1, st.score,
-        s"makespan=$makespan,models=${st.modelsShipped},bytes=${st.bytesShipped}," +
-          s"blocks=${st.blocks},fitted=${st.fitted}"))
-    } else {
-      // Late-data guard: a record at/below the watermark arrives after the
-      // quiescence decision for its epoch is sealed — processing it would
-      // resurrect state the timer already cleared (the reference's
-      // event-time timers give the same guarantee: a post-timer record
-      // re-opens nothing retroactively).
-      val wm = scala.util.Try(state.getCurrentWatermarkMs).getOrElse(0L)
-      val live = it.filter(_.eventTimeMs >= wm).toSeq
-      if (live.isEmpty) Iterator.empty
-      else {
-        var st = state.getOption.getOrElse(
-          StatsState(0, 0, 0, 0, 0.0, Long.MaxValue, Long.MinValue))
-        live.foreach { e =>
-          st = StatsState(
-            st.modelsShipped + e.modelsShipped,
-            st.bytesShipped + e.bytesShipped,
-            st.blocks + e.blocks,
-            st.fitted + e.fitted,
-            // newest curve point by EVENT time, not iterator order: an
-            // out-of-order batch must not leave a stale score behind
-            // (the reference keeps the newest point by timestamp)
-            if (e.eventTimeMs >= st.lastTsMs) e.score else st.score,
-            math.min(st.firstTsMs, e.eventTimeMs),
-            math.max(st.lastTsMs, e.eventTimeMs))
-        }
-        state.update(st)
-        // the reference's timer instant, clamped above the current watermark
-        // (Spark rejects timers at or below it)
-        state.setTimeoutTimestamp(math.max(st.lastTsMs + timeoutMs, wm + 1))
-        Iterator.empty
-      }
-    }
-  }
-
-  /** Wire the processor over a stats stream. The input's `eventTimeMs`
-    * drives both the watermark and the quiescence timers. The watermarked
-    * timestamp column must reach the stateful operator, so the event rides
-    * inside a [[StatEnvelope]] next to it.
-    */
-  def run(stats: Dataset[StatEvent], timeoutMs: Long = 30000L,
-      watermarkDelay: String = "0 seconds"): Dataset[SpokeEvent] = {
-    import stats.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val cols = stats.columns.map(col)
-    stats
-      .withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(struct(cols: _*).as("e"), col("eventTime"))
-      .as[StatEnvelope]
-      .groupByKey(_.e.pipelineId)
-      .flatMapGroupsWithState[StatsState, SpokeEvent](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: Int, it: Iterator[StatEnvelope], state: GroupState[StatsState]) =>
-          process(timeoutMs)(key, it.map(_.e), state))
-  }
-}
-
 /** Carrier keeping the watermarked timestamp column alongside the stats
-  * record through the stateful operator (see [[StatsOperator.run]]).
+  * record through the stateful operator (see [[TwsStatsOperator.run]]).
   */
 case class StatEnvelope(e: StatEvent, eventTime: java.sql.Timestamp)
 
-/** Spark-4 `transformWithState` binding of the statistics operator — the
-  * closest structural analog to the reference's timer API
-  * (StatisticsOperator.scala:91,135-142): timers are REGISTERED objects
-  * (`getHandle.registerTimer(lastTs + timeout)`, re-registered on every new
-  * record, fired by watermark progress into [[handleExpiredTimer]]), not a
-  * per-state timeout flag. Requires the RocksDB state store provider, like
-  * [[TwsSpoke]]. Semantics proven identical to [[StatsOperator]] by the
-  * StreamingSuite parity test.
+/** The reference's StatisticsOperator (StatisticsOperator.scala:21-150):
+  * merges per-hub statistics per pipeline and uses a quiescence timeout —
+  * no new statistics for `timeoutMs` of EVENT time — to emit the final
+  * JobStatistics with the pipeline makespan and clear state. Like the
+  * reference's timer API (StatisticsOperator.scala:91,135-142), timers are
+  * REGISTERED objects (`getHandle.registerTimer(lastTs + timeout)`,
+  * re-registered on every new record, fired by watermark progress into
+  * [[handleExpiredTimer]]). Quiescence is decided by the data's own clock,
+  * so replay and backfill behave identically to live ingestion (a
+  * processing-time timer would fire mid-backfill on wall-clock pauses).
+  * Requires the RocksDB state store provider, like [[TwsSpoke]].
   */
 class TwsStatsProcessor(timeoutMs: Long)
     extends org.apache.spark.sql.streaming.StatefulProcessor[Int, StatEnvelope, SpokeEvent] {
@@ -664,7 +576,11 @@ class TwsStatsProcessor(timeoutMs: Long)
   override def handleInputRows(key: Int, rows: Iterator[StatEnvelope],
       timerValues: TimerValues): Iterator[SpokeEvent] = {
     val wm = timerValues.getCurrentWatermarkInMs
-    // same late-data guard as StatsOperator.process
+    // Late-data guard: a record below the watermark arrives after the
+    // quiescence decision for its epoch is sealed — processing it would
+    // resurrect state the timer already cleared (the reference's event-time
+    // timers give the same guarantee: a post-timer record re-opens nothing
+    // retroactively).
     val live = rows.map(_.e).filter(_.eventTimeMs >= wm).toSeq
     if (live.isEmpty) Iterator.empty
     else {
@@ -676,13 +592,17 @@ class TwsStatsProcessor(timeoutMs: Long)
           st.bytesShipped + e.bytesShipped,
           st.blocks + e.blocks,
           st.fitted + e.fitted,
-          // same max-event-time-wins rule as StatsOperator.process
+          // newest curve point by EVENT time, not iterator order: an
+          // out-of-order batch must not leave a stale score behind
+          // (the reference keeps the newest point by timestamp)
           if (e.eventTimeMs >= st.lastTsMs) e.score else st.score,
           math.min(st.firstTsMs, e.eventTimeMs),
           math.max(st.lastTsMs, e.eventTimeMs))
       }
       state.update(st)
       // slide the quiescence timer: drop the old instant, register the new
+      // one, clamped above the current watermark (Spark rejects timers at
+      // or below it)
       getHandle.listTimers().foreach(t =>
         getHandle.deleteTimer(t.asInstanceOf[Long]))
       getHandle.registerTimer(math.max(st.lastTsMs + timeoutMs, wm + 1))
@@ -701,6 +621,28 @@ class TwsStatsProcessor(timeoutMs: Long)
         s"makespan=$makespan,models=${st.modelsShipped},bytes=${st.bytesShipped}," +
           s"blocks=${st.blocks},fitted=${st.fitted}"))
     }
+  }
+}
+
+object TwsStatsOperator {
+  /** Wire the processor over a stats stream. The input's `eventTimeMs`
+    * drives both the watermark and the quiescence timers. The watermarked
+    * timestamp column must reach the stateful operator, so the event rides
+    * inside a [[StatEnvelope]] next to it.
+    */
+  def run(stats: Dataset[StatEvent], timeoutMs: Long = 30000L,
+      watermarkDelay: String = "0 seconds"): Dataset[SpokeEvent] = {
+    import stats.sparkSession.implicits._
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    val cols = stats.columns.map(col)
+    stats
+      .withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
+      .withWatermark("eventTime", watermarkDelay)
+      .select(struct(cols: _*).as("e"), col("eventTime"))
+      .as[StatEnvelope]
+      .groupByKey(_.e.pipelineId)
+      .transformWithState(new TwsStatsProcessor(timeoutMs),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }
 
@@ -754,22 +696,5 @@ object ResponseMerge {
     responses.groupByKey(r => (r.pipe, r.requestId))
       .flatMapGroupsWithState[MergeState, MergedResponse](
         OutputMode.Append, GroupStateTimeout.NoTimeout)(process(workers))
-  }
-}
-
-object TwsStatsOperator {
-  def run(stats: Dataset[StatEvent], timeoutMs: Long = 30000L,
-      watermarkDelay: String = "0 seconds"): Dataset[SpokeEvent] = {
-    import stats.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val cols = stats.columns.map(col)
-    stats
-      .withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(struct(cols: _*).as("e"), col("eventTime"))
-      .as[StatEnvelope]
-      .groupByKey(_.e.pipelineId)
-      .transformWithState(new TwsStatsProcessor(timeoutMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -110,36 +110,28 @@ class R10OpsSuite extends AnyFunSuite {
   test("SpokeCore enforces the catalog's per-id statefulness: duplicate " +
     "Create and Query-on-missing are rejected with tagged logs " +
     "(PipelineMap.scala:31-47)") {
-    import graft.streaming.{Spoke, SpokeState}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val st = TestGroupState.create[SpokeState](
-      org.apache.spark.api.java.Optional.empty[SpokeState](),
-      GroupStateTimeout.NoTimeout, 0L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
+    val step = new SpokeHarness.Steps()
     // Query before any Create: rejected, no response partial
-    val r0 = Spoke.process(1, Iterator(ctl(0, "Query", reqId = 5L)), st).toSeq
+    val r0 = step(ctl(0, "Query", reqId = 5L))
     assert(r0.map(e => (e.kind, e.info)) ==
       Seq(("log", "query_rejected:missing")))
     // invalid learner name: the catalog's validation rejection, in place —
     // never an executor crash (PipelineMap.scala:66-69)
-    val rv = Spoke.process(1,
-      Iterator(ctl(0, "Create", "DeepForest", 7L)), st).toSeq
+    val rv = step(ctl(0, "Create", "DeepForest", 7L))
     assert(rv.map(e => (e.kind, e.info, e.requestId)) ==
       Seq(("log", "create_rejected:invalid learner: DeepForest", 7L)))
-    val ru = Spoke.process(1,
-      Iterator(ctl(0, "Update", "NotALearner", 8L)), st).toSeq
+    val ru = step(ctl(0, "Update", "NotALearner", 8L))
     assert(ru.map(e => (e.kind, e.info)) ==
       Seq(("log", "update_rejected:invalid learner: NotALearner")))
     // Create, then duplicate Create: second is rejected
-    val r1 = Spoke.process(1, Iterator(ctl(1, "Create", "PA", 1L),
-      ctl(2, "Create", "SVM", 2L), pt(3, 0L)), st).toSeq
+    val r1 = step(ctl(1, "Create", "PA", 1L), ctl(2, "Create", "SVM", 2L), pt(3, 0L))
     assert(r1.map(e => (e.kind, e.info, e.requestId)) ==
       Seq(("log", "created:drained", 1L),
         ("log", "create_rejected:exists", 2L)))
     // the duplicate must NOT have replaced the learner
-    assert(st.get.learnerName == "PA")
+    assert(step.state.get.learnerName == "PA")
     // a real Query still answers
-    val r2 = Spoke.process(1, Iterator(ctl(4, "Query", reqId = 9L)), st).toSeq
+    val r2 = step(ctl(4, "Query", reqId = 9L))
     assert(r2.map(_.kind) == Seq("response"))
   }
 
@@ -170,89 +162,50 @@ class R10OpsSuite extends AnyFunSuite {
   }
 
   test("pre-Create buffer under load: 50k rows x 2 pipelines over 10 " +
-    "triggers — TwsSpoke ListState appends vs fMGWS whole-state rewrite, " +
-    "identical answers, timings recorded (PLANS.md)") {
-    import graft.streaming.{Envelope, Spoke, SpokeEvent, Streaming, TwsSpoke}
-    import org.apache.spark.sql.{Dataset, Encoder}
+    "triggers — TwsSpoke chunked MapState, row tracking off and on, equals " +
+    "a SpokeCore.step replay, timings recorded (PLANS.md)") {
+    import graft.streaming.Envelope
     val nRows = 50000
     val nFiles = 10
     val per = nRows / nFiles
     def env(seq: Long, pid: Int, id: Long, y: Double) =
       Envelope(seq, pid, "data", "", "", -1L, id, Seq(1.0, 2.0), Some(y), "")
-    val dir = java.nio.file.Files.createTempDirectory("r10_buf50k_").toString
-    val s0 = spark
-    import s0.implicits._
     // 10 trigger files of pre-Create rows for TWO pipelines (state in >1
     // shuffle partition), then Create + Query; every trigger before the
     // Create is pure buffer-append load
-    val t0 = System.currentTimeMillis()
-    (0 until nFiles).foreach { f =>
+    val files = (0 until nFiles).map(f =>
       (f * per until (f + 1) * per).flatMap(i => Seq(
-          env(i.toLong, 1, i.toLong, if (i % 2 == 0) 1.0 else -1.0),
-          env(i.toLong, 2, i.toLong, if (i % 3 == 0) 1.0 else -1.0)))
-        .toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/data")).forEach(p =>
-        if (java.nio.file.Files.getLastModifiedTime(p).toMillis > t0 - (nFiles + 2 - f) * 60000)
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(t0 - (nFiles + 1 - f) * 60000)))
-    }
-    Seq(1, 2).flatMap(pid => Seq(
+        env(i.toLong, 1, i.toLong, if (i % 2 == 0) 1.0 else -1.0),
+        env(i.toLong, 2, i.toLong, if (i % 3 == 0) 1.0 else -1.0)))) :+
+      Seq(1, 2).flatMap(pid => Seq(
         Envelope(1000000L, pid, "control", "Create", "PA", 1L, -1, Nil, None, ""),
         Envelope(1000001L, pid, "control", "Query", "", 9L, -1, Nil, None, "")))
-      .toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-
-    def run(label: String, tws: Boolean,
-        trackRows: Boolean = false): (Seq[SpokeEvent], Long) = {
-      val s2 = spark.newSession()
-      if (tws) {
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // MEASURED r10 finding: with the default
-        // trackTotalNumberOfRows=true, every ListState.appendValue did a
-        // RocksDB GET of the whole merged list to maintain the row-count
-        // metric — O(buffer) per append, quadratic over a 50k-row buffer
-        // (the first run of this test sat >7 minutes in RocksDB.get).
-        // r11: the buffer moved to fixed-size chunks in a MapState (point
-        // PUTs, no merge operator), making the shape immune to the flag —
-        // this test now runs the TwsSpoke arm under BOTH settings and
-        // requires both to finish fast with identical answers.
-        s2.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-          trackRows.toString)
-      }
-      val src = s2.readStream
-        .schema(implicitly[Encoder[Envelope]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/data")
-        .as[Envelope](implicitly[Encoder[Envelope]])
-      val name = s"buf50k_${label}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val dir = SpokeHarness.stage(spark, files)
+    // MEASURED r10 finding: with the default trackTotalNumberOfRows=true,
+    // every ListState.appendValue did a RocksDB GET of the whole merged list
+    // to maintain the row-count metric — O(buffer) per append, quadratic over
+    // a 50k-row buffer (the first run of this test sat >7 minutes in
+    // RocksDB.get). r11: the buffer moved to fixed-size chunks in a MapState
+    // (point PUTs, no merge operator), making the shape immune to the flag —
+    // this test runs under BOTH settings and requires both to finish fast
+    // with identical answers.
+    def run(trackRows: Boolean) = {
       val start = System.nanoTime()
-      Streaming.withStreamShuffle(s2) {
-        val body: Dataset[SpokeEvent] =
-          if (tws) TwsSpoke.run(src) else Spoke.run(src)
-        val q = body.writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-      }
-      val elapsedMs = (System.nanoTime() - start) / 1000000L
-      val rows = s2.table(name)
-        .as[SpokeEvent](implicitly[Encoder[SpokeEvent]]).collect().toSeq
-      (rows, elapsedMs)
+      val rows = SpokeHarness.runTws(spark, dir, conf = Map(
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
+          trackRows.toString))
+      (rows, (System.nanoTime() - start) / 1000000L)
     }
-
-    val (twsRows, twsMs) = run("tws", tws = true)
-    val (twsTrackedRows, twsTrackedMs) =
-      run("twstracked", tws = true, trackRows = true)
-    val (fmRows, fmMs) = run("fm", tws = false)
+    val (twsRows, twsMs) = run(trackRows = false)
+    val (twsTrackedRows, twsTrackedMs) = run(trackRows = true)
     info(s"50k-row pre-Create buffer: TwsSpoke/chunked-MapState ${twsMs}ms " +
-      s"(tracking off) / ${twsTrackedMs}ms (tracking ON), " +
-      s"fMGWS whole-state rewrite ${fmMs}ms")
-    def gate(rows: Seq[SpokeEvent]) = rows
-      .map(e => (e.pipelineId, e.kind, e.requestId, e.value, e.info))
-      .sortBy(t => (t._1, t._2, t._3))
-    // all bindings drain all 50k rows per pipeline and answer identically
-    assert(gate(twsRows) == gate(fmRows))
-    assert(gate(twsTrackedRows) == gate(fmRows))
+      s"(tracking off) / ${twsTrackedMs}ms (tracking ON)")
+    // both settings drain all 50k rows per pipeline and answer like the replay
+    val want = SpokeHarness.replay(files)
+    Seq(twsRows, twsTrackedRows).foreach { rows =>
+      val d = SpokeHarness.diff(rows, want)
+      assert(d.isEmpty, d)
+    }
     Seq(1, 2).foreach { pid =>
       val drain = twsRows.find(e => e.pipelineId == pid && e.kind == "log").get
       assert(drain.value == nRows.toDouble, drain.toString)

@@ -77,64 +77,28 @@ class R11OpsSuite extends AnyFunSuite {
   }
 
   test("TwsSpoke chunked buffer: drain order is exact across the ChunkSize " +
-    "seam (511+2 rows over two triggers == fMGWS whole-state answers)") {
-    import graft.streaming.{Envelope, Spoke, SpokeEvent, Streaming, TwsSpoke}
-    import org.apache.spark.sql.{Dataset, Encoder}
+    "seam (511+2 rows over two triggers == SpokeCore.step replay answers)") {
+    import graft.streaming.{Envelope, SpokeEvent}
     assert(graft.streaming.TwsSpoke.ChunkSize == 512)
     def env(seq: Long, id: Long) =
       Envelope(seq, 1, "data", "", "", -1L, id, Seq(id.toDouble, 2.0),
         Some(if (id % 2 == 0) 1.0 else -1.0), "")
-    val dir = java.nio.file.Files.createTempDirectory("r11_seam_").toString
-    val s0 = spark
-    import s0.implicits._
-    val t0 = System.currentTimeMillis()
     // trigger 1: 511 rows (one open chunk); trigger 2: 2 rows (closes chunk
     // 0 at exactly 512, opens chunk 1); trigger 3: Create + Query drains 513
-    Seq((0 until 511).map(i => env(i.toLong, i.toLong)),
-        Seq(env(511L, 511L), env(512L, 512L)),
-        Nil).zipWithIndex.foreach { case (rows, f) =>
-      val ds = if (f < 2) rows.toDS()
-        else Seq(
-          Envelope(1000L, 1, "control", "Create", "PA", 1L, -1, Nil, None, ""),
-          Envelope(1001L, 1, "control", "Query", "", 9L, -1, Nil, None, "")).toDS()
-      ds.coalesce(1).write.mode("append").parquet(s"$dir/data")
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/data")).forEach(p =>
-        if (java.nio.file.Files.getLastModifiedTime(p).toMillis > t0 - (5 - f) * 60000)
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(t0 - (4 - f) * 60000)))
-    }
-    def run(tws: Boolean): Seq[(Int, String, Long, Double, String)] = {
-      val s2 = spark.newSession()
-      if (tws) {
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // deliberately the DEFAULT tracking=true: the chunk shape must not
-        // care
-      }
-      val src = s2.readStream
-        .schema(implicitly[Encoder[Envelope]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/data")
-        .as[Envelope](implicitly[Encoder[Envelope]])
-      val name = s"seam_${if (tws) "t" else "f"}_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      Streaming.withStreamShuffle(s2) {
-        val body: Dataset[SpokeEvent] =
-          if (tws) TwsSpoke.run(src) else Spoke.run(src)
-        val q = body.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-      }
-      s2.table(name).as[SpokeEvent](implicitly[Encoder[SpokeEvent]])
-        .collect().toSeq
-        .map(e => (e.pipelineId, e.kind, e.requestId, e.value, e.info))
+    val files = Seq((0 until 511).map(i => env(i.toLong, i.toLong)),
+      Seq(env(511L, 511L), env(512L, 512L)),
+      Seq(Envelope(1000L, 1, "control", "Create", "PA", 1L, -1, Nil, None, ""),
+        Envelope(1001L, 1, "control", "Query", "", 9L, -1, Nil, None, "")))
+    def rows(es: Seq[SpokeEvent]) =
+      es.map(e => (e.pipelineId, e.kind, e.requestId, e.value, e.info))
         .sortBy(t => (t._1, t._2, t._3))
-    }
-    val tws = run(tws = true)
-    val fm = run(tws = false)
+    // deliberately the DEFAULT tracking=true: the chunk shape must not care
+    val tws = rows(SpokeHarness.runTws(spark, SpokeHarness.stage(spark, files),
+      conf = Map("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "true")))
+    val replay = rows(SpokeHarness.replay(files))
     // PA training is order-sensitive: equality of the response info (loss,
     // fitted) proves the chunked drain replays the EXACT arrival order
-    assert(tws == fm, s"chunk-seam drain diverged:\n tws=$tws\n fm =$fm")
+    assert(tws == replay, s"chunk-seam drain diverged:\n tws=$tws\n replay=$replay")
     val drain = tws.find(_._2 == "log").get
     assert(drain._4 == 513.0, drain.toString)
   }

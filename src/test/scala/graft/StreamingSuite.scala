@@ -1,12 +1,13 @@
 package graft
 
+import graft.SpokeHarness.Steps
 import graft.streaming._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, TestGroupState}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spoke state-machine semantics, driven through the same `process` function
-  * the streaming query uses (TestGroupState is Spark's public harness for
-  * exactly this).
+/** Spoke state-machine semantics, driven through [[SpokeCore.step]] (the
+  * function [[TwsSpoke]] runs per key and trigger), and the keyed-state
+  * operators end to end on RocksDB.
   */
 class StreamingSuite extends AnyFunSuite {
 
@@ -14,12 +15,6 @@ class StreamingSuite extends AnyFunSuite {
     Envelope(seq, 1, "data", "", "", -1L, id, Seq(1.0, 2.0, 3.0), y, op)
   private def ctl(seq: Long, req: String, learner: String = "", reqId: Long = 1L) =
     Envelope(seq, 1, "control", req, learner, reqId, -1, Nil, None, "")
-
-  private def fresh(): TestGroupState[SpokeState] =
-    TestGroupState.create[SpokeState](
-      org.apache.spark.api.java.Optional.empty[SpokeState](),
-      GroupStateTimeout.NoTimeout, 0L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
 
   test("cleanScratch deletes a scratch dir with its contents, and only " +
     "dirs scratchDir created") {
@@ -36,80 +31,42 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("pre-Create data buffers, Create drains it into training") {
-    val st = fresh()
-    val out = Spoke.process(1, Iterator(
-      data(0, 10, Some(1.0)), data(1, 11, Some(-1.0)),
-      ctl(2, "Create", "PA")), st).toSeq
+    val st = new Steps()
+    val out = st(data(0, 10, Some(1.0)), data(1, 11, Some(-1.0)),
+      ctl(2, "Create", "PA"))
     val log = out.find(_.kind == "log").get
     assert(log.info == "created:drained" && log.value == 2.0)
-    assert(st.exists)
+    assert(st.state.exists(_.created))
     // next trigger: more training + query reflects all 3 fits
-    val out2 = Spoke.process(1, Iterator(
-      data(10, 12, Some(1.0)), ctl(11, "Query", reqId = 9L)), st).toSeq
+    val out2 = st(data(10, 12, Some(1.0)), ctl(11, "Query", reqId = 9L))
     val resp = out2.find(_.kind == "response").get
     assert(resp.info.startsWith("fitted=3,"), resp.info)
     assert(resp.requestId == 9L)
   }
 
   test("forecasting points yield predictions; Delete clears state") {
-    val st = fresh()
-    Spoke.process(1, Iterator(ctl(0, "Create", "PA"),
-      data(1, 20, Some(1.0)), data(2, 21, Some(1.0))), st)
-      .foreach(_ => ())
-    val out = Spoke.process(1, Iterator(
-      data(10, 30, None, "forecasting"), ctl(11, "Delete")), st).toSeq
+    val st = new Steps()
+    st(ctl(0, "Create", "PA"), data(1, 20, Some(1.0)), data(2, 21, Some(1.0)))
+    val out = st(data(10, 30, None, "forecasting"), ctl(11, "Delete"))
     assert(out.count(_.kind == "prediction") == 1)
     assert(out.exists(e => e.kind == "log" && e.info == "deleted"))
     // post-Delete Query: the catalog's "rejected: missing" outcome
     // (PipelineMap.scala:42-44) — the spoke no longer hosts the pipeline
-    val out2 = Spoke.process(1, Iterator(ctl(20, "Query", reqId = 2L)), st).toSeq
+    val out2 = st(ctl(20, "Query", reqId = 2L))
     assert(out2.map(e => (e.kind, e.info)) ==
       Seq(("log", "query_rejected:missing")))
   }
 
-  test("statistics operator merges per-pipeline stats and emits on quiescence timeout") {
-    // event-time timers: watermark at 500ms when the stats arrive
-    val st = TestGroupState.create[StatsState](
-      org.apache.spark.api.java.Optional.empty[StatsState](),
-      GroupStateTimeout.EventTimeTimeout, 1000L,
-      org.apache.spark.api.java.Optional.of(500L), hasTimedOut = false)
-    val out1 = StatsOperator.process(30000L)(1, Iterator(
-      StatEvent(1, 4, 2048, 1, 100, 0.8, 1000L),
-      StatEvent(1, 4, 2048, 1, 120, 0.9, 6000L)), st).toSeq
-    assert(out1.isEmpty && st.exists)
-    // the timer was registered at lastTs + timeout (event time, not wall)
-    assert(st.getTimeoutTimestampMs.get() == 36000L)
-    // simulate the watermark passing the timer instant
-    val fired = TestGroupState.create[StatsState](
-      org.apache.spark.api.java.Optional.of(st.get),
-      GroupStateTimeout.EventTimeTimeout, 40000L,
-      org.apache.spark.api.java.Optional.of(36001L), hasTimedOut = true)
-    val out2 = StatsOperator.process(30000L)(1, Iterator.empty, fired).toSeq
-    assert(out2.length == 1)
-    val js = out2.head
-    assert(js.kind == "job_statistics")
-    assert(js.info.contains("makespan=5000"))
-    assert(js.info.contains("models=8"))
-    assert(js.info.contains("fitted=220"))
-    assert(!fired.exists)
-    // a LATE stats record (below the watermark) after the timeout must not
-    // resurrect the cleared state
-    val late = TestGroupState.create[StatsState](
-      org.apache.spark.api.java.Optional.empty[StatsState](),
-      GroupStateTimeout.EventTimeTimeout, 50000L,
-      org.apache.spark.api.java.Optional.of(36001L), hasTimedOut = false)
-    val out3 = StatsOperator.process(30000L)(1,
-      Iterator(StatEvent(1, 1, 64, 1, 5, 0.1, 2000L)), late).toSeq
-    assert(out3.isEmpty && !late.exists, "late record resurrected stats state")
-  }
-
-  private def statsQuiescenceScenario(
-      runOp: org.apache.spark.sql.Dataset[StatEvent] =>
-        org.apache.spark.sql.Dataset[SpokeEvent],
-      session: org.apache.spark.sql.SparkSession): Unit = {
-    val spark = session
+  /** One [[TwsStatsOperator]] run on RocksDB over five staged stats files,
+    * one query restart per file; the sink's contents after each drain.
+    * Pipeline 1's stats end at ts 6000 (timer due at 36000); pipeline 2's
+    * arrive out of order; pipeline 99's records only push the watermark
+    * (delay 0: the watermark is the largest event time seen).
+    */
+  private lazy val statsDrains: IndexedSeq[Seq[SpokeEvent]] = {
+    val spark = Streaming.stateSession(TestSession.spark)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stats_").toString
+    val dir = Streaming.scratchDir("graft_stats_")
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
     def writeFile(evts: Seq[StatEvent], mtime: Long): Unit = {
       val sub = new java.io.File(dir, "data")
@@ -118,11 +75,11 @@ class StreamingSuite extends AnyFunSuite {
       sub.listFiles().filter(_.getName.endsWith(".parquet"))
         .foreach(f => f.setLastModified(mtime))
     }
-    def drain(): Unit = {
+    def drain(): Seq[SpokeEvent] = {
       val src = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[StatEvent]
-      val q = runOp(src).writeStream
+      val q = TwsStatsOperator.run(src, timeoutMs = 30000L).writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$dir/_ckpt")
         .foreachBatch((df: org.apache.spark.sql.Dataset[SpokeEvent], _: Long) =>
@@ -130,60 +87,68 @@ class StreamingSuite extends AnyFunSuite {
         .start()
       q.processAllAvailable()
       q.stop()
+      sink.toArray(Array.empty[SpokeEvent]).toSeq
     }
-    // pipeline 1's stats end at ts=6000; the timer is due at 36000
-    writeFile(Seq(
-      StatEvent(1, 4, 2048, 1, 100, 0.8, 1000L),
-      StatEvent(1, 4, 2048, 1, 120, 0.9, 6000L)), 1000000L)
-    drain()
-    assert(!sink.iterator().hasNext, "emitted before the watermark reached the timer")
-    // a fresh pipeline-99 record pushes the watermark past 36000 -> pipeline
-    // 1's timer fires on data time alone (no 30s wall-clock wait happened)
-    writeFile(Seq(StatEvent(99, 1, 64, 1, 5, 0.5, 1000000L)), 2000000L)
-    drain()
-    val emitted = sink.iterator()
-    assert(emitted.hasNext)
-    val js = sink.peek()
-    assert(js.pipelineId == 1 && js.kind == "job_statistics" &&
-      js.info.contains("makespan=5000"), js.toString)
-    assert(sink.size() == 1)
-    // a late pipeline-1 record (ts far below the watermark) cannot resurrect
-    // the cleared state: advancing the watermark again emits nothing new for
-    // pipeline 1
-    writeFile(Seq(StatEvent(1, 9, 99, 1, 9, 0.9, 2000L)), 3000000L)
-    drain()
-    writeFile(Seq(StatEvent(99, 1, 64, 1, 5, 0.5, 9000000L)), 4000000L)
-    drain()
-    val all = scala.jdk.CollectionConverters.IteratorHasAsScala(
-      sink.iterator()).asScala.toSeq
-    assert(all.count(e => e.pipelineId == 1) == 1,
-      s"late record resurrected pipeline-1 state: $all")
+    val files = IndexedSeq(
+      Seq(StatEvent(1, 4, 2048, 1, 100, 0.8, 1000L),
+        StatEvent(1, 4, 2048, 1, 120, 0.9, 6000L)),
+      // out of order: the newest point (ts 35999, score 0.9) comes first,
+      // and the watermark stops 1 ms short of pipeline 1's timer
+      Seq(StatEvent(2, 1, 100, 1, 10, 0.9, 35999L),
+        StatEvent(2, 1, 100, 1, 10, 0.5, 29999L),
+        StatEvent(2, 1, 100, 1, 10, 0.2, 32999L)),
+      Seq(StatEvent(99, 1, 64, 1, 5, 0.5, 36001L)),
+      // late: far below the watermark
+      Seq(StatEvent(1, 9, 99, 1, 9, 0.9, 2000L)),
+      Seq(StatEvent(99, 1, 64, 1, 5, 0.5, 1000000L)))
+    files.zipWithIndex.map { case (f, k) =>
+      writeFile(f, (k + 1) * 1000000L)
+      drain()
+    }
+  }
+
+  test("statistics operator merges per-pipeline stats and emits on quiescence timeout") {
+    // summed models/bytes/blocks/fitted, makespan = 6000 - 1000, and the
+    // newest point's score
+    assert(statsDrains(2).filter(_.pipelineId == 1) ==
+      Seq(SpokeEvent(1, "job_statistics", -1, -1, 0.9,
+        "makespan=5000,models=8,bytes=4096,blocks=2,fitted=220")),
+      statsDrains(2).toString)
   }
 
   test("stats quiescence is driven by the watermark end-to-end, not wall clock") {
-    statsQuiescenceScenario(
-      src => StatsOperator.run(src, timeoutMs = 30000L), TestSession.spark)
+    // no report while the watermark (35999 after file 2) is short of
+    // lastTs + timeout = 36000
+    assert(statsDrains(0).isEmpty && statsDrains(1).isEmpty,
+      "emitted before the watermark reached the timer")
+    // 1 ms past it, pipeline 1's timer fires on data time alone (no 30 s
+    // wall-clock wait happened); pipeline 2's is not due until 65999
+    assert(statsDrains(2).map(_.pipelineId) == Seq(1), statsDrains(2).toString)
+    // the late pipeline-1 record cannot resurrect the cleared state:
+    // advancing the watermark again emits nothing new for pipeline 1
+    assert(statsDrains(4).count(_.pipelineId == 1) == 1,
+      s"late record resurrected pipeline-1 state: ${statsDrains(4)}")
   }
 
-  test("transformWithState stats operator (registered event-time timers) matches fMGWS") {
-    val s2 = TestSession.spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    statsQuiescenceScenario(
-      src => TwsStatsOperator.run(src, timeoutMs = 30000L), s2)
+  test("stats operator: out-of-order batch keeps the max-event-time score, not the last") {
+    // "last write wins" would report 0.2
+    assert(statsDrains(4).filter(_.pipelineId == 2) ==
+      Seq(SpokeEvent(2, "job_statistics", -1, -1, 0.9,
+        "makespan=6000,models=3,bytes=300,blocks=3,fitted=30")),
+      statsDrains(4).toString)
   }
 
   test("spoke state survives a streaming-query restart from checkpoint") {
-    val spark = TestSession.spark
+    val spark = Streaming.stateSession(TestSession.spark)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val dir = Streaming.scratchDir("graft_ckpt_")
     val ck = s"$dir/_ckpt"
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
     def start() = {
       val src = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
-      Spoke.run(src).writeStream
+      TwsSpoke.run(src).writeStream
         .outputMode("append")
         .option("checkpointLocation", ck)
         .foreachBatch((df: org.apache.spark.sql.Dataset[SpokeEvent], _: Long) =>
@@ -206,48 +171,82 @@ class StreamingSuite extends AnyFunSuite {
     assert(resp.get.requestId == 77L)
   }
 
-  test("transformWithState spoke (RocksDB state store) matches the fMGWS semantics") {
-    val spark = TestSession.spark
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tws_").toString
-    val batch1: Seq[Envelope] = Seq(
-      data(0, 1, Some(1.0)), data(1, 2, Some(-1.0)), // buffered pre-Create
-      ctl(5, "Create", "PA"))
-    val batch2: Seq[Envelope] = Seq(
-      data(10, 3, Some(1.0)),
-      data(11, 40, None, "forecasting"),
-      ctl(12, "Query", reqId = 5L))
-    batch1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-    Thread.sleep(1200)
-    batch2.toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-    val src = s2.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
-    val q = TwsSpoke.run(src).writeStream
-      .format("memory").queryName("tws_spoke").outputMode("append")
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val rows = s2.table("tws_spoke").as[SpokeEvent].collect()
-    assert(rows.exists(e => e.kind == "log" && e.value == 2.0), "drain of 2 buffered")
-    assert(rows.exists(e => e.kind == "response" && e.info.startsWith("fitted=3,")),
-      rows.mkString(";"))
-    assert(rows.count(_.kind == "prediction") == 1)
+  /** Five trigger files over three pipelines covering the spoke's whole
+    * lifecycle: a pre-Create buffer over two files that crosses the
+    * [[TwsSpoke.ChunkSize]] seam, Create with an invalid learner, a
+    * duplicate Create, Update (valid and invalid), Delete, Query on a
+    * deleted pipeline, re-Create, forecasting and Query.
+    */
+  private def lifecycleFiles: Seq[Seq[Envelope]] = {
+    def pt(p: Int, seq: Long, op: String) =
+      Envelope(seq, p, "data", "", "", -1L, seq,
+        Seq(math.sin(seq.toDouble), math.cos(0.7 * seq), (seq % 7) / 7.0),
+        if (op == "training") Some(if (math.sin(1.3 * seq) >= 0) 1.0 else -1.0)
+        else None, op)
+    def pts(p: Int, from: Long, n: Int, op: String = "training") =
+      (from until from + n).map(pt(p, _, op))
+    def c(p: Int, seq: Long, req: String, learner: String, reqId: Long) =
+      Envelope(seq, p, "control", req, learner, reqId, -1, Nil, None, "")
+    Seq(
+      // pipeline 1 buffers; 2's Create names an unknown learner, so it
+      // buffers too; 3 is created and trains
+      pts(1, 0, 300) ++ Seq(c(2, 0, "Create", "DeepForest", 20)) ++
+        pts(2, 1, 50) ++ Seq(c(3, 0, "Create", "PA", 30)) ++ pts(3, 1, 40),
+      // 1's buffer passes 512 rows; 2 is created and rejects a duplicate
+      // Create; 3 switches learner
+      pts(1, 300, 300) ++
+        Seq(c(2, 100, "Create", "PA", 21), c(2, 101, "Create", "SVM", 22)) ++
+        pts(2, 102, 30) ++ pts(2, 140, 10, "forecasting") ++
+        Seq(c(2, 150, "Query", "", 23), c(3, 100, "Update", "SVM", 31)) ++
+        pts(3, 101, 40) ++ pts(3, 150, 5, "forecasting"),
+      // 1 is created; 3 answers, is deleted, rejects a Query, buffers again
+      Seq(c(1, 1000, "Create", "PA", 10)) ++ pts(1, 1001, 100) ++
+        pts(1, 1200, 20, "forecasting") ++ Seq(c(1, 1300, "Query", "", 11),
+          c(3, 200, "Query", "", 32), c(3, 201, "Delete", "", 33),
+          c(3, 202, "Query", "", 34)) ++ pts(3, 203, 20),
+      // 3 is re-created; 1 rejects an invalid Update and keeps training
+      Seq(c(3, 300, "Create", "PA", 35)) ++ pts(3, 301, 30) ++
+        pts(3, 340, 10, "forecasting") ++
+        Seq(c(1, 2000, "Update", "NotALearner", 12)) ++ pts(1, 2001, 50),
+      Seq(c(1, 3000, "Query", "", 13), c(2, 3000, "Query", "", 24),
+        c(3, 3000, "Query", "", 36)))
+  }
+
+  test("TwsSpoke on RocksDB equals a per-key SpokeCore.step replay over a " +
+    "staged lifecycle stream, testMode off and on") {
+    val files = lifecycleFiles
+    val dir = SpokeHarness.stage(TestSession.spark, files)
+    for (testMode <- Seq(false, true)) {
+      val d = SpokeHarness.diff(SpokeHarness.runTws(TestSession.spark, dir, testMode),
+        SpokeHarness.replay(files, testMode))
+      assert(d.isEmpty, s"testMode=$testMode: $d")
+    }
+    // the stream reaches every lifecycle step
+    val out = SpokeHarness.replay(files, testMode = true)
+    val logs = out.filter(_.kind == "log").map(e => (e.pipelineId, e.info, e.value)).toSet
+    Seq((1, "created:drained", 600.0),
+      (2, "create_rejected:invalid learner: DeepForest", 0.0),
+      (2, "created:drained", 50.0), (2, "create_rejected:exists", 0.0),
+      (3, "updated", 0.0), (3, "deleted", 0.0), (3, "query_rejected:missing", 0.0),
+      (3, "created:drained", 20.0),
+      (1, "update_rejected:invalid learner: NotALearner", 0.0))
+      .foreach(l => assert(logs.contains(l), s"$l not in $logs"))
+    assert(out.filter(_.kind == "response").map(_.requestId).toSet ==
+      Set(11L, 13L, 23L, 24L, 32L, 36L))
+    assert(out.filter(_.kind == "prediction").map(_.pipelineId).toSet == Set(1, 2, 3))
+    assert(out.exists(_.kind == "curve"))
   }
 
   test("held-out ring: 2-of-10 split, Query scored against ring, deterministic replay") {
     // 30 training points after Create: cycle positions 8,9 of every 10 go to
     // the ring (FlinkSpoke.scala:92-107) -> ring 6, trained 24
     def run(): (SpokeEvent, SpokeEvent) = {
-      val st = fresh()
-      Spoke.process(1, Iterator(ctl(0, "Create", "PA")), st).foreach(_ => ())
-      val pts = (0 until 30).map(i =>
-        data(10 + i, i, Some(if (i % 3 == 0) 1.0 else -1.0)))
-      Spoke.process(1, pts.iterator, st).foreach(_ => ())
-      val r1 = Spoke.process(1, Iterator(ctl(100, "Query", reqId = 5L)), st).toSeq.head
-      val r2 = Spoke.process(1, Iterator(ctl(101, "Query", reqId = 6L)), st).toSeq.head
+      val st = new Steps()
+      st(ctl(0, "Create", "PA"))
+      st((0 until 30).map(i =>
+        data(10 + i, i, Some(if (i % 3 == 0) 1.0 else -1.0))): _*)
+      val r1 = st(ctl(100, "Query", reqId = 5L)).head
+      val r2 = st(ctl(101, "Query", reqId = 6L)).head
       (r1, r2)
     }
     val (r1, r2) = run()
@@ -264,12 +263,8 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("full ring evicts oldest point back into training (FIFO)") {
-    val st = TestGroupState.create[SpokeState](
-      org.apache.spark.api.java.Optional.empty[SpokeState](),
-      GroupStateTimeout.NoTimeout, 0L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
-    def step(evts: Seq[Envelope]) =
-      Spoke.process(testMode = false, testCap = 2)(1, evts.iterator, st).toSeq
+    val st = new Steps(testCap = 2)
+    def step(evts: Seq[Envelope]) = st(evts: _*)
     step(Seq(ctl(0, "Create", "PA")))
     // 30 points, ring candidates at positions 8,9,18,19,28,29; cap 2 =>
     // 4 evictions feed back to training: fitted = 24 + 4 = 28, testn = 2
@@ -279,28 +274,27 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("drained pre-Create buffer goes through the 2-of-10 split too") {
-    val st = fresh()
+    val st = new Steps()
     // 20 points buffered BEFORE Create; the drain routes them through
     // handleData, so 4 land in the ring (positions 8,9,18,19)
-    Spoke.process(1, (0 until 20).map(i =>
-      data(i, i, Some(1.0))).iterator, st).foreach(_ => ())
-    val out = Spoke.process(1, Iterator(ctl(100, "Create", "PA")), st).toSeq
+    st((0 until 20).map(i => data(i, i, Some(1.0))): _*)
+    val out = st(ctl(100, "Create", "PA"))
     assert(out.find(_.kind == "log").get.value == 20.0)
-    val r = Spoke.process(1, Iterator(ctl(101, "Query", reqId = 5L)), st).toSeq.head
+    val r = st(ctl(101, "Query", reqId = 5L)).head
     assert(r.info.startsWith("fitted=16,testn=4,"), r.info)
   }
 
   test("held-out ring survives a streaming-query restart from checkpoint") {
-    val spark = TestSession.spark
+    val spark = Streaming.stateSession(TestSession.spark)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ringck_").toString
+    val dir = Streaming.scratchDir("graft_ringck_")
     val ck = s"$dir/_ckpt"
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
     def start() = {
       val src = spark.readStream
         .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
-      Spoke.run(src).writeStream
+      TwsSpoke.run(src).writeStream
         .outputMode("append")
         .option("checkpointLocation", ck)
         .foreachBatch((df: org.apache.spark.sql.Dataset[SpokeEvent], _: Long) =>
@@ -311,11 +305,10 @@ class StreamingSuite extends AnyFunSuite {
       (0 until 30).map(i => data(10 + i, i, Some(if (i % 3 == 0) 1.0 else -1.0)))
     batch1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
     val q1 = start(); q1.processAllAvailable(); q1.stop()
-    // reference Query in the same incarnation records the expected snapshot
-    val stDirect = fresh()
-    Spoke.process(1, batch1.iterator, stDirect).foreach(_ => ())
-    val expected = Spoke.process(1,
-      Iterator(ctl(100, "Query", reqId = 77L)), stDirect).toSeq.head
+    // the same events stepped directly give the expected snapshot
+    val stDirect = new Steps()
+    stDirect(batch1: _*)
+    val expected = stDirect(ctl(100, "Query", reqId = 77L)).head
     // second incarnation: only a Query arrives; ring contents and model must
     // both come back from the checkpointed state store
     Thread.sleep(1100)
@@ -330,10 +323,8 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("test-mode polling emits one curve point per 100 records, across triggers") {
-    val st = fresh()
-    def step(evts: Seq[Envelope]) =
-      Spoke.process(testMode = true, testCap = SpokeCore.TestCap)(
-        1, evts.iterator, st).toSeq
+    val st = new Steps(testMode = true)
+    def step(evts: Seq[Envelope]) = st(evts: _*)
     step(Seq(ctl(0, "Create", "PA")))
     // 250 records split over two triggers (130 + 120): pollCount persists in
     // state, so polls fire at records 100 and 200 -> 2 curve points
@@ -348,66 +339,23 @@ class StreamingSuite extends AnyFunSuite {
     assert(curve1.head.info.contains("testn=20"), curve1.head.info)
   }
 
-  test("stats operator: out-of-order batch keeps the max-event-time score, not the last") {
-    val st = TestGroupState.create[StatsState](
-      org.apache.spark.api.java.Optional.empty[StatsState](),
-      GroupStateTimeout.EventTimeTimeout, 1000L,
-      org.apache.spark.api.java.Optional.of(500L), hasTimedOut = false)
-    // intentionally shuffled: the newest point (ts=9000, score=0.9) arrives
-    // FIRST in iterator order; "last write wins" would leave 0.2 behind
-    StatsOperator.process(30000L)(1, Iterator(
-      StatEvent(1, 1, 100, 1, 10, 0.9, 9000L),
-      StatEvent(1, 1, 100, 1, 10, 0.5, 3000L),
-      StatEvent(1, 1, 100, 1, 10, 0.2, 6000L)), st).foreach(_ => ())
-    val s1 = st.get
-    assert(s1.score == 0.9, s"stale score survived: $s1")
-    assert(s1.lastTsMs == 9000L && s1.firstTsMs == 3000L)
-    // a second out-of-order batch with only OLDER records must not clobber it
-    StatsOperator.process(30000L)(1, Iterator(
-      StatEvent(1, 1, 100, 1, 10, 0.1, 4000L)), st).foreach(_ => ())
-    assert(st.get.score == 0.9, st.get.toString)
-  }
-
   test("transformWithState buffers 10k pre-Create rows across triggers via ListState") {
-    val spark = TestSession.spark
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_twsbuf_").toString
     val n = 10000
-    // trigger 1+2: 10k pre-Create rows split across two files (appends hit
-    // the ListState, never a whole-buffer rewrite); trigger 3: Create + Query
-    (0 until n / 2).map(i => data(i, i, Some(if (i % 2 == 0) 1.0 else -1.0)))
-      .toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-    Thread.sleep(1100)
-    (n / 2 until n).map(i => data(i, i, Some(if (i % 2 == 0) 1.0 else -1.0)))
-      .toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-    Thread.sleep(1100)
-    Seq(ctl(n + 1, "Create", "PA"), ctl(n + 2, "Query", reqId = 5L))
-      .toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
-    val src = s2.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
-    val name = s"tws_buf_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = TwsSpoke.run(src).writeStream
-      .format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", s"$dir/_ckpt").start()
-    q.processAllAvailable(); q.stop()
-    val rows = s2.table(name).as[SpokeEvent].collect()
-    val drained = rows.find(_.kind == "log").get
+    val rows = (0 until n).map(i => data(i, i, Some(if (i % 2 == 0) 1.0 else -1.0)))
+    // triggers 1+2: 10k pre-Create rows split across two files (appends go
+    // to chunked MapState, never a whole-buffer rewrite); trigger 3:
+    // Create + Query
+    val files = Seq(rows.take(n / 2), rows.drop(n / 2),
+      Seq(ctl(n + 1, "Create", "PA"), ctl(n + 2, "Query", reqId = 5L)))
+    val got = SpokeHarness.runTws(TestSession.spark,
+      SpokeHarness.stage(TestSession.spark, files))
+    val drained = got.find(_.kind == "log").get
     assert(drained.value == n.toDouble, drained.toString)
     // drain goes through the 2-of-10 split: 20% of 10k capped at ring 256
-    val resp = rows.find(_.kind == "response").get
+    val resp = got.find(_.kind == "response").get
     assert(resp.info.contains("testn=256"), resp.info)
-    // fMGWS parity on the same envelope sequence
-    val stP = fresh()
-    Spoke.process(1, ((0 until n).map(i =>
-        data(i, i, Some(if (i % 2 == 0) 1.0 else -1.0))) :+
-      ctl(n + 1, "Create", "PA")).iterator, stP).foreach(_ => ())
-    val expected = Spoke.process(1,
-      Iterator(ctl(n + 2, "Query", reqId = 5L)), stP).toSeq.head
-    assert(resp.info == expected.info, s"${resp.info} != ${expected.info}")
+    val d = SpokeHarness.diff(got, SpokeHarness.replay(files))
+    assert(d.isEmpty, d)
   }
 
   test("job stats: final statistics only after workers x pipelines Terminate partials") {
@@ -461,41 +409,34 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("two pipelines in one envelope stream keep isolated models") {
-    val st1 = fresh(); val st2 = fresh()
+    val st1 = new Steps(1); val st2 = new Steps(2)
     def forPipeline(p: Int)(e: Envelope) = e.copy(pipelineId = p)
     val create = ctl(0, "Create", "PA")
-    Spoke.process(1, Iterator(create, data(1, 1, Some(1.0)), data(2, 2, Some(1.0))), st1)
-      .foreach(_ => ())
-    Spoke.process(2, Iterator(forPipeline(2)(create),
-      data(1, 9, Some(-1.0))), st2).foreach(_ => ())
-    val r1 = Spoke.process(1, Iterator(ctl(10, "Query")), st1).toSeq.head
-    val r2 = Spoke.process(2, Iterator(forPipeline(2)(ctl(10, "Query"))), st2).toSeq.head
+    st1(create, data(1, 1, Some(1.0)), data(2, 2, Some(1.0)))
+    st2(forPipeline(2)(create), data(1, 9, Some(-1.0)))
+    val r1 = st1(ctl(10, "Query")).head
+    val r2 = st2(forPipeline(2)(ctl(10, "Query"))).head
     assert(r1.info.startsWith("fitted=2,"))
     assert(r2.info.startsWith("fitted=1,"))
     assert(r1.pipelineId == 1 && r2.pipelineId == 2)
   }
 
   test("within-trigger events replay in seq order regardless of iterator order") {
-    val st = fresh()
+    val st = new Steps()
     // Create has lower seq than the data — must apply first even though the
     // iterator delivers it last
-    val out = Spoke.process(1, Iterator(
-      data(5, 10, Some(1.0)), data(6, 11, Some(1.0)), ctl(0, "Create", "PA")), st).toSeq
+    val out = st(data(5, 10, Some(1.0)), data(6, 11, Some(1.0)), ctl(0, "Create", "PA"))
     assert(out.find(_.kind == "log").get.value == 0.0) // nothing buffered
-    val out2 = Spoke.process(1, Iterator(ctl(10, "Query")), st).toSeq
+    val out2 = st(ctl(10, "Query"))
     assert(out2.head.info.startsWith("fitted=2,"))
   }
 
   test("transformWithState checkpoint survives adding a state field (avro evolution)") {
-    // The documented fMGWS limitation is that SpokeState cannot gain a
-    // field without abandoning the checkpoint; TwsSpoke is the fix path.
-    // This gate proves the transformWithState + avro-encoding combination
-    // actually reopens a PRE-EVOLUTION checkpoint after the state case
-    // class grows an Option field, carrying old counts forward.
-    val spark = TestSession.spark
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // UnsafeRow-encoded state cannot gain a field without abandoning the
+    // checkpoint. This gate proves the transformWithState + avro-encoding
+    // combination actually reopens a PRE-EVOLUTION checkpoint after the
+    // state case class grows an Option field, carrying old counts forward.
+    val s2 = Streaming.stateSession(TestSession.spark)
     s2.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     import s2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_twsevo_").toString
@@ -614,8 +555,8 @@ class StreamingSuite extends AnyFunSuite {
 
 case class EvoRec(k: Int, seq: Long)
 case class EvoStateV1(cnt: Long)
-/** V1 + one Option field — the exact "state gained a field" shape the
-  * fMGWS SpokeState cannot survive; avro-encoded tws state must.
+/** V1 + one Option field — the exact "state gained a field" shape that
+  * UnsafeRow-encoded state cannot survive; avro-encoded tws state must.
   */
 case class EvoStateV2(cnt: Long, maxSeq: Option[Long])
 case class EvoOut(k: Int, cnt: Long, maxSeq: Long)

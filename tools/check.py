@@ -14,6 +14,7 @@ Dev-only tooling — not part of the shipped library.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -55,75 +56,73 @@ def table_rows(rel, cols_sorted):
     return rows
 
 
+def compare(con, out_dir, name, sql):
+    """Check one query's output; returns None on PASS, else the reason."""
+    got_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+    if sql is None:
+        # rows-only query (no oracle): the weaker check is rows > 0
+        n = con.sql(f"SELECT count(*) FROM '{out_dir}/{name}/*.parquet'").fetchone()[0]
+        return None if n > 0 else "rows-only query returned 0 rows"
+    exp_rel = con.sql(sql)
+    got_cols = sorted(c.lower() for c in got_rel.columns)
+    exp_cols = sorted(c.lower() for c in exp_rel.columns)
+    if got_cols != exp_cols:
+        return f"columns {got_cols} != {exp_cols}"
+    got = table_rows(got_rel, got_cols)
+    exp = table_rows(exp_rel, exp_cols)
+    if len(got) != len(exp):
+        return f"rows {len(got)} != {len(exp)}"
+    bad = [(i, g, e) for i, (g, e) in enumerate(zip(got, exp)) if g != e]
+    if bad:
+        i, g, e = bad[0]
+        return (f"{len(bad)}/{len(got)} rows differ; "
+                f"first at {i}:\n  got {g}\n  exp {e}")
+    return None
+
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    dirs = {n for n in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, n))}
+    # _verify.json names what the run was asked for and what threw; a dir
+    # outside `requested` is an earlier run's output and is not checked.
+    # Without it (an older Verify), every oracle op counts as requested.
+    status_path = os.path.join(out_dir, "_verify.json")
+    if os.path.exists(status_path):
+        status = json.load(open(status_path))
+        requested, failed = set(status["requested"]), status["failed"]
+    else:
+        requested, failed = set(oracle) | dirs, {}
     n_pass = n_fail = 0
-    # rows-only queries (no oracle): the driver's weaker gate is rows>0
-    import os
-    for name in sorted(os.listdir(out_dir)):
-        qdir = os.path.join(out_dir, name)
-        if not os.path.isdir(qdir) or name in oracle:
+    for name in sorted(requested):
+        if name in failed:
+            print(f"FAIL {name}: query threw: {failed[name]}")
+            n_fail += 1
+            continue
+        if name not in dirs:
+            print(f"FAIL {name}: requested but no output")
+            n_fail += 1
             continue
         try:
-            n = con.sql(f"SELECT count(*) FROM '{qdir}/*.parquet'").fetchone()[0]
-            if n > 0:
-                print(f"PASS {name} (rows-only, {n} rows)")
-                n_pass += 1
-            else:
-                print(f"FAIL {name}: rows-only query returned 0 rows")
-                n_fail += 1
+            why = compare(con, out_dir, name, oracle.get(name))
         except Exception as ex:
-            print(f"ERROR {name}: {ex}")
-            n_fail += 1
+            why = f"ERROR {ex}"
             try:
                 con.execute("ROLLBACK")
             except Exception:
                 pass
-    n_skip = 0
-    for name, sql in sorted(oracle.items()):
-        # subset Verify runs (dev fast path) only write the named queries —
-        # skip absent dirs instead of drowning the output in ERROR lines
-        if not os.path.isdir(os.path.join(out_dir, name)):
-            n_skip += 1
-            continue
-        try:
-            got_rel = con.sql(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-            exp_rel = con.sql(sql)
-            got_cols = sorted(c.lower() for c in got_rel.columns)
-            exp_cols = sorted(c.lower() for c in exp_rel.columns)
-            if got_cols != exp_cols:
-                print(f"FAIL {name}: columns {got_cols} != {exp_cols}")
-                n_fail += 1
-                continue
-            got = table_rows(got_rel, got_cols)
-            exp = table_rows(exp_rel, exp_cols)
-            if len(got) != len(exp):
-                print(f"FAIL {name}: rows {len(got)} != {len(exp)}")
-                n_fail += 1
-                continue
-            bad = [(i, g, e) for i, (g, e) in enumerate(zip(got, exp))
-                   if g != e]
-            if bad:
-                i, g, e = bad[0]
-                print(f"FAIL {name}: {len(bad)}/{len(got)} rows differ; "
-                      f"first at {i}:\n  got {g}\n  exp {e}")
-                n_fail += 1
-                continue
-            print(f"PASS {name} ({len(got)} rows)")
+        if why is None:
+            print(f"PASS {name}")
             n_pass += 1
-        except Exception as ex:
-            print(f"ERROR {name}: {ex}")
+        else:
+            print(f"FAIL {name}: {why}")
             n_fail += 1
-            try:
-                con.execute("ROLLBACK")
-            except Exception:
-                pass
-    skipped = f", {n_skip} absent-skipped" if n_skip else ""
+    n_skip = len(set(oracle) - requested)
+    skipped = f", {n_skip} oracle ops not requested" if n_skip else ""
     print(f"== {n_pass} pass, {n_fail} fail{skipped} ==")
     return 1 if n_fail else 0
 
