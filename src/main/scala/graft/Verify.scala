@@ -47,7 +47,7 @@ object Verify {
       }
       // Release per-query session leftovers (cached dedup intermediates,
       // localCheckpoint RDDs, memory-sink views) so 110 sequential queries
-      // don't accumulate heap — same hygiene as Bench.cleanupSession.
+      // don't accumulate heap.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.valuesIterator
         .foreach(_.unpersist(blocking = false))

@@ -13,15 +13,7 @@ case class DataInstance(
     numericalFeatures: Option[Seq[Double]],
     discreteFeatures: Option[Seq[Int]],
     categoricalFeatures: Option[Seq[String]],
-    target: Option[Double]) {
-  /** Validity per the reference: at least one feature group present and a
-    * recognized operation (invalid records dropped silently).
-    */
-  def isValid: Boolean =
-    (numericalFeatures.exists(_.nonEmpty) || discreteFeatures.exists(_.nonEmpty) ||
-      categoricalFeatures.exists(_.nonEmpty)) &&
-      operation.forall(o => o == "training" || o == "forecasting")
-}
+    target: Option[Double])
 
 /** Lowered learning point (the reference's UsablePoint ADT flattened):
   * dense features = numerical ++ discrete, categoricals carried through,
@@ -47,8 +39,6 @@ case class Request(
     learner: Option[LearnerSpec],
     preProcessors: Option[Seq[PreprocessorSpec]],
     trainingConfiguration: Option[Map[String, String]]) {
-  def isValid: Boolean =
-    Set("Create", "Update", "Query", "Delete").contains(request)
   def protocol: String =
     trainingConfiguration.flatMap(_.get("protocol")).getOrElse("Asynchronous")
 }

@@ -35,22 +35,32 @@ object Wire {
       StructField("hyperParameters", MapType(StringType, DoubleType)))))),
     StructField("trainingConfiguration", MapType(StringType, StringType))))
 
+  /** A DataInstance struct parsed with [[dataInstanceSchema]] is valid
+    * (DataInstanceParser): it parsed, at least one feature group is
+    * non-empty, and its operation is absent or a recognized one. Skipping
+    * the EOS sentinel is the caller's check, on the raw record.
+    */
+  def validInstance(di: Column): Column =
+    di.isNotNull &&
+      (size(coalesce(di("numericalFeatures"), array())) > 0 ||
+        size(coalesce(di("discreteFeatures"), array())) > 0 ||
+        size(coalesce(di("categoricalFeatures"), array())) > 0) &&
+      (di("operation").isNull || di("operation").isin("training", "forecasting"))
+
+  /** A Request struct parsed with [[requestSchema]] is valid
+    * (RequestParser): it parsed and names a known request type.
+    */
+  def validRequest(rq: Column): Column =
+    rq.isNotNull && rq("request").isin("Create", "Update", "Query", "Delete")
+
   /** Parse a column of DataInstance JSON strings into typed columns,
     * dropping EOS sentinels and invalid records.
     */
-  def parseInstances(df: DataFrame, jsonCol: String): DataFrame = {
-    val parsed = df
-      .filter(col(jsonCol) =!= "EOS")
+  def parseInstances(df: DataFrame, jsonCol: String): DataFrame =
+    df.filter(col(jsonCol) =!= "EOS")
       .withColumn("__di", from_json(col(jsonCol), dataInstanceSchema))
-      .filter(col("__di").isNotNull)
-    parsed
+      .filter(validInstance(col("__di")))
       .select(col("__di.*"))
-      .filter(
-        (size(coalesce(col("numericalFeatures"), array())) > 0 ||
-          size(coalesce(col("discreteFeatures"), array())) > 0 ||
-          size(coalesce(col("categoricalFeatures"), array())) > 0) &&
-        (col("operation").isNull || col("operation").isin("training", "forecasting")))
-  }
 
   /** Lower parsed DataInstances to dense learning points:
     * features = numerical ++ double(discrete) (DataPointParser.scala:20-47).
@@ -81,7 +91,6 @@ object Wire {
   /** Parse a column of Request JSON strings, dropping invalid ones. */
   def parseRequests(df: DataFrame, jsonCol: String): DataFrame =
     df.withColumn("__rq", from_json(col(jsonCol), requestSchema))
-      .filter(col("__rq").isNotNull && col("__rq.request").isin(
-        "Create", "Update", "Query", "Delete"))
+      .filter(validRequest(col("__rq")))
       .select(col("__rq.*"))
 }

@@ -248,6 +248,33 @@ object HeldOut {
   }
 }
 
+/** The 2-of-10 held-out split (FlinkSpoke.handleData:92-107), shared by the
+  * spoke and the batch Trainer. Of every ten labelled points, cycle
+  * positions 8-9 enter a FIFO ring of at most `cap` points and the rest
+  * train; once the ring is full, each new held-out point evicts the oldest
+  * one back into training. `points` is the ring in slot order, `pos` the
+  * next slot to evict and `cycle` the position of the next point (0-9).
+  */
+final class HeldOutRing[P](cap: Int, init: Seq[P] = Nil,
+    var pos: Int = 0, var cycle: Int = 0) {
+  val points: scala.collection.mutable.ArrayBuffer[P] =
+    scala.collection.mutable.ArrayBuffer.from(init)
+
+  /** Take one labelled point; returns the point to train on now, if any. */
+  def offer(p: P): Option[P] = {
+    val heldOut = cycle >= 8
+    cycle = (cycle + 1) % 10
+    if (!heldOut) Some(p)
+    else if (points.length < cap) { points += p; None }
+    else {
+      val evicted = points(pos)
+      points(pos) = p
+      pos = (pos + 1) % cap
+      Some(evicted)
+    }
+  }
+}
+
 /** Passive-Aggressive binary classifier, PA-II variant (Crammer et al.,
   * JMLR 2006). Labels in {-1, +1}.
   */

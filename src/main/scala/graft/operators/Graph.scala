@@ -92,21 +92,6 @@ object Graph {
       .filter(substring(md5(concat(col("a").cast("string"), lit(":"),
         col("b").cast("string"))), 1, 2) === "00")
 
-  /** Bench warm hook: force the built-once artifacts ([[coPurchaseEdges]],
-    * [[fineCcLabels]]) to materialize OUTSIDE the per-query timers. At
-    * 100 TB these are maintained tables every graph query reads, not
-    * per-query work; billing their one-time build to whichever graph
-    * query the bench happens to run first made d09/g01/g02 look 3-10x
-    * their plan cost in BENCH_r07 (r7 verdict #1). The oracles still
-    * derive everything from lineitem, so this is purely physical.
-    */
-  private[graft] def warmSharedArtifacts(
-      s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    coPurchaseEdges(s, d)
-    fineCcLabels(s, d)
-    ()
-  }
-
   private val labelCache = scala.collection.concurrent.TrieMap[String, String]()
 
   /** Star-contraction CC labels over [[fineSampledUndirectedEdges]],

@@ -55,7 +55,7 @@ import org.apache.spark.sql.types._
   */
 object JobTopology {
 
-  private val Workers = 4
+  private[graft] val Workers = 4
 
   private val spokeSchema = Encoders.product[SpokeEvent].schema
 
@@ -127,14 +127,8 @@ object JobTopology {
   private[graft] def route(raw: DataFrame): org.apache.spark.sql.Dataset[Envelope] = {
     val di = col("__di")
     val rq = col("__rq")
-    val diValid = col("value") =!= "EOS" && di.isNotNull &&
-      (size(coalesce(di("numericalFeatures"), array())) > 0 ||
-        size(coalesce(di("discreteFeatures"), array())) > 0 ||
-        size(coalesce(di("categoricalFeatures"), array())) > 0) &&
-      (di("operation").isNull ||
-        di("operation").isin("training", "forecasting"))
-    val rqValid = rq.isNotNull &&
-      rq("request").isin("Create", "Update", "Query", "Delete")
+    val diValid = col("value") =!= "EOS" && Wire.validInstance(di)
+    val rqValid = Wire.validRequest(rq)
 
     // P1/P3: a data instance fans to every hosted pipeline (the reference
     // spoke trains all hosted pipelines per record); the per-pipeline

@@ -83,7 +83,7 @@ object Similarity {
   private val quantCache =
     scala.collection.concurrent.TrieMap[(String, Int), Array[Double]]()
 
-  /** Bench warm hook (see Graph.warmSharedArtifacts): pre-fit the shared
+  /** Set-up hook (perfbench's curate_batch calls it): pre-fit the shared
     * coarse quantizer at the one nlist the suite uses, so the first IVF
     * query isn't billed for the corpus-wide K-means the others reuse.
     */

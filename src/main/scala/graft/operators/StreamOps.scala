@@ -1038,18 +1038,15 @@ object StreamOps {
       val li = T.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val schema = li.schema
-      // trigger-count override for the SCALE.md delta-vs-ledger probe:
-      // same total volume split into more (smaller) deltas — per-trigger
-      // cost must track the delta, not the growing ledger
-      val nf = sys.env.getOrElse("SPARK_GRAFT_EDGEMAINT_FILES", "2").toInt
-      val dir = Streaming.stagedDir(
-        if (nf == 2) "edgemaint" else s"edgemaint$nf", d) { dir =>
-        (0 until nf).foreach { k =>
-          li.filter(col("pk") % nf === k)
+      val dir = Streaming.stagedDir("edgemaint", d) { dir =>
+        (0 until 2).foreach { k =>
+          li.filter(col("pk") % 2 === k)
             .coalesce(1).write.mode("append").parquet(dir)
         }
       }
       val out = Streaming.scratchDir("graft_edgeinc_")
+      val ledger = new org.apache.hadoop.fs.Path(s"$out/ledger")
+      val ledgerFs = ledger.getFileSystem(s.sparkContext.hadoopConfiguration)
       Streaming.withStreamShuffle(s) {
         val q = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -1060,7 +1057,7 @@ object StreamOps {
                 col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
               .select(col("x.pk").as("a"), col("y.pk").as("b"))
             val pairs =
-              if (new java.io.File(s"$out/ledger").exists) {
+              if (ledgerFs.exists(ledger)) {
                 val prior = s.read.parquet(s"$out/ledger")
                 intra.unionByName(b.as("x").join(prior.as("y"),
                     col("x.ok") === col("y.ok") &&

@@ -82,9 +82,8 @@ final class FittedPipeline(
   * the protocol folds replicas into the next global. The reference's
   * continuous Kafka feedback loop becomes the per-round broadcast.
   *
-  * Train/test split reproduces FlinkSpoke.scala:92-107: of every 10 points
-  * 2 go to a <=`testCap`-slot ring buffer per partition; ring evictions are
-  * fed back to training.
+  * Train/test split: one 2-of-10 [[HeldOutRing]] of `testCap` points per
+  * partition (FlinkSpoke.scala:92-107); ring evictions train.
   */
 object Trainer {
 
@@ -171,17 +170,10 @@ object Trainer {
           val m = bcSeeds.value(lag).map(_.deepCopy).getOrElse(learner.init(dim))
           m.seedRound = (freshRound - lag).toLong
           m.n = 0L; m.cumLoss = 0.0 // per-round counters; totals tracked outside
-          val ring = new Array[(Array[Double], Double)](testCap)
-          var ringSize = 0; var ringPos = 0; var cnt = 0L
-          it.foreach { case (x, y) =>
-            if (cnt % 10 >= 8) {
-              if (ringSize < testCap) { ring(ringSize) = (x, y); ringSize += 1 }
-              else {
-                val ev = ring(ringPos); ring(ringPos) = (x, y)
-                ringPos = (ringPos + 1) % testCap
-                learner.fit(m, ev._1, ev._2)
-              }
-            } else learner.fit(m, x, y)
+          val ring = new HeldOutRing[(Array[Double], Double)](testCap)
+          var cnt = 0L
+          it.foreach { p =>
+            ring.offer(p).foreach { case (x, y) => learner.fit(m, x, y) }
             cnt += 1
           }
           learner.finish(m)
@@ -237,17 +229,9 @@ object Trainer {
       model: ModelState, testCap: Int): (Double, Double) = {
     val bcModel = sc.broadcast(model)
     val sums = tdata.mapPartitions { it =>
-      val ring = new Array[(Array[Double], Double)](testCap)
-      var ringSize = 0; var ringPos = 0; var cnt = 0L
-      it.foreach { case (x, y) =>
-        if (cnt % 10 >= 8) {
-          if (ringSize < testCap) { ring(ringSize) = (x, y); ringSize += 1 }
-          else { ring(ringPos) = (x, y); ringPos = (ringPos + 1) % testCap }
-        }
-        cnt += 1
-      }
-      Iterator.single(HeldOut.sums(learner, bcModel.value,
-        ring.iterator.take(ringSize)))
+      val ring = new HeldOutRing[(Array[Double], Double)](testCap)
+      it.foreach(ring.offer)
+      Iterator.single(HeldOut.sums(learner, bcModel.value, ring.points.iterator))
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
     HeldOut.result(learner, sums)
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ml.{HeldOut, Learners, ModelState, OnlineLearner}
+import graft.ml.{HeldOut, HeldOutRing, Learners, ModelState, OnlineLearner}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
@@ -215,9 +215,8 @@ case class SpokeEvent(
 
 /** Serializable spoke state: model as a blob (Catalyst-encodable), the
   * pre-Create buffer (capped like SpokeLogic.scala:32-35), and the held-out
-  * test ring (FlinkSpoke.scala:92-107): of every 10 training points, points
-  * 8-9 of the cycle go into a FIFO ring of <= `testCap`; once full, each
-  * append evicts the oldest point back INTO training. Query answers are
+  * ring of the 2-of-10 split: `testRing`, `ringPos` and `sampleCount` are a
+  * [[graft.ml.HeldOutRing]]'s points, pos and cycle. Query answers are
   * scored against the ring (FlinkSpoke.scala:160-163).
   *
   * `buffered`/`bufferedCount` describe the pre-Create buffer. A caller that
@@ -287,9 +286,7 @@ object SpokeCore {
     var model: ModelState = if (st.modelBlob != null) deser(st.modelBlob) else null
     var buffer = st.buffered.toVector
     var bufCount = st.bufferedCount
-    val ring = st.testRing.toBuffer
-    var ringPos = st.ringPos
-    var sampleCount = st.sampleCount
+    var ring = new HeldOutRing(testCap, st.testRing, st.ringPos, st.sampleCount)
     var pollCount = st.pollCount
     val out = ArrayBuffer[SpokeEvent]()
 
@@ -298,32 +295,20 @@ object SpokeCore {
       target.foreach(t => learner.fit(model, features.toArray, t))
     }
 
-    /** FlinkSpoke.handleData:92-107 — the 2-of-10 held-out split: cycle
-      * positions 8-9 go to the ring (a full ring evicts its oldest point
-      * back into training); positions 0-7 train directly. Forecasting
-      * points never touch the cycle.
+    /** FlinkSpoke.handleData:92-107 — labelled points go through the
+      * 2-of-10 [[HeldOutRing]]; forecasting points never touch the cycle.
       */
     def handleData(features: Seq[Double], target: Option[Double]): Unit =
       target match {
         case Some(y) =>
-          if (sampleCount >= 8) {
-            if (ring.length < testCap) ring += ((features, y))
-            else {
-              val (ef, ey) = ring(ringPos)
-              ring(ringPos) = ((features, y))
-              ringPos = (ringPos + 1) % testCap
-              train(ef, Some(ey))
-            }
-          } else train(features, target)
-          sampleCount += 1
-          if (sampleCount == 10) sampleCount = 0
+          ring.offer((features, y)).foreach { case (f, t) => train(f, Some(t)) }
         case None => train(features, None)
       }
 
     def queryScore(): (Long, Double, Double, Double) = {
       val (n, cum) = if (model == null) (0L, 0.0) else (model.n, model.cumLoss)
       val (tl, sc) = HeldOut.result(learner, HeldOut.sums(learner, model,
-        ring.iterator.map { case (f, y) => (f.toArray, y) }))
+        ring.points.iterator.map { case (f, y) => (f.toArray, y) }))
       (n, cum, tl, sc)
     }
 
@@ -376,12 +361,12 @@ object SpokeCore {
             // score and the cumulative training loss
             val (n, cum, tl, sc) = queryScore()
             out += SpokeEvent(key, "response", e.requestId, -1, tl,
-              s"fitted=$n,testn=${ring.length},score=$sc,cumLoss=$cum")
+              s"fitted=$n,testn=${ring.points.length},score=$sc,cumLoss=$cum")
           }
         case "Delete" =>
           learner = null; model = null; buffer = Vector.empty; bufCount = 0
           extBuffer.foreach(_.drain())
-          ring.clear(); ringPos = 0; sampleCount = 0; pollCount = 0
+          ring = new HeldOutRing(testCap); pollCount = 0
           st = SpokeState("", created = false, null, Nil)
           out += SpokeEvent(key, "log", e.requestId, -1, 0.0, "deleted")
         case _ => ()
@@ -406,7 +391,7 @@ object SpokeCore {
           if (pollCount == PollEvery) {
             pollCount = 0
             val (n, _, tl, sc) = queryScore()
-            out += SpokeEvent(key, "curve", -1L, n, sc, s"testLoss=$tl,testn=${ring.length}")
+            out += SpokeEvent(key, "curve", -1L, n, sc, s"testLoss=$tl,testn=${ring.points.length}")
           }
         }
       }
@@ -415,9 +400,9 @@ object SpokeCore {
       modelBlob = if (model == null) null else ser(model),
       buffered = buffer,
       bufferedCount = bufCount,
-      testRing = ring.toSeq,
-      ringPos = ringPos,
-      sampleCount = sampleCount,
+      testRing = ring.points.toSeq,
+      ringPos = ring.pos,
+      sampleCount = ring.cycle,
       pollCount = pollCount)))
   }
 }

@@ -225,6 +225,22 @@ class MlSuite extends AnyFunSuite {
     assert(score(pa, null, Seq((Array(1.0, 0.0), 1.0))) == ((0.0, 0.0)))
   }
 
+  test("held-out ring: 2-of-10 split, FIFO eviction back into training, resume from state") {
+    val ring = new HeldOutRing[Int](2)
+    val trained = (0 until 25).flatMap(ring.offer)
+    // cycle positions 8-9 fill the ring; 18 and 19 evict 8 and 9 in turn
+    assert(trained == (0 to 7) ++ (10 to 17) ++ Seq(8, 9) ++ (20 to 24))
+    assert(ring.points == Seq(18, 19))
+    assert(ring.pos == 0 && ring.cycle == 5)
+    // a ring rebuilt from (points, pos, cycle) mid-stream, as the spoke
+    // does from its state, continues exactly as the uninterrupted one
+    val first = new HeldOutRing[Int](2)
+    val head = (0 until 19).flatMap(first.offer)
+    val resumed = new HeldOutRing[Int](2, first.points.toSeq, first.pos, first.cycle)
+    assert(head ++ (19 until 25).flatMap(resumed.offer) == trained)
+    assert(resumed.points == ring.points && resumed.pos == ring.pos)
+  }
+
   test("preprocessor transforms") {
     val poly = new FittedPolynomial(2)
     assert(poly.transform(Array(2.0, 3.0)).toSeq == Seq(2.0, 3.0, 4.0, 6.0, 9.0))

@@ -58,11 +58,11 @@ class OperatorSuite extends AnyFunSuite {
   }
 
   test("bench short ids are unique and parse-safe for the full inventory") {
+    // every query's short id, the prefix before its first underscore
+    // (`q01`, `st08`), names it alone across the whole inventory
     val names = SparkEntry.queries.keys.toSeq
-    val ids = Bench.shortIds(names)
-    assert(ids.values.toSet.size == names.size, "short-id collision")
-    // every id is the pre-underscore prefix (no fallbacks triggered)
-    assert(ids.forall { case (n, id) => id == n.takeWhile(_ != '_') })
+    val clashes = names.groupBy(_.takeWhile(_ != '_')).filter(_._2.sizeIs > 1)
+    assert(clashes.isEmpty, s"short-id collision: $clashes")
   }
 
   test("every query has either an oracle or a documented rows-only check") {

@@ -609,7 +609,13 @@ class PipelineSparkSuite extends AnyFunSuite {
       """{"id": 7, "operation": "training", "numericalFeatures": [1.0, 2.0], "target": 1.0}"""
     val fc =
       """{"id": 8, "operation": "forecasting", "discreteFeatures": [3, 4]}"""
-    val df = Seq(good, fc, "EOS", "{broken", """{"id": 9}""").toDF("value")
+    val badOp =
+      """{"id": 10, "operation": "deleting", "numericalFeatures": [1.0], "target": 0.0}"""
+    val badReq = """{"id": 1, "request": "Restart", "requestId": 3}"""
+    val create = """{"id": 1, "request": "Create", "requestId": 1, "learner": {"name": "PA"}}"""
+    val query = """{"id": 1, "request": "Query", "requestId": 2}"""
+    val df = Seq(good, fc, "EOS", "{broken", """{"id": 9}""", badOp, badReq,
+      create, query).toDF("value")
     val pts = Wire.toPoints(Wire.parseInstances(df, "value")).collect()
     assert(pts.length == 2)
     val byId = pts.map(r => r.getAs[Long]("id") -> r).toMap
@@ -618,6 +624,15 @@ class PipelineSparkSuite extends AnyFunSuite {
     assert(feats(7L) == Seq(1.0, 2.0))
     assert(feats(8L) == Seq(3.0, 4.0))
     assert(byId(8L).getAs[String]("operation") == "forecasting")
+    val reqs = Wire.parseRequests(df, "value").collect()
+    assert(reqs.map(_.getAs[Long]("requestId")).toSeq == Seq(1L, 2L))
+    // the Job's router keeps exactly what the parsers keep: one data
+    // envelope per hosted pipeline, one control envelope per worker
+    val env = graft.operators.JobTopology.route(df).collect()
+    val workers = graft.operators.JobTopology.Workers
+    val (data, control) = (env.count(_.kind == "data"), env.count(_.kind == "control"))
+    assert(data == 2 * pts.length && control == workers * reqs.length)
+    assert(data == 4 && control == 8 && env.length == 12)
   }
 
   test("LloydRefine: partition-count invariance, empty-cluster carry, exact counts") {
