@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Op, T}
+import graft.streaming.Streaming
+import graft.streaming.Streaming.Sink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -605,80 +607,46 @@ object Curation {
       (s, d) => {
         val docs = T.documents(s, d).select("doc_id", "text")
         val schema = docs.schema
-        val dir = graft.streaming.Streaming.stagedDir("livecur", d) { dir =>
-          docs.filter(col("doc_id") % 2 === 0)
-            .coalesce(1).write.mode("append").parquet(dir)
-          docs.filter(col("doc_id") % 2 === 1)
-            .coalesce(1).write.mode("append").parquet(dir)
-        }
-        val out = graft.streaming.Streaming.scratchDir("graft_livecur_")
-        graft.streaming.Streaming.withStreamShuffle(s) {
-          val q = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(dir)
-            .writeStream
-            .foreachBatch {
-              (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-                val b = batch.persist()
-                // scale-probe telemetry (P07_TRACE, the P08_TRACE pattern):
-                // per-trigger wall of each ledger append — the 100x probe's
-                // evidence that trigger cost tracks the ARRIVAL delta, not
-                // the ledger size (appends never read existing ledger files)
-                def timed(label: String)(f: => Unit): Unit =
-                  if (sys.env.contains("P07_TRACE")) {
-                    val t0 = System.nanoTime()
-                    f
-                    System.err.println(f"P07_TRACE batch=$bid $label " +
-                      f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-                  } else f
-                // ONE tokenize pass per trigger (r12 optimization, guide
-                // §1.2 "don't compute things you throw away"): dl(doc) ==
-                // SUM(tf) over the doc's terms — both exclude empty tokens —
-                // so the doc-length partial derives from the tf partial
-                // instead of re-splitting every text. The left join from the
-                // batch's doc_ids keeps the dl=0 row for an all-separator
-                // text (the shape the old filter(split(..)) form emitted),
-                // so both ledgers are bit-identical to the two-pass form —
-                // GIVEN the invariant that doc_id is unique within a trigger
-                // batch (ADVICE r12: tf groups across duplicate doc_ids, so
-                // a dupe would get the cross-row total once per input row
-                // instead of its own length; the staged fixture assigns each
-                // doc to exactly one file slice, so the invariant holds).
-                val tfb = b.select(col("doc_id"),
-                    explode(split(col("text"), " ")).as("term"))
-                  .filter(col("term") =!= "")
-                  .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-                  .persist()
-                timed("tf") {
-                  tfb.write.mode("append").parquet(s"$out/tf")
-                }
-                timed("dl") {
-                  b.select("doc_id")
-                    .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
-                      Seq("doc_id"), "left")
-                    .select(col("doc_id"),
-                      coalesce(col("dl"), lit(0L)).as("dl"))
-                    .write.mode("append").parquet(s"$out/dl")
-                }
-                val shb = Dedup.shingleRows(b).persist()
-                timed("sh") {
-                  shb.write.mode("append").parquet(s"$out/sh")
-                }
-                // incremental banded candidate-pair ledger (r13): band THIS
-                // batch's docs and append the pair delta, so the serve no
-                // longer re-bands and band-self-joins the accumulated corpus
-                // (Dedup.pairLedgerAppend — equivalence argument there)
-                timed("pairs") {
-                  Dedup.pairLedgerAppend(shb, out)
-                }
-                shb.unpersist()
-                tfb.unpersist()
-                b.unpersist()
-                ()
-            }
-            .option("checkpointLocation", s"$out/_ckpt")
-            .start()
-          q.processAllAvailable(); q.stop()
-        }
+        val dir = Streaming.stagedDir("livecur", d)(Streaming.stage(s, _,
+          docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
+        val out = Streaming.scratchDir("graft_livecur_")
+        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+          val b = batch.persist()
+          // ONE tokenize pass per trigger (r12 optimization, guide
+          // §1.2 "don't compute things you throw away"): dl(doc) ==
+          // SUM(tf) over the doc's terms — both exclude empty tokens —
+          // so the doc-length partial derives from the tf partial
+          // instead of re-splitting every text. The left join from the
+          // batch's doc_ids keeps the dl=0 row for an all-separator
+          // text (the shape the old filter(split(..)) form emitted),
+          // so both ledgers are bit-identical to the two-pass form —
+          // GIVEN the invariant that doc_id is unique within a trigger
+          // batch (ADVICE r12: tf groups across duplicate doc_ids, so
+          // a dupe would get the cross-row total once per input row
+          // instead of its own length; the staged fixture assigns each
+          // doc to exactly one file slice, so the invariant holds).
+          val tfb = b.select(col("doc_id"),
+              explode(split(col("text"), " ")).as("term"))
+            .filter(col("term") =!= "")
+            .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+            .persist()
+          tfb.write.mode("append").parquet(s"$out/tf")
+          b.select("doc_id")
+            .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
+              Seq("doc_id"), "left")
+            .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
+            .write.mode("append").parquet(s"$out/dl")
+          val shb = Dedup.shingleRows(b).persist()
+          shb.write.mode("append").parquet(s"$out/sh")
+          // incremental banded candidate-pair ledger (r13): band THIS
+          // batch's docs and append the pair delta, so the serve no
+          // longer re-bands and band-self-joins the accumulated corpus
+          // (Dedup.pairLedgerAppend — equivalence argument there)
+          Dedup.pairLedgerAppend(shb, out)
+          shb.unpersist()
+          tfb.unpersist()
+          b.unpersist()
+        })(identity)
         // Cache the dup set and the CLEAN index tables (the d27 plan
         // rule): tf/dl are each consumed twice inside bm25Rank (postings
         // + df; lengths + corpus stats), and uncached each probe re-plans
@@ -699,17 +667,6 @@ object Curation {
         val dlT = s.read.parquet(s"$out/dl")
           .groupBy("doc_id").agg(sum("dl").as("dl"))
           .join(losers, Seq("doc_id"), "left_anti").cache()
-        if (sys.env.contains("P07_TRACE")) {
-          // serve-side stage split: force each cached artifact in order so
-          // the probe attributes dedup vs index-clean vs rank costs
-          def t(label: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-            val t0 = System.nanoTime()
-            val n = df.count()
-            System.err.println(f"P07_TRACE serve $label rows=$n " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-          t("dedup_losers")(losers); t("tf_clean")(tf); t("dl_clean")(dlT)
-        }
         TextAnalysis.bm25Rank(s, tf, dlT)
       },
       Some(s"""WITH ${Dedup.sqlCappedCtes},

@@ -422,10 +422,13 @@ object Dedup {
     * pairs directory (and a corpus with no >=5-token doc never creates the
     * bands directory) — fall back to an empty frame of the right schema.
     */
-  private def ledgerOr(ss: SparkSession, path: String, ddl: String): DataFrame =
-    if (new java.io.File(path).exists()) ss.read.parquet(path)
+  private def ledgerOr(ss: SparkSession, path: String, ddl: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(p))
+      ss.read.parquet(path)
     else ss.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType.fromDDL(ddl))
+  }
 
   /** Serve side of the incremental pair ledger — see [[pairLedgerAppend]]
     * for the construction and the equivalence argument. Returns the same

@@ -98,18 +98,7 @@ object JobTopology {
           "training"))
       val f3 = reqs3.unionByName(
         dataJson(feats.filter(col("vec_id") >= n - 50), "forecasting"))
-      // distinct mtimes: the file source orders by modification time
-      val t0 = System.currentTimeMillis()
-      def backdate(olderThan: Long, to: Long): Unit =
-        java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-          if (java.nio.file.Files.getLastModifiedTime(p).toMillis > olderThan)
-            java.nio.file.Files.setLastModifiedTime(p,
-              java.nio.file.attribute.FileTime.fromMillis(to)))
-      f1.coalesce(1).write.mode("append").parquet(dir)
-      backdate(t0 - 120000, t0 - 120000)
-      f2.coalesce(1).write.mode("append").parquet(dir)
-      backdate(t0 - 120000, t0 - 60000)
-      f3.coalesce(1).write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, f1, f2, f3)
     }
 
   /** ONE scan of the wire stream routes everything (the P7 validity
@@ -181,45 +170,20 @@ object JobTopology {
   /** Q1 — the Job: parse + route + validate + expand, spoke, tagged sinks.
     * Returns after the stream drains; outputs land under `out`.
     */
-  private def runJob(s: SparkSession, wireDir: String, out: String): Unit = {
-    val s2 = Streaming.stateSession(s)
-    Streaming.withStreamShuffle(s2) {
-      val raw = s2.readStream
-        .schema(StructType(Seq(StructField("value", StringType))))
-        .option("maxFilesPerTrigger", "1").parquet(wireDir)
-      val spoke = TwsSpoke.run(route(raw)).toDF()
-
-      val q = spoke.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$out/_ckpt_q1")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          // K9 side-output fan-out to tagged sinks (O1-O4)
-          val bb = b.persist()
-          bb.filter(col("kind") === "prediction")
-            .write.mode("append").parquet(s"$out/predictions")
-          bb.filter(col("kind") === "response")
-            .write.mode("append").parquet(s"$out/responses")
-          bb.filter(!col("kind").isin("prediction", "response"))
-            .write.mode("append").parquet(s"$out/logs")
-          bb.unpersist()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      // scale-probe telemetry (P08_TRACE): the spoke's keyed state must stay
-      // protocol-sized — O(pipelines x workers) rows, model-sized bytes —
-      // regardless of streamed volume; lastProgress carries the state
-      // operator's row/byte ledger for the final commit
-      if (sys.env.contains("P08_TRACE")) {
-        val p = q.lastProgress
-        if (p != null) p.stateOperators.foreach(so =>
-          println(s"P08 state rows=${so.numRowsTotal} " +
-            s"memBytes=${so.memoryUsedBytes} " +
-            s"commitMs=${so.commitTimeMs}"))
-      }
-      q.stop()
-    }
-  }
+  private def runJob(s: SparkSession, wireDir: String, out: String): Unit =
+    Streaming.drain(Streaming.stateSession(s), wireDir,
+      StructType(Seq(StructField("value", StringType))), s"$out/_ckpt_q1",
+      Streaming.Sink.Batches { (b, _) =>
+        // K9 side-output fan-out to tagged sinks (O1-O4)
+        val bb = b.persist()
+        bb.filter(col("kind") === "prediction")
+          .write.mode("append").parquet(s"$out/predictions")
+        bb.filter(col("kind") === "response")
+          .write.mode("append").parquet(s"$out/responses")
+        bb.filter(!col("kind").isin("prediction", "response"))
+          .write.mode("append").parquet(s"$out/logs")
+        bb.unpersist()
+      })(raw => TwsSpoke.run(route(raw)).toDF())
 
   /** Decode spoke response rows into the K5 input shape (shared by the
     * batch gate read and Q2's streaming read).
@@ -288,22 +252,11 @@ object JobTopology {
     def sentinel(ts: Long) = Seq(
       StatPartial("__wm__", 0, -1, 0L, 0L, 0L, 0.0, 0.0, ts)).toDF()
     val statsDir = s"$out/stat_partials"
-    val t0 = System.currentTimeMillis()
-    def backdate(olderThan: Long, to: Long): Unit =
-      java.nio.file.Files.list(java.nio.file.Paths.get(statsDir)).forEach(p =>
-        if (java.nio.file.Files.getLastModifiedTime(p).toMillis > olderThan)
-          java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(to)))
-    statsP.coalesce(1).write.mode("append").parquet(statsDir)
-    backdate(t0 - 180000, t0 - 180000)
-    sentinel(10000000L).coalesce(1).write.mode("append").parquet(statsDir)
-    backdate(t0 - 180000, t0 - 120000)
-    sentinel(10000001L).coalesce(1).write.mode("append").parquet(statsDir)
-    backdate(t0 - 120000, t0 - 60000)
-    termP.coalesce(1).write.mode("append").parquet(statsDir)
+    Streaming.stage(s, statsDir, statsP, sentinel(10000000L),
+      sentinel(10000001L), termP)
     Streaming.withStreamShuffle(s) {
-      val src = s.readStream.schema(Encoders.product[StatPartial].schema)
-        .option("maxFilesPerTrigger", "1").parquet(statsDir).as[StatPartial]
+      val src = Streaming.source(s, statsDir, Encoders.product[StatPartial].schema)
+        .as[StatPartial]
       JobStatsOperator.run(src, workers = Workers, testSetSize = 256,
         timeoutMs = 60000L, wmOnlyTag = "__wm__").writeStream
         .format("memory").queryName(name).outputMode("append")
@@ -318,23 +271,15 @@ object JobTopology {
       val out = Streaming.scratchDir("mljob_out_")
       val n = T.embeddings(s, d).count()
       val nTrain = n - 50L
-
-      def tlog[A](tag: String)(body: => A): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        if (sys.env.contains("P08_TRACE"))
-          println(f"P08 $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      tlog("q1_job")(runJob(s, wireDir, out))
+      runJob(s, wireDir, out)
       val runTag = java.util.UUID.randomUUID().toString.replace("-", "")
       // Q2 and Q3 run CONCURRENTLY — the reference DAG's parallel
       // queryResponses/performance branches off the worker stream
-      val (merged, jobStats) = tlog("q2q3_merge_stats") {
+      val (merged, jobStats) = {
         val q2 = startMerge(s, out, s"p08m_$runTag")
         val q3 = startStats(s, out, s"p08s_$runTag")
-        q2.processAllAvailable(); q3.processAllAvailable()
-        q2.stop(); q3.stop()
+        try { q2.processAllAvailable(); q3.processAllAvailable() }
+        finally { q2.stop(); q3.stop() }
         (s.table(s"p08m_$runTag"), s.table(s"p08s_$runTag"))
       }
 

@@ -397,39 +397,26 @@ object MLOps {
       // fit/score them concurrently so each fold's stage tail back-fills the
       // others' idle cores (guide §2.6 overlap-independent-jobs); per-fold
       // results are computed exactly as before, so the output is unchanged
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val rows = try {
-        val futs = (0 until 5).map { f =>
-          scala.concurrent.Future {
-            val train = df.filter(col("fold") =!= f.toLong)
-            val test = df.filter(col("fold") === f.toLong)
-            val fitted = Trainer.fit(s,
-              PipelineSpec(100 + f, "PA", Map("C" -> 0.01),
-                Seq("StandardScaler"), "Synchronous", rounds = 1), toRdd(train))
-            val nTest = foldN.getOrElse(f.toLong, 0L)
-            val nTrain = total - nTest
-            // the trainer parks ≤256 ring slots per partition (8 partitions)
-            val fitOk = fitted.model.n <= nTrain &&
-              fitted.model.n >= math.max(0L, nTrain - 8L * 256L)
-            val acc = fitted.predict(s, test)
-              .join(test.select(col("id"), col("target")), "id")
-              .agg(avg(when(col("prediction") === col("target"), 1.0)
-                .otherwise(0.0)).as("acc"))
-              .head().getDouble(0)
-            (f.toLong, nTrain, nTest, fitOk, acc >= 0.0 && acc <= 1.0)
-          }(ec)
+      val rows = graft.Subjobs.runAll(s, (0 until 5).map { f =>
+        () => {
+          val train = df.filter(col("fold") =!= f.toLong)
+          val test = df.filter(col("fold") === f.toLong)
+          val fitted = Trainer.fit(s,
+            PipelineSpec(100 + f, "PA", Map("C" -> 0.01),
+              Seq("StandardScaler"), "Synchronous", rounds = 1), toRdd(train))
+          val nTest = foldN.getOrElse(f.toLong, 0L)
+          val nTrain = total - nTest
+          // the trainer parks ≤256 ring slots per partition (8 partitions)
+          val fitOk = fitted.model.n <= nTrain &&
+            fitted.model.n >= math.max(0L, nTrain - 8L * 256L)
+          val acc = fitted.predict(s, test)
+            .join(test.select(col("id"), col("target")), "id")
+            .agg(avg(when(col("prediction") === col("target"), 1.0)
+              .otherwise(0.0)).as("acc"))
+            .head().getDouble(0)
+          (f.toLong, nTrain, nTest, fitOk, acc >= 0.0 && acc <= 1.0)
         }
-        // Duration.Inf, not a wall-clock deadline (ADVICE r12): each future
-        // is bounded by its own Spark jobs — the old sequential form had no
-        // deadline, and a fixed bound turns a legitimately slow fold at
-        // 100 TB into a failed query. A failed fold propagates through
-        // Await.result; shutdownNow interrupts the siblings so they don't
-        // keep submitting jobs behind a dead query.
-        try futs.map(fu => scala.concurrent.Await.result(fu,
-          scala.concurrent.duration.Duration.Inf))
-        catch { case e: Throwable => pool.shutdownNow(); throw e }
-      } finally pool.shutdown()
+      })
       rows.toDF("fold", "n_train", "n_test", "fit_bounded", "acc_in_range")
         .orderBy("fold")
     },
@@ -1325,35 +1312,21 @@ object MLOps {
   private def fgmBatchRanges = Seq((0L, 160L), (160L, 240L), (240L, 480L))
   private def fgmFalseAlarmThreshold = 1.2
 
-  /** Engine side of ml31: stage the three batch slices as three parquet
-    * files with ascending mtimes (maxFilesPerTrigger=1 consumes oldest
-    * first), run the STREAMING trainer in routed mode — row (pid, seq)
+  /** Engine side of ml31: stage the three batch slices as three
+    * triggers, run the STREAMING trainer in routed mode — row (pid, seq)
     * lands on worker pid and trains in seq order, the reference's
     * partitionCustom assignment — and emit the raw final model plus the
     * post-decision quanta of batches 1 and 2. */
   private def fgmFalseAlarmFit(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val dir = graft.streaming.Streaming.stagedDir("fgm31", d) { dir =>
-      fgmBatchRanges.zipWithIndex.foreach { case ((lo, hi), b) =>
-        val tmp = graft.streaming.Streaming.scratchDir("fgm31_stage_") + "/out"
+    val dir = graft.streaming.Streaming.stagedDir("fgm31", d)(
+      graft.streaming.Streaming.stage(s, _, fgmBatchRanges.map { case (lo, hi) =>
         T.embeddings(s, d)
           .filter(col("vec_id") >= lo && col("vec_id") < hi)
           .select((col("vec_id") % 2).as("pid"), col("vec_id").as("seq"),
             expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
               .as("features"),
             when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target"))
-          .coalesce(1).write.parquet(tmp)
-        val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-          .iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"fgm31 staging: no parquet part in $tmp"))
-        val dst = java.nio.file.Paths.get(dir, s"batch$b.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            1700000000000L + b.toLong * 600000L))
-      }
-    }
+      }: _*))
     val schema = StructType(Seq(
       StructField("pid", LongType), StructField("seq", LongType),
       StructField("features", ArrayType(DoubleType)),

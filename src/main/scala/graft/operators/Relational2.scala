@@ -3,7 +3,7 @@ package graft.operators
 import graft.{Op, T}
 import graft.Num._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -41,6 +41,13 @@ object Relational2 {
         |  (SELECT CAST(MAX(t3 - t1) AS BIGINT)
         |     FROM s3 JOIN s1 USING (user_id)) AS max_convert_us""".stripMargin
 
+
+  /** Whether a completed write (its `_SUCCESS` marker) is at `dir`, probed
+    * through the path's Hadoop FileSystem. */
+  private def written(s: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Collision-free fixture fingerprint for cached derived artifacts
     * (bucketed tables, compaction copies, the w09 Derby database): an md5
@@ -601,7 +608,7 @@ object Relational2 {
         val path = new java.io.File(
           new java.io.File(sys.props("java.io.tmpdir"), s"graft_rl_$tag"),
           "lineitem").toString
-        if (!new java.io.File(path, "_SUCCESS").exists)
+        if (!written(s, path))
           T.lineitem(s, d)
             .select("l_orderkey", "l_shipdate", "l_extendedprice", "l_discount")
             .repartitionByRange(8, col("l_shipdate"))
@@ -659,9 +666,9 @@ object Relational2 {
         val bigDir = new java.io.File(base, "compact").toString
         val ev = T.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        if (!new java.io.File(smallDir, "_SUCCESS").exists)
+        if (!written(s, smallDir))
           ev.repartition(32).write.mode("overwrite").parquet(smallDir)
-        if (!new java.io.File(bigDir, "_SUCCESS").exists)
+        if (!written(s, bigDir))
           s.read.parquet(smallDir).repartition(4)
             .write.mode("overwrite").parquet(bigDir)
         def stats(dir: String) = s.read.parquet(dir)
@@ -950,7 +957,7 @@ object Relational2 {
         val morton = (0 until 10).map(i =>
           s"(shiftleft(($bo >> $i) & 1, ${2 * i}) + " +
             s"shiftleft(($bp >> $i) & 1, ${2 * i + 1}))").mkString(" + ")
-        if (!new java.io.File(path, "_SUCCESS").exists)
+        if (!written(s, path))
           T.lineitem(s, d)
             .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
               expr(morton).as("z"))

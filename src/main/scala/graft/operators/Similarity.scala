@@ -636,18 +636,9 @@ object Similarity {
         // CONCURRENT Spark jobs (each a SingleLearner sequential pass over
         // its 8-dim slice; the scheduler interleaves the cache scans) —
         // wall time of one fit instead of m sequential driver jobs
-        val books: Seq[Array[Double]] = {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              (0 until m).toSeq.map(j => scala.concurrent.Future {
-                kmeans(31 + j, kCodes, resid.select(sliceExpr(j).as("sl")))
-              })),
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
-        }
+        val books: Seq[Array[Double]] = graft.Subjobs.runAll(resid.sparkSession,
+          (0 until m).map(j =>
+            () => kmeans(31 + j, kCodes, resid.select(sliceExpr(j).as("sl")))))
         // global mean = the rank-0 reconstruction baseline
         val meanRow = feats.select(
           (0 until dim).map(i => avg(expr(s"fd[$i]")).as(s"m$i")): _*).collect()(0)

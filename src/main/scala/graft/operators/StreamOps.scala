@@ -4,6 +4,7 @@ import graft.{Num, Op, T}
 import graft.Num.{dsum, sqlDsum}
 import graft.functions.F
 import graft.streaming._
+import graft.streaming.Streaming.Sink
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,7 +12,7 @@ import org.apache.spark.sql.types._
 /** Streaming surface: real Structured-Streaming queries (event-time windows,
   * watermarks, session windows, keyed state) executed to completion over the
   * staged `events` fixture, hash-matched against batch-SQL oracles. The
-  * streaming engine genuinely runs multiple triggers (maxFilesPerTrigger=1)
+  * streaming engine genuinely runs multiple triggers ([[Streaming.drain]])
   * with the watermark advancing between them — results come from append-mode
   * watermark progress, not from a final flush.
   */
@@ -114,6 +115,18 @@ object StreamOps {
   private def uniq(prefix: String): String =
     s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
+  /** Sorted numeric suffixes of the `prefix`-named entries of `root` (the
+    * batch-id-versioned state dirs), listed through the path's Hadoop
+    * FileSystem. */
+  private def versions(s: org.apache.spark.sql.SparkSession, root: String,
+      prefix: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong).sorted
+  }
+
 
   /** Stage the st04/st31 lifecycle envelopes (shared artifact): batch 1 is
     * 100 pre-Create training rows + the Create (exercising the pre-Create
@@ -148,14 +161,7 @@ object StreamOps {
         .unionByName(env(feats.filter(col("vec_id") >= n - 50), 300000L, "forecasting"))
         .unionByName(Seq(
           Envelope(400000L, 1, "control", "Query", "", 9L, -1, Nil, None, "")).toDS())
-      batch1.coalesce(1).write.mode("append").parquet(dir)
-      // Distinct mtimes (file source orders by mod time): back-date batch 1
-      // instead of sleeping between the writes.
-      val past = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000)
-      java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, past))
-      batch2.coalesce(1).write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, batch1, batch2)
     }
 
   /** Hash-gated lifecycle rollup of st04/st31: the oracle pins the exact
@@ -217,12 +223,14 @@ object StreamOps {
     * per trigger; returns the spoke's events.
     */
   private def runSpoke(s: org.apache.spark.sql.SparkSession, dir: String,
-      prefix: String, testMode: Boolean = false): org.apache.spark.sql.DataFrame =
-    Streaming.runStream(Streaming.stateSession(s), dir,
-      org.apache.spark.sql.Encoders.product[Envelope].schema, uniq(prefix),
-      src => TwsSpoke.run(
+      prefix: String, testMode: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val name = uniq(prefix)
+    Streaming.drain(Streaming.stateSession(s), dir,
+      org.apache.spark.sql.Encoders.product[Envelope].schema,
+      s"$dir/_ckpt_$name", Sink.Memory(name))(src => TwsSpoke.run(
         src.as[Envelope](org.apache.spark.sql.Encoders.product[Envelope]),
         testMode).toDF())
+  }
 
   private val spokeLifecycle: (org.apache.spark.sql.SparkSession, String) =>
       org.apache.spark.sql.DataFrame = (s, d) =>
@@ -233,7 +241,9 @@ object StreamOps {
     // ------------------------------------------------------------------
     Op("st01_tumbling_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st01"), src =>
+      val name = uniq("st01")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -250,7 +260,9 @@ object StreamOps {
     // ------------------------------------------------------------------
     Op("st02_sliding_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st02"), src =>
+      val name = uniq("st02")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "6 hours", "3 hours").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -273,7 +285,9 @@ object StreamOps {
     // ------------------------------------------------------------------
     Op("st03_session_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st03"), src =>
+      val name = uniq("st03")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -446,7 +460,7 @@ object StreamOps {
       // expensive here as in the single-source window queries.
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       def side(name: String, tsAlias: String, idAlias: String) =
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+        Streaming.source(s, dir, schema)
           .filter(col("event_type") === name)
           .select(col("user_id"), col("ts").as(tsAlias), col("event_id").as(idAlias))
           .withWatermark(tsAlias, "35 days")
@@ -458,13 +472,10 @@ object StreamOps {
           col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"))
         .select(signups("user_id"), col("signup_event"), col("purchase_event"),
           (unix_micros(col("p_ts")) - unix_micros(col("s_ts"))).as("delay_us"))
-      Streaming.withStreamShuffle(s) {
-        val name = uniq("st08")
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-        s.table(name).orderBy("user_id", "signup_event", "purchase_event")
-      }
+      // each join side reads its own file-per-trigger source
+      val name = uniq("st08")
+      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name", Sink.Memory(name))(
+        _ => joined).orderBy("user_id", "signup_event", "purchase_event")
     },
       Some("""SELECT s.user_id, s.event_id AS signup_event, p.event_id AS purchase_event,
         |  epoch_us(CAST(p.ts AS TIMESTAMP)) - epoch_us(CAST(s.ts AS TIMESTAMP)) AS delay_us
@@ -483,7 +494,6 @@ object StreamOps {
     // the filter lags eviction by one trigger. This is the §2.7 capability
     // the reference lacks (ingestion-time only) and Spark watermarks provide.
     Op("st10_late_data", (s, d) => {
-      import scala.jdk.CollectionConverters._
       // schema + maxTs come from the shared staged-events cache (same
       // source table); the late-arrival file layout is memoized separately
       val (_, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
@@ -492,30 +502,19 @@ object StreamOps {
         val minTs = ev.agg(min(unix_micros(col("ts")))).head().getLong(0)
         val cutoff = minTs + 6L * 86400L * 1000000L
         val mid = (cutoff + maxTs) / 2
-        def ls() = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-          .iterator().asScala.toSet
-        def backdate(fs: Set[java.nio.file.Path], ageMs: Long): Unit = {
-          val t = java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs)
-          fs.foreach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        }
-        ev.filter(unix_micros(col("ts")) >= cutoff && unix_micros(col("ts")) < mid)
-          .coalesce(1).write.mode("append").parquet(dir)
-        val fa1 = ls(); backdate(fa1, 180000)
-        ev.filter(unix_micros(col("ts")) >= mid)
-          .coalesce(1).write.mode("append").parquet(dir)
-        val fa2 = ls(); backdate(fa2 -- fa1, 120000)
-        ev.filter(unix_micros(col("ts")) < cutoff)
-          .coalesce(1).write.mode("append").parquet(dir)
-        backdate(ls() -- fa2, 60000)
-        ev.limit(1)
-          .select(timestamp_micros(lit(maxTs + 40L * 86400L * 1000000L)).as("ts"),
-            lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-            lit(0.0).as("value"), col("event_id"), col("props"))
-          .select(ev.columns.map(col).toSeq: _*)
-          .coalesce(1).write.mode("append").parquet(dir)
+        Streaming.stage(s, dir,
+          ev.filter(unix_micros(col("ts")) >= cutoff && unix_micros(col("ts")) < mid),
+          ev.filter(unix_micros(col("ts")) >= mid),
+          ev.filter(unix_micros(col("ts")) < cutoff),
+          ev.limit(1)
+            .select(timestamp_micros(lit(maxTs + 40L * 86400L * 1000000L)).as("ts"),
+              lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
+              lit(0.0).as("value"), col("event_id"), col("props"))
+            .select(ev.columns.map(col).toSeq: _*))
       }
-      val res = Streaming.runStream(s, dir, schema, uniq("st10"), src =>
+      val name = uniq("st10")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -549,7 +548,7 @@ object StreamOps {
       // removed from the output).
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       def side(name: String, tsAlias: String, idAlias: String) =
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+        Streaming.source(s, dir, schema)
           .filter(col("event_type") === name || col("event_type") === "sentinel")
           .select(col("user_id"), col("ts").as(tsAlias), col("event_id").as(idAlias))
           .withWatermark(tsAlias, "35 days")
@@ -562,14 +561,10 @@ object StreamOps {
         "leftOuter")
         .select(signups("user_id"), col("signup_event"), col("purchase_event"),
           (unix_micros(col("p_ts")) - unix_micros(col("s_ts"))).as("delay_us"))
-      Streaming.withStreamShuffle(s) {
-        val name = uniq("st15")
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-        s.table(name).filter(col("user_id") >= 0)
-          .orderBy("user_id", "signup_event", "purchase_event")
-      }
+      val name = uniq("st15")
+      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name", Sink.Memory(name))(
+        _ => joined).filter(col("user_id") >= 0)
+        .orderBy("user_id", "signup_event", "purchase_event")
     },
       Some("""SELECT s.user_id, s.event_id AS signup_event, p.event_id AS purchase_event,
         |  epoch_us(CAST(p.ts AS TIMESTAMP)) - epoch_us(CAST(s.ts AS TIMESTAMP)) AS delay_us
@@ -587,7 +582,9 @@ object StreamOps {
     // event day (at-most-one-event-per-user/type/day ingestion dedup).
     Op("st14_dedup_within_watermark", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st14"), src =>
+      val name = uniq("st14")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .select(col("user_id"), col("event_type"),
             date_trunc("DAY", col("ts")).as("day"), col("ts"))
@@ -606,7 +603,9 @@ object StreamOps {
     // stream (dropDuplicates keyed state).
     Op("st09_stream_distinct", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st09"), src =>
+      val name = uniq("st09")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.select(col("user_id"), col("event_type")).dropDuplicates())
       res.filter(col("user_id") >= 0)
         .orderBy("user_id", "event_type")
@@ -623,7 +622,9 @@ object StreamOps {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val cust = broadcast(T.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey")))
-      val res = Streaming.runStream(s, dir, schema, uniq("st11"), src =>
+      val name = uniq("st11")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.join(cust, col("user_id") === col("c_custkey"))
           .select(col("event_id"), col("user_id"), col("c_mktsegment"),
             col("c_nationkey"), col("value")))
@@ -639,19 +640,13 @@ object StreamOps {
     // groups in state and re-emits them, right only for small cardinality.)
     Op("st12_complete_agg", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      Streaming.withStreamShuffle(s) {
-        val name = uniq("st12")
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val q = src.filter(col("event_type") =!= "sentinel")
+      val name = uniq("st12")
+      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name, "complete"))(
+        _.filter(col("event_type") =!= "sentinel")
           .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-        s.table(name).orderBy("event_type")
-      }
+          .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value")))
+        .orderBy("event_type")
     },
       Some(s"""SELECT event_type, COUNT(*) AS n, ${sqlDsum("value")} AS sum_value
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
@@ -663,17 +658,9 @@ object StreamOps {
     Op("st13_file_sink", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val out = Streaming.scratchDir("graft_sink_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
-          .select(col("event_id"), col("event_type"), col("value"))
-          .writeStream.format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/_ckpt")
-          .outputMode("append").start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Files(s"$out/data"))(
+        _.filter(col("event_type") =!= "sentinel")
+          .select(col("event_id"), col("event_type"), col("value")))
       s.read.parquet(s"$out/data")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
@@ -711,8 +698,7 @@ object StreamOps {
           Envelope(w.toLong, key(w), "control", "Create", "PA", 1L, -1, Nil, None, ""))
         val queries = (0 until workers).map(w =>
           Envelope(1000000L + w, key(w), "control", "Query", "", 9L, -1, Nil, None, ""))
-        (creates ++ queries).toDS().unionByName(points)
-          .coalesce(1).write.mode("append").parquet(dir)
+        Streaming.stage(s, dir, (creates ++ queries).toDS().unionByName(points))
       }
       runSpoke(s, dir, "st07")
         .filter(col("kind") === "response")
@@ -766,9 +752,9 @@ object StreamOps {
           col("embedding").cast(ArrayType(DoubleType)).as("features"),
           when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"),
           lit("training").as("operation")).as[Envelope]
-        Seq(Envelope(0L, 17, "control", "Create", "PA", 1L, -1, Nil, None, ""))
-          .toDS().unionByName(points)
-          .coalesce(1).write.mode("append").parquet(dir)
+        Streaming.stage(s, dir,
+          Seq(Envelope(0L, 17, "control", "Create", "PA", 1L, -1, Nil, None, ""))
+            .toDS().unionByName(points))
       }
       val w = org.apache.spark.sql.expressions.Window.orderBy("fitted")
       runSpoke(s, dir, "st17", testMode = true)
@@ -820,34 +806,18 @@ object StreamOps {
         val stats = partial("stats", (col("k") + 1) * 1000L, col("cnt"), lit(0.0))
         val term = partial("Terminate", col("k") * 1000L + 10000L, lit(0L),
           col("cnt").cast(DoubleType) / col("total"))
-        // 3 staged batches with back-dated mtimes: stats, 3 partials, then
-        // the barrier-completing 4th
-        stats.coalesce(1).write.mode("append").parquet(dir)
-        val t0 = System.currentTimeMillis()
-        val back = (ms: Long) => java.nio.file.attribute.FileTime.fromMillis(ms)
-        java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-          java.nio.file.Files.setLastModifiedTime(p, back(t0 - 120000)))
-        term.filter(col("worker") =!= 1 || col("pipelineId") =!= 2)
-          .coalesce(1).write.mode("append").parquet(dir)
-        java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-          if (java.nio.file.Files.getLastModifiedTime(p).toMillis > t0 - 120000)
-            java.nio.file.Files.setLastModifiedTime(p, back(t0 - 60000)))
-        term.filter(col("worker") === 1 && col("pipelineId") === 2)
-          .coalesce(1).write.mode("append").parquet(dir)
+        // 3 staged batches: stats, 3 partials, then the barrier-completing 4th
+        Streaming.stage(s, dir, stats,
+          term.filter(col("worker") =!= 1 || col("pipelineId") =!= 2),
+          term.filter(col("worker") === 1 && col("pipelineId") === 2))
       }
       import s.implicits._
-      val src = s.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[StatPartial]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir).as[StatPartial]
-      val q = Streaming.withStreamShuffle(s) {
-        val name = uniq("st18")
-        val q0 = JobStatsOperator.run(src, workers = 2, testSetSize = 256,
-          timeoutMs = 600000L).writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q0.processAllAvailable(); q0.stop(); q0
-      }
-      s.table(q.name)
+      val name = uniq("st18")
+      Streaming.drain(s, dir,
+        implicitly[org.apache.spark.sql.Encoder[StatPartial]].schema,
+        s"$dir/_ckpt_$name", Sink.Memory(name))(src =>
+        JobStatsOperator.run(src.as[StatPartial], workers = 2,
+          testSetSize = 256, timeoutMs = 600000L).toDF())
         .filter(col("kind") === "job_statistics_final")
         .select(col("pipelineId").as("pipeline_id"),
           col("value").as("score"),
@@ -897,13 +867,11 @@ object StreamOps {
       val held = T.documents(s, d).filter(col("doc_id") % 10 >= 8)
         .select("doc_id", "lang", "text")
       val schema = held.schema
-      val dir = Streaming.stagedDir("lmscore", d) { dir =>
-        held.filter(col("doc_id") % 20 < 10)
-          .coalesce(1).write.mode("append").parquet(dir)
-        held.filter(col("doc_id") % 20 >= 10)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
-      val res = Streaming.runStream(s, dir, schema, uniq("st32"), src =>
+      val dir = Streaming.stagedDir("lmscore", d)(Streaming.stage(s, _,
+        held.filter(col("doc_id") % 20 < 10), held.filter(col("doc_id") % 20 >= 10)))
+      val name = uniq("st32")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         TextAnalysis.lmBigrams(src)
           .transform(TextAnalysis.lmScore(c12, c1, voc)))
       TextAnalysis.lmBucket(res.groupBy("doc_id", "lang")
@@ -928,38 +896,25 @@ object StreamOps {
       val docsDf = T.documents(s, d)
         .select("doc_id", "source", "lang", "text", "n_chars")
       val schema = docsDf.schema
-      val dir = Streaming.stagedDir("datacard", d) { dir =>
-        docsDf.filter(col("doc_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(dir)
-        docsDf.filter(col("doc_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
+      val dir = Streaming.stagedDir("datacard", d)(Streaming.stage(s, _,
+        docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
       val out = Streaming.scratchDir("graft_card_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val m = batch.select(col("source"), col("lang"), col("doc_id"),
-              col("n_chars"),
-              size(split(col("text"), " ")).cast(LongType).as("n_tok"),
-              md5(col("text")).as("h"))
-            m.groupBy("source", "lang")
-              .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-                sum("n_chars").cast(LongType).as("n_chars"),
-                sum(when(col("n_tok") < 20L, 1L).otherwise(0L))
-                  .as("n_short"),
-                sum(when(col("doc_id") % 10 >= 8, 1L).otherwise(0L))
-                  .as("n_held"))
-              .write.mode("append").parquet(s"$out/card")
-            m.groupBy("h", "source", "lang").agg(count(lit(1)).as("c"))
-              .write.mode("append").parquet(s"$out/hashes")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        val m = batch.select(col("source"), col("lang"), col("doc_id"),
+          col("n_chars"),
+          size(split(col("text"), " ")).cast(LongType).as("n_tok"),
+          md5(col("text")).as("h"))
+        m.groupBy("source", "lang")
+          .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
+            sum("n_chars").cast(LongType).as("n_chars"),
+            sum(when(col("n_tok") < 20L, 1L).otherwise(0L))
+              .as("n_short"),
+            sum(when(col("doc_id") % 10 >= 8, 1L).otherwise(0L))
+              .as("n_held"))
+          .write.mode("append").parquet(s"$out/card")
+        m.groupBy("h", "source", "lang").agg(count(lit(1)).as("c"))
+          .write.mode("append").parquet(s"$out/hashes")
+      })(identity)
       val card = s.read.parquet(s"$out/card").groupBy("source", "lang")
         .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
           sum("n_chars").as("n_chars"), sum("n_short").as("n_short"),
@@ -995,26 +950,13 @@ object StreamOps {
     Op("st34_stream_temperature_mix", (s, d) => {
       val docsDf = T.documents(s, d).select("doc_id", "lang")
       val schema = docsDf.schema
-      val dir = Streaming.stagedDir("tempmix", d) { dir =>
-        docsDf.filter(col("doc_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(dir)
-        docsDf.filter(col("doc_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
+      val dir = Streaming.stagedDir("tempmix", d)(Streaming.stage(s, _,
+        docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
       val out = Streaming.scratchDir("graft_tmix_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.groupBy("lang").agg(count(lit(1)).as("n"))
-              .write.mode("append").parquet(s"$out/counts")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        batch.groupBy("lang").agg(count(lit(1)).as("n"))
+          .write.mode("append").parquet(s"$out/counts")
+      })(identity)
       TextAnalysis.temperatureMix(
         s.read.parquet(s"$out/counts")
           .groupBy("lang").agg(sum("n").as("n_docs")))
@@ -1038,43 +980,30 @@ object StreamOps {
       val li = T.lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       val schema = li.schema
-      val dir = Streaming.stagedDir("edgemaint", d) { dir =>
-        (0 until 2).foreach { k =>
-          li.filter(col("pk") % 2 === k)
-            .coalesce(1).write.mode("append").parquet(dir)
-        }
-      }
+      val dir = Streaming.stagedDir("edgemaint", d)(Streaming.stage(s, _,
+        li.filter(col("pk") % 2 === 0), li.filter(col("pk") % 2 === 1)))
       val out = Streaming.scratchDir("graft_edgeinc_")
       val ledger = new org.apache.hadoop.fs.Path(s"$out/ledger")
       val ledgerFs = ledger.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val b = batch.persist()
-            val intra = b.as("x").join(b.as("y"),
-                col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-              .select(col("x.pk").as("a"), col("y.pk").as("b"))
-            val pairs =
-              if (ledgerFs.exists(ledger)) {
-                val prior = s.read.parquet(s"$out/ledger")
-                intra.unionByName(b.as("x").join(prior.as("y"),
-                    col("x.ok") === col("y.ok") &&
-                      col("x.pk") =!= col("y.pk"))
-                  .select(least(col("x.pk"), col("y.pk")).as("a"),
-                    greatest(col("x.pk"), col("y.pk")).as("b")))
-              } else intra
-            pairs.groupBy("a", "b").agg(count(lit(1)).as("w"))
-              .write.mode("append").parquet(s"$out/pairs")
-            b.write.mode("append").parquet(s"$out/ledger")
-            b.unpersist()
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        val b = batch.persist()
+        val intra = b.as("x").join(b.as("y"),
+            col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
+          .select(col("x.pk").as("a"), col("y.pk").as("b"))
+        val pairs =
+          if (ledgerFs.exists(ledger)) {
+            val prior = s.read.parquet(s"$out/ledger")
+            intra.unionByName(b.as("x").join(prior.as("y"),
+                col("x.ok") === col("y.ok") &&
+                  col("x.pk") =!= col("y.pk"))
+              .select(least(col("x.pk"), col("y.pk")).as("a"),
+                greatest(col("x.pk"), col("y.pk")).as("b")))
+          } else intra
+        pairs.groupBy("a", "b").agg(count(lit(1)).as("w"))
+          .write.mode("append").parquet(s"$out/pairs")
+        b.write.mode("append").parquet(s"$out/ledger")
+        b.unpersist()
+      })(identity)
       s.read.parquet(s"$out/pairs")
         .groupBy("a", "b").agg(sum("w").as("w"))
         .orderBy(col("w").desc, col("a"), col("b"))
@@ -1092,21 +1021,11 @@ object StreamOps {
     Op("st36_stream_kl_drift", (s, d) => {
       val (dir, schema) = stagedDocsTwoFiles(s, d)
       val out = Streaming.scratchDir("graft_kl_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.select(col("source"),
-                explode(split(col("text"), " ")).as("w"))
-              .groupBy("source", "w").agg(count(lit(1)).as("n"))
-              .write.mode("append").parquet(s"$out/counts")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        batch.select(col("source"), explode(split(col("text"), " ")).as("w"))
+          .groupBy("source", "w").agg(count(lit(1)).as("n"))
+          .write.mode("append").parquet(s"$out/counts")
+      })(identity)
       TextAnalysis.sourceKl(
         s.read.parquet(s"$out/counts")
           .groupBy("source", "w").agg(sum("n").as("c_sw")))
@@ -1122,23 +1041,13 @@ object StreamOps {
     Op("st19_foreachbatch_upsert", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val out = Streaming.scratchDir("graft_upsert_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            batch.groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(floor(col("value") * 1000).cast(LongType)).as("sum_milli"))
-              .withColumn("batch_id", lit(id))
-              .write.mode("append").parquet(s"$out/partials")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, id) =>
+        batch.groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(floor(col("value") * 1000).cast(LongType)).as("sum_milli"))
+          .withColumn("batch_id", lit(id))
+          .write.mode("append").parquet(s"$out/partials")
+      })(_.filter(col("event_type") =!= "sentinel"))
       s.read.parquet(s"$out/partials")
         .groupBy("event_type")
         .agg(sum("n").as("n"), sum("sum_milli").as("sum_milli"))
@@ -1164,13 +1073,11 @@ object StreamOps {
     Op("st20_stream_curation", (s, d) => {
       val docsDf = T.documents(s, d).select("doc_id", "source", "lang", "text")
       val schema = docsDf.schema
-      val dir = Streaming.stagedDir("curation", d) { dir =>
-        docsDf.filter(col("doc_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(dir)
-        docsDf.filter(col("doc_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
-      val res = Streaming.runStream(s, dir, schema, uniq("st20"), src =>
+      val dir = Streaming.stagedDir("curation", d)(Streaming.stage(s, _,
+        docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
+      val name = uniq("st20")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.filter(col("lang") === "en")
           .withColumn("score_num", expr(
             "aggregate(split(text, ' '), CAST(0 AS BIGINT), (acc, t) -> " +
@@ -1261,19 +1168,12 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_st22_")
       q.repartition(2).write.mode("overwrite").parquet(dir)
       val schema = q.schema
-      val scoredAll = Streaming.withStreamShuffle(s) {
-        val name = uniq("st22")
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val scored = src.join(eb, Seq("bucket"))
+      val name = uniq("st22")
+      val scoredAll = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(_.join(eb, Seq("bucket"))
           .filter(col("vec_id") =!= col("q_id"))
           .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-          .select("q_id", "vec_id", "bucket", "cos")
-        val qy = scored.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        qy.processAllAvailable(); qy.stop()
-        s.table(name)
-      }
+          .select("q_id", "vec_id", "bucket", "cos"))
       val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
       scoredAll.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
         .select("q_id", "rk", "vec_id", "bucket", "cos")
@@ -1329,17 +1229,13 @@ object StreamOps {
       // stage the arriving batch as 2 files -> 2 probe triggers
       val dir = Streaming.stagedDir("admit", d) { dir =>
         val nb = withBucket.filter(col("bucket") >= 90).select("doc_id", "text")
-        nb.filter(col("doc_id") % 2 === 0).coalesce(1)
-          .write.mode("append").parquet(dir)
-        nb.filter(col("doc_id") % 2 === 1).coalesce(1)
-          .write.mode("append").parquet(dir)
+        Streaming.stage(s, dir, nb.filter(col("doc_id") % 2 === 0),
+          nb.filter(col("doc_id") % 2 === 1))
       }
-      val candTable = Streaming.withStreamShuffle(s) {
-        val name = uniq("st23")
-        val src = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType))))
-          .option("maxFilesPerTrigger", "1").parquet(dir)
+      val name = uniq("st23")
+      val candTable = Streaming.drain(s, dir,
+        StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))),
+        s"$dir/_ckpt_$name", Sink.Memory(name)) { src =>
         val banded = src
           // r13: the distinct-shingle array in one codegen'd byte pass
           // (word_shingles5) instead of the split + interpreted
@@ -1363,12 +1259,7 @@ object StreamOps {
             .as("bs"))
           .select(col("new_id"), col("bs.band").cast(IntegerType).as("band"),
             col("bs.sig").as("sig"))
-        val q = banded.join(corpusBands, Seq("band", "sig"))
-          .select("new_id", "corp_id")
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", s"$dir/_ckpt_$name").start()
-        q.processAllAvailable(); q.stop()
-        s.table(name)
+        banded.join(corpusBands, Seq("band", "sig")).select("new_id", "corp_id")
       }
       val cand = candTable.distinct()
       val inter = cand
@@ -1441,28 +1332,20 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_incr_src_")
       val out = Streaming.scratchDir("graft_incr_out_")
       val schema = ev.schema
-      def runOnce(run: Int): Unit = Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            // batchId-keyed path + overwrite = idempotent under foreachBatch's
-            // at-least-once contract: a replayed batch rewrites its own
-            // directory instead of double-appending partial rows (the same
-            // reason st25 keeps an idempotence ledger)
-            b.groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
-              .withColumn("run", lit(run))
-              .write.mode("overwrite").parquet(s"$out/partials/batch=$id")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
-      evA.coalesce(1).write.mode("append").parquet(dir)
+      def runOnce(run: Int): Unit =
+        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, id) =>
+          // batchId-keyed path + overwrite = idempotent under foreachBatch's
+          // at-least-once contract: a replayed batch rewrites its own
+          // directory instead of double-appending partial rows (the same
+          // reason st25 keeps an idempotence ledger)
+          b.groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
+            .withColumn("run", lit(run))
+            .write.mode("overwrite").parquet(s"$out/partials/batch=$id")
+        })(identity)
+      Streaming.stage(s, dir, evA)
       runOnce(1)
-      evB.coalesce(1).write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, evB)
       runOnce(2)
       val partials = s.read.parquet(s"$out/partials")
       val run2Rows = partials.filter(col("run") === 2)
@@ -1509,55 +1392,45 @@ object StreamOps {
         "CREATE TABLE applied (batch_id BIGINT, part_id INT, " +
           "PRIMARY KEY (batch_id, part_id))")
       c0.close()
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            b.groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
-              .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-                if (rows.nonEmpty) {
-                  val pid = org.apache.spark.TaskContext.getPartitionId()
-                  val c = java.sql.DriverManager.getConnection(url)
-                  try {
-                    c.setAutoCommit(false)
-                    val claimed = try {
-                      c.prepareStatement(
-                        s"INSERT INTO applied VALUES ($batchId, $pid)")
-                        .executeUpdate()
-                      true
-                    } catch {
-                      // duplicate key = this (batch, partition) already
-                      // applied by an earlier attempt — replay is a no-op
-                      case _: java.sql.SQLIntegrityConstraintViolationException =>
-                        c.rollback(); false
-                    }
-                    if (claimed) {
-                      val st = c.prepareStatement(
-                        "MERGE INTO stats t USING SYSIBM.SYSDUMMY1 " +
-                          "ON t.et = ? " +
-                          "WHEN MATCHED THEN UPDATE SET n = t.n + ?, sv = t.sv + ? " +
-                          "WHEN NOT MATCHED THEN INSERT (et, n, sv) VALUES (?, ?, ?)")
-                      rows.foreach { r =>
-                        val et = r.getString(0); val n = r.getLong(1)
-                        val sv = r.getDecimal(2)
-                        st.setString(1, et); st.setLong(2, n); st.setBigDecimal(3, sv)
-                        st.setString(4, et); st.setLong(5, n); st.setBigDecimal(6, sv)
-                        st.executeUpdate()
-                      }
-                      c.commit()
-                    }
-                  } finally c.close()
+      Streaming.drain(s, dir, schema, s"$dbDir/_ckpt", Sink.Batches { (b, batchId) =>
+        b.groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
+          .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+            if (rows.nonEmpty) {
+              val pid = org.apache.spark.TaskContext.getPartitionId()
+              val c = java.sql.DriverManager.getConnection(url)
+              try {
+                c.setAutoCommit(false)
+                val claimed = try {
+                  c.prepareStatement(
+                    s"INSERT INTO applied VALUES ($batchId, $pid)")
+                    .executeUpdate()
+                  true
+                } catch {
+                  // duplicate key = this (batch, partition) already
+                  // applied by an earlier attempt — replay is a no-op
+                  case _: java.sql.SQLIntegrityConstraintViolationException =>
+                    c.rollback(); false
                 }
-              }
-            ()
+                if (claimed) {
+                  val st = c.prepareStatement(
+                    "MERGE INTO stats t USING SYSIBM.SYSDUMMY1 " +
+                      "ON t.et = ? " +
+                      "WHEN MATCHED THEN UPDATE SET n = t.n + ?, sv = t.sv + ? " +
+                      "WHEN NOT MATCHED THEN INSERT (et, n, sv) VALUES (?, ?, ?)")
+                  rows.foreach { r =>
+                    val et = r.getString(0); val n = r.getLong(1)
+                    val sv = r.getDecimal(2)
+                    st.setString(1, et); st.setLong(2, n); st.setBigDecimal(3, sv)
+                    st.setString(4, et); st.setLong(5, n); st.setBigDecimal(6, sv)
+                    st.executeUpdate()
+                  }
+                  c.commit()
+                }
+              } finally c.close()
+            }
           }
-          .option("checkpointLocation", s"$dbDir/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      })(_.filter(col("event_type") =!= "sentinel"))
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       s.read.jdbc(url, "stats", props)
@@ -1578,7 +1451,9 @@ object StreamOps {
     // per-window row counts hash-match the oracle directly.
     Op("st27_stream_hll", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
-      val res = Streaming.runStream(s, dir, schema, uniq("st27"), src =>
+      val name = uniq("st27")
+      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "1 day").as("w"))
           .agg(count(lit(1)).as("n"),
@@ -1629,51 +1504,37 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_cusum_src_")
       val out = Streaming.scratchDir("graft_cusum_out_")
       val schema = ev.schema
-      def stateVersions(): Seq[Long] =
-        Option(new java.io.File(out).listFiles()).toSeq.flatten
-          .map(_.getName).filter(_.startsWith("state_"))
-          .map(_.stripPrefix("state_").toLong).sorted
       // highest persisted version strictly below `batch` — robust to
       // no-data batches and to extra staged files shifting batch ids
       def stateBelow(batch: Long): Map[String, CusumState] =
-        stateVersions().filter(_ < batch).lastOption match {
+        versions(s, out, "state_").filter(_ < batch).lastOption match {
           case None => Map.empty
           case Some(ver) =>
             s.read.parquet(s"$out/state_$ver").as[CusumState]
               .collect().map(st => st.event_type -> st).toMap
         }
-      def runOnce(): Unit = Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            // prior state is O(keys) rows, shipped in the task closures
-            val prior = stateBelow(batchId)
-            val next = b.repartition(col("event_type"))
-              .sortWithinPartitions("event_type", "tsu", "event_id")
-              .as[(String, Long, Long, java.math.BigDecimal)]
-              .mapPartitions(rows => cusumFold(prior, rows))(
-                org.apache.spark.sql.Encoders.product[CusumState])
-              .collect() // O(keys): the detector state, never the data
-            // keys absent from this batch carry forward unchanged
-            val merged = (prior ++ next.map(st => st.event_type -> st)).values
-            b.sparkSession.createDataset(merged.toSeq)(
+      def runOnce(): Unit =
+        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, batchId) =>
+          // prior state is O(keys) rows, shipped in the task closures
+          val prior = stateBelow(batchId)
+          val next = b.repartition(col("event_type"))
+            .sortWithinPartitions("event_type", "tsu", "event_id")
+            .as[(String, Long, Long, java.math.BigDecimal)]
+            .mapPartitions(rows => cusumFold(prior, rows))(
               org.apache.spark.sql.Encoders.product[CusumState])
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$out/state_$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
-      ev.filter(col("tsu") <= midTs).coalesce(1)
-        .write.mode("append").parquet(dir)
+            .collect() // O(keys): the detector state, never the data
+          // keys absent from this batch carry forward unchanged
+          val merged = (prior ++ next.map(st => st.event_type -> st)).values
+          b.sparkSession.createDataset(merged.toSeq)(
+            org.apache.spark.sql.Encoders.product[CusumState])
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$out/state_$batchId")
+        })(identity)
+      Streaming.stage(s, dir, ev.filter(col("tsu") <= midTs))
       runOnce() // batch 0: first half, in event-time order
-      ev.filter(col("tsu") > midTs).coalesce(1)
-        .write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, ev.filter(col("tsu") > midTs))
       runOnce() // batch 1: resumes from the checkpoint, only the delta
-      s.read.parquet(s"$out/state_${stateVersions().last}").as[CusumState]
+      s.read.parquet(s"$out/state_${versions(s, out, "state_").last}").as[CusumState]
         .collect().toSeq.sortBy(_.event_type)
         .map(st => (st.event_type, st.nPts, st.nAlarms,
           if (st.firstAlarm >= 0) Some(st.firstAlarm) else None,
@@ -1728,30 +1589,21 @@ object StreamOps {
         unix_micros(col("ts")).as("tsu"), col("event_id"))
       val schema = ev.schema
       // memoized staging (scaffolding, not operator cost — the stagedDir
-      // contract); mtimes explicitly backdated 120s/60s apart, the st10
-      // defense: same-mtime files list in arbitrary order and a reversed
-      // pair would feed the state machine its second half first
+      // contract); the stager's ordered mtimes feed the state machine its
+      // first half first
       val dir = Streaming.stagedDir("funnel", d) { dir =>
-        import scala.jdk.CollectionConverters._
         val midTs = ev.agg(((min("tsu") + max("tsu")) / 2).cast(LongType))
           .head().getLong(0)
-        def ls() = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-          .iterator().asScala.toSet
-        def backdate(fs: Set[java.nio.file.Path], ageMs: Long): Unit = {
-          val t = java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs)
-          fs.foreach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        }
-        ev.filter(col("tsu") <= midTs).coalesce(1).write.mode("append").parquet(dir)
-        val f1 = ls(); backdate(f1, 120000)
-        ev.filter(col("tsu") > midTs).coalesce(1).write.mode("append").parquet(dir)
-        backdate(ls() -- f1, 60000)
+        Streaming.stage(s, dir, ev.filter(col("tsu") <= midTs),
+          ev.filter(col("tsu") > midTs))
       }
       val name = uniq("st28")
-      Streaming.withStreamShuffle(s) {
-        val src = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-        val updated = src.as[(Long, String, Long, Long)]
+      // the memory sink keeps every per-batch update row; the final state
+      // per user is the one with the highest event count (n is strictly
+      // increasing and a key is only re-emitted with new data)
+      val fin = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
+        Sink.Memory(name, "update")) { src =>
+        src.as[(Long, String, Long, Long)]
           .groupByKey(_._1)
           .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
             (uid: Long, it: Iterator[(Long, String, Long, Long)],
@@ -1769,17 +1621,8 @@ object StreamOps {
               state.update(st)
               Iterator.single((uid, st.n, st.t1, st.t2, st.t3))
           }
-        val q = updated.toDF("user_id", "n_events", "t1", "t2", "t3")
-          .writeStream.format("memory").queryName(name).outputMode("update")
-          .option("checkpointLocation", s"$dir/_ckpt_$name")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
-      // the memory sink keeps every per-batch update row; the final state
-      // per user is the one with the highest event count (n is strictly
-      // increasing and a key is only re-emitted with new data)
-      val fin = s.table(name)
-        .groupBy("user_id")
+          .toDF("user_id", "n_events", "t1", "t2", "t3")
+      }.groupBy("user_id")
         .agg(max(struct(col("n_events"), col("t1"), col("t2"), col("t3"))).as("m"))
         .select(col("user_id"), col("m.t1").as("t1"), col("m.t2").as("t2"),
           col("m.t3").as("t3"))
@@ -1813,8 +1656,8 @@ object StreamOps {
     // row-level-ops table format turn it into a MERGE that touches only
     // matching files; dimension size stays O(keys + total changes), which
     // is the SCD2 contract. The stream is genuine CDC order: the
-    // snapshot file then the update file, mtime-forced (the st10
-    // defense). Prices become integer cents at staging via
+    // snapshot file then the update file, in the stager's mtime order.
+    // Prices become integer cents at staging via
     // floor(price * 100) — the st19 scheme: floor of the same IEEE
     // product is bit-identical in both engines (a DECIMAL(18,2) cast is
     // NOT, because o_totalprice carries more than 2 decimal digits and
@@ -1832,65 +1675,37 @@ object StreamOps {
             .as("price_cents"),
           lit(1L).as("eff"))
       val schema = snap.schema
-      val dir = Streaming.stagedDir("scd2", d) { dir =>
-        import scala.jdk.CollectionConverters._
-        def ls() = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-          .iterator().asScala.toSet
-        def backdate(fs: Set[java.nio.file.Path], ageMs: Long): Unit = {
-          val t = java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - ageMs)
-          fs.foreach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        }
-        snap.coalesce(1).write.mode("append").parquet(dir)
-        val f1 = ls(); backdate(f1, 120000)
-        upd.coalesce(1).write.mode("append").parquet(dir)
-        backdate(ls() -- f1, 60000)
-      }
+      val dir = Streaming.stagedDir("scd2", d)(Streaming.stage(s, _, snap, upd))
       val root = Streaming.scratchDir("graft_scd2_")
-      def versions(): Seq[Long] = {
-        val f = new java.io.File(root)
-        Option(f.listFiles()).toSeq.flatten
-          .filter(x => x.isDirectory && x.getName.startsWith("v="))
-          .map(_.getName.stripPrefix("v=").toLong).sorted
-      }
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            val prevV = versions().filter(_ < id).lastOption
-            val prev = prevV match {
-              case Some(v) => s.read.parquet(s"$root/v=$v")
-              case None => s.createDataFrame(
-                s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                StructType(Seq(
-                  StructField("k", LongType),
-                  StructField("price_cents", LongType),
-                  StructField("valid_from", LongType),
-                  StructField("valid_to", LongType))))
-            }
-            val ch = batch.select(col("k"), col("price_cents"), col("eff"))
-            // close the open version of every changed key; newer batches
-            // only ever touch open rows, so closed history is immutable
-            val closedOrKept = prev
-              .join(broadcast(ch.select(col("k"), col("eff").as("ch_eff"))),
-                Seq("k"), "left")
-              .withColumn("valid_to",
-                when(col("ch_eff").isNotNull && col("valid_to").isNull,
-                  col("ch_eff")).otherwise(col("valid_to")))
-              .drop("ch_eff")
-            val opened = ch.select(col("k"), col("price_cents"),
-              col("eff").as("valid_from"),
-              lit(null).cast(LongType).as("valid_to"))
-            closedOrKept.unionByName(opened)
-              .write.mode("overwrite").parquet(s"$root/v=$id")
-            ()
-          }
-          .option("checkpointLocation", s"$root/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
-      val dim = s.read.parquet(s"$root/v=${versions().last}")
+      Streaming.drain(s, dir, schema, s"$root/_ckpt", Sink.Batches { (batch, id) =>
+        val prevV = versions(s, root, "v=").filter(_ < id).lastOption
+        val prev = prevV match {
+          case Some(v) => s.read.parquet(s"$root/v=$v")
+          case None => s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType(Seq(
+              StructField("k", LongType),
+              StructField("price_cents", LongType),
+              StructField("valid_from", LongType),
+              StructField("valid_to", LongType))))
+        }
+        val ch = batch.select(col("k"), col("price_cents"), col("eff"))
+        // close the open version of every changed key; newer batches
+        // only ever touch open rows, so closed history is immutable
+        val closedOrKept = prev
+          .join(broadcast(ch.select(col("k"), col("eff").as("ch_eff"))),
+            Seq("k"), "left")
+          .withColumn("valid_to",
+            when(col("ch_eff").isNotNull && col("valid_to").isNull,
+              col("ch_eff")).otherwise(col("valid_to")))
+          .drop("ch_eff")
+        val opened = ch.select(col("k"), col("price_cents"),
+          col("eff").as("valid_from"),
+          lit(null).cast(LongType).as("valid_to"))
+        closedOrKept.unionByName(opened)
+          .write.mode("overwrite").parquet(s"$root/v=$id")
+      })(identity)
+      val dim = s.read.parquet(s"$root/v=${versions(s, root, "v=").last}")
       dim.groupBy("valid_from")
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_open"),
@@ -1956,31 +1771,21 @@ object StreamOps {
       }
       val orders = s.table(ordersTbl)
       val out = Streaming.scratchDir("graft_pit_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            AsOf.asofJoin(
-                batch.select("event_id", "user_id", "ts", "event_type"),
-                orders, "user_id", "o_custkey",
-                col("ts"), col("o_orderdate"),
-                Seq("o_orderkey", "o_totalprice"), "o_orderkey")
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(when(col("o_orderkey").isNotNull, 1L).otherwise(0L))
-                  .as("n_matched"),
-                sum(coalesce(col("o_orderkey"), lit(0L))).as("sum_orderkey"),
-                sum(coalesce(floor(col("o_totalprice") * 100).cast(LongType),
-                  lit(0L))).as("sum_price_cents"))
-              .write.mode("overwrite").parquet(s"$out/p/batch=$id")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, id) =>
+        AsOf.asofJoin(
+            batch.select("event_id", "user_id", "ts", "event_type"),
+            orders, "user_id", "o_custkey",
+            col("ts"), col("o_orderdate"),
+            Seq("o_orderkey", "o_totalprice"), "o_orderkey")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("o_orderkey").isNotNull, 1L).otherwise(0L))
+              .as("n_matched"),
+            sum(coalesce(col("o_orderkey"), lit(0L))).as("sum_orderkey"),
+            sum(coalesce(floor(col("o_totalprice") * 100).cast(LongType),
+              lit(0L))).as("sum_price_cents"))
+          .write.mode("overwrite").parquet(s"$out/p/batch=$id")
+      })(_.filter(col("event_type") =!= "sentinel"))
       s.read.parquet(s"$out/p")
         .groupBy("event_type")
         .agg(sum("n").as("n"), sum("n_matched").as("n_matched"),
@@ -2022,21 +1827,12 @@ object StreamOps {
     Op("st37_stream_heavy_hitters", (s, d) => {
       val (dir, schema) = stagedDocsTwoFiles(s, d)
       val out = Streaming.scratchDir("graft_hh_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.select(explode(split(col("text"), " ")).as("term"))
-              .filter(col("term") =!= "")
-              .groupBy("term").agg(count(lit(1)).as("n"))
-              .write.mode("append").parquet(s"$out/counts")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        batch.select(explode(split(col("text"), " ")).as("term"))
+          .filter(col("term") =!= "")
+          .groupBy("term").agg(count(lit(1)).as("n"))
+          .write.mode("append").parquet(s"$out/counts")
+      })(identity)
       val w = Window.orderBy(col("n").desc, col("term"))
       s.read.parquet(s"$out/counts")
         .groupBy("term").agg(sum("n").as("n"))
@@ -2067,53 +1863,36 @@ object StreamOps {
     Op("st38_stream_zscore", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val out = Streaming.scratchDir("graft_zsc_")
-      Streaming.withStreamShuffle(s) {
-        val q1 = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
+      val v100: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+        _.filter(col("event_type") =!= "sentinel")
           .withColumn("v100", (Num.dec2(col("value")) * 100).cast(LongType))
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum("v100").as("s1"),
-                sum(col("v100") * col("v100")).as("s2"))
-              .write.mode("append").parquet(s"$out/moments")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt1")
-          .start()
-        q1.processAllAvailable(); q1.stop()
-        val mm = s.read.parquet(s"$out/moments")
+      Streaming.drain(s, dir, schema, s"$out/_ckpt1", Sink.Batches { (batch, _) =>
+        batch.groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum("v100").as("s1"),
+            sum(col("v100") * col("v100")).as("s2"))
+          .write.mode("append").parquet(s"$out/moments")
+      })(v100)
+      val mm = s.read.parquet(s"$out/moments")
+        .groupBy("event_type")
+        .agg(sum("n").as("n"), sum("s1").as("s1"), sum("s2").as("s2"))
+        .withColumn("mean",
+          (col("s1").cast(DoubleType) / col("n")).cast(DoubleType))
+        .withColumn("variance",
+          (col("s2").cast(DoubleType) / col("n") -
+            col("mean") * col("mean")).cast(DoubleType))
+        .select("event_type", "mean", "variance")
+      Streaming.drain(s, dir, schema, s"$out/_ckpt2", Sink.Batches { (batch, _) =>
+        batch.join(broadcast(mm), "event_type")
+          .withColumn("z",
+            (col("v100").cast(DoubleType) - col("mean")) /
+              sqrt(col("variance")))
           .groupBy("event_type")
-          .agg(sum("n").as("n"), sum("s1").as("s1"), sum("s2").as("s2"))
-          .withColumn("mean",
-            (col("s1").cast(DoubleType) / col("n")).cast(DoubleType))
-          .withColumn("variance",
-            (col("s2").cast(DoubleType) / col("n") -
-              col("mean") * col("mean")).cast(DoubleType))
-          .select("event_type", "mean", "variance")
-        val q2 = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .filter(col("event_type") =!= "sentinel")
-          .withColumn("v100", (Num.dec2(col("value")) * 100).cast(LongType))
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.join(broadcast(mm), "event_type")
-              .withColumn("z",
-                (col("v100").cast(DoubleType) - col("mean")) /
-                  sqrt(col("variance")))
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n_events"),
-                sum(when(abs(col("z")) > 3.0, 1L).otherwise(0L))
-                  .as("n_outliers"),
-                max(abs(col("z"))).as("max_abs_z"))
-              .write.mode("append").parquet(s"$out/scores")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt2")
-          .start()
-        q2.processAllAvailable(); q2.stop()
-      }
+          .agg(count(lit(1)).as("n_events"),
+            sum(when(abs(col("z")) > 3.0, 1L).otherwise(0L))
+              .as("n_outliers"),
+            max(abs(col("z"))).as("max_abs_z"))
+          .write.mode("append").parquet(s"$out/scores")
+      })(v100)
       s.read.parquet(s"$out/scores")
         .groupBy("event_type")
         .agg(sum("n_events").as("n_events"),
@@ -2180,25 +1959,14 @@ object StreamOps {
           Seq((99, 0L, 0L, 0L, 0L, 0.0, ts))
             .toDF("pipelineId", "modelsShipped", "bytesShipped", "blocks",
               "fitted", "score", "eventTimeMs")
-        val t0 = System.currentTimeMillis()
-        val back = (ms: Long) => java.nio.file.attribute.FileTime.fromMillis(ms)
-        def stamp(age: Long): Unit =
-          java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-            if (java.nio.file.Files.getLastModifiedTime(p).toMillis > t0 - age - 1)
-              java.nio.file.Files.setLastModifiedTime(p, back(t0 - age)))
-        evts.filter(col("eventTimeMs") < splitMs)
-          .coalesce(1).write.mode("append").parquet(dir)
-        stamp(240000)
-        evts.filter(col("eventTimeMs") >= splitMs)
-          .coalesce(1).write.mode("append").parquet(dir)
-        stamp(180000)
-        sentinel(1100000000000L).coalesce(1).write.mode("append").parquet(dir)
-        stamp(120000)
-        sentinel(1100000100000L).coalesce(1).write.mode("append").parquet(dir)
-        stamp(60000)
+        Streaming.stage(s, dir, evts.filter(col("eventTimeMs") < splitMs),
+          evts.filter(col("eventTimeMs") >= splitMs),
+          sentinel(1100000000000L), sentinel(1100000100000L))
       }
-      Streaming.runStream(Streaming.stateSession(s), dir,
-          implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema, uniq("st39"),
+      val name = uniq("st39")
+      Streaming.drain(Streaming.stateSession(s), dir,
+          implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema,
+          s"$dir/_ckpt_$name", Sink.Memory(name))(
           src => TwsStatsOperator.run(src.as[StatEvent], timeoutMs = 30000L).toDF())
         .filter(col("kind") === "job_statistics" && col("pipelineId") < 4)
         .select(col("pipelineId").as("pipeline_id"),
@@ -2251,19 +2019,8 @@ object StreamOps {
       // gaps (guide §2.6 overlap-independent-jobs). Each run's computation
       // and its crash/restart protocol are untouched, so the unioned output
       // is unchanged.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val Seq(hdfsRun, rocksRun): Seq[org.apache.spark.sql.DataFrame] = try {
-        val futs = Seq("hdfs", "rocksdb").map(p =>
-          scala.concurrent.Future(crashRecoveryRun(s, dir, schema, p))(ec))
-        // Duration.Inf, not a wall-clock deadline (ADVICE r12): each run is
-        // bounded by its own Spark jobs, and a fixed bound turns a
-        // legitimately slow recovery at 100 TB into a failed query. On
-        // failure shutdownNow interrupts the sibling run.
-        try futs.map(fu => scala.concurrent.Await.result(fu,
-          scala.concurrent.duration.Duration.Inf))
-        catch { case e: Throwable => pool.shutdownNow(); throw e }
-      } finally pool.shutdown()
+      val Seq(hdfsRun, rocksRun) = graft.Subjobs.runAll(s,
+        Seq("hdfs", "rocksdb").map(p => () => crashRecoveryRun(s, dir, schema, p)))
       hdfsRun.unionByName(rocksRun)
         .select(col("provider"), col("event_type"), col("day_us"), col("n"),
           col("sum_value"), col("recovered_commit"), col("reexecuted"))
@@ -2295,51 +2052,38 @@ object StreamOps {
     Op("st41_stream_bm25_index", (s, d) => {
       val docs = T.documents(s, d).select("doc_id", "text")
       val schema = docs.schema
-      val dir = Streaming.stagedDir("bm25idx", d) { dir =>
-        docs.filter(col("doc_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(dir)
-        docs.filter(col("doc_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
+      val dir = Streaming.stagedDir("bm25idx", d)(Streaming.stage(s, _,
+        docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
       val out = Streaming.scratchDir("graft_bm25idx_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            // ONE tokenize pass per trigger (r12 optimization, same change
-            // as p07): dl(doc) == SUM(tf) — both exclude empty tokens — so
-            // the doc-length partial derives from the tf partial instead of
-            // re-splitting every text; the batch-doc_id left join keeps the
-            // dl=0 row for an all-separator text. INVARIANT (ADVICE r12):
-            // bit-identity with the two-pass form requires doc_id UNIQUE
-            // within a trigger batch — tf groups across duplicate doc_ids,
-            // so a duplicated doc_id would get the cross-row total written
-            // once per input row instead of each row's own length. The
-            // staged fixture splits each doc into exactly one file slice
-            // (no doc spans or repeats across batches), and the downstream
-            // serve re-aggregates by doc_id anyway, but a new source must
-            // re-check this invariant before reusing the derivation.
-            val b = batch.persist()
-            val tfb = b.select(col("doc_id"),
-                explode(split(col("text"), " ")).as("term"))
-              .filter(col("term") =!= "")
-              .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-              .persist()
-            tfb.write.mode("append").parquet(s"$out/tf")
-            b.select("doc_id")
-              .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
-                Seq("doc_id"), "left")
-              .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-              .write.mode("append").parquet(s"$out/dl")
-            tfb.unpersist()
-            b.unpersist()
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        // ONE tokenize pass per trigger (r12 optimization, same change
+        // as p07): dl(doc) == SUM(tf) — both exclude empty tokens — so
+        // the doc-length partial derives from the tf partial instead of
+        // re-splitting every text; the batch-doc_id left join keeps the
+        // dl=0 row for an all-separator text. INVARIANT (ADVICE r12):
+        // bit-identity with the two-pass form requires doc_id UNIQUE
+        // within a trigger batch — tf groups across duplicate doc_ids,
+        // so a duplicated doc_id would get the cross-row total written
+        // once per input row instead of each row's own length. The
+        // staged fixture splits each doc into exactly one file slice
+        // (no doc spans or repeats across batches), and the downstream
+        // serve re-aggregates by doc_id anyway, but a new source must
+        // re-check this invariant before reusing the derivation.
+        val b = batch.persist()
+        val tfb = b.select(col("doc_id"),
+            explode(split(col("text"), " ")).as("term"))
+          .filter(col("term") =!= "")
+          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+          .persist()
+        tfb.write.mode("append").parquet(s"$out/tf")
+        b.select("doc_id")
+          .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
+          .write.mode("append").parquet(s"$out/dl")
+        tfb.unpersist()
+        b.unpersist()
+      })(identity)
       val tf = s.read.parquet(s"$out/tf")
         .groupBy("doc_id", "term").agg(sum("tf").as("tf"))
       val dlT = s.read.parquet(s"$out/dl")
@@ -2369,26 +2113,13 @@ object StreamOps {
     Op("st42_stream_lsh_neardup", (s, d) => {
       val docs = T.documents(s, d).select("doc_id", "text")
       val schema = docs.schema
-      val dir = Streaming.stagedDir("lshdedup", d) { dir =>
-        docs.filter(col("doc_id") % 2 === 0)
-          .coalesce(1).write.mode("append").parquet(dir)
-        docs.filter(col("doc_id") % 2 === 1)
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
+      val dir = Streaming.stagedDir("lshdedup", d)(Streaming.stage(s, _,
+        docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
       val out = Streaming.scratchDir("graft_lshdedup_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            Dedup.shingleRows(batch)
-              .write.mode("append").parquet(s"$out/sh")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        Dedup.shingleRows(batch)
+          .write.mode("append").parquet(s"$out/sh")
+      })(identity)
       val ledger = s.read.parquet(s"$out/sh")
       Dedup.d03Report(Dedup.scoredCandidatePairsFromShingles(
         Dedup.capShingleDf(ledger, Dedup.ShingleDfCap)))
@@ -2469,30 +2200,20 @@ object StreamOps {
       val schema = qs.schema
       val dir = Streaming.scratchDir("graft_st44q_")
       // two genuine probe triggers, queries disjoint across them
-      qs.filter(col("q_id") < 8).coalesce(1).write.mode("append").parquet(dir)
-      qs.filter(col("q_id") >= 8).coalesce(1).write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, qs.filter(col("q_id") < 8), qs.filter(col("q_id") >= 8))
       val out = Streaming.scratchDir("graft_st44c_")
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            batch.withColumn("k", lit(1))
-              .join(codes.withColumn("k", lit(1)), "k")
-              .filter(col("vec_id") =!= col("q_id"))
-              .withColumn("iscore", F.dotLL(col("qv"), col("q")))
-              .groupBy("q_id")
-              .agg(F.topkStructs(
-                struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
-              .select(col("q_id"), explode(col("tk")).as("c"))
-              .select(col("q_id"), col("c.vec_id").as("vec_id"))
-              .write.mode("append").parquet(s"$out/cand")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        batch.withColumn("k", lit(1))
+          .join(codes.withColumn("k", lit(1)), "k")
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("iscore", F.dotLL(col("qv"), col("q")))
+          .groupBy("q_id")
+          .agg(F.topkStructs(
+            struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
+          .select(col("q_id"), explode(col("tk")).as("c"))
+          .select(col("q_id"), col("c.vec_id").as("vec_id"))
+          .write.mode("append").parquet(s"$out/cand")
+      })(identity)
       val cands = s.read.parquet(s"$out/cand")
       val qemb = e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -2535,47 +2256,33 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_retrain_src_")
       val out = Streaming.scratchDir("graft_retrain_out_")
       val schema = ev.schema
-      def stateVersions(): Seq[Long] =
-        Option(new java.io.File(out).listFiles()).toSeq.flatten
-          .map(_.getName).filter(_.startsWith("state_"))
-          .map(_.stripPrefix("state_").toLong).sorted
       def stateBelow(batch: Long): Map[String, RetrainState] =
-        stateVersions().filter(_ < batch).lastOption match {
+        versions(s, out, "state_").filter(_ < batch).lastOption match {
           case None => Map.empty
           case Some(ver) =>
             s.read.parquet(s"$out/state_$ver").as[RetrainState]
               .collect().map(st => st.event_type -> st).toMap
         }
-      def runOnce(): Unit = Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val prior = stateBelow(batchId)
-            val next = b.repartition(col("event_type"))
-              .sortWithinPartitions("event_type", "tsu", "event_id")
-              .as[(String, Long, Long, java.math.BigDecimal)]
-              .mapPartitions(rows => retrainFold(prior, rows))(
-                org.apache.spark.sql.Encoders.product[RetrainState])
-              .collect() // O(keys): detector + information-form state only
-            val merged = (prior ++ next.map(st => st.event_type -> st)).values
-            b.sparkSession.createDataset(merged.toSeq)(
+      def runOnce(): Unit =
+        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, batchId) =>
+          val prior = stateBelow(batchId)
+          val next = b.repartition(col("event_type"))
+            .sortWithinPartitions("event_type", "tsu", "event_id")
+            .as[(String, Long, Long, java.math.BigDecimal)]
+            .mapPartitions(rows => retrainFold(prior, rows))(
               org.apache.spark.sql.Encoders.product[RetrainState])
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$out/state_$batchId")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
-      ev.filter(col("tsu") <= midTs).coalesce(1)
-        .write.mode("append").parquet(dir)
+            .collect() // O(keys): detector + information-form state only
+          val merged = (prior ++ next.map(st => st.event_type -> st)).values
+          b.sparkSession.createDataset(merged.toSeq)(
+            org.apache.spark.sql.Encoders.product[RetrainState])
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$out/state_$batchId")
+        })(identity)
+      Streaming.stage(s, dir, ev.filter(col("tsu") <= midTs))
       runOnce() // batch 0: first half, in event-time order
-      ev.filter(col("tsu") > midTs).coalesce(1)
-        .write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, ev.filter(col("tsu") > midTs))
       runOnce() // batch 1: resumes from the checkpoint, only the delta
-      val fin = s.read.parquet(s"$out/state_${stateVersions().last}")
+      val fin = s.read.parquet(s"$out/state_${versions(s, out, "state_").last}")
         .as[RetrainState].collect().toSeq
       val recs = fin.flatMap { st =>
         val drift =
@@ -2628,34 +2335,25 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       val out = Streaming.scratchDir("graft_st46_out_")
       val schema = arriving.schema
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            val ss = b.sparkSession
-            val idx = ss.table(idxTbl)
-            val dp = b.filter(col("n_chars") >= 40)
-              .select(col("doc_id"), col("text"),
-                explode(expr("sequence(1, cast(n_chars as int) - 39)"))
-                  .as("pos"))
-              .select(col("doc_id"), col("pos"),
-                expr("unhex(md5(substring(text, pos, 40)))").as("h"))
-              .join(idx, Seq("h"), "left_semi")
-              .select("doc_id", "pos")
-            val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
-            b.join(kept, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-                coalesce(col("kept_text"), col("text")).as("kept"),
-                col("n_chars"))
-              .write.mode("append").parquet(s"$out/adm")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+        val ss = b.sparkSession
+        val idx = ss.table(idxTbl)
+        val dp = b.filter(col("n_chars") >= 40)
+          .select(col("doc_id"), col("text"),
+            explode(expr("sequence(1, cast(n_chars as int) - 39)"))
+              .as("pos"))
+          .select(col("doc_id"), col("pos"),
+            expr("unhex(md5(substring(text, pos, 40)))").as("h"))
+          .join(idx, Seq("h"), "left_semi")
+          .select("doc_id", "pos")
+        val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
+        b.join(kept, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+            coalesce(col("kept_text"), col("text")).as("kept"),
+            col("n_chars"))
+          .write.mode("append").parquet(s"$out/adm")
+      })(identity)
       s.read.parquet(s"$out/adm")
         .select(col("doc_id"), col("n_spans"),
           length(col("kept")).cast(LongType).as("kept_chars"),
@@ -2749,38 +2447,29 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       val out = Streaming.scratchDir("graft_st47_out_")
       val schema = arriving.schema
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            val ss = b.sparkSession
-            val idx = ss.read.parquet(idxDir)
-            // min(struct) is duplicate-insensitive, so band-collision
-            // multiplicity needs no distinct — one shuffle, the argmin's
-            val best = Multimodal.phashBands(Multimodal.phashOf(b)).as("x")
-              .join(idx.as("y"),
-                col("x.band") === col("y.band") &&
-                  col("x.bits") === col("y.bits"))
-              .select(col("x.doc_id").as("doc_id"),
-                col("y.doc_id").as("rep_doc"),
-                expr("bit_count(x.phash ^ y.phash)").cast(LongType)
-                  .as("hamming"))
-              .filter(col("hamming") <= 7)
-              .groupBy("doc_id")
-              .agg(min(struct(col("hamming"), col("rep_doc"))).as("m"))
-              .select(col("doc_id"), col("m.rep_doc").as("rep_doc"),
-                col("m.hamming").as("hamming"))
-            b.select("doc_id").join(best, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
-                col("rep_doc"), col("hamming"))
-              .write.mode("append").parquet(s"$out/adm")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+        val ss = b.sparkSession
+        val idx = ss.read.parquet(idxDir)
+        // min(struct) is duplicate-insensitive, so band-collision
+        // multiplicity needs no distinct — one shuffle, the argmin's
+        val best = Multimodal.phashBands(Multimodal.phashOf(b)).as("x")
+          .join(idx.as("y"),
+            col("x.band") === col("y.band") &&
+              col("x.bits") === col("y.bits"))
+          .select(col("x.doc_id").as("doc_id"),
+            col("y.doc_id").as("rep_doc"),
+            expr("bit_count(x.phash ^ y.phash)").cast(LongType)
+              .as("hamming"))
+          .filter(col("hamming") <= 7)
+          .groupBy("doc_id")
+          .agg(min(struct(col("hamming"), col("rep_doc"))).as("m"))
+          .select(col("doc_id"), col("m.rep_doc").as("rep_doc"),
+            col("m.hamming").as("hamming"))
+        b.select("doc_id").join(best, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
+            col("rep_doc"), col("hamming"))
+          .write.mode("append").parquet(s"$out/adm")
+      })(identity)
       s.read.parquet(s"$out/adm").orderBy("doc_id")
     }, Some(s"""WITH ${Multimodal.sqlPhashCtes},
       |arr AS (SELECT doc_id, phash FROM ph WHERE doc_id % 5 = 3),
@@ -2831,60 +2520,51 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       val out = Streaming.scratchDir("graft_st48_out_")
       val schema = arriving.schema
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            val ss = b.sparkSession
-            val phIdx = ss.read.parquet(phIdxDir)
-            val winIdx = ss.table(winIdxTbl)
-            val best = Multimodal.phashBands(Multimodal.phashOf(b)).as("x")
-              .join(phIdx.as("y"),
-                col("x.band") === col("y.band") &&
-                  col("x.bits") === col("y.bits"))
-              .select(col("x.doc_id").as("doc_id"),
-                col("y.doc_id").as("rep_doc"),
-                expr("bit_count(x.phash ^ y.phash)").cast(LongType)
-                  .as("hamming"))
-              .filter(col("hamming") <= 7)
-              .groupBy("doc_id")
-              .agg(min(struct(col("hamming"), col("rep_doc"))).as("m"))
-              .select(col("doc_id"), col("m.rep_doc").as("rep_doc"),
-                col("m.hamming").as("hamming"))
-            // adm feeds three branches of the single write plan, but its
-            // expensive subtree (the band-join argmin) ends in an exchange
-            // and ReuseExchange shares identical exchanges within one plan —
-            // persisting adm was A/B'd at 100x (40.1 vs 39.1 s): no win,
-            // so no cache. Contrast st49, where the duplicated subtree is a
-            // pure projection spanning SEPARATE actions (no reuse possible)
-            // and the per-batch persist halved the probe.
-            val adm = b.join(best, Seq("doc_id"), "left")
-            // span surgery over the rejected subset ONLY — admitted docs
-            // never pay the window probe
-            val rejected = adm.filter(col("rep_doc").isNotNull)
-            val dp = rejected.filter(col("n_chars") >= 40)
-              .select(col("doc_id"), col("text"),
-                explode(expr("sequence(1, cast(n_chars as int) - 39)"))
-                  .as("pos"))
-              .select(col("doc_id"), col("pos"),
-                expr("unhex(md5(substring(text, pos, 40)))").as("h"))
-              .join(winIdx, Seq("h"), "left_semi")
-              .select("doc_id", "pos")
-            val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), rejected)
-            adm.join(kept, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
-                col("rep_doc"), col("hamming"),
-                coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-                coalesce(col("kept_text"), col("text")).as("kept"),
-                col("n_chars"))
-              .write.mode("append").parquet(s"$out/adm")
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+        val ss = b.sparkSession
+        val phIdx = ss.read.parquet(phIdxDir)
+        val winIdx = ss.table(winIdxTbl)
+        val best = Multimodal.phashBands(Multimodal.phashOf(b)).as("x")
+          .join(phIdx.as("y"),
+            col("x.band") === col("y.band") &&
+              col("x.bits") === col("y.bits"))
+          .select(col("x.doc_id").as("doc_id"),
+            col("y.doc_id").as("rep_doc"),
+            expr("bit_count(x.phash ^ y.phash)").cast(LongType)
+              .as("hamming"))
+          .filter(col("hamming") <= 7)
+          .groupBy("doc_id")
+          .agg(min(struct(col("hamming"), col("rep_doc"))).as("m"))
+          .select(col("doc_id"), col("m.rep_doc").as("rep_doc"),
+            col("m.hamming").as("hamming"))
+        // adm feeds three branches of the single write plan, but its
+        // expensive subtree (the band-join argmin) ends in an exchange
+        // and ReuseExchange shares identical exchanges within one plan —
+        // persisting adm was A/B'd at 100x (40.1 vs 39.1 s): no win,
+        // so no cache. Contrast st49, where the duplicated subtree is a
+        // pure projection spanning SEPARATE actions (no reuse possible)
+        // and the per-batch persist halved the probe.
+        val adm = b.join(best, Seq("doc_id"), "left")
+        // span surgery over the rejected subset ONLY — admitted docs
+        // never pay the window probe
+        val rejected = adm.filter(col("rep_doc").isNotNull)
+        val dp = rejected.filter(col("n_chars") >= 40)
+          .select(col("doc_id"), col("text"),
+            explode(expr("sequence(1, cast(n_chars as int) - 39)"))
+              .as("pos"))
+          .select(col("doc_id"), col("pos"),
+            expr("unhex(md5(substring(text, pos, 40)))").as("h"))
+          .join(winIdx, Seq("h"), "left_semi")
+          .select("doc_id", "pos")
+        val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), rejected)
+        adm.join(kept, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
+            col("rep_doc"), col("hamming"),
+            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+            coalesce(col("kept_text"), col("text")).as("kept"),
+            col("n_chars"))
+          .write.mode("append").parquet(s"$out/adm")
+      })(identity)
       s.read.parquet(s"$out/adm")
         .select(col("doc_id"), col("admitted"), col("rep_doc"), col("hamming"),
           col("n_spans"),
@@ -2971,8 +2651,7 @@ object StreamOps {
     // (probed separately, no corpus exchange); the delta side is
     // O(arrivals-so-far) and joins as its own small probe; matched
     // positions union+distinct before span coalescing. Trigger order is
-    // pinned by back-dating batch 1's file (the file source orders by
-    // mod time — the st04 staging idiom). The scrub decision is
+    // pinned by the stager's ordered mtimes. The scrub decision is
     // order-DEPENDENT by design (batch 1 scrubs only against the corpus;
     // batch 2 also against batch 1), which is exactly what the oracle
     // replays with its two-index union.
@@ -2981,14 +2660,8 @@ object StreamOps {
       val idxTbl = standingWinIndex(s, d, docs)
       val arriving = docs.filter(col("doc_id") % 5 === 3)
       val dir = Streaming.scratchDir("graft_st49_src_")
-      arriving.filter(col("doc_id") % 10 === 3).coalesce(1)
-        .write.mode("append").parquet(dir)
-      val past = java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000)
-      java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, past))
-      arriving.filter(col("doc_id") % 10 === 8).coalesce(1)
-        .write.mode("append").parquet(dir)
+      Streaming.stage(s, dir, arriving.filter(col("doc_id") % 10 === 3),
+        arriving.filter(col("doc_id") % 10 === 8))
       val delta = Streaming.scratchDir("graft_st49_delta_")
       val out = Streaming.scratchDir("graft_st49_out_")
       // seed the delta dir so trigger 1's schema-bearing read resolves
@@ -2996,48 +2669,39 @@ object StreamOps {
           StructType(Seq(StructField("h", BinaryType))))
         .write.mode("overwrite").parquet(delta)
       val schema = arriving.schema
-      Streaming.withStreamShuffle(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir)
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            val ss = b.sparkSession
-            def winsOf(df: org.apache.spark.sql.DataFrame) =
-              df.filter(col("n_chars") >= 40)
-                .select(col("doc_id"), col("text"),
-                  explode(expr("sequence(1, cast(n_chars as int) - 39)"))
-                    .as("pos"))
-                .select(col("doc_id"), col("pos"),
-                  expr("unhex(md5(substring(text, pos, 40)))").as("h"))
-            // persist: wins feeds three actions (two semi-join branches +
-            // the delta append) and Spark re-executes the explode+md5
-            // subtree per action otherwise (review r12)
-            val wins = winsOf(b).persist()
-            // two separate probes: the corpus side keeps its bucketed
-            // zero-exchange scan (a union would erase the partitioning
-            // and re-shuffle the corpus), the delta side broadcasts
-            val dp = wins.join(ss.table(idxTbl), Seq("h"), "left_semi")
-              .unionByName(wins.join(
-                ss.read.schema("h BINARY").parquet(delta),
-                Seq("h"), "left_semi"))
-              .select("doc_id", "pos").distinct()
-            val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
-            b.join(kept, Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-                coalesce(col("kept_text"), col("text")).as("kept"),
-                col("n_chars"))
-              .write.mode("append").parquet(s"$out/adm")
-            // maintenance: THIS batch's windows join the index for later
-            // triggers (appended only after the scrub above materialized)
-            wins.select("h").write.mode("append").parquet(delta)
-            wins.unpersist()
-            ()
-          }
-          .option("checkpointLocation", s"$out/_ckpt")
-          .start()
-        q.processAllAvailable(); q.stop()
-      }
+      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+        val ss = b.sparkSession
+        def winsOf(df: org.apache.spark.sql.DataFrame) =
+          df.filter(col("n_chars") >= 40)
+            .select(col("doc_id"), col("text"),
+              explode(expr("sequence(1, cast(n_chars as int) - 39)"))
+                .as("pos"))
+            .select(col("doc_id"), col("pos"),
+              expr("unhex(md5(substring(text, pos, 40)))").as("h"))
+        // persist: wins feeds three actions (two semi-join branches +
+        // the delta append) and Spark re-executes the explode+md5
+        // subtree per action otherwise (review r12)
+        val wins = winsOf(b).persist()
+        // two separate probes: the corpus side keeps its bucketed
+        // zero-exchange scan (a union would erase the partitioning
+        // and re-shuffle the corpus), the delta side broadcasts
+        val dp = wins.join(ss.table(idxTbl), Seq("h"), "left_semi")
+          .unionByName(wins.join(
+            ss.read.schema("h BINARY").parquet(delta),
+            Seq("h"), "left_semi"))
+          .select("doc_id", "pos").distinct()
+        val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
+        b.join(kept, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+            coalesce(col("kept_text"), col("text")).as("kept"),
+            col("n_chars"))
+          .write.mode("append").parquet(s"$out/adm")
+        // maintenance: THIS batch's windows join the index for later
+        // triggers (appended only after the scrub above materialized)
+        wins.select("h").write.mode("append").parquet(delta)
+        wins.unpersist()
+      })(identity)
       s.read.parquet(s"$out/adm")
         .select(col("doc_id"), col("n_spans"),
           length(col("kept")).cast(LongType).as("kept_chars"),
@@ -3120,20 +2784,13 @@ object StreamOps {
     import scala.jdk.CollectionConverters._
     val s2 = if (provider == "rocksdb") Streaming.stateSession(s) else s.newSession()
     val out = Streaming.scratchDir(s"graft_crash_${provider}_")
-    def runToQuiescence(): Unit = Streaming.withStreamShuffle(s2) {
-      val q = s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withWatermark("ts", "35 days")
-        .groupBy(col("event_type"), window(col("ts"), "1 day"))
-        .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
-        .select(col("event_type"),
-          unix_micros(col("window.start")).as("day_us"), col("n"), col("sv"))
-        .writeStream.format("parquet")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/_ckpt")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-    }
+    def runToQuiescence(): Unit =
+      Streaming.drain(s2, dir, schema, s"$out/_ckpt", Sink.Files(s"$out/data"))(
+        _.withWatermark("ts", "35 days")
+          .groupBy(col("event_type"), window(col("ts"), "1 day"))
+          .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
+          .select(col("event_type"),
+            unix_micros(col("window.start")).as("day_us"), col("n"), col("sv")))
     def nDataFiles(): Long =
       java.nio.file.Files.walk(java.nio.file.Paths.get(s"$out/data"))
         .iterator().asScala
@@ -3169,16 +2826,12 @@ object StreamOps {
   }
 
   /** The two-file parity-split documents staging shared by st36/st37 (one
-    * trigger per half under maxFilesPerTrigger=1). */
+    * trigger per half). */
   private def stagedDocsTwoFiles(s: org.apache.spark.sql.SparkSession,
       d: String): (String, org.apache.spark.sql.types.StructType) = {
     val docsDf = T.documents(s, d).select("doc_id", "source", "text")
-    val dir = Streaming.stagedDir("kldrift", d) { dir =>
-      docsDf.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(dir)
-      docsDf.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
+    val dir = Streaming.stagedDir("kldrift", d)(Streaming.stage(s, _,
+      docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
     (dir, docsDf.schema)
   }
 
@@ -3191,29 +2844,17 @@ object StreamOps {
       d: String): (String, String) = {
     val docsDf = T.documents(s, d).select("doc_id", "source", "n_chars")
     val schema = docsDf.schema
-    val dir = Streaming.stagedDir("split", d) { dir =>
-      docsDf.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode("append").parquet(dir)
-      docsDf.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
+    val dir = Streaming.stagedDir("split", d)(Streaming.stage(s, _,
+      docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
     val out = Streaming.scratchDir("graft_split_")
-    Streaming.withStreamShuffle(s) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-        .withColumn("bucket", expr(
+    Streaming.drain(s, dir, schema, s"$out/_ckpt",
+      Sink.Files(s"$out/data", partitionBy = Seq("split")))(
+      _.withColumn("bucket", expr(
           "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 100"))
         .withColumn("split",
           when(col("bucket") < 90, "train")
             .when(col("bucket") < 95, "val").otherwise("test"))
-        .select("doc_id", "source", "n_chars", "split")
-        .writeStream.format("parquet")
-        .partitionBy("split")
-        .option("path", s"$out/data")
-        .option("checkpointLocation", s"$out/_ckpt")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-    }
+        .select("doc_id", "source", "n_chars", "split"))
     (s"$out/data", out)
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ml.{HeldOut, HeldOutRing, Learners, ModelState, OnlineLearner}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
@@ -23,15 +24,18 @@ import scala.collection.mutable.ArrayBuffer
   *    with loss/count snapshots and emitting Predictions for forecasting
   *    points.
   *
-  * Batch fixtures are staged into time-ranged parquet files read with
-  * maxFilesPerTrigger=1, so a query really runs multiple triggers and the
-  * watermark advances between them — append-mode window results are produced
-  * by watermark progress, not by query shutdown. A far-future sentinel row
-  * (+40 days) closes the tail windows; rows derived from it are filtered out
-  * after the run (the oracle never sees the sentinel). Callers must pick a
-  * watermark delay LARGER than the staged data's time span: same-mtime files
-  * can be listed in any order, and a smaller delay would silently late-drop
-  * an out-of-order file's data.
+  * Batch fixtures are staged by [[Streaming.stage]] as one parquet file per
+  * part with strictly increasing mtimes, and every query over them runs
+  * through [[Streaming.drain]], which reads one file per trigger
+  * ([[Streaming.source]]): a query really runs multiple triggers and the
+  * watermark advances between them — append-mode window results are
+  * produced by watermark progress, not by query shutdown. A far-future
+  * sentinel row (+40 days) closes the tail windows; rows derived from it
+  * are filtered out after the run (the oracle never sees the sentinel).
+  * Only [[Streaming.stageEvents]] writes files that share one mtime, and
+  * those can be listed in any order: its callers must pick a watermark
+  * delay LARGER than the staged data's time span, or a smaller delay would
+  * silently late-drop an out-of-order file's data.
   */
 object Streaming {
 
@@ -172,22 +176,70 @@ object Streaming {
     (dir, events.schema, maxTs)
   }
 
-  /** Run `build` over a staged directory as a real streaming query
-    * (append mode, memory sink), wait for completion, return the collected
-    * result as a batch DataFrame.
+  /** Append each part to `dir` as one parquet file, so file k is trigger k
+    * of a [[drain]]; a part staged after a drain is the next drain's next
+    * trigger. The file source orders files by mtime, so each new file's
+    * mtime is set, through the path's Hadoop FileSystem, strictly later
+    * than every data file already in `dir`.
     */
-  def runStream(spark: SparkSession, dir: String, schema: StructType,
-      name: String, build: DataFrame => DataFrame): DataFrame =
+  def stage(spark: SparkSession, dir: String, parts: Dataset[_]*): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataFiles(): Seq[FileStatus] =
+      if (!fs.exists(path)) Nil
+      else fs.listStatus(path).toSeq.filter(f => f.isFile &&
+        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    parts.foreach { part =>
+      val before = dataFiles()
+      part.coalesce(1).write.mode("append").parquet(dir)
+      before.map(_.getModificationTime).maxOption.foreach { last =>
+        val seen = before.map(_.getPath).toSet
+        dataFiles().filterNot(f => seen(f.getPath))
+          .foreach(f => fs.setTimes(f.getPath, last + 1000L, -1L))
+      }
+    }
+  }
+
+  /** The one file-per-trigger read of a staged dir. */
+  def source(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+
+  /** Where a [[drain]] writes; `A` is what the drain returns. */
+  sealed trait Sink[A]
+  object Sink {
+    /** Memory table `name` in output mode `mode` (append, complete or
+      * update); the drain returns the table. */
+    final case class Memory(name: String, mode: String = "append")
+        extends Sink[DataFrame]
+    /** `f(batch, batchId)` once per trigger. */
+    final case class Batches(f: (DataFrame, Long) => Unit) extends Sink[Unit]
+    /** Spark's exactly-once parquet file sink at `path`. */
+    final case class Files(path: String, partitionBy: Seq[String] = Nil)
+        extends Sink[Unit]
+  }
+
+  /** Run `build` over the staged `dir` as a streaming query, one file per
+    * trigger, into `sink` with checkpoint `ckpt`, until every staged file is
+    * processed. The query is stopped, and the shuffle width restored, even
+    * when the sink throws.
+    */
+  def drain[A](spark: SparkSession, dir: String, schema: StructType,
+      ckpt: String, sink: Sink[A])(build: DataFrame => DataFrame): A =
     withStreamShuffle(spark) {
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      val q = build(src).writeStream
-        .format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", s"$dir/_ckpt_$name")
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name)
+      val w = build(source(spark, dir, schema)).writeStream
+        .option("checkpointLocation", ckpt)
+      val q = (sink match {
+        case Sink.Memory(name, mode) =>
+          w.format("memory").queryName(name).outputMode(mode)
+        case Sink.Batches(f) => w.foreachBatch(f)
+        case Sink.Files(path, by) =>
+          w.format("parquet").option("path", path).partitionBy(by: _*)
+      }).start()
+      try q.processAllAvailable() finally q.stop()
+      sink match {
+        case Sink.Memory(name, _) => spark.table(name)
+        case _: Sink.Batches | _: Sink.Files => ()
+      }
     }
 }
 

@@ -62,84 +62,77 @@ object StreamingTrainer {
     var totalCumLoss = 0.0
     val curve = ArrayBuffer[BatchPoint]()
 
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
     // unique checkpoint per fit: the staged dir may be memoized across runs,
     // and resuming a committed checkpoint would replay zero batches
     val ckpt = java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/_ckpt_train_$ckpt")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val rdd =
-          if (routed) {
-            val parts = math.max(1, partitionsPerBatch)
-            val byPid = new org.apache.spark.Partitioner {
-              def numPartitions: Int = parts
-              def getPartition(key: Any): Int =
-                (key.asInstanceOf[(Long, Long)]._1 % parts.toLong).toInt
-            }
-            df.rdd
-              .map(r => ((r.getLong(0), r.getLong(1)),
-                (r.getSeq[Double](2).toArray, r.getDouble(3))))
-              .repartitionAndSortWithinPartitions(byPid)
-              .map(_._2)
-          } else {
-            val rdd0 =
-              df.rdd.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
-            if (partitionsPerBatch > 0) rdd0.repartition(partitionsPerBatch)
-            else rdd0
+    val trainBatch: (DataFrame, Long) => Unit = { (df, batchId) =>
+      val rdd =
+        if (routed) {
+          val parts = math.max(1, partitionsPerBatch)
+          val byPid = new org.apache.spark.Partitioner {
+            def numPartitions: Int = parts
+            def getPartition(key: Any): Int =
+              (key.asInstanceOf[(Long, Long)]._1 % parts.toLong).toInt
           }
-        val np = rdd.getNumPartitions
-        val resolvedName = Protocols.resolveName(spec.protocol, spec.learner, np)
-        val protocol = protoCache.getOrElse(resolvedName, {
-          val p = Protocols.create(resolvedName, spec.protocolHp)
-          protoCache += resolvedName -> p
-          p
-        })
-        protocolName = protocol.name
-        val data = protocol.maxParallelism match {
-          case Some(p) if rdd.getNumPartitions > p => rdd.coalesce(p)
-          case _ => rdd
+          df.rdd
+            .map(r => ((r.getLong(0), r.getLong(1)),
+              (r.getSeq[Double](2).toArray, r.getDouble(3))))
+            .repartitionAndSortWithinPartitions(byPid)
+            .map(_._2)
+        } else {
+          val rdd0 =
+            df.rdd.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
+          if (partitionsPerBatch > 0) rdd0.repartition(partitionsPerBatch)
+          else rdd0
         }
-        MiniBatchKMeans.requireSharedSeed(learner, data.getNumPartitions,
-          global.isDefined)
-        val bcGlobal = spark.sparkContext.broadcast(global)
-        // Per-partition replica training (seeded from the broadcast global,
-        // per-round counters zeroed); Protocols.round, the step the batch
-        // Trainer runs too, ships and folds the replicas.
-        val replRdd = data.mapPartitions { it =>
-          var model: ModelState = bcGlobal.value.map(_.deepCopy).orNull
-          if (model != null) { model.n = 0L; model.cumLoss = 0.0 }
-          var any = false
-          it.foreach { case (x, y) =>
-            if (model == null) model = learner.init(x.length) // dim from data
-            any = true
-            learner.fit(model, x, y)
-          }
-          if (any) { learner.finish(model); Iterator.single(model) }
-          else Iterator.empty
-        }
-        val mergedOpt = Protocols.round(replRdd, global, protocol, learner,
-          spec.maxMsgParams, stats)
-        mergedOpt.foreach { merged =>
-          totalFitted += merged.n
-          totalCumLoss += merged.cumLoss
-          merged.n = totalFitted
-          merged.cumLoss = totalCumLoss
-          global = Some(merged)
-          val theta = protocol match {
-            case f: FGM => f.theta
-            case _ => Double.NaN
-          }
-          curve += BatchPoint(batchId, totalFitted, totalCumLoss,
-            stats.modelsShipped, stats.bytesShipped, theta)
-        }
-        ()
+      val np = rdd.getNumPartitions
+      val resolvedName = Protocols.resolveName(spec.protocol, spec.learner, np)
+      val protocol = protoCache.getOrElse(resolvedName, {
+        val p = Protocols.create(resolvedName, spec.protocolHp)
+        protoCache += resolvedName -> p
+        p
+      })
+      protocolName = protocol.name
+      val data = protocol.maxParallelism match {
+        case Some(p) if rdd.getNumPartitions > p => rdd.coalesce(p)
+        case _ => rdd
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      MiniBatchKMeans.requireSharedSeed(learner, data.getNumPartitions,
+        global.isDefined)
+      val bcGlobal = spark.sparkContext.broadcast(global)
+      // Per-partition replica training (seeded from the broadcast global,
+      // per-round counters zeroed); Protocols.round, the step the batch
+      // Trainer runs too, ships and folds the replicas.
+      val replRdd = data.mapPartitions { it =>
+        var model: ModelState = bcGlobal.value.map(_.deepCopy).orNull
+        if (model != null) { model.n = 0L; model.cumLoss = 0.0 }
+        var any = false
+        it.foreach { case (x, y) =>
+          if (model == null) model = learner.init(x.length) // dim from data
+          any = true
+          learner.fit(model, x, y)
+        }
+        if (any) { learner.finish(model); Iterator.single(model) }
+        else Iterator.empty
+      }
+      val mergedOpt = Protocols.round(replRdd, global, protocol, learner,
+        spec.maxMsgParams, stats)
+      mergedOpt.foreach { merged =>
+        totalFitted += merged.n
+        totalCumLoss += merged.cumLoss
+        merged.n = totalFitted
+        merged.cumLoss = totalCumLoss
+        global = Some(merged)
+        val theta = protocol match {
+          case f: FGM => f.theta
+          case _ => Double.NaN
+        }
+        curve += BatchPoint(batchId, totalFitted, totalCumLoss,
+          stats.modelsShipped, stats.bytesShipped, theta)
+      }
+    }
+    Streaming.drain(spark, dir, schema, s"$dir/_ckpt_train_$ckpt",
+      Streaming.Sink.Batches(trainBatch))(identity)
     StreamFit(global.getOrElse(learner.init(1)), learner, protocolName,
       stats, curve.toSeq)
   }

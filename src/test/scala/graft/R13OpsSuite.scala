@@ -68,6 +68,9 @@ class R13OpsSuite extends AnyFunSuite {
     val ref = batchRef(out)
     assert(ref.nonEmpty, "fixture must produce candidate pairs")
     assert(served == ref)
+    // the same ledger named by a file: URI: its probes go through the
+    // path's FileSystem, so it serves the same rows
+    assert(rowsOf(Dedup.pairLedgerServe(spark, s"file:$out")) == served)
     spark.catalog.clearCache()
   }
 

@@ -3,33 +3,18 @@ package graft
 import graft.streaming.{Envelope, SpokeCore, SpokeEvent, SpokeState, Streaming, TwsSpoke}
 import org.apache.spark.sql.{Encoders, SparkSession}
 
-import java.nio.file.{Files, Paths}
-
 /** Drives [[TwsSpoke]] over staged envelope files and the per-key
   * [[SpokeCore.step]] replay it must match: file k is trigger k in both.
   */
 object SpokeHarness {
 
-  /** Stage each file as one parquet file under `<dir>/data`, with
-    * increasing mtimes so the file source (maxFilesPerTrigger=1) reads file
-    * k as trigger k. Returns `dir`.
+  /** Stage the files under `<dir>/data`, file k as trigger k. Returns
+    * `dir`.
     */
   def stage(spark: SparkSession, files: Seq[Seq[Envelope]]): String = {
     import spark.implicits._
     val dir = Streaming.scratchDir("graft_spoke_")
-    val data = Files.createDirectories(Paths.get(dir, "data"))
-    val t0 = System.currentTimeMillis() - 3600000L
-    files.zipWithIndex.foreach { case (evts, k) =>
-      val tmp = s"$dir/_stage_$k"
-      evts.toDS().coalesce(1).write.parquet(tmp)
-      val parts = Files.list(Paths.get(tmp))
-      val part = try parts.filter(_.toString.endsWith(".parquet")).findFirst().get()
-        finally parts.close()
-      val dst = data.resolve(f"f$k%04d.parquet")
-      Files.move(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000L))
-    }
+    Streaming.stage(spark, s"$dir/data", files.map(_.toDS()): _*)
     dir
   }
 
@@ -41,7 +26,8 @@ object SpokeHarness {
     val s2 = Streaming.stateSession(spark)
     conf.foreach { case (k, v) => s2.conf.set(k, v) }
     val name = s"spoke_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    Streaming.runStream(s2, s"$dir/data", Encoders.product[Envelope].schema, name,
+    Streaming.drain(s2, s"$dir/data", Encoders.product[Envelope].schema,
+        s"$dir/data/_ckpt_$name", Streaming.Sink.Memory(name))(
         src => TwsSpoke.run(src.as[Envelope](Encoders.product[Envelope]), testMode).toDF())
       .as[SpokeEvent](Encoders.product[SpokeEvent]).collect().toSeq
   }

@@ -30,6 +30,49 @@ class StreamingSuite extends AnyFunSuite {
     } finally Files.deleteIfExists(other)
   }
 
+  test("stager: file k is trigger k, and a part staged later is the next " +
+    "drain's next trigger") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    val dir = Streaming.scratchDir("graft_stager_")
+    val ck = s"$dir/_ckpt"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Int])]()
+    val sink = Streaming.Sink.Batches { (b, id) =>
+      seen.add((id, b.as[Int].collect().toSeq.sorted))
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("value",
+        org.apache.spark.sql.types.IntegerType)))
+    def part(k: Int) = (0 until 5).map(i => k * 10 + i)
+    Streaming.stage(spark, dir, (0 until 3).map(k => part(k).toDS()): _*)
+    Streaming.drain(spark, dir, schema, ck, sink)(identity)
+    Streaming.stage(spark, dir, part(3).toDS())
+    Streaming.drain(spark, dir, schema, ck, sink)(identity)
+    assert(seen.toArray.toSeq == (0 until 4).map(k => (k.toLong, part(k))))
+  }
+
+  test("drain: a failing sink is rethrown, its query stopped and the " +
+    "shuffle width restored") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    val dir = Streaming.scratchDir("graft_drainfail_")
+    Streaming.stage(spark, dir, Seq(1).toDS(), Seq(2).toDS(), Seq(3).toDS())
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try {
+      val e = intercept[Exception] {
+        Streaming.drain(spark, dir, Seq(1).toDF().schema, s"$dir/_ckpt",
+          Streaming.Sink.Batches { (_, id) =>
+            if (id == 1) throw new IllegalStateException("sink failed on batch 1")
+          })(identity)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "sink failed on batch 1"), e.toString)
+      assert(spark.streams.active.isEmpty)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
   test("pre-Create data buffers, Create drains it into training") {
     val st = new Steps()
     val out = st(data(0, 10, Some(1.0)), data(1, 11, Some(-1.0)),
@@ -68,17 +111,9 @@ class StreamingSuite extends AnyFunSuite {
     import spark.implicits._
     val dir = Streaming.scratchDir("graft_stats_")
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
-    def writeFile(evts: Seq[StatEvent], mtime: Long): Unit = {
-      val sub = new java.io.File(dir, "data")
-      evts.toDS().coalesce(1).write.mode("append").parquet(sub.toString)
-      // distinct mtimes keep the file-source trigger order deterministic
-      sub.listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => f.setLastModified(mtime))
-    }
     def drain(): Seq[SpokeEvent] = {
-      val src = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[StatEvent]
+      val src = Streaming.source(spark, s"$dir/data",
+        implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema).as[StatEvent]
       val q = TwsStatsOperator.run(src, timeoutMs = 30000L).writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$dir/_ckpt")
@@ -101,8 +136,8 @@ class StreamingSuite extends AnyFunSuite {
       // late: far below the watermark
       Seq(StatEvent(1, 9, 99, 1, 9, 0.9, 2000L)),
       Seq(StatEvent(99, 1, 64, 1, 5, 0.5, 1000000L)))
-    files.zipWithIndex.map { case (f, k) =>
-      writeFile(f, (k + 1) * 1000000L)
+    files.map { f =>
+      Streaming.stage(spark, s"$dir/data", f.toDS())
       drain()
     }
   }
@@ -145,9 +180,8 @@ class StreamingSuite extends AnyFunSuite {
     val ck = s"$dir/_ckpt"
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
     def start() = {
-      val src = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
+      val src = Streaming.source(spark, s"$dir/data",
+        implicitly[org.apache.spark.sql.Encoder[Envelope]].schema).as[Envelope]
       TwsSpoke.run(src).writeStream
         .outputMode("append")
         .option("checkpointLocation", ck)
@@ -157,13 +191,11 @@ class StreamingSuite extends AnyFunSuite {
     }
     val batch1: Seq[Envelope] = Seq(ctl(0, "Create", "PA"),
       data(1, 1, Some(1.0)), data(2, 2, Some(-1.0)), data(3, 3, Some(1.0)))
-    batch1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
+    Streaming.stage(spark, s"$dir/data", batch1.toDS())
     val q1 = start(); q1.processAllAvailable(); q1.stop()
     // second incarnation: only a Query arrives; fitted=3 proves the model
     // state was recovered from the checkpointed state store
-    Thread.sleep(1100)
-    Seq(ctl(10, "Query", reqId = 77L)).toDS().coalesce(1)
-      .write.mode("append").parquet(s"$dir/data")
+    Streaming.stage(spark, s"$dir/data", Seq(ctl(10, "Query", reqId = 77L)).toDS())
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     val resp = sink.toArray(Array.empty[SpokeEvent]).find(_.kind == "response")
     assert(resp.isDefined, s"no response in ${sink.size} events")
@@ -291,9 +323,8 @@ class StreamingSuite extends AnyFunSuite {
     val ck = s"$dir/_ckpt"
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[SpokeEvent]()
     def start() = {
-      val src = spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Envelope]].schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/data").as[Envelope]
+      val src = Streaming.source(spark, s"$dir/data",
+        implicitly[org.apache.spark.sql.Encoder[Envelope]].schema).as[Envelope]
       TwsSpoke.run(src).writeStream
         .outputMode("append")
         .option("checkpointLocation", ck)
@@ -303,7 +334,7 @@ class StreamingSuite extends AnyFunSuite {
     }
     val batch1 = ctl(0, "Create", "PA") +:
       (0 until 30).map(i => data(10 + i, i, Some(if (i % 3 == 0) 1.0 else -1.0)))
-    batch1.toDS().coalesce(1).write.mode("append").parquet(s"$dir/data")
+    Streaming.stage(spark, s"$dir/data", batch1.toDS())
     val q1 = start(); q1.processAllAvailable(); q1.stop()
     // the same events stepped directly give the expected snapshot
     val stDirect = new Steps()
@@ -311,9 +342,7 @@ class StreamingSuite extends AnyFunSuite {
     val expected = stDirect(ctl(100, "Query", reqId = 77L)).head
     // second incarnation: only a Query arrives; ring contents and model must
     // both come back from the checkpointed state store
-    Thread.sleep(1100)
-    Seq(ctl(100, "Query", reqId = 77L)).toDS().coalesce(1)
-      .write.mode("append").parquet(s"$dir/data")
+    Streaming.stage(spark, s"$dir/data", Seq(ctl(100, "Query", reqId = 77L)).toDS())
     val q2 = start(); q2.processAllAvailable(); q2.stop()
     val resp = sink.toArray(Array.empty[SpokeEvent]).find(_.kind == "response")
     assert(resp.isDefined, s"no response in ${sink.size} events")
