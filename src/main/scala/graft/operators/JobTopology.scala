@@ -186,9 +186,9 @@ object JobTopology {
       })(raw => TwsSpoke.run(route(raw)).toDF())
 
   /** Decode spoke response rows into the K5 input shape (shared by the
-    * batch gate read and Q2's streaming read).
+    * batch gate read, Q2's streaming read and st07).
     */
-  private def respProjection(df: DataFrame): DataFrame =
+  private[graft] def respProjection(df: DataFrame): DataFrame =
     df.filter(col("kind") === "response")
       .select(
         expr("pipelineId DIV 1024").cast(IntegerType).as("pipe"),
@@ -203,25 +203,14 @@ object JobTopology {
   private def workerResponses(s: SparkSession, out: String): DataFrame =
     respProjection(s.read.schema(spokeSchema).parquet(s"$out/responses"))
 
-  /** Q2 — the K5 barrier over the response sink, as a stream. Returns the
-    * STARTED query: Q2 and Q3 are independent consumers of the spoke's
-    * output, exactly the reference DAG's parallel queryResponses /
-    * performance branches (FlinkLearning.scala:104-135), so the caller
-    * runs them concurrently and awaits both.
+  /** Q2 — the K5 barrier over the response sink, as a stream; returns the
+    * merged responses once the sink is drained.
     */
-  private def startMerge(s: SparkSession, out: String, name: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import s.implicits._
-    Streaming.withStreamShuffle(s) {
-      val wr = respProjection(
-        s.readStream.schema(spokeSchema).parquet(s"$out/responses"))
-        .as[WorkerResponse]
-      ResponseMerge.run(wr, Workers).writeStream
-        .format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", s"$out/_ckpt_q2")
-        .start()
-    }
-  }
+  private def runMerge(s: SparkSession, out: String, name: String): DataFrame =
+    Streaming.drain(Streaming.stateSession(s), s"$out/responses", spokeSchema,
+      s"$out/_ckpt_q2", Streaming.Sink.Memory(name))(src => ResponseMerge.run(
+        respProjection(src).as[WorkerResponse](Encoders.product[WorkerResponse]),
+        Workers).toDF())
 
   /** Q3 — K6 job statistics: the worker responses become time-ordered stat
     * partials (the hub's (String, Statistics) stream); two watermark-only
@@ -229,8 +218,7 @@ object JobTopology {
     * fires terminate_signal BEFORE the Terminate partials arrive; the
     * workers×pipelines barrier then releases the finals.
     */
-  private def startStats(s: SparkSession, out: String, name: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+  private def runStats(s: SparkSession, out: String, name: String): DataFrame = {
     import s.implicits._
     val resp = workerResponses(s, out)
     val statsP = resp.filter(col("requestId") === 9L)
@@ -243,26 +231,21 @@ object JobTopology {
       .select(lit("Terminate").as("tag"), col("pipe").as("pipelineId"), col("worker"),
         lit(0L).as("modelsShipped"), lit(0L).as("bytesShipped"),
         lit(0L).as("fitted"), col("testn").cast(DoubleType).as("meanBufferSize"),
-        // ABOVE the sentinel watermark (10,000,000): fMGWS drops late input
-        // rows once a watermark is attached, and the Terminate round really
-        // does happen after the quiescence signal in the reference's clock.
-        // The Terminate branch never touches start/end timestamps, so the
-        // makespan stays pinned by the stats partials alone.
+        // ABOVE the sentinel watermark (10,000,000): the operator drops late
+        // input rows once a watermark is attached, and the Terminate round
+        // really does happen after the quiescence signal in the reference's
+        // clock. The Terminate branch never touches start/end timestamps,
+        // so the makespan stays pinned by the stats partials alone.
         col("score"), (lit(20000000L) + col("worker")).as("eventTimeMs"))
     def sentinel(ts: Long) = Seq(
       StatPartial("__wm__", 0, -1, 0L, 0L, 0L, 0.0, 0.0, ts)).toDF()
     val statsDir = s"$out/stat_partials"
     Streaming.stage(s, statsDir, statsP, sentinel(10000000L),
       sentinel(10000001L), termP)
-    Streaming.withStreamShuffle(s) {
-      val src = Streaming.source(s, statsDir, Encoders.product[StatPartial].schema)
-        .as[StatPartial]
-      JobStatsOperator.run(src, workers = Workers, testSetSize = 256,
-        timeoutMs = 60000L, wmOnlyTag = "__wm__").writeStream
-        .format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", s"$out/_ckpt_q3")
-        .start()
-    }
+    Streaming.drain(Streaming.stateSession(s), statsDir,
+      Encoders.product[StatPartial].schema, s"$out/_ckpt_q3",
+      Streaming.Sink.Memory(name))(src => JobStatsOperator.run(
+        src.as[StatPartial], Workers, timeoutMs = 60000L, wmOnlyTag = "__wm__").toDF())
   }
 
   val ops: Seq[Op] = Seq(
@@ -275,13 +258,9 @@ object JobTopology {
       val runTag = java.util.UUID.randomUUID().toString.replace("-", "")
       // Q2 and Q3 run CONCURRENTLY — the reference DAG's parallel
       // queryResponses/performance branches off the worker stream
-      val (merged, jobStats) = {
-        val q2 = startMerge(s, out, s"p08m_$runTag")
-        val q3 = startStats(s, out, s"p08s_$runTag")
-        try { q2.processAllAvailable(); q3.processAllAvailable() }
-        finally { q2.stop(); q3.stop() }
-        (s.table(s"p08m_$runTag"), s.table(s"p08s_$runTag"))
-      }
+      val Seq(merged, jobStats) = graft.Subjobs.runAll(s, Seq(
+        () => runMerge(s, out, s"p08m_$runTag"),
+        () => runStats(s, out, s"p08s_$runTag")))
 
       // ---- gate assembly: one pinned row per composed behavior ----
       val catalogRows = s.read.schema(spokeSchema).parquet(s"$out/logs")

@@ -700,18 +700,14 @@ object StreamOps {
           Envelope(1000000L + w, key(w), "control", "Query", "", 9L, -1, Nil, None, ""))
         Streaming.stage(s, dir, (creates ++ queries).toDS().unionByName(points))
       }
-      runSpoke(s, dir, "st07")
-        .filter(col("kind") === "response")
-        .select(col("requestId"),
-          (col("pipelineId") - 1024).as("worker"),
-          regexp_extract(col("info"), "fitted=(\\d+)", 1).cast(LongType).as("fitted"),
-          regexp_extract(col("info"), "testn=(\\d+)", 1).cast(LongType).as("testn"),
-          col("value").as("test_loss")) // avg held-out-ring loss per worker
-        .groupBy("requestId")
-        .agg(count(lit(1)).as("parts"), sum("fitted").as("data_fitted"),
-          sum("testn").as("test_points"),
-          (sum("test_loss") / count(lit(1))).as("avg_test_loss"))
-        .filter(col("parts") === workers) // the reference's exactly-p barrier
+      // the K5 step (the reference's exactly-p barrier) over each request's
+      // worker responses; a worker's loss is its avg held-out-ring loss
+      JobTopology.respProjection(runSpoke(s, dir, "st07")).as[WorkerResponse]
+        .groupByKey(r => (r.pipe, r.requestId))
+        .flatMapGroups((k, rows) => ResponseMerge.step(workers)(k, rows, None)._1)
+        .select(col("requestId"), col("parts").cast(LongType).as("parts"),
+          col("fitted").as("data_fitted"), col("testn").as("test_points"),
+          col("avgLoss").as("avg_test_loss"))
         // hash-gated barrier invariants: the oracle pins the request id and
         // the exactly-p part count; fitted + held-out must account for
         // every point (the ring holds what training skipped), the ring is
@@ -813,11 +809,11 @@ object StreamOps {
       }
       import s.implicits._
       val name = uniq("st18")
-      Streaming.drain(s, dir,
+      Streaming.drain(Streaming.stateSession(s), dir,
         implicitly[org.apache.spark.sql.Encoder[StatPartial]].schema,
         s"$dir/_ckpt_$name", Sink.Memory(name))(src =>
         JobStatsOperator.run(src.as[StatPartial], workers = 2,
-          testSetSize = 256, timeoutMs = 600000L).toDF())
+          timeoutMs = 600000L).toDF())
         .filter(col("kind") === "job_statistics_final")
         .select(col("pipelineId").as("pipeline_id"),
           col("value").as("score"),
@@ -1926,8 +1922,8 @@ object StreamOps {
     // QUIESCENCE REPORTS ON REGISTERED transformWithState TIMERS — the
     // r8 gate for the one Tws path st31 left suite-only: the statistics
     // operator's timer lifecycle (register on every record batch, slide
-    // by delete+re-register, FIRE via watermark progress into
-    // handleExpiredTimer, which emits the report and clears state —
+    // by delete+re-register, FIRE via watermark progress into the step's
+    // onTimer, which emits the report and clears state —
     // the reference's StatisticsOperator.scala:91,135-142 timer API) on
     // the RocksDB store. Fixture: per-pipeline stats records derived
     // from orders arrive in two TIME-SPLIT batches (split at 1998-01-01,
@@ -1967,7 +1963,7 @@ object StreamOps {
       Streaming.drain(Streaming.stateSession(s), dir,
           implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema,
           s"$dir/_ckpt_$name", Sink.Memory(name))(
-          src => TwsStatsOperator.run(src.as[StatEvent], timeoutMs = 30000L).toDF())
+          src => TwsStatsOperator.run(src.as[StatEvent]).toDF())
         .filter(col("kind") === "job_statistics" && col("pipelineId") < 4)
         .select(col("pipelineId").as("pipeline_id"),
           col("value").as("score"),

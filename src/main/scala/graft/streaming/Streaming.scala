@@ -2,14 +2,15 @@ package graft.streaming
 
 import graft.ml.{HeldOut, HeldOutRing, Learners, ModelState, OnlineLearner}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupState
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
 import org.apache.spark.sql.types.StructType
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming side of the engine.
   *
@@ -39,12 +40,14 @@ import scala.collection.mutable.ArrayBuffer
   */
 object Streaming {
 
-  /** A child session for the keyed-state operators ([[TwsSpoke]],
-    * [[TwsStatsOperator]]): shares the SparkContext, owns its conf and
-    * catalog, so the provider is set per query instead of on the caller's
-    * session. transformWithState needs the RocksDB provider. The provider's
-    * default row-count metric (`trackTotalNumberOfRows`) GETs the whole
-    * merged value on every state write, so it is off (PLANS.md r10).
+  /** A child session for every keyed-state operator of the Job
+    * ([[TwsSpoke]], and [[ResponseMerge]], [[JobStatsOperator]] and
+    * [[TwsStatsOperator]] on [[TwsStepProcessor]]): shares the SparkContext,
+    * owns its conf and catalog, so the provider is set per query instead of
+    * on the caller's session. transformWithState needs the RocksDB
+    * provider. The provider's default row-count metric
+    * (`trackTotalNumberOfRows`) GETs the whole merged value on every state
+    * write, so it is off (PLANS.md r10).
     */
   def stateSession(s: SparkSession): SparkSession = {
     val s2 = s.newSession()
@@ -558,10 +561,87 @@ object TwsSpoke {
   /** Wire the processor over an envelope stream. */
   def run(envelopes: Dataset[Envelope], testMode: Boolean = false): Dataset[SpokeEvent] = {
     import envelopes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     envelopes.groupByKey(_.pipelineId)
       .transformWithState(new TwsSpokeProcessor(testMode),
         TimeMode.None(), OutputMode.Append())
+  }
+}
+
+/** The one `transformWithState` binding of the Job's keyed operators other
+  * than the spoke: K5 [[ResponseMerge]], K6 [[JobStatsOperator]] and
+  * [[TwsStatsOperator]]. Each is a pure step over one value, which this
+  * processor keeps in one ValueState; run it in a [[Streaming.stateSession]].
+  *
+  * `step(key, rows, state, watermarkMs)` returns the outputs, the next state
+  * (None clears it) and an optional event-time timer instant. A returned
+  * instant replaces the key's timer (the quiescence timer slides); none
+  * leaves it. Clearing the state in a step also deletes the timer. When the
+  * timer fires, `onTimer(key, state)` returns the outputs and the next state.
+  */
+class TwsStepProcessor[K, I, S, O](stateEncoder: Encoder[S],
+    step: (K, Iterator[I], Option[S], Long) => (Seq[O], Option[S], Option[Long]),
+    onTimer: (K, S) => (Seq[O], Option[S]) = (_: K, s: S) => (Nil, Some(s)))
+    extends StatefulProcessor[K, I, O] {
+  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
+
+  @transient private var state: ValueState[S] = _
+  @transient private var timed = false
+
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    state = getHandle.getValueState[S]("state", stateEncoder, TTLConfig.NONE)
+    timed = timeMode == TimeMode.EventTime()
+  }
+
+  override def handleInputRows(key: K, rows: Iterator[I],
+      timerValues: TimerValues): Iterator[O] = {
+    val (out, next, timer) = step(key, rows,
+      Option.when(state.exists())(state.get()), timerValues.getCurrentWatermarkInMs())
+    if (timed && (next.isEmpty || timer.nonEmpty))
+      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+    timer.foreach(getHandle.registerTimer)
+    next.fold(state.clear())(state.update)
+    out.iterator
+  }
+
+  // the fired timer was the key's only one, and Spark deletes it
+  override def handleExpiredTimer(key: K, timerValues: TimerValues,
+      expiredTimerInfo: ExpiredTimerInfo): Iterator[O] =
+    if (!state.exists()) Iterator.empty
+    else {
+      val (out, next) = onTimer(key, state.get())
+      next.fold(state.clear())(state.update)
+      out.iterator
+    }
+}
+
+/** Carrier keeping the watermarked timestamp beside each row through the
+  * stateful operator (see [[TwsStep.onEventTime]]).
+  */
+case class Stamped[I](e: I, eventTime: java.sql.Timestamp)
+
+object TwsStep {
+  /** The event-time prelude of the stats operators: a zero-delay watermark
+    * on the rows' `eventTimeMs`, carried beside each row to the operator
+    * (which drops the rows at or below the previous trigger's watermark);
+    * rows `keep` rejects are dropped after they advanced the watermark; the
+    * rest are keyed by `key` and bound through [[TwsStepProcessor]] on
+    * event time.
+    */
+  def onEventTime[I <: Product : TypeTag, S, O: Encoder](in: Dataset[I],
+      stateEncoder: Encoder[S])(key: I => Int,
+      step: (Iterator[I], Option[S], Long) => (Seq[O], Option[S], Option[Long]),
+      onTimer: (Int, S) => (Seq[O], Option[S]),
+      keep: I => Boolean = (_: I) => true): Dataset[O] = {
+    import in.sparkSession.implicits._
+    in.withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
+      .withWatermark("eventTime", "0 seconds")
+      .select(struct(in.columns.map(col).toSeq: _*).as("e"), col("eventTime"))
+      .as[Stamped[I]]
+      .filter(r => keep(r.e))
+      .groupByKey(r => key(r.e))
+      .transformWithState(new TwsStepProcessor[Int, Stamped[I], S, O](stateEncoder,
+          (_, rows, prev, wm) => step(rows.map(_.e), prev, wm), onTimer),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }
 
@@ -581,50 +661,33 @@ case class StatsState(
     modelsShipped: Long, bytesShipped: Long, blocks: Long, fitted: Long,
     score: Double, firstTsMs: Long, lastTsMs: Long)
 
-/** Carrier keeping the watermarked timestamp column alongside the stats
-  * record through the stateful operator (see [[TwsStatsOperator.run]]).
-  */
-case class StatEnvelope(e: StatEvent, eventTime: java.sql.Timestamp)
-
 /** The reference's StatisticsOperator (StatisticsOperator.scala:21-150):
   * merges per-hub statistics per pipeline and uses a quiescence timeout —
-  * no new statistics for `timeoutMs` of EVENT time — to emit the final
-  * JobStatistics with the pipeline makespan and clear state. Like the
-  * reference's timer API (StatisticsOperator.scala:91,135-142), timers are
-  * REGISTERED objects (`getHandle.registerTimer(lastTs + timeout)`,
-  * re-registered on every new record, fired by watermark progress into
-  * [[handleExpiredTimer]]). Quiescence is decided by the data's own clock,
-  * so replay and backfill behave identically to live ingestion (a
-  * processing-time timer would fire mid-backfill on wall-clock pauses).
-  * Requires the RocksDB state store provider, like [[TwsSpoke]].
+  * no new statistics for [[TwsStatsOperator.TimeoutMs]] of EVENT time — to
+  * emit the final JobStatistics with the pipeline makespan and clear state.
+  * Like the reference's timer API (StatisticsOperator.scala:91,135-142),
+  * the timer is a REGISTERED object, slid to lastTs + timeout by every
+  * step that takes records and fired by watermark progress into
+  * [[onTimer]]. Quiescence is decided by the data's own clock, so replay and
+  * backfill behave identically to live ingestion (a processing-time timer
+  * would fire mid-backfill on wall-clock pauses).
   */
-class TwsStatsProcessor(timeoutMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Int, StatEnvelope, SpokeEvent] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
+object TwsStatsOperator {
+  val TimeoutMs = 30000L
 
-  @transient private var state: ValueState[StatsState] = _
-
-  override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    state = getHandle.getValueState[StatsState]("statsState",
-      Encoders.product[StatsState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Int, rows: Iterator[StatEnvelope],
-      timerValues: TimerValues): Iterator[SpokeEvent] = {
-    val wm = timerValues.getCurrentWatermarkInMs
+  def step(rows: Iterator[StatEvent], prev: Option[StatsState],
+      watermarkMs: Long): (Seq[SpokeEvent], Option[StatsState], Option[Long]) = {
     // Late-data guard: a record below the watermark arrives after the
     // quiescence decision for its epoch is sealed — processing it would
     // resurrect state the timer already cleared (the reference's event-time
     // timers give the same guarantee: a post-timer record re-opens nothing
     // retroactively).
-    val live = rows.map(_.e).filter(_.eventTimeMs >= wm).toSeq
-    if (live.isEmpty) Iterator.empty
+    val live = rows.filter(_.eventTimeMs >= watermarkMs).toSeq
+    if (live.isEmpty) (Nil, prev, None)
     else {
-      var st = (if (state.exists()) Option(state.get()) else None).getOrElse(
-        StatsState(0, 0, 0, 0, 0.0, Long.MaxValue, Long.MinValue))
-      live.foreach { e =>
-        st = StatsState(
+      val st = live.foldLeft(prev.getOrElse(
+          StatsState(0, 0, 0, 0, 0.0, Long.MaxValue, Long.MinValue))) { (st, e) =>
+        StatsState(
           st.modelsShipped + e.modelsShipped,
           st.bytesShipped + e.bytesShipped,
           st.blocks + e.blocks,
@@ -636,50 +699,24 @@ class TwsStatsProcessor(timeoutMs: Long)
           math.min(st.firstTsMs, e.eventTimeMs),
           math.max(st.lastTsMs, e.eventTimeMs))
       }
-      state.update(st)
-      // slide the quiescence timer: drop the old instant, register the new
-      // one, clamped above the current watermark (Spark rejects timers at
-      // or below it)
-      getHandle.listTimers().foreach(t =>
-        getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(math.max(st.lastTsMs + timeoutMs, wm + 1))
-      Iterator.empty
+      // clamped above the watermark: Spark rejects timers at or below it
+      (Nil, Some(st), Some(math.max(st.lastTsMs + TimeoutMs, watermarkMs + 1)))
     }
   }
 
-  override def handleExpiredTimer(key: Int, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[SpokeEvent] = {
-    if (!state.exists()) Iterator.empty
-    else {
-      val st = state.get()
-      state.clear()
-      val makespan = st.lastTsMs - st.firstTsMs
-      Iterator.single(SpokeEvent(key, "job_statistics", -1, -1, st.score,
-        s"makespan=$makespan,models=${st.modelsShipped},bytes=${st.bytesShipped}," +
-          s"blocks=${st.blocks},fitted=${st.fitted}"))
-    }
-  }
-}
+  /** Quiescence: report the pipeline's statistics and clear its state. */
+  def onTimer(key: Int, st: StatsState): (Seq[SpokeEvent], Option[StatsState]) =
+    (Seq(SpokeEvent(key, "job_statistics", -1, -1, st.score,
+      s"makespan=${st.lastTsMs - st.firstTsMs},models=${st.modelsShipped}," +
+        s"bytes=${st.bytesShipped},blocks=${st.blocks},fitted=${st.fitted}")), None)
 
-object TwsStatsOperator {
-  /** Wire the processor over a stats stream. The input's `eventTimeMs`
-    * drives both the watermark and the quiescence timers. The watermarked
-    * timestamp column must reach the stateful operator, so the event rides
-    * inside a [[StatEnvelope]] next to it.
+  /** Per-pipeline statistics over a stats stream whose `eventTimeMs` drives
+    * both the watermark and the quiescence timers.
     */
-  def run(stats: Dataset[StatEvent], timeoutMs: Long = 30000L,
-      watermarkDelay: String = "0 seconds"): Dataset[SpokeEvent] = {
+  def run(stats: Dataset[StatEvent]): Dataset[SpokeEvent] = {
     import stats.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val cols = stats.columns.map(col)
-    stats
-      .withColumn("eventTime", timestamp_millis(col("eventTimeMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .select(struct(cols: _*).as("e"), col("eventTime"))
-      .as[StatEnvelope]
-      .groupByKey(_.e.pipelineId)
-      .transformWithState(new TwsStatsProcessor(timeoutMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    TwsStep.onEventTime(stats, Encoders.product[StatsState])(
+      _.pipelineId, step _, onTimer _)
   }
 }
 
@@ -709,29 +746,29 @@ private[graft] case class MergeState(
   */
 object ResponseMerge {
 
-  def process(workers: Int)(key: (Int, Long), it: Iterator[WorkerResponse],
-      state: GroupState[MergeState]): Iterator[MergedResponse] = {
-    var st = state.getOption.getOrElse(MergeState(0, 0L, 0L, 0.0, 0.0))
+  def step(workers: Int)(key: (Int, Long), rows: Iterator[WorkerResponse],
+      prev: Option[MergeState]): (Seq[MergedResponse], Option[MergeState]) = {
+    val empty = MergeState(0, 0L, 0L, 0.0, 0.0)
+    var st = prev.getOrElse(empty)
     val out = ArrayBuffer[MergedResponse]()
-    it.foreach { r =>
+    rows.foreach { r =>
       st = MergeState(st.parts + 1, st.fitted + r.fitted, st.testn + r.testn,
         st.lossSum + r.loss, st.scoreSum + r.score)
       if (st.parts == workers) {
         out += MergedResponse(key._1, key._2, st.parts, st.fitted, st.testn,
           st.lossSum / workers, st.scoreSum / workers)
-        st = MergeState(0, 0L, 0L, 0.0, 0.0)
-        state.remove()
+        st = empty
       }
     }
-    if (st.parts > 0) state.update(st)
-    out.iterator
+    (out.toSeq, Option.when(st.parts > 0)(st))
   }
 
   def run(responses: Dataset[WorkerResponse], workers: Int): Dataset[MergedResponse] = {
     import responses.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     responses.groupByKey(r => (r.pipe, r.requestId))
-      .flatMapGroupsWithState[MergeState, MergedResponse](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(process(workers))
+      .transformWithState(new TwsStepProcessor[(Int, Long), WorkerResponse,
+          MergeState, MergedResponse](Encoders.product[MergeState], (k, rows, prev, _) =>
+          step(workers)(k, rows, prev) match { case (out, next) => (out, next, None) }),
+        TimeMode.None(), OutputMode.Append())
   }
 }

@@ -137,28 +137,24 @@ class R10OpsSuite extends AnyFunSuite {
 
   test("ResponseMerge releases exactly at parts == workers, sums fitted, " +
     "averages losses, and clears its state (ResponseConstructor.scala:13-69)") {
-    import graft.streaming.{MergeState, ResponseMerge, WorkerResponse}
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val st = TestGroupState.create[MergeState](
-      org.apache.spark.api.java.Optional.empty[MergeState](),
-      GroupStateTimeout.NoTimeout, 0L,
-      org.apache.spark.api.java.Optional.empty[Long](), hasTimedOut = false)
+    import graft.streaming.{ResponseMerge, WorkerResponse}
     def wr(w: Int, fitted: Long, loss: Double) =
       WorkerResponse(1, w, 9L, fitted, 10L, loss, 0.5)
+    val step = ResponseMerge.step(4) _
     // three of four partials: nothing may emit
-    val r0 = ResponseMerge.process(4)((1, 9L),
-      Iterator(wr(0, 100, 0.2), wr(1, 110, 0.4), wr(2, 90, 0.6)), st).toSeq
-    assert(r0.isEmpty && st.get.parts == 3)
+    val (r0, st0) = step((1, 9L),
+      Iterator(wr(0, 100, 0.2), wr(1, 110, 0.4), wr(2, 90, 0.6)), None)
+    assert(r0.isEmpty && st0.get.parts == 3)
     // the fourth releases the merged response and removes state
-    val r1 = ResponseMerge.process(4)((1, 9L), Iterator(wr(3, 100, 0.8)), st).toSeq
+    val (r1, st1) = step((1, 9L), Iterator(wr(3, 100, 0.8)), st0)
     assert(r1.size == 1)
     val m = r1.head
     assert(m.parts == 4 && m.fitted == 400L && m.testn == 40L)
     assert(math.abs(m.avgLoss - 0.5) < 1e-12)
-    assert(st.getOption.isEmpty)
+    assert(st1.isEmpty)
     // a second query round on the same key starts from scratch
-    val r2 = ResponseMerge.process(4)((1, 9L), Iterator(wr(0, 7, 0.1)), st).toSeq
-    assert(r2.isEmpty && st.get.parts == 1)
+    val (r2, st2) = step((1, 9L), Iterator(wr(0, 7, 0.1)), st1)
+    assert(r2.isEmpty && st2.get.parts == 1)
   }
 
   test("pre-Create buffer under load: 50k rows x 2 pipelines over 10 " +

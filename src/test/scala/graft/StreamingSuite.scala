@@ -2,7 +2,6 @@ package graft
 
 import graft.SpokeHarness.Steps
 import graft.streaming._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spoke state-machine semantics, driven through [[SpokeCore.step]] (the
@@ -114,7 +113,7 @@ class StreamingSuite extends AnyFunSuite {
     def drain(): Seq[SpokeEvent] = {
       val src = Streaming.source(spark, s"$dir/data",
         implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema).as[StatEvent]
-      val q = TwsStatsOperator.run(src, timeoutMs = 30000L).writeStream
+      val q = TwsStatsOperator.run(src).writeStream
         .outputMode("append")
         .option("checkpointLocation", s"$dir/_ckpt")
         .foreachBatch((df: org.apache.spark.sql.Dataset[SpokeEvent], _: Long) =>
@@ -388,43 +387,33 @@ class StreamingSuite extends AnyFunSuite {
   }
 
   test("job stats: final statistics only after workers x pipelines Terminate partials") {
-    def jstate(wm: Long, timedOut: Boolean = false,
-        prev: Option[JobStatsState] = None) =
-      TestGroupState.create[JobStatsState](
-        prev.map(org.apache.spark.api.java.Optional.of[JobStatsState])
-          .getOrElse(org.apache.spark.api.java.Optional.empty[JobStatsState]()),
-        GroupStateTimeout.EventTimeTimeout, wm,
-        org.apache.spark.api.java.Optional.of(wm + 1), hasTimedOut = timedOut)
-    val workers = 2; val testSetSize = 4
+    val workers = 2
     def part(tag: String, pip: Int, w: Int, fitted: Long, score: Double, ts: Long) =
       StatPartial(tag, pip, w, 1L, 64L, fitted, 2.0, score, ts)
-    val proc = JobStatsOperator.process(workers, testSetSize, 30000L) _
-    val st = jstate(0L)
+    val step = JobStatsOperator.step(workers, 30000L) _
     // ongoing stats for two pipelines
-    val o1 = proc(0, Iterator(
+    val (o1, st, timer) = step(Iterator(
       part("stats", 1, 0, 100, 0.0, 1000L),
       part("stats", 2, 0, 50, 0.0, 2000L),
-      part("stats", 1, 1, 110, 0.0, 6000L)), st).toSeq
-    assert(o1.isEmpty && st.exists)
-    assert(st.getTimeoutTimestampMs.get() == 36000L)
+      part("stats", 1, 1, 110, 0.0, 6000L)), None, 0L)
+    assert(o1.isEmpty && st.nonEmpty)
+    assert(timer == Some(36000L))
     // quiescence timer fires -> terminate signal, state retained for partials
-    val fired = jstate(40000L, timedOut = true, prev = Some(st.get))
-    val o2 = proc(0, Iterator.empty, fired).toSeq
+    val (o2, fired) = JobStatsOperator.onTimer(st.get)
     assert(o2.length == 1 && o2.head.kind == "terminate_signal")
-    assert(fired.exists, "state cleared before the Terminate partials arrived")
+    assert(fired.nonEmpty, "state cleared before the Terminate partials arrived")
     // 3 of 4 partials: nothing emitted yet (the exactly-(w x p) barrier)
-    val st2 = jstate(41000L, prev = Some(fired.get))
-    val o3 = proc(0, Iterator(
+    val (o3, st2, _) = step(Iterator(
       part("Terminate", 1, 0, 5, 0.75, 41000L),
       part("Terminate", 2, 0, 3, 0.5, 41001L),
-      part("Terminate", 1, 1, 7, 0.25, 41002L)), st2).toSeq
+      part("Terminate", 1, 1, 7, 0.25, 41002L)), fired, 41000L)
     assert(o3.isEmpty, s"emitted before all partials: $o3")
     // the 4th partial completes the barrier: one final record per pipeline
-    val st3 = jstate(42000L, prev = Some(st2.get))
-    val o4 = proc(0, Iterator(part("Terminate", 2, 1, 4, 1.0, 42000L)), st3).toSeq
+    val (o4, st3, _) = step(Iterator(part("Terminate", 2, 1, 4, 1.0, 42000L)),
+      st2, 42000L)
     assert(o4.length == 2, o4.toString)
     assert(o4.map(_.kind).toSet == Set("job_statistics_final"))
-    assert(!st3.exists)
+    assert(st3.isEmpty)
     val p1 = o4.find(_.pipelineId == 1).get
     val p2 = o4.find(_.pipelineId == 2).get
     // score = sum(partial score x testSetSize) / (workers x testSetSize)
@@ -435,6 +424,50 @@ class StreamingSuite extends AnyFunSuite {
     assert(p1.info.contains("fitted=222"), p1.info) // 100+110 ongoing + 5+7
     assert(p2.info.contains("fitted=57"), p2.info) // 50 ongoing + 3+4
     assert(p1.info.contains("partials=2") && p2.info.contains("partials=2"))
+  }
+
+  test("K5 and K6 release exactly once across a restart on RocksDB") {
+    import org.apache.spark.sql.{Dataset, Encoder}
+    import scala.jdk.CollectionConverters._
+    val spark = Streaming.stateSession(TestSession.spark)
+    import spark.implicits._
+    val dir = Streaming.scratchDir("graft_k5k6_")
+    /** Drain `sub` through `op` on its own checkpoint; this drain's rows. */
+    def drainOut[A: Encoder, B: Encoder](sub: String,
+        op: Dataset[A] => Dataset[B]): Seq[B] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[B]()
+      Streaming.drain(spark, s"$dir/$sub", implicitly[Encoder[A]].schema,
+        s"$dir/_ckpt_$sub", Streaming.Sink.Batches((b, _) =>
+          b.as[B].collect().foreach(got.add)))(src => op(src.as[A]).toDF())
+      got.asScala.toSeq
+    }
+    def merged() = drainOut[WorkerResponse, MergedResponse]("resp",
+      ResponseMerge.run(_, 4))
+    def finals() = drainOut[StatPartial, SpokeEvent]("stats",
+      JobStatsOperator.run(_, workers = 2, timeoutMs = 30000L))
+      .filter(_.kind == "job_statistics_final")
+    def wr(w: Int) = WorkerResponse(1, w, 9L, 100L + w, 10L, 0.1 * (w + 1), 0.5)
+    def part(tag: String, p: Int, w: Int, ts: Long) =
+      StatPartial(tag, p, w, 1L, 64L, 10L, 2.0, 0.5, ts)
+    val stats = for (p <- 1 to 2; w <- 0 to 1) yield part("stats", p, w, 1000L * (2 * p + w))
+    val term = for (p <- 1 to 2; w <- 0 to 1)
+      yield part("Terminate", p, w, 10000L + 10L * (2 * p + w))
+    // first drain: 3 of 4 worker responses; the stats and 3 of 4 Terminates
+    Streaming.stage(spark, s"$dir/resp", (0 until 3).map(wr).toDS())
+    Streaming.stage(spark, s"$dir/stats", stats.toDS(), term.take(3).toDS())
+    val (m1, f1) = (merged(), finals())
+    // second drain, same checkpoints: the last response and Terminate
+    Streaming.stage(spark, s"$dir/resp", Seq(wr(3)).toDS())
+    Streaming.stage(spark, s"$dir/stats", term.drop(3).toDS())
+    val (m2, f2) = (merged(), finals())
+    assert(m1.isEmpty && f1.isEmpty, s"released before the last part: $m1 / $f1")
+    assert(m2.map(m => (m.pipe, m.requestId, m.parts, m.fitted, m.testn)) ==
+      Seq((1, 9L, 4, 406L, 40L)), m2.toString)
+    assert(math.abs(m2.head.avgLoss - 0.25) < 1e-12, m2.toString)
+    assert(f2.map(_.pipelineId).sorted == Seq(1, 2), f2.toString)
+    // makespan = 5000 - 2000; fitted = 2 ongoing + 2 Terminate x 10
+    f2.foreach(f => assert(f.info.startsWith("makespan=3000,") &&
+      f.info.contains("fitted=40,") && f.info.endsWith("partials=2"), f.info))
   }
 
   test("two pipelines in one envelope stream keep isolated models") {
