@@ -20,7 +20,7 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh_").toString)
+        graft.streaming.Streaming.scratchDir("graft_wh_"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

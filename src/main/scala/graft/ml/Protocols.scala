@@ -257,6 +257,8 @@ object Protocols {
     * replicas that stay home send a 1-row marker instead of O(params) —
     * as <=maxMsgParams-double [[ParamBlock]]s, which are collected,
     * reassembled in partition order and folded by [[Protocol.aggregate]].
+    * The round's broadcast of `global` is destroyed when the round ends; a
+    * caller destroys its own broadcasts once `round` returns.
     */
   def round(replicas: RDD[ModelState], global: Option[ModelState],
       protocol: Protocol, learner: OnlineLearner, maxMsgParams: Int,
@@ -280,7 +282,7 @@ object Protocols {
         totalReplicas =
           collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)))
     }
-    (protocol, global) match {
+    try (protocol, global) match {
       case (fgm: FGM, Some(g)) =>
         val repl = replicas.persist(StorageLevel.MEMORY_AND_DISK)
         try {
@@ -292,7 +294,7 @@ object Protocols {
           else ship(repl)
         } finally repl.unpersist(blocking = false)
       case _ => ship(replicas)
-    }
+    } finally bcGlobal.destroy()
   }
 
   /** Zero-advance round: a copy of the previous global with ZERO per-round

@@ -177,7 +177,7 @@ object Multimodal {
     // Modality here is a deterministic doc_id derivation so the oracle
     // reproduces the partition contents exactly.
     Op("mm06_modality_pruned", (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_mod_").toString
+      val dir = graft.streaming.Streaming.scratchDir("graft_mod_")
       T.documents(s, d)
         .select(col("doc_id"),
           encode(col("text"), "UTF-8").as("payload"),

@@ -176,7 +176,7 @@ object Similarity {
     // expression (no per-row UDF closure); quantizer shared with s03/s07/s09
     val centsLit = lit(fullCorpusQuantizer(s, d, nlist))
     // materialize the index bucketed by inverted list
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val idxDir = graft.streaming.Streaming.scratchDir("graft_ivf_")
     feats.withColumn("bucket",
         element_at(F.nearestCentroids(col("fd"), centsLit, EmbDim, 1), 1))
       .select("vec_id", "embedding", "bucket")
@@ -315,7 +315,7 @@ object Similarity {
       .select("vec_id", "embedding", "bucket")
     // fresh scratch dir per run: base build, then the ingest APPEND —
     // partition-wise, no rebuild of existing lists
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivfa_").toString
+    val idxDir = graft.streaming.Streaming.scratchDir("graft_ivfa_")
     listed(base).write.partitionBy("bucket").mode("overwrite").parquet(idxDir)
     listed(newb).write.partitionBy("bucket").mode("append").parquet(idxDir)
     val index = s.read.parquet(idxDir)

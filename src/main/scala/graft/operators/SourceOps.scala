@@ -19,7 +19,7 @@ object SourceOps {
     Op(
       "w03_json_source",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_json_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_json_")
         T.documents(s, d).write.mode("overwrite").json(dir)
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
@@ -42,7 +42,7 @@ object SourceOps {
     Op(
       "w05_orc_source",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_orc_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_orc_")
         T.documents(s, d).write.mode("overwrite").orc(dir)
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
@@ -67,7 +67,7 @@ object SourceOps {
     Op(
       "w06_corrupt_records",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bad_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_bad_")
         T.documents(s, d).select(
           when(col("doc_id") % 10 === 3,
             concat(lit("{broken "), col("doc_id").cast(StringType)))
@@ -102,7 +102,7 @@ object SourceOps {
     Op(
       "w07_xml_source",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_xml_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_xml_")
         T.documents(s, d).write.mode("overwrite")
           .option("rowTag", "doc").format("xml").save(dir)
         val schema = StructType(Seq(
@@ -123,7 +123,7 @@ object SourceOps {
     Op(
       "w04_csv_source",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_csv_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_csv_")
         T.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
             col("o_totalprice"),
@@ -161,7 +161,7 @@ object SourceOps {
     Op(
       "w08_schema_evolution",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_evo_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_evo_")
         T.documents(s, d).filter(col("doc_id") % 2 === 0)
           .select("doc_id", "n_chars")
           .write.mode("overwrite").parquet(dir)
@@ -242,7 +242,7 @@ object SourceOps {
     Op(
       "w10_binaryfile_source",
       (s, d) => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bin_").toString
+        val dir = graft.streaming.Streaming.scratchDir("graft_bin_")
         T.documents(s, d).filter(col("doc_id") < 40)
           .select("doc_id", "text").collect()
           .foreach { r =>

@@ -181,7 +181,7 @@ object Trainer {
         }
         // plain averages over many partitions fold in the tree; every other
         // round is the protocol round the streaming trainer shares
-        val mergedOpt: Option[ModelState] =
+        val mergedOpt: Option[ModelState] = try {
           if (!useTreeMerge)
             Protocols.round(replRdd, global, protocol, learner,
               spec.maxMsgParams, stats)
@@ -201,6 +201,7 @@ object Trainer {
                 spec.maxMsgParams).max(1L)
             Some(m)
           }
+        } finally bcSeeds.destroy()
         mergedOpt.foreach { merged =>
           totalFitted += merged.n
           totalCumLoss += merged.cumLoss
@@ -218,7 +219,10 @@ object Trainer {
       val (testLoss, score) = evaluate(sc, tdata, learner, model, testCap)
       new FittedPipeline(spec, chain, model, learner, protocol.name, stats,
         curve.toSeq, testLoss, score)
-    } finally tdata.unpersist(blocking = false)
+    } finally {
+      tdata.unpersist(blocking = false)
+      bcChain.destroy()
+    }
   }
 
   /** Replay the deterministic split and score the model on the held-out
@@ -228,11 +232,12 @@ object Trainer {
       tdata: RDD[(Array[Double], Double)], learner: OnlineLearner,
       model: ModelState, testCap: Int): (Double, Double) = {
     val bcModel = sc.broadcast(model)
-    val sums = tdata.mapPartitions { it =>
+    val sums = try tdata.mapPartitions { it =>
       val ring = new HeldOutRing[(Array[Double], Double)](testCap)
       it.foreach(ring.offer)
       Iterator.single(HeldOut.sums(learner, bcModel.value, ring.points.iterator))
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
+    finally bcModel.destroy()
     HeldOut.result(learner, sums)
   }
 }

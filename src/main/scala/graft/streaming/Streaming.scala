@@ -65,12 +65,13 @@ object Streaming {
   private val stageCache =
     scala.collection.concurrent.TrieMap[(String, Int), (String, StructType, Long)]()
 
-  /** Base for streaming scratch dirs (staged fixtures + checkpoints):
-    * RAM-backed tmpfs when available, else java.io.tmpdir. This only dodges
-    * shared-disk fsync latency on the local bench — the checkpoint protocol
-    * (offset/commit WAL, state-store deltas, recovery) runs unchanged, and
-    * the restart tests prove recovery against the same layout. A cluster
-    * deployment points checkpoints at HDFS/S3 instead.
+  /** Base for scratch dirs (staged fixtures, checkpoints, operator
+    * output): RAM-backed tmpfs when available, else java.io.tmpdir. This
+    * only dodges shared-disk fsync latency on the local bench — the
+    * checkpoint protocol (offset/commit WAL, state-store deltas, recovery)
+    * runs unchanged, and the restart tests prove recovery against the
+    * same layout. A cluster deployment points checkpoints at HDFS/S3
+    * instead.
     */
   private val scratchBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
@@ -87,8 +88,9 @@ object Streaming {
     * leftover dirs hold RAM until the host reboots. */
   private lazy val scratchHook: Unit = sys.addShutdownHook(cleanScratch())
 
-  /** Create a streaming scratch directory under [[scratchBase]], deleted
-    * at JVM exit. */
+  /** Create a scratch directory under [[scratchBase]], deleted at JVM
+    * exit. Operators and suites make their temp dirs here, so that none
+    * outlives the JVM. */
   def scratchDir(prefix: String): String = {
     scratchHook
     val dir = Files.createTempDirectory(scratchBase, prefix).toString
@@ -120,9 +122,12 @@ object Streaming {
   /** Memoized scratch staging: `build` runs once per (key, sfDir) and the
     * staged directory is shared by every later call — fixture staging is
     * scaffolding, not operator cost, and re-writing the same parquet layout
-    * per bench pass would bill the query for it. Callers MUST use per-run
-    * unique checkpoint paths inside a memoized dir (a fixed name would
-    * resume the first run's committed offsets and emit nothing).
+    * per bench pass would bill the query for it. A query over a memoized
+    * dir needs a per-run checkpoint (a fixed one would resume the first
+    * run's committed offsets and emit nothing). Put it in a [[scratchDir]]
+    * of its own and clean that when the query ends, as
+    * [[StreamingTrainer.fitStream]] does: a per-run path inside the shared
+    * dir stays there until the JVM exits.
     */
   def stagedDir(key: String, sfDir: String)(build: String => Unit): String =
     stagedDirCache.getOrElseUpdate((key, sfDir), {

@@ -2,10 +2,12 @@ package graft.streaming
 
 import graft.ml._
 import graft.pipeline.PipelineSpec
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 /** Continuous training over a stream: every micro-batch trains
   * partition-local replicas seeded from the current global model, and the
@@ -38,9 +40,16 @@ object StreamingTrainer {
     * (FlinkLearning.scala:70-87, random_partitioner replaced by an explicit
     * key): the schema becomes (pid: long, seq: long, features, target), row
     * (pid, seq) lands on training partition pid % partitionsPerBatch and
-    * partitions train in ascending seq order. Replayable trajectories
-    * (ml31's cross-engine FGM gate) need this; the default mode's
-    * round-robin repartition does not guarantee either assignment or order.
+    * partitions train in ascending (pid, seq) order: two pids share a
+    * partition whenever pid >= partitionsPerBatch, and each keeps its rows
+    * in seq order. Replayable trajectories (ml31's cross-engine FGM gate)
+    * need this; the default mode's round-robin repartition does not
+    * guarantee either assignment or order. The routed batch crosses the
+    * shuffle as columnar [[Block]]s, at most one per (source task,
+    * training partition), see [[routedRows]].
+    *
+    * The query's checkpoint is a scratch dir of its own, deleted when the
+    * fit ends: it is unique per fit and never resumed.
     */
   def fitStream(spark: SparkSession, dir: String, schema: StructType,
       spec: PipelineSpec, partitionsPerBatch: Int = 0,
@@ -62,26 +71,11 @@ object StreamingTrainer {
     var totalCumLoss = 0.0
     val curve = ArrayBuffer[BatchPoint]()
 
-    // unique checkpoint per fit: the staged dir may be memoized across runs,
-    // and resuming a committed checkpoint would replay zero batches
-    val ckpt = java.util.UUID.randomUUID().toString.replace("-", "")
     val trainBatch: (DataFrame, Long) => Unit = { (df, batchId) =>
       val rdd =
-        if (routed) {
-          val parts = math.max(1, partitionsPerBatch)
-          val byPid = new org.apache.spark.Partitioner {
-            def numPartitions: Int = parts
-            def getPartition(key: Any): Int =
-              (key.asInstanceOf[(Long, Long)]._1 % parts.toLong).toInt
-          }
-          df.rdd
-            .map(r => ((r.getLong(0), r.getLong(1)),
-              (r.getSeq[Double](2).toArray, r.getDouble(3))))
-            .repartitionAndSortWithinPartitions(byPid)
-            .map(_._2)
-        } else {
-          val rdd0 =
-            df.rdd.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
+        if (routed) routedRows(df, math.max(1, partitionsPerBatch))
+        else {
+          val rdd0 = df.queryExecution.toRdd.map(point(_, 0))
           if (partitionsPerBatch > 0) rdd0.repartition(partitionsPerBatch)
           else rdd0
         }
@@ -115,8 +109,10 @@ object StreamingTrainer {
         if (any) { learner.finish(model); Iterator.single(model) }
         else Iterator.empty
       }
-      val mergedOpt = Protocols.round(replRdd, global, protocol, learner,
-        spec.maxMsgParams, stats)
+      val mergedOpt =
+        try Protocols.round(replRdd, global, protocol, learner,
+          spec.maxMsgParams, stats)
+        finally bcGlobal.destroy()
       mergedOpt.foreach { merged =>
         totalFitted += merged.n
         totalCumLoss += merged.cumLoss
@@ -131,9 +127,102 @@ object StreamingTrainer {
           stats.modelsShipped, stats.bytesShipped, theta)
       }
     }
-    Streaming.drain(spark, dir, schema, s"$dir/_ckpt_train_$ckpt",
+    val ckpt = Streaming.scratchDir("graft_ckpt_train_")
+    try Streaming.drain(spark, dir, schema, ckpt,
       Streaming.Sink.Batches(trainBatch))(identity)
+    finally Streaming.cleanScratch(Seq(ckpt))
     StreamFit(global.getOrElse(learner.init(1)), learner, protocolName,
       stats, curve.toSeq)
+  }
+
+  /** The one row reader of both modes: (features, target) at columns `at`
+    * and `at + 1` of a batch's `InternalRow`. */
+  private def point(row: InternalRow, at: Int): (Array[Double], Double) =
+    (row.getArray(at).toDoubleArray(), row.getDouble(at + 1))
+
+  /** One source task's rows of one training partition, in columns: row i
+    * is (pid(i), seq(i)) with features x(off(i) until off(i + 1)) and
+    * target y(i), sorted by (pid, seq). `src` is the source task. */
+  private[graft] final class Block(val src: Int, val pid: Array[Long],
+      val seq: Array[Long], val off: Array[Int], val x: Array[Double],
+      val y: Array[Double]) extends Serializable {
+    def size: Int = pid.length
+    def features(i: Int): Array[Double] =
+      java.util.Arrays.copyOfRange(x, off(i), off(i + 1))
+    /** Row i of this block orders before row j of `b` by (pid, seq). */
+    def before(i: Int, b: Block, j: Int): Boolean =
+      pid(i) < b.pid(j) || (pid(i) == b.pid(j) && seq(i) < b.seq(j))
+  }
+
+  /** Appends rows to one [[Block]]; sorts it only if the rows arrived out
+    * of (pid, seq) order. */
+  private final class BlockPacker {
+    private val pid = new ArrayBuilder.ofLong
+    private val seq = new ArrayBuilder.ofLong
+    private val off = new ArrayBuilder.ofInt
+    private val x = new ArrayBuilder.ofDouble
+    private val y = new ArrayBuilder.ofDouble
+    private var n = 0
+    private var len = 0
+    off += 0
+
+    def isEmpty: Boolean = n == 0
+
+    def add(p: Long, s: Long, xs: Array[Double], t: Double): Unit = {
+      pid += p; seq += s; x.addAll(xs); y += t
+      len += xs.length; off += len; n += 1
+    }
+
+    def result(src: Int): Block = {
+      val b = block(src)
+      if ((1 until n).forall(i => !b.before(i, b, i - 1))) b
+      else {
+        val sorted = new BlockPacker
+        (0 until n).sortBy(i => (b.pid(i), b.seq(i)))
+          .foreach(i => sorted.add(b.pid(i), b.seq(i), b.features(i), b.y(i)))
+        sorted.block(src)
+      }
+    }
+
+    private def block(src: Int): Block = new Block(src, pid.result(),
+      seq.result(), off.result(), x.result(), y.result())
+  }
+
+  /** The routed mode's data path: each source task packs its rows into one
+    * [[Block]] per training partition (pid % parts), a plain partitionBy
+    * moves at most (source tasks x parts) blocks, and each training
+    * partition merges its blocks lazily by (pid, seq), ties going to the
+    * lower source task. Reads columns (pid, seq, features, target) and
+    * yields the (features, target) rows of each training partition. */
+  private[graft] def routedRows(df: DataFrame, parts: Int) =
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (src, rows) =>
+      val blocks = Array.fill(parts)(new BlockPacker)
+      rows.foreach { row =>
+        val pid = row.getLong(0)
+        val (x, y) = point(row, 2)
+        blocks((pid % parts).toInt).add(pid, row.getLong(1), x, y)
+      }
+      blocks.iterator.zipWithIndex.collect {
+        case (b, tp) if !b.isEmpty => (tp, b.result(src))
+      }
+    }.partitionBy(new HashPartitioner(parts))
+      .mapPartitions(blocks => merge(blocks.map(_._2).toArray))
+
+  /** Lazy k-way merge of sorted blocks by (pid, seq). */
+  private def merge(unordered: Array[Block]): Iterator[(Array[Double], Double)] = {
+    val bs = unordered.sortBy(_.src)
+    val pos = new Array[Int](bs.length)
+    Iterator.fill(bs.map(_.size).sum) {
+      var best = -1
+      var k = 0
+      while (k < bs.length) {
+        if (pos(k) < bs(k).size &&
+          (best < 0 || bs(k).before(pos(k), bs(best), pos(best)))) best = k
+        k += 1
+      }
+      val i = pos(best)
+      pos(best) = i + 1
+      (bs(best).features(i), bs(best).y(i))
+    }
   }
 }

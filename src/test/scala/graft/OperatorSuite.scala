@@ -229,7 +229,8 @@ class OperatorSuite extends AnyFunSuite {
     // "Aa" and "BB" are the classic String.hashCode collision pair: the old
     // d.hashCode cache key would have silently reused one dir's bucketed
     // tables for the other
-    val parent = java.nio.file.Files.createTempDirectory("graft_tagtest_")
+    val parent =
+      java.nio.file.Paths.get(graft.streaming.Streaming.scratchDir("graft_tagtest_"))
     def mk(name: String): String = {
       val dir = parent.resolve(name)
       java.nio.file.Files.createDirectories(dir)

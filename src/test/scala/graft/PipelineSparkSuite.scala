@@ -10,7 +10,7 @@ object TestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+      graft.streaming.Streaming.scratchDir("graft_wh_"))
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -107,7 +107,7 @@ class PipelineSparkSuite extends AnyFunSuite {
   test("prediction sink round-trips through to_json and the wire parser") {
     import spark.implicits._
     val preds = Seq(Prediction(1, 10L, 1.5), Prediction(1, 11L, -0.5)).toDF()
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_").toString
+    val dir = graft.streaming.Streaming.scratchDir("graft_sink_")
     Sinks.writeJson(preds, dir)
     val back = spark.read.json(Sinks.readJson(spark, dir).select("value").as[String])
     assert(back.count() == 2)

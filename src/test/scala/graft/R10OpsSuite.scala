@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Semantic regression guards for the round-10 additions: the streaming
   * trainer's two-phase FGM path (frozen micro-batches must move scalars,
   * never parameter blocks), the deterministic pid-routed mode behind ml31,
@@ -20,7 +22,7 @@ class R10OpsSuite extends AnyFunSuite {
     StructField("target", DoubleType)))
 
   private def stagePlain(nFiles: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("r10_train_").toString
+    val dir = graft.streaming.Streaming.scratchDir("r10_train_")
     T.embeddings(spark, sf).select(
         col("vec_id"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
@@ -56,7 +58,7 @@ class R10OpsSuite extends AnyFunSuite {
   test("routed mode: (pid, seq) assignment is deterministic — two runs " +
     "over the same staged batches merge to bit-identical models") {
     val dir =
-      java.nio.file.Files.createTempDirectory("r10_routed_").toString + "/b"
+      graft.streaming.Streaming.scratchDir("r10_routed_") + "/b"
     T.embeddings(spark, sf).filter(col("vec_id") < 200).select(
         (col("vec_id") % 2).as("pid"), col("vec_id").as("seq"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
@@ -76,6 +78,45 @@ class R10OpsSuite extends AnyFunSuite {
     assert(a.model.n == 200L && a.model.n == b.model.n)
     assert(a.protocolName == "Synchronous",
       "2 routed partitions must not resolve to CentralizedTraining")
+  }
+
+  test("routed data path: each training partition folds its rows in " +
+    "(pid, seq) order across source tasks, shared pids and ragged rows") {
+    import spark.implicits._
+    val parts = 4
+    // pids 4-6 share training partitions 0-2 with pids 0-2; partition 3
+    // gets no rows; seq is shuffled, so every source task sees it out of
+    // order; row lengths run 1-4
+    val rows = new scala.util.Random(7).shuffle((0 until 60).toList).map { s =>
+      val pid = Seq(0L, 1L, 2L, 4L, 5L, 6L)(s % 6)
+      (pid, s.toLong, Array.tabulate(1 + s % 4)(j => s * 10.0 + j), s + pid / 10.0)
+    }
+    val df = spark.sparkContext.parallelize(rows, 3)
+      .toDF("pid", "seq", "features", "target")
+    val got = StreamingTrainer.routedRows(df, parts)
+      .mapPartitionsWithIndex((tp, it) => it.map { case (x, y) => (tp, x.toSeq, y) })
+      .collect().toSeq
+    val want = rows.sortBy { case (pid, seq, _, _) => (pid, seq) }
+      .map { case (pid, _, x, y) => ((pid % parts).toInt, x.toSeq, y) }
+    (0 until parts).foreach { tp =>
+      assert(got.filter(_._1 == tp) == want.filter(_._1 == tp),
+        s"training partition $tp folds the wrong rows or order")
+    }
+    assert(got.count(_._1 == 3) == 0)
+
+    // a routed fit checkpoints outside its input dir
+    val dir = graft.streaming.Streaming.scratchDir("r10_ckpt_")
+    graft.streaming.Streaming.stage(spark, dir,
+      rows.map { case (pid, seq, _, y) => (pid, seq, Array(seq.toDouble, 1.0), y) }
+        .toDF("pid", "seq", "features", "target"))
+    val fit = StreamingTrainer.fitStream(spark, dir, df.schema,
+      PipelineSpec(103, "PA", Map("C" -> 1.0), Nil, "Synchronous"),
+      partitionsPerBatch = parts, routed = true)
+    assert(fit.model.n == rows.size.toLong)
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try assert(!left.iterator().asScala.exists(
+      _.getFileName.toString.startsWith("_ckpt_train_")))
+    finally left.close()
   }
 
   test("ml31 invariant at any fixture: FGM advances all-or-nothing per " +

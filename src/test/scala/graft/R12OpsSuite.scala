@@ -124,7 +124,7 @@ class R12OpsSuite extends AnyFunSuite {
 
   test("fitStream fails loudly when MiniBatchKMeans trains multi-partition " +
     "with no shared seed, and trains fine once seeded (ADVICE r11 medium)") {
-    val dir = java.nio.file.Files.createTempDirectory("r12_mbk_").toString
+    val dir = graft.streaming.Streaming.scratchDir("r12_mbk_")
     T.embeddings(spark, "/root/testdata/sf0.001").select(
         col("vec_id"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")

@@ -22,7 +22,7 @@ class R13OpsSuite extends AnyFunSuite {
     * batch's shingles to the sh ledger, then append bands + pair delta.
     */
   private def ingest(batches: Seq[DataFrame]): String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_r13_pairs_").toString
+    val out = graft.streaming.Streaming.scratchDir("graft_r13_pairs_")
     batches.foreach { b =>
       val shb = Dedup.shingleRows(b).persist()
       shb.write.mode("append").parquet(s"$out/sh")

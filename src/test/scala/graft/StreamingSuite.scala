@@ -501,7 +501,7 @@ class StreamingSuite extends AnyFunSuite {
     val s2 = Streaming.stateSession(TestSession.spark)
     s2.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_twsevo_").toString
+    val dir = graft.streaming.Streaming.scratchDir("graft_twsevo_")
     def stage(lo: Int, hi: Int): Unit =
       (lo until hi).map(i => EvoRec(i % 4, i.toLong)).toDS()
         .coalesce(1).write.mode("append").parquet(s"$dir/data")
