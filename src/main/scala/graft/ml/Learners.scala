@@ -181,8 +181,7 @@ trait OnlineLearner extends Serializable {
   /** true when pairwise `merge(Seq(a, b))` folds are equivalent to one flat
     * `merge(replicas)` (weight-carrying averages are; ORR's information form
     * is NOT — its merge must see the replica count to de-duplicate the
-    * shared prior). Enables the log-depth treeReduce merge path in
-    * [[graft.pipeline.Trainer]]. */
+    * shared prior). Enables the log-depth tree merge of [[RoundDriver]]. */
   def mergeIsAssociative: Boolean = true
   /** true when `predict` emits a class label (score = accuracy), false for
     * regression (score = -RMSE) / clustering (score = -distortion). */
@@ -249,14 +248,16 @@ object HeldOut {
 }
 
 /** The 2-of-10 held-out split (FlinkSpoke.handleData:92-107), shared by the
-  * spoke and the batch Trainer. Of every ten labelled points, cycle
+  * spoke and both trainers. Of every ten labelled points, cycle
   * positions 8-9 enter a FIFO ring of at most `cap` points and the rest
   * train; once the ring is full, each new held-out point evicts the oldest
-  * one back into training. `points` is the ring in slot order, `pos` the
-  * next slot to evict and `cycle` the position of the next point (0-9).
+  * one back into training. A ring of cap 0 holds nothing out: every point
+  * trains. `points` is the ring in slot order, `pos` the next slot to
+  * evict and `cycle` the position of the next point (0-9).
   */
 final class HeldOutRing[P](cap: Int, init: Seq[P] = Nil,
     var pos: Int = 0, var cycle: Int = 0) {
+  require(cap >= 0, s"held-out ring cap must be >= 0, got $cap")
   val points: scala.collection.mutable.ArrayBuffer[P] =
     scala.collection.mutable.ArrayBuffer.from(init)
 
@@ -264,7 +265,7 @@ final class HeldOutRing[P](cap: Int, init: Seq[P] = Nil,
   def offer(p: P): Option[P] = {
     val heldOut = cycle >= 8
     cycle = (cycle + 1) % 10
-    if (!heldOut) Some(p)
+    if (!heldOut || cap == 0) Some(p)
     else if (points.length < cap) { points += p; None }
     else {
       val evicted = points(pos)
@@ -712,10 +713,10 @@ final class MiniBatchKMeans(k0: Int) extends OnlineKMeans(k0) {
 }
 
 object MiniBatchKMeans {
-  /** The parallel-fit contract both trainers enforce: with no shared seed,
-    * round-1 replicas farthest-first-seed independently and the
-    * count-weighted merge averages MISALIGNED cluster ids — silently wrong
-    * centroids. Fail loudly instead; [[sharedSeed]] builds the seed. */
+  /** The parallel-fit contract every [[RoundDriver]] round enforces: with
+    * no shared seed, round-1 replicas farthest-first-seed independently and
+    * the count-weighted merge averages MISALIGNED cluster ids — silently
+    * wrong centroids. Fail loudly instead; [[sharedSeed]] builds the seed. */
   def requireSharedSeed(learner: OnlineLearner, partitions: Int,
       seeded: Boolean): Unit =
     require(!(learner.isInstanceOf[MiniBatchKMeans] && partitions > 1 &&

@@ -1,8 +1,11 @@
 package graft.ml
 
+import graft.pipeline.PipelineSpec
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Distributed-training protocols, mirroring the reference's catalog
   * (MLNodeGenerator.scala:26-64): CentralizedTraining, SingleLearner,
@@ -64,10 +67,10 @@ sealed trait Protocol extends Serializable {
 
 case object Synchronous extends Protocol { def name = "Synchronous" }
 
-/** Free-running workers: the Trainer seeds partition pid from a global pid
-  * rounds behind the frontier (the UNBOUNDED-staleness limit of the SSP
-  * stale-read window) and the merge admits every update — the reference's
-  * asynchronous interleave (MLNodeGenerator.scala:26-64), expressed at
+/** Free-running workers: the [[RoundDriver]] seeds partition pid from a
+  * global pid rounds behind the frontier (the UNBOUNDED-staleness limit of
+  * the SSP stale-read window) and the merge admits every update — the
+  * reference's asynchronous interleave (MLNodeGenerator.scala:26-64), expressed at
   * round granularity. Equivalent by construction to SSP(Int.MaxValue);
   * the PipelineSparkSuite parity test pins the equivalence bit-for-bit.
   */
@@ -75,9 +78,9 @@ case object Asynchronous extends Protocol { def name = "Asynchronous" }
 
 /** Stale-synchronous parallel with a REAL staleness bound s (reference
   * MLNodeGenerator.scala:26-64): workers may compute on a global model up
-  * to s rounds behind the freshest view (the Trainer seeds partition pid
-  * from the global of round r-1-(pid mod (s+1)) — deterministic
-  * heterogeneity inside the bound), and the merge ADMITS ONLY replicas
+  * to s rounds behind the freshest view (the [[RoundDriver]] seeds
+  * partition pid from the global of round r-1-(pid mod (s+1)) —
+  * deterministic heterogeneity inside the bound), and the merge ADMITS ONLY replicas
   * within s rounds of the round frontier — an over-stale straggler's
   * update is skip-merged exactly like a non-drifted GM replica, because
   * the reference's SSP would have blocked that worker before it produced
@@ -245,10 +248,11 @@ object Protocols {
   val names: Set[String] = Set("CentralizedTraining", "SingleLearner",
     "Asynchronous", "Synchronous", "SSP", "EASGD", "GM", "FGM")
 
-  /** One protocol round: the hub's ship/merge step, shared by the batch
-    * Trainer and the streaming trainer. `replicas` holds this round's
-    * trained replicas (at most one per partition), `global` the previous
-    * global; returns the next global, or None when no replica trained.
+  /** One protocol round: the hub's ship/merge step of every
+    * [[RoundDriver]] round that does not fold in a tree. `replicas` holds
+    * this round's trained replicas (at most one per partition), `global`
+    * the previous global; returns the next global, or None when no replica
+    * trained.
     *
     * FGM with a global first runs its scalar phase: one drift norm per
     * worker leaves the executors, and [[FGM.decide]] either freezes the
@@ -299,7 +303,7 @@ object Protocols {
 
   /** Zero-advance round: a copy of the previous global with ZERO per-round
     * counters. Returning prev itself would feed its RUNNING totals back
-    * into the trainers' `totalFitted += merged.n` accumulation,
+    * into [[RoundDriver]]'s `totalFitted += merged.n` accumulation,
     * double-counting fitted points on every consecutive zero-advance round
     * (the reference's hub only counts statistics that actually arrive). */
   def frozen(prev: ModelState): ModelState = {
@@ -341,23 +345,164 @@ object Protocols {
 
   /** Reference protocol-resolution rules: HT / K-means force SingleLearner
     * (FlinkSpoke.scala:203-211); parallelism 1 forces CentralizedTraining
-    * (FlinkSpoke.scala:214).
-    */
-  def resolve(requested: String, learnerName: String, parallelism: Int,
-      hp: Map[String, Double] = Map.empty): Protocol = {
-    create(resolveName(requested, learnerName, parallelism), hp)
-  }
-
-  /** Name-level resolution (the rules above without instantiation): lets a
-    * caller that caches protocol INSTANCES across rounds (the streaming
-    * trainer — FGM's quantum must survive between micro-batches) key the
-    * cache by the resolved protocol rather than by partition count, which
-    * would fork quantum state if batch partitioning varies (r9 advisor
-    * note). */
+    * (FlinkSpoke.scala:214). A name, not an instance: [[RoundDriver]]
+    * caches one instance per resolved name, so that FGM's quantum survives
+    * between rounds. */
   def resolveName(requested: String, learnerName: String,
       parallelism: Int): String = {
     if (learnerName == "HT" || learnerName == "K-means") "SingleLearner"
     else if (parallelism <= 1) "CentralizedTraining"
     else requested
+  }
+}
+
+/** The hub's driver side for one run of rounds, shared by both trainers:
+  * the batch [[graft.pipeline.Trainer]] runs every round over the same
+  * persisted data, [[graft.streaming.StreamingTrainer]] one round per
+  * micro-batch. It holds the global with its running totals, the
+  * [[ProtocolStats]] ledger, one protocol instance per resolved name and
+  * the stale-read window.
+  *
+  * The instance cache is keyed by resolved NAME, not partition count: the
+  * resolution rules still apply per [[resolve]] (a 1-partition batch
+  * forces CentralizedTraining), but a stateful protocol (FGM's quantum)
+  * keeps its subround state across rounds, and varying batch partitioning
+  * cannot fork it.
+  *
+  * The stale-read window holds recent(k) = the global after round r-1-k,
+  * newest first, and partition pid reads lag pid mod (s+1): SSP's bounded
+  * stale reads (see [[SSP]]), with [[Asynchronous]] as the s = MaxValue
+  * limit and every other protocol at s = 0. It costs min(s, W-1)+1 models
+  * of driver memory — the price of simulating stale reads on a round
+  * engine; production s is small.
+  */
+final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
+  val learner: OnlineLearner = Learners.create(spec.learner, spec.learnerHp)
+  val stats = ProtocolStats()
+  private var protocols = Map.empty[String, Protocol]
+  private var current: Option[Protocol] = None
+  private val recent = mutable.ArrayDeque[Option[ModelState]](init)
+  private var roundsRun = 0L
+  private var totalFitted = 0L
+  private var totalCumLoss = 0.0
+
+  /** The global after the last round: counters are the running totals. */
+  def global: Option[ModelState] = recent.head
+
+  /** The protocol the last [[resolve]] picked. */
+  def protocol: Option[Protocol] = current
+
+  def protocolName: String = current.fold(spec.protocol)(_.name)
+
+  /** Resolve the protocol on `data`'s partition count (before any
+    * coalesce, so a requested SingleLearner keeps its name) and coalesce
+    * `data` to the protocol's maxParallelism. The next [[round]]s run this
+    * protocol. */
+  def resolve[T](data: RDD[T]): RDD[T] = {
+    val name = Protocols.resolveName(spec.protocol, learner.name,
+      data.getNumPartitions)
+    val p = protocols.getOrElse(name, Protocols.create(name, spec.protocolHp))
+    protocols += name -> p
+    current = Some(p)
+    p.maxParallelism match {
+      case Some(m) if data.getNumPartitions > m => data.coalesce(m)
+      case _ => data
+    }
+  }
+
+  /** One round over `data`, already [[resolve]]d. Partition pid trains a
+    * replica seeded from the window at its lag, or init'd from its first
+    * row when that global is None, on the rows its `HeldOutRing(testCap)`
+    * lets through; an empty partition trains none. The replicas fold
+    * through [[Protocols.round]], or [[treeMerge]] for a plain average over
+    * more than `treeMergeThreshold` partitions. Returns the next global,
+    * counters set to the running totals, or None when no partition had a
+    * row. */
+  def round(data: RDD[(Array[Double], Double)],
+      testCap: Int): Option[ModelState] = {
+    val protocol = current.get
+    val numParts = data.getNumPartitions
+    MiniBatchKMeans.requireSharedSeed(learner, numParts, global.isDefined)
+    val s = protocol match {
+      case SSP(bound) => bound
+      case Asynchronous => Int.MaxValue
+      case _ => 0
+    }
+    val l = learner
+    val fresh = roundsRun // round of the freshest global in the window
+    val bcSeeds = data.sparkContext.broadcast(recent.toIndexedSeq)
+    val replicas = data.mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      val seeds = bcSeeds.value
+      // pid < numParts, so s >= numParts-1 (incl. MaxValue) means the
+      // modulus never bites — skip it to dodge s+1 overflow
+      val lag = math.min(if (s >= numParts - 1) pid else pid % (s + 1),
+        seeds.length - 1)
+      var m = seeds(lag).map(_.deepCopy).orNull
+      if (m != null) { m.n = 0L; m.cumLoss = 0.0 } // totals live on the driver
+      val ring = new HeldOutRing[(Array[Double], Double)](testCap)
+      var rows = 0L
+      it.foreach { p =>
+        if (m == null) m = l.init(p._1.length) // dims from the data
+        ring.offer(p).foreach { case (x, y) => l.fit(m, x, y) }
+        rows += 1
+      }
+      if (rows == 0) Iterator.empty
+      else {
+        m.seedRound = fresh - lag
+        l.finish(m)
+        Iterator.single(m)
+      }
+    }
+    // SSP qualifies for the tree: its merge is the same average, and no
+    // replica can exceed the staleness bound (seeding clamps lag to s), so
+    // the admit-all fold coincides with SSP.aggregate
+    val tree =
+      Set("Synchronous", "Asynchronous", "SSP").contains(protocol.name) &&
+        learner.mergeIsAssociative && numParts > spec.treeMergeThreshold
+    val merged =
+      try {
+        if (tree) treeMerge(replicas)
+        else Protocols.round(replicas, global, protocol, learner,
+          spec.maxMsgParams, stats)
+      } finally bcSeeds.destroy()
+    merged.foreach { m =>
+      totalFitted += m.n
+      totalCumLoss += m.cumLoss
+      m.n = totalFitted
+      m.cumLoss = totalCumLoss
+    }
+    // the window advances on a no-merge round too, so that recent(k) stays
+    // "the global after round r-k"
+    recent.prepend(merged.orElse(global))
+    val window = math.min(s.toLong, numParts - 1L) + 1
+    while (recent.length > window) recent.removeLast()
+    roundsRun += 1
+    merged
+  }
+
+  /** The log-depth merge of a plain average: pairwise merges in a
+    * `treeAggregate`, so the driver never holds W replicas at once
+    * (SCALE.md). Charges the ledger as [[Protocols.round]] would: one
+    * model and its bytes per replica, which enters the tree once as
+    * ceil(payload / maxMsgParams) transport blocks. */
+  private def treeMerge(replicas: RDD[ModelState]): Option[ModelState] = {
+    type Part = Option[(ModelState, Long, Long)]
+    val l = learner
+    val add: (Part, Part) => Part = {
+      case (Some((ma, ka, ba)), Some((mb, kb, bb))) =>
+        Some((l.merge(Seq(ma, mb)), ka + kb, ba + bb))
+      case (a, b) => a.orElse(b)
+    }
+    replicas.map(r => Option((r, 1L, r.params.length.toLong * 8L)))
+      .treeAggregate(Option.empty[(ModelState, Long, Long)])(add, add)
+      .map { case (m, k, bytes) =>
+        stats.modelsShipped += k
+        stats.bytesShipped += bytes
+        stats.blocks += k *
+          ((m.wireParams.length.toLong + spec.maxMsgParams - 1) /
+            spec.maxMsgParams).max(1L)
+        m
+      }
   }
 }

@@ -891,7 +891,7 @@ object MLOps {
     // Trainer's collect->reassemble->merge path (ModelWire chunking
     // included) must reproduce every double or the hash fails. Raw
     // unrounded weights; n/cumLoss accumulate across rounds exactly as
-    // Trainer.fit's totalFitted/totalCumLoss do.
+    // RoundDriver's totalFitted/totalCumLoss do.
     Op("ml26_sync_protocol_parity", (s, d) =>
       twoWorkerProtocolFit(s, d, 26, "Synchronous", Map.empty, rounds = 2),
       Some(syncProtocolOracle)),
@@ -2261,7 +2261,7 @@ object MLOps {
     * aggregate for every ship pattern — both ship → count-weighted replica
     * average; one ships → merge(base=[running global] ++ [replica]) with
     * weights (g.nv, replica.i); none ship → global advances by zero with
-    * zeroed per-round counters. Totals accumulate exactly as Trainer.fit's
+    * zeroed per-round counters. Totals accumulate exactly as RoundDriver's
     * totalFitted/totalCumLoss do (a partial ship folds the running totals
     * back in — merged.n = g.nv + replica.i).
     */

@@ -9,12 +9,13 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
-/** Continuous training over a stream: every micro-batch trains
-  * partition-local replicas seeded from the current global model, and the
-  * protocol folds them into the next global — the reference's continuous
-  * parameter-server exchange (SURVEY §3.2) realized at micro-batch
-  * granularity via foreachBatch, with no Kafka feedback loop (design (b) of
-  * SURVEY §3.4). The prequential cumulative loss per batch is the learning
+/** Continuous training over a stream: every micro-batch is one round of a
+  * [[RoundDriver]], as in the batch Trainer — partition-local replicas
+  * seed from the current global model and the protocol folds them into
+  * the next global: the reference's continuous parameter-server exchange
+  * (SURVEY §3.2) realized at micro-batch granularity via foreachBatch,
+  * with no Kafka feedback loop (design (b) of SURVEY §3.4). No point is
+  * held out. The prequential cumulative loss per batch is the learning
   * curve the reference's statistics pipeline tracks (FlinkHub.scala:96-156).
   */
 object StreamingTrainer {
@@ -55,20 +56,7 @@ object StreamingTrainer {
       spec: PipelineSpec, partitionsPerBatch: Int = 0,
       routed: Boolean = false,
       init: Option[ModelState] = None): StreamFit = {
-    val learner = Learners.create(spec.learner, spec.learnerHp)
-    var global: Option[ModelState] = init
-    var protocolName = spec.protocol
-    // One protocol instance per RESOLVED PROTOCOL, reused across
-    // micro-batches: the resolution rules still apply per batch (a 1-
-    // partition batch forces CentralizedTraining), but a stateful protocol
-    // (FGM's quantum) keeps its subround state across rounds — keyed by
-    // resolved name, NOT partition count, so varying batch partitioning
-    // can't fork the quantum (r9 advisor note). Stateless protocols are
-    // unaffected — a cached instance behaves identically.
-    var protoCache: Map[String, Protocol] = Map.empty
-    val stats = ProtocolStats()
-    var totalFitted = 0L
-    var totalCumLoss = 0.0
+    val rounds = new RoundDriver(spec, init)
     val curve = ArrayBuffer[BatchPoint]()
 
     val trainBatch: (DataFrame, Long) => Unit = { (df, batchId) =>
@@ -79,60 +67,21 @@ object StreamingTrainer {
           if (partitionsPerBatch > 0) rdd0.repartition(partitionsPerBatch)
           else rdd0
         }
-      val np = rdd.getNumPartitions
-      val resolvedName = Protocols.resolveName(spec.protocol, spec.learner, np)
-      val protocol = protoCache.getOrElse(resolvedName, {
-        val p = Protocols.create(resolvedName, spec.protocolHp)
-        protoCache += resolvedName -> p
-        p
-      })
-      protocolName = protocol.name
-      val data = protocol.maxParallelism match {
-        case Some(p) if rdd.getNumPartitions > p => rdd.coalesce(p)
-        case _ => rdd
-      }
-      MiniBatchKMeans.requireSharedSeed(learner, data.getNumPartitions,
-        global.isDefined)
-      val bcGlobal = spark.sparkContext.broadcast(global)
-      // Per-partition replica training (seeded from the broadcast global,
-      // per-round counters zeroed); Protocols.round, the step the batch
-      // Trainer runs too, ships and folds the replicas.
-      val replRdd = data.mapPartitions { it =>
-        var model: ModelState = bcGlobal.value.map(_.deepCopy).orNull
-        if (model != null) { model.n = 0L; model.cumLoss = 0.0 }
-        var any = false
-        it.foreach { case (x, y) =>
-          if (model == null) model = learner.init(x.length) // dim from data
-          any = true
-          learner.fit(model, x, y)
-        }
-        if (any) { learner.finish(model); Iterator.single(model) }
-        else Iterator.empty
-      }
-      val mergedOpt =
-        try Protocols.round(replRdd, global, protocol, learner,
-          spec.maxMsgParams, stats)
-        finally bcGlobal.destroy()
-      mergedOpt.foreach { merged =>
-        totalFitted += merged.n
-        totalCumLoss += merged.cumLoss
-        merged.n = totalFitted
-        merged.cumLoss = totalCumLoss
-        global = Some(merged)
-        val theta = protocol match {
-          case f: FGM => f.theta
+      rounds.round(rounds.resolve(rdd), testCap = 0).foreach { merged =>
+        val theta = rounds.protocol match {
+          case Some(f: FGM) => f.theta
           case _ => Double.NaN
         }
-        curve += BatchPoint(batchId, totalFitted, totalCumLoss,
-          stats.modelsShipped, stats.bytesShipped, theta)
+        curve += BatchPoint(batchId, merged.n, merged.cumLoss,
+          rounds.stats.modelsShipped, rounds.stats.bytesShipped, theta)
       }
     }
     val ckpt = Streaming.scratchDir("graft_ckpt_train_")
     try Streaming.drain(spark, dir, schema, ckpt,
       Streaming.Sink.Batches(trainBatch))(identity)
     finally Streaming.cleanScratch(Seq(ckpt))
-    StreamFit(global.getOrElse(learner.init(1)), learner, protocolName,
-      stats, curve.toSeq)
+    StreamFit(rounds.global.getOrElse(rounds.learner.init(1)), rounds.learner,
+      rounds.protocolName, rounds.stats, curve.toSeq)
   }
 
   /** The one row reader of both modes: (features, target) at columns `at`

@@ -144,10 +144,10 @@ class MlSuite extends AnyFunSuite {
   }
 
   test("protocol resolution mirrors the reference's forcing rules") {
-    assert(Protocols.resolve("Asynchronous", "HT", 8).name == "SingleLearner")
-    assert(Protocols.resolve("FGM", "K-means", 8).name == "SingleLearner")
-    assert(Protocols.resolve("Asynchronous", "PA", 1).name == "CentralizedTraining")
-    assert(Protocols.resolve("EASGD", "PA", 8).name == "EASGD")
+    assert(Protocols.resolveName("Asynchronous", "HT", 8) == "SingleLearner")
+    assert(Protocols.resolveName("FGM", "K-means", 8) == "SingleLearner")
+    assert(Protocols.resolveName("Asynchronous", "PA", 1) == "CentralizedTraining")
+    assert(Protocols.resolveName("EASGD", "PA", 8) == "EASGD")
   }
 
   test("drift-gated protocol skips shipping when drift is under threshold") {
@@ -239,6 +239,11 @@ class MlSuite extends AnyFunSuite {
     val resumed = new HeldOutRing[Int](2, first.points.toSeq, first.pos, first.cycle)
     assert(head ++ (19 until 25).flatMap(resumed.offer) == trained)
     assert(resumed.points == ring.points && resumed.pos == ring.pos)
+    // cap 0 holds nothing out: every point trains, in order
+    val open = new HeldOutRing[Int](0)
+    assert((0 until 25).flatMap(open.offer) == (0 until 25))
+    assert(open.points.isEmpty)
+    intercept[IllegalArgumentException](new HeldOutRing[Int](-1))
   }
 
   test("preprocessor transforms") {

@@ -3,6 +3,7 @@ package graft
 import graft.core._
 import graft.ml._
 import graft.pipeline._
+import graft.streaming.{Streaming, StreamingTrainer}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -163,6 +164,8 @@ class PipelineSparkSuite extends AnyFunSuite {
         s"param drift: $x vs $y")
     }
     assert(math.abs(treeFit.score - collectFit.score) < 1e-6)
+    // the tree charges the ledger as the collect round does
+    assert(treeFit.stats == collectFit.stats)
   }
 
   test("map-side drift gate: non-drifted replicas never reach the driver merge") {
@@ -356,11 +359,88 @@ class PipelineSparkSuite extends AnyFunSuite {
   }
 
   test("training tolerates empty partitions and tiny data") {
-    val data = spark.sparkContext.parallelize(synthetic(5, 3, 137L), 16)
-    val fitted = Trainer.fit(spark,
-      PipelineSpec(4, "PA", Map("C" -> 0.05), Nil, "Synchronous", rounds = 2), data)
+    import spark.implicits._
+    val rows = synthetic(5, 3, 137L)
+    val data = spark.sparkContext.parallelize(rows, 16)
+    val spec =
+      PipelineSpec(4, "PA", Map("C" -> 0.05), Nil, "Synchronous", rounds = 2)
+    val fitted = Trainer.fit(spark, spec, data)
     assert(fitted.model.n > 0)
     assert(fitted.responses(1L).nonEmpty)
+    // the same rows as one micro-batch, spread over 16 partitions
+    val dir = Streaming.scratchDir("tiny_train_")
+    val df = rows.toDF("features", "target")
+    Streaming.stage(spark, dir, df)
+    val streamed = StreamingTrainer.fitStream(spark, dir, df.schema, spec,
+      partitionsPerBatch = 16)
+    assert(streamed.model.n == rows.size.toLong)
+    assert(streamed.protocolName == "Synchronous")
+    // no row at all: nothing to train on
+    intercept[IllegalArgumentException](Trainer.fit(spark, spec,
+      spark.sparkContext.parallelize(Seq.empty[(Array[Double], Double)], 4)))
+  }
+
+  /** 2000 rows in 4 unequal partitions (200, 400, 600, 800 rows), so that
+    * FGM's drifts differ across workers. */
+  private def unequalParts() = {
+    val rows = synthetic(2000, 5, 211L)
+    val cuts = Seq(0, 200, 600, 1200, 2000)
+    spark.sparkContext.parallelize(
+      (0 until 4).map(p => rows.slice(cuts(p), cuts(p + 1))), 4).flatMap(identity)
+  }
+
+  test("one round driver: Trainer.fit and routed fitStream over the same " +
+    "partitions train bit-identical models under every stale-read mode and FGM") {
+    import spark.implicits._
+    val parts = 4
+    val data = unequalParts()
+    // pid = slice index and seq = row index: routed training partition pid
+    // folds exactly the rows of the Trainer's partition pid, in order
+    val df = data.mapPartitionsWithIndex { (pid, it) =>
+      it.zipWithIndex.map { case ((x, y), i) => (pid.toLong, i.toLong, x, y) }
+    }.toDF("pid", "seq", "features", "target")
+    val dir = Streaming.scratchDir("round_parity_")
+    Streaming.stage(spark, dir, df, df, df) // one micro-batch per round
+    val fgmT = 0.5
+    val none = Map.empty[String, Double]
+    val mismatches = for ((proto, hp) <- Seq("Synchronous" -> none,
+        "SSP" -> Map("staleness" -> 1.0), "Asynchronous" -> none,
+        "FGM" -> Map("threshold" -> fgmT))) yield {
+      val spec = PipelineSpec(45, "PA", Map("C" -> 0.01), Nil, proto,
+        protocolHp = hp, rounds = 3, testCap = 0)
+      val batch = Trainer.fit(spark, spec, data)
+      val stream = StreamingTrainer.fitStream(spark, dir, df.schema, spec,
+        partitionsPerBatch = parts, routed = true)
+      val (b, st) = (batch.model, stream.model)
+      Seq(
+        "protocol" -> (stream.protocolName == proto && batch.protocolName == proto),
+        "params" -> st.params.sameElements(b.params),
+        "ledger" -> (stream.stats == batch.stats),
+        "totals" -> (st.n == b.n && st.cumLoss == b.cumLoss),
+        // every round that ships all replicas fits each row once
+        "fitted" -> (b.n == 2000L * batch.stats.modelsShipped / parts),
+        // FGM's round 2 is a false alarm: frozen, quantum rebalanced
+        "false alarm" -> (proto != "FGM" ||
+          stream.curve.sortBy(_.batch).map(_.theta)(1) != fgmT / 2)
+      ).collect { case (what, false) => s"$proto: $what" }
+    }
+    assert(mismatches.flatten.isEmpty, mismatches.flatten.mkString("; "))
+  }
+
+  test("RoundDriver carries FGM's quantum from a false alarm into the next round") {
+    val data = unequalParts()
+    val driver = new RoundDriver(PipelineSpec(46, "PA", Map("C" -> 0.01), Nil,
+      "FGM", protocolHp = Map("threshold" -> 0.5)), None)
+    def round(d: org.apache.spark.rdd.RDD[(Array[Double], Double)]) =
+      driver.round(driver.resolve(d), testCap = 0)
+    round(data) // bootstrap
+    round(data) // false alarm: counters and a poll, quantum rebalanced
+    assert(driver.stats.scalars == 8L)
+    assert(driver.protocol.get.asInstanceOf[FGM].theta < 0.25)
+    // five rows per worker drift less than the reset quantum T/2 = 0.25,
+    // but not less than the rebalanced one: the counters trigger a poll
+    round(data.mapPartitions(_.take(5)))
+    assert(driver.stats.scalars == 16L, driver.stats)
   }
 
   test("bucketed tables join co-located: no shuffle on the join keys") {
