@@ -89,6 +89,7 @@ case object Asynchronous extends Protocol { def name = "Asynchronous" }
   * (any staleness admitted).
   */
 final case class SSP(s: Int) extends Protocol {
+  require(s >= 0, s"SSP staleness must be >= 0, got $s")
   def name = "SSP"
   override def aggregate(replicas: Seq[ModelState], prev: Option[ModelState],
       learner: OnlineLearner, stats: ProtocolStats,

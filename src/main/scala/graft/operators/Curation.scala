@@ -609,8 +609,8 @@ object Curation {
         val schema = docs.schema
         val dir = Streaming.stagedDir("livecur", d)(Streaming.stage(s, _,
           docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
-        val out = Streaming.scratchDir("graft_livecur_")
-        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+        val out = Streaming.output("graft_livecur_")
+        Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
           val b = batch.persist()
           // ONE tokenize pass per trigger (r12 optimization, guide
           // §1.2 "don't compute things you throw away"): dl(doc) ==
@@ -630,19 +630,18 @@ object Curation {
             .filter(col("term") =!= "")
             .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
             .persist()
-          tfb.write.mode("append").parquet(s"$out/tf")
-          b.select("doc_id")
+          w.write("tf", tfb)
+          w.write("dl", b.select("doc_id")
             .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
               Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-            .write.mode("append").parquet(s"$out/dl")
+            .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl")))
           val shb = Dedup.shingleRows(b).persist()
-          shb.write.mode("append").parquet(s"$out/sh")
+          w.write("sh", shb)
           // incremental banded candidate-pair ledger (r13): band THIS
-          // batch's docs and append the pair delta, so the serve no
+          // batch's docs and write the pair delta, so the serve no
           // longer re-bands and band-self-joins the accumulated corpus
           // (Dedup.pairLedgerAppend — equivalence argument there)
-          Dedup.pairLedgerAppend(shb, out)
+          Dedup.pairLedgerAppend(shb, w)
           shb.unpersist()
           tfb.unpersist()
           b.unpersist()
@@ -661,10 +660,10 @@ object Curation {
         // pairLedgerServe equivalence argument, pinned in R13OpsSuite
         val losers = Dedup.d03Report(Dedup.pairLedgerServe(s, out))
           .select(col("doc_b").as("doc_id")).distinct().cache()
-        val tf = s.read.parquet(s"$out/tf")
+        val tf = out.read(s, "tf")
           .groupBy("doc_id", "term").agg(sum("tf").as("tf"))
           .join(losers, Seq("doc_id"), "left_anti").cache()
-        val dlT = s.read.parquet(s"$out/dl")
+        val dlT = out.read(s, "dl")
           .groupBy("doc_id").agg(sum("dl").as("dl"))
           .join(losers, Seq("doc_id"), "left_anti").cache()
         TextAnalysis.bm25Rank(s, tf, dlT)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Op, T}
 import graft.functions.F
+import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -356,10 +357,11 @@ object Dedup {
     * guide §1.2/§6/§8, the st22/st46 maintained-artifact pattern).
     *
     * Ingest ([[pairLedgerAppend]], once per trigger, AFTER the batch's
-    * shingle rows were appended to `out/sh`): appends (a) the batch docs'
+    * shingle rows were written to output `sh`): writes (a) the batch docs'
     * 16-perm minhash bands over their FULL (uncapped) shingle sets to
-    * `out/bands`, and (b) the pair delta — bands of THIS batch band-joined
-    * against the whole bands ledger — to `out/pairs` as (doc_a, doc_b).
+    * `bands`, and (b) the pair delta — bands of THIS batch band-joined
+    * against its own and every earlier batch's bands — to `pairs` as
+    * (doc_a, doc_b).
     * Per-trigger cost is O(arrival shingles) for the banding aggregate plus
     * one narrow-row join against the bands ledger; the heavy shingle
     * strings never move.
@@ -401,45 +403,33 @@ object Dedup {
     * including a synthetic corpus whose hot shingle crosses the cap only
     * once the triggers are unioned.
     */
-  private[graft] def pairLedgerAppend(shb: DataFrame, out: String): Unit = {
-    val ss = shb.sparkSession
+  private[graft] def pairLedgerAppend(shb: DataFrame, w: Streaming.Writer): Unit = {
     val nb = minhashBands(shb).persist()
     try {
-      nb.write.mode("append").parquet(s"$out/bands")
-      val all = ss.read.parquet(s"$out/bands")
-      nb.as("x")
+      w.write("bands", nb)
+      val all = nb.unionByName(w.out.read(shb.sparkSession, "bands",
+        below = w.id, schema = nb.schema))
+      w.write("pairs", nb.as("x")
         .join(all.as("y"),
           col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
             col("x.doc_id") =!= col("y.doc_id"))
         .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
           greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-        .distinct()
-        .write.mode("append").parquet(s"$out/pairs")
+        .distinct())
     } finally nb.unpersist()
-  }
-
-  /** Empty-safe ledger read: a corpus with no candidates never creates the
-    * pairs directory (and a corpus with no >=5-token doc never creates the
-    * bands directory) — fall back to an empty frame of the right schema.
-    */
-  private def ledgerOr(ss: SparkSession, path: String, ddl: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (p.getFileSystem(ss.sparkContext.hadoopConfiguration).exists(p))
-      ss.read.parquet(path)
-    else ss.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType.fromDDL(ddl))
   }
 
   /** Serve side of the incremental pair ledger — see [[pairLedgerAppend]]
     * for the construction and the equivalence argument. Returns the same
     * (doc_a, doc_b, inter, na, nb, jaccard) frame the batch pipeline
-    * produces over the compacted `out/sh` ledger.
+    * produces over the compacted `sh` ledger. `pairs` and `bands` are read
+    * with their schemas, so a ledger no batch wrote reads as empty.
     */
-  private[graft] def pairLedgerServe(ss: SparkSession, out: String): DataFrame = {
-    val shAll = ss.read.parquet(s"$out/sh")
+  private[graft] def pairLedgerServe(ss: SparkSession, out: Streaming.Output): DataFrame = {
+    val shAll = out.read(ss, "sh")
     val hot = shAll.groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") > ShingleDfCap).select("sh")
-    val stored = ledgerOr(ss, s"$out/pairs", "doc_a BIGINT, doc_b BIGINT")
+    val stored = out.read(ss, "pairs", schema = StructType.fromDDL("doc_a BIGINT, doc_b BIGINT"))
     // restrict the shingle ledger to the pair docs BEFORE the scoring
     // joins (sound: scorePairs only probes sa/sb/sz at pair docs), then
     // cache — scorePairs consumes it three times, same convention as the
@@ -463,8 +453,8 @@ object Dedup {
       val capped = shAll.join(hotP, Seq("sh"), "left_anti").cache()
       val affBands = minhashBands(
         capped.join(affected, Seq("doc_id"), "left_semi")).persist()
-      val keepBands = ledgerOr(ss, s"$out/bands",
-        "doc_id BIGINT, band INT, sig STRING")
+      val keepBands = out.read(ss, "bands",
+          schema = StructType.fromDDL("doc_id BIGINT, band INT, sig STRING"))
         .join(affected, Seq("doc_id"), "left_anti")
       val affCand = affBands.as("x")
         .join(keepBands.unionByName(affBands).as("y"),

@@ -168,20 +168,18 @@ object JobTopology {
   }
 
   /** Q1 — the Job: parse + route + validate + expand, spoke, tagged sinks.
-    * Returns after the stream drains; outputs land under `out`.
+    * Returns after the stream drains; outputs `predictions`, `responses`
+    * and `logs` land in `out`, and a later run into `out` resumes.
     */
-  private def runJob(s: SparkSession, wireDir: String, out: String): Unit =
+  private[graft] def runJob(s: SparkSession, wireDir: String, out: Streaming.Output): Unit =
     Streaming.drain(Streaming.stateSession(s), wireDir,
-      StructType(Seq(StructField("value", StringType))), s"$out/_ckpt_q1",
-      Streaming.Sink.Batches { (b, _) =>
+      StructType(Seq(StructField("value", StringType))),
+      Streaming.Sink.Writes(out) { (b, w) =>
         // K9 side-output fan-out to tagged sinks (O1-O4)
         val bb = b.persist()
-        bb.filter(col("kind") === "prediction")
-          .write.mode("append").parquet(s"$out/predictions")
-        bb.filter(col("kind") === "response")
-          .write.mode("append").parquet(s"$out/responses")
-        bb.filter(!col("kind").isin("prediction", "response"))
-          .write.mode("append").parquet(s"$out/logs")
+        w.write("predictions", bb.filter(col("kind") === "prediction"))
+        w.write("responses", bb.filter(col("kind") === "response"))
+        w.write("logs", bb.filter(!col("kind").isin("prediction", "response")))
         bb.unpersist()
       })(raw => TwsSpoke.run(route(raw)).toDF())
 
@@ -200,15 +198,15 @@ object JobTopology {
         regexp_extract(col("info"), "score=([^,]+)", 1).cast(DoubleType).as("score"))
 
   /** Worker responses as read back off the response sink. */
-  private def workerResponses(s: SparkSession, out: String): DataFrame =
-    respProjection(s.read.schema(spokeSchema).parquet(s"$out/responses"))
+  private def workerResponses(s: SparkSession, out: Streaming.Output): DataFrame =
+    respProjection(out.read(s, "responses", schema = spokeSchema))
 
   /** Q2 — the K5 barrier over the response sink, as a stream; returns the
     * merged responses once the sink is drained.
     */
-  private def runMerge(s: SparkSession, out: String, name: String): DataFrame =
-    Streaming.drain(Streaming.stateSession(s), s"$out/responses", spokeSchema,
-      s"$out/_ckpt_q2", Streaming.Sink.Memory(name))(src => ResponseMerge.run(
+  private def runMerge(s: SparkSession, out: Streaming.Output, name: String): DataFrame =
+    Streaming.drain(Streaming.stateSession(s), out.dir("responses"), spokeSchema,
+      Streaming.Sink.Memory(name))(src => ResponseMerge.run(
         respProjection(src).as[WorkerResponse](Encoders.product[WorkerResponse]),
         Workers).toDF())
 
@@ -218,7 +216,7 @@ object JobTopology {
     * fires terminate_signal BEFORE the Terminate partials arrive; the
     * workers×pipelines barrier then releases the finals.
     */
-  private def runStats(s: SparkSession, out: String, name: String): DataFrame = {
+  private def runStats(s: SparkSession, out: Streaming.Output, name: String): DataFrame = {
     import s.implicits._
     val resp = workerResponses(s, out)
     val statsP = resp.filter(col("requestId") === 9L)
@@ -239,11 +237,11 @@ object JobTopology {
         col("score"), (lit(20000000L) + col("worker")).as("eventTimeMs"))
     def sentinel(ts: Long) = Seq(
       StatPartial("__wm__", 0, -1, 0L, 0L, 0L, 0.0, 0.0, ts)).toDF()
-    val statsDir = s"$out/stat_partials"
+    val statsDir = out.dir("stat_partials")
     Streaming.stage(s, statsDir, statsP, sentinel(10000000L),
       sentinel(10000001L), termP)
     Streaming.drain(Streaming.stateSession(s), statsDir,
-      Encoders.product[StatPartial].schema, s"$out/_ckpt_q3",
+      Encoders.product[StatPartial].schema,
       Streaming.Sink.Memory(name))(src => JobStatsOperator.run(
         src.as[StatPartial], Workers, timeoutMs = 60000L, wmOnlyTag = "__wm__").toDF())
   }
@@ -251,7 +249,7 @@ object JobTopology {
   val ops: Seq[Op] = Seq(
     Op("p08_ml_job_topology", (s, d) => {
       val wireDir = stageWire(s, d)
-      val out = Streaming.scratchDir("mljob_out_")
+      val out = Streaming.output("mljob_out_")
       val n = T.embeddings(s, d).count()
       val nTrain = n - 50L
       runJob(s, wireDir, out)
@@ -263,7 +261,7 @@ object JobTopology {
         () => runStats(s, out, s"p08s_$runTag")))
 
       // ---- gate assembly: one pinned row per composed behavior ----
-      val catalogRows = s.read.schema(spokeSchema).parquet(s"$out/logs")
+      val catalogRows = out.read(s, "logs", schema = spokeSchema)
         .filter(col("kind") === "log")
         .withColumn("item",
           when(col("info").startsWith("create_rejected:invalid"),
@@ -275,7 +273,7 @@ object JobTopology {
           when(col("item") === "created:drained", col("sum_value") === 200.0)
             .otherwise(lit(true)).as("ok"))
 
-      val predRows = s.read.schema(spokeSchema).parquet(s"$out/predictions")
+      val predRows = out.read(s, "predictions", schema = spokeSchema)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct("id").as("n_ids"),
           min("id").as("min_id"), max("id").as("max_id"),

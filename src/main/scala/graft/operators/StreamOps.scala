@@ -115,18 +115,6 @@ object StreamOps {
   private def uniq(prefix: String): String =
     s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
-  /** Sorted numeric suffixes of the `prefix`-named entries of `root` (the
-    * batch-id-versioned state dirs), listed through the path's Hadoop
-    * FileSystem. */
-  private def versions(s: org.apache.spark.sql.SparkSession, root: String,
-      prefix: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toLong).sorted
-  }
-
 
   /** Stage the st04/st31 lifecycle envelopes (shared artifact): batch 1 is
     * 100 pre-Create training rows + the Create (exercising the pre-Create
@@ -227,7 +215,7 @@ object StreamOps {
     val name = uniq(prefix)
     Streaming.drain(Streaming.stateSession(s), dir,
       org.apache.spark.sql.Encoders.product[Envelope].schema,
-      s"$dir/_ckpt_$name", Sink.Memory(name))(src => TwsSpoke.run(
+      Sink.Memory(name))(src => TwsSpoke.run(
         src.as[Envelope](org.apache.spark.sql.Encoders.product[Envelope]),
         testMode).toDF())
   }
@@ -242,8 +230,7 @@ object StreamOps {
     Op("st01_tumbling_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st01")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -261,8 +248,7 @@ object StreamOps {
     Op("st02_sliding_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st02")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "6 hours", "3 hours").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -286,8 +272,7 @@ object StreamOps {
     Op("st03_session_window", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st03")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -474,7 +459,7 @@ object StreamOps {
           (unix_micros(col("p_ts")) - unix_micros(col("s_ts"))).as("delay_us"))
       // each join side reads its own file-per-trigger source
       val name = uniq("st08")
-      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name", Sink.Memory(name))(
+      Streaming.drain(s, dir, schema, Sink.Memory(name))(
         _ => joined).orderBy("user_id", "signup_event", "purchase_event")
     },
       Some("""SELECT s.user_id, s.event_id AS signup_event, p.event_id AS purchase_event,
@@ -513,8 +498,7 @@ object StreamOps {
             .select(ev.columns.map(col).toSeq: _*))
       }
       val name = uniq("st10")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
@@ -562,7 +546,7 @@ object StreamOps {
         .select(signups("user_id"), col("signup_event"), col("purchase_event"),
           (unix_micros(col("p_ts")) - unix_micros(col("s_ts"))).as("delay_us"))
       val name = uniq("st15")
-      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name", Sink.Memory(name))(
+      Streaming.drain(s, dir, schema, Sink.Memory(name))(
         _ => joined).filter(col("user_id") >= 0)
         .orderBy("user_id", "signup_event", "purchase_event")
     },
@@ -583,8 +567,7 @@ object StreamOps {
     Op("st14_dedup_within_watermark", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st14")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .select(col("user_id"), col("event_type"),
             date_trunc("DAY", col("ts")).as("day"), col("ts"))
@@ -604,8 +587,7 @@ object StreamOps {
     Op("st09_stream_distinct", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st09")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.select(col("user_id"), col("event_type")).dropDuplicates())
       res.filter(col("user_id") >= 0)
         .orderBy("user_id", "event_type")
@@ -623,8 +605,7 @@ object StreamOps {
       val cust = broadcast(T.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey")))
       val name = uniq("st11")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.join(cust, col("user_id") === col("c_custkey"))
           .select(col("event_id"), col("user_id"), col("c_mktsegment"),
             col("c_nationkey"), col("value")))
@@ -641,8 +622,7 @@ object StreamOps {
     Op("st12_complete_agg", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st12")
-      Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name, "complete"))(
+      Streaming.drain(s, dir, schema, Sink.Memory(name, "complete"))(
         _.filter(col("event_type") =!= "sentinel")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value")))
@@ -657,11 +637,11 @@ object StreamOps {
     // honors the log, and the aggregate hash-matches the fixture oracle.
     Op("st13_file_sink", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      val out = Streaming.scratchDir("graft_sink_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Files(s"$out/data"))(
+      val out = Streaming.output("graft_sink_")
+      Streaming.drain(s, dir, schema, Sink.Files(out))(
         _.filter(col("event_type") =!= "sentinel")
           .select(col("event_id"), col("event_type"), col("value")))
-      s.read.parquet(s"$out/data")
+      s.read.parquet(out.data)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"),
           min("event_id").as("min_event"), max("event_id").as("max_event"))
@@ -811,7 +791,7 @@ object StreamOps {
       val name = uniq("st18")
       Streaming.drain(Streaming.stateSession(s), dir,
         implicitly[org.apache.spark.sql.Encoder[StatPartial]].schema,
-        s"$dir/_ckpt_$name", Sink.Memory(name))(src =>
+        Sink.Memory(name))(src =>
         JobStatsOperator.run(src.as[StatPartial], workers = 2,
           timeoutMs = 600000L).toDF())
         .filter(col("kind") === "job_statistics_final")
@@ -866,8 +846,7 @@ object StreamOps {
       val dir = Streaming.stagedDir("lmscore", d)(Streaming.stage(s, _,
         held.filter(col("doc_id") % 20 < 10), held.filter(col("doc_id") % 20 >= 10)))
       val name = uniq("st32")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         TextAnalysis.lmBigrams(src)
           .transform(TextAnalysis.lmScore(c12, c1, voc)))
       TextAnalysis.lmBucket(res.groupBy("doc_id", "lang")
@@ -894,28 +873,26 @@ object StreamOps {
       val schema = docsDf.schema
       val dir = Streaming.stagedDir("datacard", d)(Streaming.stage(s, _,
         docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
-      val out = Streaming.scratchDir("graft_card_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+      val out = Streaming.output("graft_card_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
         val m = batch.select(col("source"), col("lang"), col("doc_id"),
           col("n_chars"),
           size(split(col("text"), " ")).cast(LongType).as("n_tok"),
           md5(col("text")).as("h"))
-        m.groupBy("source", "lang")
+        w.write("card", m.groupBy("source", "lang")
           .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
             sum("n_chars").cast(LongType).as("n_chars"),
             sum(when(col("n_tok") < 20L, 1L).otherwise(0L))
               .as("n_short"),
             sum(when(col("doc_id") % 10 >= 8, 1L).otherwise(0L))
-              .as("n_held"))
-          .write.mode("append").parquet(s"$out/card")
-        m.groupBy("h", "source", "lang").agg(count(lit(1)).as("c"))
-          .write.mode("append").parquet(s"$out/hashes")
+              .as("n_held")))
+        w.write("hashes", m.groupBy("h", "source", "lang").agg(count(lit(1)).as("c")))
       })(identity)
-      val card = s.read.parquet(s"$out/card").groupBy("source", "lang")
+      val card = out.read(s, "card").groupBy("source", "lang")
         .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
           sum("n_chars").as("n_chars"), sum("n_short").as("n_short"),
           sum("n_held").as("n_held"))
-      val hp = s.read.parquet(s"$out/hashes")
+      val hp = out.read(s, "hashes")
       val dupHashes = hp.groupBy("h").agg(sum("c").as("tot"))
         .filter(col("tot") >= 2).select("h")
       val dups = hp.join(dupHashes, Seq("h"))
@@ -948,13 +925,12 @@ object StreamOps {
       val schema = docsDf.schema
       val dir = Streaming.stagedDir("tempmix", d)(Streaming.stage(s, _,
         docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
-      val out = Streaming.scratchDir("graft_tmix_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
-        batch.groupBy("lang").agg(count(lit(1)).as("n"))
-          .write.mode("append").parquet(s"$out/counts")
+      val out = Streaming.output("graft_tmix_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("counts", batch.groupBy("lang").agg(count(lit(1)).as("n")))
       })(identity)
       TextAnalysis.temperatureMix(
-        s.read.parquet(s"$out/counts")
+        out.read(s, "counts")
           .groupBy("lang").agg(sum("n").as("n_docs")))
     }, Some(TextAnalysis.temperatureMixOracle)),
     // ------------------------------------------------------------------
@@ -978,29 +954,22 @@ object StreamOps {
       val schema = li.schema
       val dir = Streaming.stagedDir("edgemaint", d)(Streaming.stage(s, _,
         li.filter(col("pk") % 2 === 0), li.filter(col("pk") % 2 === 1)))
-      val out = Streaming.scratchDir("graft_edgeinc_")
-      val ledger = new org.apache.hadoop.fs.Path(s"$out/ledger")
-      val ledgerFs = ledger.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+      val out = Streaming.output("graft_edgeinc_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
         val b = batch.persist()
-        val intra = b.as("x").join(b.as("y"),
+        val prior = out.read(s, "ledger", below = w.id, schema = schema)
+        val pairs = b.as("x").join(b.as("y"),
             col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
           .select(col("x.pk").as("a"), col("y.pk").as("b"))
-        val pairs =
-          if (ledgerFs.exists(ledger)) {
-            val prior = s.read.parquet(s"$out/ledger")
-            intra.unionByName(b.as("x").join(prior.as("y"),
-                col("x.ok") === col("y.ok") &&
-                  col("x.pk") =!= col("y.pk"))
-              .select(least(col("x.pk"), col("y.pk")).as("a"),
-                greatest(col("x.pk"), col("y.pk")).as("b")))
-          } else intra
-        pairs.groupBy("a", "b").agg(count(lit(1)).as("w"))
-          .write.mode("append").parquet(s"$out/pairs")
-        b.write.mode("append").parquet(s"$out/ledger")
+          .unionByName(b.as("x").join(prior.as("y"),
+              col("x.ok") === col("y.ok") && col("x.pk") =!= col("y.pk"))
+            .select(least(col("x.pk"), col("y.pk")).as("a"),
+              greatest(col("x.pk"), col("y.pk")).as("b")))
+        w.write("pairs", pairs.groupBy("a", "b").agg(count(lit(1)).as("w")))
+        w.write("ledger", b)
         b.unpersist()
       })(identity)
-      s.read.parquet(s"$out/pairs")
+      out.read(s, "pairs")
         .groupBy("a", "b").agg(sum("w").as("w"))
         .orderBy(col("w").desc, col("a"), col("b"))
         .limit(50)
@@ -1016,14 +985,14 @@ object StreamOps {
     // compacted O(sources x vocab) aggregate, never the raw corpus.
     Op("st36_stream_kl_drift", (s, d) => {
       val (dir, schema) = stagedDocsTwoFiles(s, d)
-      val out = Streaming.scratchDir("graft_kl_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
-        batch.select(col("source"), explode(split(col("text"), " ")).as("w"))
-          .groupBy("source", "w").agg(count(lit(1)).as("n"))
-          .write.mode("append").parquet(s"$out/counts")
+      val out = Streaming.output("graft_kl_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("counts", batch.select(col("source"),
+            explode(split(col("text"), " ")).as("w"))
+          .groupBy("source", "w").agg(count(lit(1)).as("n")))
       })(identity)
       TextAnalysis.sourceKl(
-        s.read.parquet(s"$out/counts")
+        out.read(s, "counts")
           .groupBy("source", "w").agg(sum("n").as("c_sw")))
     }, Some(TextAnalysis.sourceKlOracle)),
     // ------------------------------------------------------------------
@@ -1036,15 +1005,14 @@ object StreamOps {
     // integer (floor(value*1000)) so partial-merge order cannot move a bit.
     Op("st19_foreachbatch_upsert", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      val out = Streaming.scratchDir("graft_upsert_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, id) =>
-        batch.groupBy("event_type")
+      val out = Streaming.output("graft_upsert_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("partials", batch.groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             sum(floor(col("value") * 1000).cast(LongType)).as("sum_milli"))
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(s"$out/partials")
+          .withColumn("batch_id", lit(w.id)))
       })(_.filter(col("event_type") =!= "sentinel"))
-      s.read.parquet(s"$out/partials")
+      out.read(s, "partials")
         .groupBy("event_type")
         .agg(sum("n").as("n"), sum("sum_milli").as("sum_milli"))
         .select(col("event_type"), col("n"), col("sum_milli"),
@@ -1072,8 +1040,7 @@ object StreamOps {
       val dir = Streaming.stagedDir("curation", d)(Streaming.stage(s, _,
         docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
       val name = uniq("st20")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.filter(col("lang") === "en")
           .withColumn("score_num", expr(
             "aggregate(split(text, ' '), CAST(0 AS BIGINT), (acc, t) -> " +
@@ -1165,8 +1132,8 @@ object StreamOps {
       q.repartition(2).write.mode("overwrite").parquet(dir)
       val schema = q.schema
       val name = uniq("st22")
-      val scoredAll = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(_.join(eb, Seq("bucket"))
+      val scoredAll = Streaming.drain(s, dir, schema, Sink.Memory(name))(
+        _.join(eb, Seq("bucket"))
           .filter(col("vec_id") =!= col("q_id"))
           .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
           .select("q_id", "vec_id", "bucket", "cos"))
@@ -1231,7 +1198,7 @@ object StreamOps {
       val name = uniq("st23")
       val candTable = Streaming.drain(s, dir,
         StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))),
-        s"$dir/_ckpt_$name", Sink.Memory(name)) { src =>
+        Sink.Memory(name)) { src =>
         val banded = src
           // r13: the distinct-shingle array in one codegen'd byte pass
           // (word_shingles5) instead of the split + interpreted
@@ -1326,24 +1293,19 @@ object StreamOps {
       val evA = ev.filter(col("event_id") % 3 =!= 0)
       val evB = ev.filter(col("event_id") % 3 === 0)
       val dir = Streaming.scratchDir("graft_incr_src_")
-      val out = Streaming.scratchDir("graft_incr_out_")
+      val out = Streaming.output("graft_incr_out_")
       val schema = ev.schema
       def runOnce(run: Int): Unit =
-        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, id) =>
-          // batchId-keyed path + overwrite = idempotent under foreachBatch's
-          // at-least-once contract: a replayed batch rewrites its own
-          // directory instead of double-appending partial rows (the same
-          // reason st25 keeps an idempotence ledger)
-          b.groupBy("event_type")
+        Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
+          w.write("partials", b.groupBy("event_type")
             .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
-            .withColumn("run", lit(run))
-            .write.mode("overwrite").parquet(s"$out/partials/batch=$id")
+            .withColumn("run", lit(run)))
         })(identity)
       Streaming.stage(s, dir, evA)
       runOnce(1)
       Streaming.stage(s, dir, evB)
       runOnce(2)
-      val partials = s.read.parquet(s"$out/partials")
+      val partials = out.read(s, "partials")
       val run2Rows = partials.filter(col("run") === 2)
         .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
       val deltaOnly = run2Rows == evB.count()
@@ -1388,7 +1350,7 @@ object StreamOps {
         "CREATE TABLE applied (batch_id BIGINT, part_id INT, " +
           "PRIMARY KEY (batch_id, part_id))")
       c0.close()
-      Streaming.drain(s, dir, schema, s"$dbDir/_ckpt", Sink.Batches { (b, batchId) =>
+      Streaming.drain(s, dir, schema, Sink.Batches { (b, batchId) =>
         b.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
           .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
@@ -1448,8 +1410,7 @@ object StreamOps {
     Op("st27_stream_hll", (s, d) => {
       val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
       val name = uniq("st27")
-      val res = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name))(src =>
+      val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
           .groupBy(window(col("ts"), "1 day").as("w"))
           .agg(count(lit(1)).as("n"),
@@ -1483,8 +1444,8 @@ object StreamOps {
     // a batch streams through the fold instead of OOMing a toSeq. The
     // prior per-key state (a 5-row table) is carried through a parquet
     // state store versioned by the GLOBAL batch id; the resume read picks
-    // the highest version below the current batch by LISTING state_*
-    // (never assuming which ids ran), and the final state bit-matches the
+    // the newest snapshot below the current batch (never assuming which
+    // ids ran), and the final state bit-matches the
     // BATCH CUSUM oracle: same decimal arithmetic, same alarm positions,
     // same max excursion. This is the deployment shape of ml16 at 100 TB:
     // per-key sequential folds shard across the cluster, sorted spill
@@ -1498,21 +1459,16 @@ object StreamOps {
       val midTs = ev.agg(((min("tsu") + max("tsu")) / 2).cast(LongType))
         .head().getLong(0)
       val dir = Streaming.scratchDir("graft_cusum_src_")
-      val out = Streaming.scratchDir("graft_cusum_out_")
+      val out = Streaming.output("graft_cusum_out_")
       val schema = ev.schema
-      // highest persisted version strictly below `batch` — robust to
-      // no-data batches and to extra staged files shifting batch ids
-      def stateBelow(batch: Long): Map[String, CusumState] =
-        versions(s, out, "state_").filter(_ < batch).lastOption match {
-          case None => Map.empty
-          case Some(ver) =>
-            s.read.parquet(s"$out/state_$ver").as[CusumState]
-              .collect().map(st => st.event_type -> st).toMap
-        }
+      val stateSchema = org.apache.spark.sql.Encoders.product[CusumState].schema
       def runOnce(): Unit =
-        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, batchId) =>
-          // prior state is O(keys) rows, shipped in the task closures
-          val prior = stateBelow(batchId)
+        Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
+          // prior state is O(keys) rows, shipped in the task closures: the
+          // newest snapshot below this batch, robust to no-data batches
+          val prior = out.read(s, "state", below = w.id, latest = true,
+              schema = stateSchema).as[CusumState]
+            .collect().map(st => st.event_type -> st).toMap
           val next = b.repartition(col("event_type"))
             .sortWithinPartitions("event_type", "tsu", "event_id")
             .as[(String, Long, Long, java.math.BigDecimal)]
@@ -1521,17 +1477,14 @@ object StreamOps {
             .collect() // O(keys): the detector state, never the data
           // keys absent from this batch carry forward unchanged
           val merged = (prior ++ next.map(st => st.event_type -> st)).values
-          b.sparkSession.createDataset(merged.toSeq)(
-            org.apache.spark.sql.Encoders.product[CusumState])
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$out/state_$batchId")
+          w.write("state", b.sparkSession.createDataset(merged.toSeq)(
+            org.apache.spark.sql.Encoders.product[CusumState]).coalesce(1).toDF())
         })(identity)
       Streaming.stage(s, dir, ev.filter(col("tsu") <= midTs))
       runOnce() // batch 0: first half, in event-time order
       Streaming.stage(s, dir, ev.filter(col("tsu") > midTs))
       runOnce() // batch 1: resumes from the checkpoint, only the delta
-      s.read.parquet(s"$out/state_${versions(s, out, "state_").last}").as[CusumState]
-        .collect().toSeq.sortBy(_.event_type)
+      out.read(s, "state", latest = true).as[CusumState].collect().toSeq.sortBy(_.event_type)
         .map(st => (st.event_type, st.nPts, st.nAlarms,
           if (st.firstAlarm >= 0) Some(st.firstAlarm) else None,
           BigDecimal(st.maxPh).toDouble))
@@ -1597,8 +1550,7 @@ object StreamOps {
       // the memory sink keeps every per-batch update row; the final state
       // per user is the one with the highest event count (n is strictly
       // increasing and a key is only re-emitted with new data)
-      val fin = Streaming.drain(s, dir, schema, s"$dir/_ckpt_$name",
-        Sink.Memory(name, "update")) { src =>
+      val fin = Streaming.drain(s, dir, schema, Sink.Memory(name, "update")) { src =>
         src.as[(Long, String, Long, Long)]
           .groupByKey(_._1)
           .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -1672,19 +1624,10 @@ object StreamOps {
           lit(1L).as("eff"))
       val schema = snap.schema
       val dir = Streaming.stagedDir("scd2", d)(Streaming.stage(s, _, snap, upd))
-      val root = Streaming.scratchDir("graft_scd2_")
-      Streaming.drain(s, dir, schema, s"$root/_ckpt", Sink.Batches { (batch, id) =>
-        val prevV = versions(s, root, "v=").filter(_ < id).lastOption
-        val prev = prevV match {
-          case Some(v) => s.read.parquet(s"$root/v=$v")
-          case None => s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(Seq(
-              StructField("k", LongType),
-              StructField("price_cents", LongType),
-              StructField("valid_from", LongType),
-              StructField("valid_to", LongType))))
-        }
+      val out = Streaming.output("graft_scd2_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        val prev = out.read(s, "dim", below = w.id, latest = true, schema =
+          StructType.fromDDL("k BIGINT, price_cents BIGINT, valid_from BIGINT, valid_to BIGINT"))
         val ch = batch.select(col("k"), col("price_cents"), col("eff"))
         // close the open version of every changed key; newer batches
         // only ever touch open rows, so closed history is immutable
@@ -1698,10 +1641,9 @@ object StreamOps {
         val opened = ch.select(col("k"), col("price_cents"),
           col("eff").as("valid_from"),
           lit(null).cast(LongType).as("valid_to"))
-        closedOrKept.unionByName(opened)
-          .write.mode("overwrite").parquet(s"$root/v=$id")
+        w.write("dim", closedOrKept.unionByName(opened))
       })(identity)
-      val dim = s.read.parquet(s"$root/v=${versions(s, root, "v=").last}")
+      val dim = out.read(s, "dim", latest = true)
       dim.groupBy("valid_from")
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_open"),
@@ -1766,9 +1708,9 @@ object StreamOps {
           col("o_orderkey"), col("o_totalprice"))
       }
       val orders = s.table(ordersTbl)
-      val out = Streaming.scratchDir("graft_pit_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, id) =>
-        AsOf.asofJoin(
+      val out = Streaming.output("graft_pit_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("p", AsOf.asofJoin(
             batch.select("event_id", "user_id", "ts", "event_type"),
             orders, "user_id", "o_custkey",
             col("ts"), col("o_orderdate"),
@@ -1779,10 +1721,9 @@ object StreamOps {
               .as("n_matched"),
             sum(coalesce(col("o_orderkey"), lit(0L))).as("sum_orderkey"),
             sum(coalesce(floor(col("o_totalprice") * 100).cast(LongType),
-              lit(0L))).as("sum_price_cents"))
-          .write.mode("overwrite").parquet(s"$out/p/batch=$id")
+              lit(0L))).as("sum_price_cents")))
       })(_.filter(col("event_type") =!= "sentinel"))
-      s.read.parquet(s"$out/p")
+      out.read(s, "p")
         .groupBy("event_type")
         .agg(sum("n").as("n"), sum("n_matched").as("n_matched"),
           sum("sum_orderkey").as("sum_orderkey"),
@@ -1822,15 +1763,14 @@ object StreamOps {
     // sort.
     Op("st37_stream_heavy_hitters", (s, d) => {
       val (dir, schema) = stagedDocsTwoFiles(s, d)
-      val out = Streaming.scratchDir("graft_hh_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
-        batch.select(explode(split(col("text"), " ")).as("term"))
+      val out = Streaming.output("graft_hh_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("counts", batch.select(explode(split(col("text"), " ")).as("term"))
           .filter(col("term") =!= "")
-          .groupBy("term").agg(count(lit(1)).as("n"))
-          .write.mode("append").parquet(s"$out/counts")
+          .groupBy("term").agg(count(lit(1)).as("n")))
       })(identity)
       val w = Window.orderBy(col("n").desc, col("term"))
-      s.read.parquet(s"$out/counts")
+      out.read(s, "counts")
         .groupBy("term").agg(sum("n").as("n"))
         .orderBy(col("n").desc, col("term")).limit(20)
         .withColumn("rk", row_number().over(w).cast(LongType))
@@ -1858,17 +1798,17 @@ object StreamOps {
     // scan-cost, and the partials log is O(types × triggers).
     Op("st38_stream_zscore", (s, d) => {
       val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
-      val out = Streaming.scratchDir("graft_zsc_")
+      val (moments, scores) = (Streaming.output("graft_zsc_m_"),
+        Streaming.output("graft_zsc_s_"))
       val v100: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         _.filter(col("event_type") =!= "sentinel")
           .withColumn("v100", (Num.dec2(col("value")) * 100).cast(LongType))
-      Streaming.drain(s, dir, schema, s"$out/_ckpt1", Sink.Batches { (batch, _) =>
-        batch.groupBy("event_type")
+      Streaming.drain(s, dir, schema, Sink.Writes(moments) { (batch, w) =>
+        w.write("moments", batch.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("v100").as("s1"),
-            sum(col("v100") * col("v100")).as("s2"))
-          .write.mode("append").parquet(s"$out/moments")
+            sum(col("v100") * col("v100")).as("s2")))
       })(v100)
-      val mm = s.read.parquet(s"$out/moments")
+      val mm = moments.read(s, "moments")
         .groupBy("event_type")
         .agg(sum("n").as("n"), sum("s1").as("s1"), sum("s2").as("s2"))
         .withColumn("mean",
@@ -1877,8 +1817,8 @@ object StreamOps {
           (col("s2").cast(DoubleType) / col("n") -
             col("mean") * col("mean")).cast(DoubleType))
         .select("event_type", "mean", "variance")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt2", Sink.Batches { (batch, _) =>
-        batch.join(broadcast(mm), "event_type")
+      Streaming.drain(s, dir, schema, Sink.Writes(scores) { (batch, w) =>
+        w.write("scores", batch.join(broadcast(mm), "event_type")
           .withColumn("z",
             (col("v100").cast(DoubleType) - col("mean")) /
               sqrt(col("variance")))
@@ -1886,10 +1826,9 @@ object StreamOps {
           .agg(count(lit(1)).as("n_events"),
             sum(when(abs(col("z")) > 3.0, 1L).otherwise(0L))
               .as("n_outliers"),
-            max(abs(col("z"))).as("max_abs_z"))
-          .write.mode("append").parquet(s"$out/scores")
+            max(abs(col("z"))).as("max_abs_z")))
       })(v100)
-      s.read.parquet(s"$out/scores")
+      scores.read(s, "scores")
         .groupBy("event_type")
         .agg(sum("n_events").as("n_events"),
           sum("n_outliers").as("n_outliers"),
@@ -1962,7 +1901,7 @@ object StreamOps {
       val name = uniq("st39")
       Streaming.drain(Streaming.stateSession(s), dir,
           implicitly[org.apache.spark.sql.Encoder[StatEvent]].schema,
-          s"$dir/_ckpt_$name", Sink.Memory(name))(
+          Sink.Memory(name))(
           src => TwsStatsOperator.run(src.as[StatEvent]).toDF())
         .filter(col("kind") === "job_statistics" && col("pipelineId") < 4)
         .select(col("pipelineId").as("pipeline_id"),
@@ -2050,8 +1989,8 @@ object StreamOps {
       val schema = docs.schema
       val dir = Streaming.stagedDir("bm25idx", d)(Streaming.stage(s, _,
         docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
-      val out = Streaming.scratchDir("graft_bm25idx_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
+      val out = Streaming.output("graft_bm25idx_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
         // ONE tokenize pass per trigger (r12 optimization, same change
         // as p07): dl(doc) == SUM(tf) — both exclude empty tokens — so
         // the doc-length partial derives from the tf partial instead of
@@ -2071,18 +2010,17 @@ object StreamOps {
           .filter(col("term") =!= "")
           .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
           .persist()
-        tfb.write.mode("append").parquet(s"$out/tf")
-        b.select("doc_id")
+        w.write("tf", tfb)
+        w.write("dl", b.select("doc_id")
           .join(tfb.groupBy("doc_id").agg(sum("tf").as("dl")),
             Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-          .write.mode("append").parquet(s"$out/dl")
+          .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl")))
         tfb.unpersist()
         b.unpersist()
       })(identity)
-      val tf = s.read.parquet(s"$out/tf")
+      val tf = out.read(s, "tf")
         .groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-      val dlT = s.read.parquet(s"$out/dl")
+      val dlT = out.read(s, "dl")
         .groupBy("doc_id").agg(sum("dl").as("dl"))
       TextAnalysis.bm25Rank(s, tf, dlT)
     }, Some(TextAnalysis.bm25Oracle)),
@@ -2111,12 +2049,11 @@ object StreamOps {
       val schema = docs.schema
       val dir = Streaming.stagedDir("lshdedup", d)(Streaming.stage(s, _,
         docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
-      val out = Streaming.scratchDir("graft_lshdedup_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
-        Dedup.shingleRows(batch)
-          .write.mode("append").parquet(s"$out/sh")
+      val out = Streaming.output("graft_lshdedup_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("sh", Dedup.shingleRows(batch))
       })(identity)
-      val ledger = s.read.parquet(s"$out/sh")
+      val ledger = out.read(s, "sh")
       Dedup.d03Report(Dedup.scoredCandidatePairsFromShingles(
         Dedup.capShingleDf(ledger, Dedup.ShingleDfCap)))
     }, Some(Dedup.d03Oracle)),
@@ -2197,9 +2134,9 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_st44q_")
       // two genuine probe triggers, queries disjoint across them
       Streaming.stage(s, dir, qs.filter(col("q_id") < 8), qs.filter(col("q_id") >= 8))
-      val out = Streaming.scratchDir("graft_st44c_")
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (batch, _) =>
-        batch.withColumn("k", lit(1))
+      val out = Streaming.output("graft_st44c_")
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
+        w.write("cand", batch.withColumn("k", lit(1))
           .join(codes.withColumn("k", lit(1)), "k")
           .filter(col("vec_id") =!= col("q_id"))
           .withColumn("iscore", F.dotLL(col("qv"), col("q")))
@@ -2207,10 +2144,9 @@ object StreamOps {
           .agg(F.topkStructs(
             struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
           .select(col("q_id"), explode(col("tk")).as("c"))
-          .select(col("q_id"), col("c.vec_id").as("vec_id"))
-          .write.mode("append").parquet(s"$out/cand")
+          .select(col("q_id"), col("c.vec_id").as("vec_id")))
       })(identity)
-      val cands = s.read.parquet(s"$out/cand")
+      val cands = out.read(s, "cand")
       val qemb = e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       e.select(col("vec_id"), col("embedding"))
@@ -2250,18 +2186,14 @@ object StreamOps {
       val midTs = ev.agg(((min("tsu") + max("tsu")) / 2).cast(LongType))
         .head().getLong(0)
       val dir = Streaming.scratchDir("graft_retrain_src_")
-      val out = Streaming.scratchDir("graft_retrain_out_")
+      val out = Streaming.output("graft_retrain_out_")
       val schema = ev.schema
-      def stateBelow(batch: Long): Map[String, RetrainState] =
-        versions(s, out, "state_").filter(_ < batch).lastOption match {
-          case None => Map.empty
-          case Some(ver) =>
-            s.read.parquet(s"$out/state_$ver").as[RetrainState]
-              .collect().map(st => st.event_type -> st).toMap
-        }
+      val stateSchema = org.apache.spark.sql.Encoders.product[RetrainState].schema
       def runOnce(): Unit =
-        Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, batchId) =>
-          val prior = stateBelow(batchId)
+        Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
+          val prior = out.read(s, "state", below = w.id, latest = true,
+              schema = stateSchema).as[RetrainState]
+            .collect().map(st => st.event_type -> st).toMap
           val next = b.repartition(col("event_type"))
             .sortWithinPartitions("event_type", "tsu", "event_id")
             .as[(String, Long, Long, java.math.BigDecimal)]
@@ -2269,17 +2201,14 @@ object StreamOps {
               org.apache.spark.sql.Encoders.product[RetrainState])
             .collect() // O(keys): detector + information-form state only
           val merged = (prior ++ next.map(st => st.event_type -> st)).values
-          b.sparkSession.createDataset(merged.toSeq)(
-            org.apache.spark.sql.Encoders.product[RetrainState])
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$out/state_$batchId")
+          w.write("state", b.sparkSession.createDataset(merged.toSeq)(
+            org.apache.spark.sql.Encoders.product[RetrainState]).coalesce(1).toDF())
         })(identity)
       Streaming.stage(s, dir, ev.filter(col("tsu") <= midTs))
       runOnce() // batch 0: first half, in event-time order
       Streaming.stage(s, dir, ev.filter(col("tsu") > midTs))
       runOnce() // batch 1: resumes from the checkpoint, only the delta
-      val fin = s.read.parquet(s"$out/state_${versions(s, out, "state_").last}")
-        .as[RetrainState].collect().toSeq
+      val fin = out.read(s, "state", latest = true).as[RetrainState].collect().toSeq
       val recs = fin.flatMap { st =>
         val drift =
           if (st.firstAlarm >= 0) Some(st.firstAlarm) else Option.empty[Long]
@@ -2329,9 +2258,9 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       arriving.filter(col("doc_id") >= 2500).coalesce(1)
         .write.mode("append").parquet(dir)
-      val out = Streaming.scratchDir("graft_st46_out_")
+      val out = Streaming.output("graft_st46_out_")
       val schema = arriving.schema
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
         val ss = b.sparkSession
         val idx = ss.table(idxTbl)
         val dp = b.filter(col("n_chars") >= 40)
@@ -2343,14 +2272,13 @@ object StreamOps {
           .join(idx, Seq("h"), "left_semi")
           .select("doc_id", "pos")
         val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
-        b.join(kept, Seq("doc_id"), "left")
+        w.write("adm", b.join(kept, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_spans"), lit(0L)).as("n_spans"),
             coalesce(col("kept_text"), col("text")).as("kept"),
-            col("n_chars"))
-          .write.mode("append").parquet(s"$out/adm")
+            col("n_chars")))
       })(identity)
-      s.read.parquet(s"$out/adm")
+      out.read(s, "adm")
         .select(col("doc_id"), col("n_spans"),
           length(col("kept")).cast(LongType).as("kept_chars"),
           (col("n_chars") - length(col("kept"))).cast(LongType)
@@ -2441,9 +2369,9 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       arriving.filter(col("doc_id") >= 2500).coalesce(1)
         .write.mode("append").parquet(dir)
-      val out = Streaming.scratchDir("graft_st47_out_")
+      val out = Streaming.output("graft_st47_out_")
       val schema = arriving.schema
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
         val ss = b.sparkSession
         val idx = ss.read.parquet(idxDir)
         // min(struct) is duplicate-insensitive, so band-collision
@@ -2461,12 +2389,11 @@ object StreamOps {
           .agg(min(struct(col("hamming"), col("rep_doc"))).as("m"))
           .select(col("doc_id"), col("m.rep_doc").as("rep_doc"),
             col("m.hamming").as("hamming"))
-        b.select("doc_id").join(best, Seq("doc_id"), "left")
+        w.write("adm", b.select("doc_id").join(best, Seq("doc_id"), "left")
           .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
-            col("rep_doc"), col("hamming"))
-          .write.mode("append").parquet(s"$out/adm")
+            col("rep_doc"), col("hamming")))
       })(identity)
-      s.read.parquet(s"$out/adm").orderBy("doc_id")
+      out.read(s, "adm").orderBy("doc_id")
     }, Some(s"""WITH ${Multimodal.sqlPhashCtes},
       |arr AS (SELECT doc_id, phash FROM ph WHERE doc_id % 5 = 3),
       |std AS (SELECT doc_id, phash FROM ph WHERE doc_id % 5 <> 3),
@@ -2514,9 +2441,9 @@ object StreamOps {
         .write.mode("append").parquet(dir)
       arriving.filter(col("doc_id") >= 2500).coalesce(1)
         .write.mode("append").parquet(dir)
-      val out = Streaming.scratchDir("graft_st48_out_")
+      val out = Streaming.output("graft_st48_out_")
       val schema = arriving.schema
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
         val ss = b.sparkSession
         val phIdx = ss.read.parquet(phIdxDir)
         val winIdx = ss.table(winIdxTbl)
@@ -2553,15 +2480,14 @@ object StreamOps {
           .join(winIdx, Seq("h"), "left_semi")
           .select("doc_id", "pos")
         val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), rejected)
-        adm.join(kept, Seq("doc_id"), "left")
+        w.write("adm", adm.join(kept, Seq("doc_id"), "left")
           .select(col("doc_id"), col("rep_doc").isNull.as("admitted"),
             col("rep_doc"), col("hamming"),
             coalesce(col("n_spans"), lit(0L)).as("n_spans"),
             coalesce(col("kept_text"), col("text")).as("kept"),
-            col("n_chars"))
-          .write.mode("append").parquet(s"$out/adm")
+            col("n_chars")))
       })(identity)
-      s.read.parquet(s"$out/adm")
+      out.read(s, "adm")
         .select(col("doc_id"), col("admitted"), col("rep_doc"), col("hamming"),
           col("n_spans"),
           length(col("kept")).cast(LongType).as("kept_chars"),
@@ -2658,14 +2584,9 @@ object StreamOps {
       val dir = Streaming.scratchDir("graft_st49_src_")
       Streaming.stage(s, dir, arriving.filter(col("doc_id") % 10 === 3),
         arriving.filter(col("doc_id") % 10 === 8))
-      val delta = Streaming.scratchDir("graft_st49_delta_")
-      val out = Streaming.scratchDir("graft_st49_out_")
-      // seed the delta dir so trigger 1's schema-bearing read resolves
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("h", BinaryType))))
-        .write.mode("overwrite").parquet(delta)
+      val out = Streaming.output("graft_st49_out_")
       val schema = arriving.schema
-      Streaming.drain(s, dir, schema, s"$out/_ckpt", Sink.Batches { (b, _) =>
+      Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
         val ss = b.sparkSession
         def winsOf(df: org.apache.spark.sql.DataFrame) =
           df.filter(col("n_chars") >= 40)
@@ -2675,30 +2596,29 @@ object StreamOps {
             .select(col("doc_id"), col("pos"),
               expr("unhex(md5(substring(text, pos, 40)))").as("h"))
         // persist: wins feeds three actions (two semi-join branches +
-        // the delta append) and Spark re-executes the explode+md5
+        // the delta write) and Spark re-executes the explode+md5
         // subtree per action otherwise (review r12)
         val wins = winsOf(b).persist()
         // two separate probes: the corpus side keeps its bucketed
         // zero-exchange scan (a union would erase the partitioning
-        // and re-shuffle the corpus), the delta side broadcasts
+        // and re-shuffle the corpus), the delta side (the windows of
+        // every earlier batch) broadcasts
         val dp = wins.join(ss.table(idxTbl), Seq("h"), "left_semi")
-          .unionByName(wins.join(
-            ss.read.schema("h BINARY").parquet(delta),
-            Seq("h"), "left_semi"))
+          .unionByName(wins.join(out.read(ss, "delta", below = w.id,
+              schema = StructType.fromDDL("h BINARY")), Seq("h"), "left_semi"))
           .select("doc_id", "pos").distinct()
         val kept = Dedup.stitchKept(Dedup.positionsToSpans(dp), b)
-        b.join(kept, Seq("doc_id"), "left")
+        w.write("adm", b.join(kept, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_spans"), lit(0L)).as("n_spans"),
             coalesce(col("kept_text"), col("text")).as("kept"),
-            col("n_chars"))
-          .write.mode("append").parquet(s"$out/adm")
+            col("n_chars")))
         // maintenance: THIS batch's windows join the index for later
-        // triggers (appended only after the scrub above materialized)
-        wins.select("h").write.mode("append").parquet(delta)
+        // triggers (written only after the scrub above materialized)
+        w.write("delta", wins.select("h"))
         wins.unpersist()
       })(identity)
-      s.read.parquet(s"$out/adm")
+      out.read(s, "adm")
         .select(col("doc_id"), col("n_spans"),
           length(col("kept")).cast(LongType).as("kept_chars"),
           (col("n_chars") - length(col("kept"))).cast(LongType)
@@ -2779,46 +2699,56 @@ object StreamOps {
       provider: String): org.apache.spark.sql.DataFrame = {
     import scala.jdk.CollectionConverters._
     val s2 = if (provider == "rocksdb") Streaming.stateSession(s) else s.newSession()
-    val out = Streaming.scratchDir(s"graft_crash_${provider}_")
+    val out = Streaming.output(s"graft_crash_${provider}_")
     def runToQuiescence(): Unit =
-      Streaming.drain(s2, dir, schema, s"$out/_ckpt", Sink.Files(s"$out/data"))(
+      Streaming.drain(s2, dir, schema, Sink.Files(out))(
         _.withWatermark("ts", "35 days")
           .groupBy(col("event_type"), window(col("ts"), "1 day"))
           .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
           .select(col("event_type"),
             unix_micros(col("window.start")).as("day_us"), col("n"), col("sv")))
     def nDataFiles(): Long =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$out/data"))
+      java.nio.file.Files.walk(java.nio.file.Paths.get(out.data))
         .iterator().asScala
         .count(f => f.getFileName.toString.startsWith("part-")).toLong
     runToQuiescence()
-    val commits = java.nio.file.Paths.get(s"$out/_ckpt/commits")
-    val last = java.nio.file.Files.list(commits).iterator().asScala
-      .map(_.getFileName.toString).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong).max
-    val sinkMeta =
-      java.nio.file.Paths.get(s"$out/data/_spark_metadata/$last")
     val filesBefore = nDataFiles()
-    // delete the entries AND their ChecksumFileSystem .crc shadows — a real
-    // crash would have written neither, and a leftover .crc blocks the
-    // re-commit's rename on the local fs
-    def rm(p: java.nio.file.Path): Unit = {
-      java.nio.file.Files.delete(p)
-      java.nio.file.Files.deleteIfExists(
-        p.resolveSibling(s".${p.getFileName}.crc"))
-    }
-    rm(commits.resolve(last.toString))
-    rm(sinkMeta)
+    val last = dropLastCommit(out)
+    val sinkMeta =
+      java.nio.file.Paths.get(out.data, "_spark_metadata", last.toString)
+    rmWithCrc(sinkMeta)
     runToQuiescence()
-    val recovered =
-      java.nio.file.Files.exists(commits.resolve(last.toString)) &&
-        java.nio.file.Files.exists(sinkMeta)
+    val recovered = java.nio.file.Files.exists(
+        java.nio.file.Paths.get(out.checkpoint, "commits", last.toString)) &&
+      java.nio.file.Files.exists(sinkMeta)
     val reexecuted = nDataFiles() > filesBefore
-    s.read.parquet(s"$out/data")
+    s.read.parquet(out.data)
       .withColumn("provider", lit(provider))
       .withColumn("sum_value", col("sv").cast(DoubleType))
       .withColumn("recovered_commit", lit(recovered))
       .withColumn("reexecuted", lit(reexecuted))
+  }
+
+  /** Delete `p` AND its ChecksumFileSystem .crc shadow — a real crash
+    * would have written neither, and a leftover .crc blocks the re-commit's
+    * rename on the local fs. */
+  private def rmWithCrc(p: java.nio.file.Path): Unit = {
+    java.nio.file.Files.delete(p)
+    java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
+  /** The crash point between a batch's output and its commit: delete the
+    * last entry of `out`'s commit log, so the next drain into `out`
+    * re-executes that batch; returns its id. */
+  private[graft] def dropLastCommit(out: Streaming.Output): Long = {
+    import scala.jdk.CollectionConverters._
+    val commits = java.nio.file.Paths.get(out.checkpoint, "commits")
+    val ls = java.nio.file.Files.list(commits)
+    val last = try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+    finally ls.close()
+    rmWithCrc(commits.resolve(last.toString))
+    last
   }
 
   /** The two-file parity-split documents staging shared by st36/st37 (one
@@ -2842,16 +2772,15 @@ object StreamOps {
     val schema = docsDf.schema
     val dir = Streaming.stagedDir("split", d)(Streaming.stage(s, _,
       docsDf.filter(col("doc_id") % 2 === 0), docsDf.filter(col("doc_id") % 2 === 1)))
-    val out = Streaming.scratchDir("graft_split_")
-    Streaming.drain(s, dir, schema, s"$out/_ckpt",
-      Sink.Files(s"$out/data", partitionBy = Seq("split")))(
+    val out = Streaming.output("graft_split_")
+    Streaming.drain(s, dir, schema, Sink.Files(out, partitionBy = Seq("split")))(
       _.withColumn("bucket", expr(
           "CAST(conv(substring(md5(CAST(CAST(doc_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 100"))
         .withColumn("split",
           when(col("bucket") < 90, "train")
             .when(col("bucket") < 95, "val").otherwise("test"))
         .select("doc_id", "source", "n_chars", "split"))
-    (s"$out/data", out)
+    (out.data, out.root)
   }
 
   /** st26's per-partition CUSUM fold. Expects rows grouped by event_type

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ml.{HeldOut, HeldOutRing, Learners, ModelState, OnlineLearner}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode}
 import org.apache.spark.sql.types.StructType
@@ -30,9 +30,12 @@ import scala.reflect.runtime.universe.TypeTag
   * through [[Streaming.drain]], which reads one file per trigger
   * ([[Streaming.source]]): a query really runs multiple triggers and the
   * watermark advances between them — append-mode window results are
-  * produced by watermark progress, not by query shutdown. A far-future
-  * sentinel row (+40 days) closes the tail windows; rows derived from it
-  * are filtered out after the run (the oracle never sees the sentinel).
+  * produced by watermark progress, not by query shutdown. The drain owns
+  * every checkpoint and the per-batch output layout ([[Streaming.Output]]):
+  * a replayed batch rewrites its own output instead of appending twice. A
+  * far-future sentinel row (+40 days) closes the tail windows; rows derived
+  * from it are filtered out after the run (the oracle never sees the
+  * sentinel).
   * Only [[Streaming.stageEvents]] writes files that share one mtime, and
   * those can be listed in any order: its callers must pick a watermark
   * delay LARGER than the staged data's time span, or a smaller delay would
@@ -59,8 +62,7 @@ object Streaming {
 
   /** Staged-events cache: the fixture staging (a full write of the events
     * table) is identical across the streaming ops, so stage once per
-    * (sfDir, nFiles) and share the directory. Checkpoints live in `_`-prefixed
-    * subdirectories, which the file source ignores.
+    * (sfDir, nFiles) and share the directory.
     */
   private val stageCache =
     scala.collection.concurrent.TrieMap[(String, Int), (String, StructType, Long)]()
@@ -122,12 +124,8 @@ object Streaming {
   /** Memoized scratch staging: `build` runs once per (key, sfDir) and the
     * staged directory is shared by every later call — fixture staging is
     * scaffolding, not operator cost, and re-writing the same parquet layout
-    * per bench pass would bill the query for it. A query over a memoized
-    * dir needs a per-run checkpoint (a fixed one would resume the first
-    * run's committed offsets and emit nothing). Put it in a [[scratchDir]]
-    * of its own and clean that when the query ends, as
-    * [[StreamingTrainer.fitStream]] does: a per-run path inside the shared
-    * dir stays there until the JVM exits.
+    * per bench pass would bill the query for it. The dir holds only the
+    * staged data files: every [[drain]] over it checkpoints elsewhere.
     */
   def stagedDir(key: String, sfDir: String)(build: String => Unit): String =
     stagedDirCache.getOrElseUpdate((key, sfDir), {
@@ -212,7 +210,56 @@ object Streaming {
   def source(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
 
-  /** Where a [[drain]] writes; `A` is what the drain returns. */
+  /** A drain's output: one root holding the query's checkpoint and every
+    * named output, `<root>/<name>/batch=<id>` per batch that wrote it. A
+    * second drain into the same Output resumes from its checkpoint.
+    */
+  final case class Output(root: String) {
+    private[graft] def checkpoint: String = s"$root/_checkpoint"
+
+    /** The directory of output `name`. */
+    def dir(name: String): String = s"$root/$name"
+
+    /** Where a [[Sink.Files]] drain writes. */
+    def data: String = dir("data")
+
+    /** The rows of `name` without the batch column: of every batch below
+      * `below` (all by default), or with `latest` of the newest of those
+      * batches only. Reads as an empty frame of `schema` when no such batch
+      * wrote `name`.
+      */
+    def read(spark: SparkSession, name: String, below: Long = Long.MaxValue,
+        latest: Boolean = false, schema: StructType = new StructType()): DataFrame = {
+      val path = new Path(dir(name))
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val ids = (if (!fs.exists(path)) Nil else fs.listStatus(path).toSeq)
+        .map(_.getPath.getName).collect { case Output.BatchDir(id) => id.toLong }
+        .filter(_ < below).sorted
+      val picked = if (latest) ids.takeRight(1) else ids
+      if (picked.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.parquet(picked.map(id => s"${dir(name)}/batch=$id"): _*)
+    }
+  }
+  object Output {
+    private val BatchDir = "batch=(\\d+)".r
+  }
+
+  /** A scratch [[Output]], deleted at JVM exit. */
+  def output(prefix: String): Output = Output(scratchDir(prefix))
+
+  /** Batch `id`'s writer into `out`. */
+  final class Writer private[graft] (val out: Output, val id: Long) {
+    /** Replace this batch's rows of `name` whole: a replayed batch rewrites
+      * only its own output. */
+    def write(name: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"${out.dir(name)}/batch=$id")
+  }
+
+  /** Where a [[drain]] writes; `A` is what the drain returns. [[Memory]]
+    * and [[Batches]] drains run once, on a checkpoint the drain deletes
+    * when it ends; [[Writes]] and [[Files]] drains checkpoint into their
+    * [[Output]] and resume from it.
+    */
   sealed trait Sink[A]
   object Sink {
     /** Memory table `name` in output mode `mode` (append, complete or
@@ -221,34 +268,46 @@ object Streaming {
         extends Sink[DataFrame]
     /** `f(batch, batchId)` once per trigger. */
     final case class Batches(f: (DataFrame, Long) => Unit) extends Sink[Unit]
-    /** Spark's exactly-once parquet file sink at `path`. */
-    final case class Files(path: String, partitionBy: Seq[String] = Nil)
+    /** `f(batch, w)` once per trigger, writing through `w` into `out`. */
+    final case class Writes(out: Output)(val f: (DataFrame, Writer) => Unit)
+        extends Sink[Unit]
+    /** Spark's exactly-once parquet file sink at `out.data`, with its own
+      * `_spark_metadata` log. */
+    final case class Files(out: Output, partitionBy: Seq[String] = Nil)
         extends Sink[Unit]
   }
 
   /** Run `build` over the staged `dir` as a streaming query, one file per
-    * trigger, into `sink` with checkpoint `ckpt`, until every staged file is
-    * processed. The query is stopped, and the shuffle width restored, even
-    * when the sink throws.
+    * trigger, into `sink` until every staged file is processed. The query
+    * is stopped, the shuffle width restored and a run-once checkpoint
+    * deleted, even when the sink throws.
     */
   def drain[A](spark: SparkSession, dir: String, schema: StructType,
-      ckpt: String, sink: Sink[A])(build: DataFrame => DataFrame): A =
-    withStreamShuffle(spark) {
+      sink: Sink[A])(build: DataFrame => DataFrame): A = {
+    val (out, once) = sink match {
+      case w: Sink.Writes => (w.out, false)
+      case f: Sink.Files => (f.out, false)
+      case _ => (output("graft_drain_"), true)
+    }
+    try withStreamShuffle(spark) {
       val w = build(source(spark, dir, schema)).writeStream
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", out.checkpoint)
       val q = (sink match {
         case Sink.Memory(name, mode) =>
           w.format("memory").queryName(name).outputMode(mode)
         case Sink.Batches(f) => w.foreachBatch(f)
-        case Sink.Files(path, by) =>
-          w.format("parquet").option("path", path).partitionBy(by: _*)
+        case ws: Sink.Writes =>
+          w.foreachBatch((b: DataFrame, id: Long) => ws.f(b, new Writer(out, id)))
+        case Sink.Files(_, by) =>
+          w.format("parquet").option("path", out.data).partitionBy(by: _*)
       }).start()
       try q.processAllAvailable() finally q.stop()
       sink match {
         case Sink.Memory(name, _) => spark.table(name)
-        case _: Sink.Batches | _: Sink.Files => ()
+        case _: Sink.Batches | _: Sink.Writes | _: Sink.Files => ()
       }
-    }
+    } finally if (once) cleanScratch(Seq(out.root))
+  }
 }
 
 /** Envelope: the unified control+data stream element (SURVEY §3.4). */

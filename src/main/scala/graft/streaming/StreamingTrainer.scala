@@ -48,9 +48,6 @@ object StreamingTrainer {
     * guarantee either assignment or order. The routed batch crosses the
     * shuffle as columnar [[Block]]s, at most one per (source task,
     * training partition), see [[routedRows]].
-    *
-    * The query's checkpoint is a scratch dir of its own, deleted when the
-    * fit ends: it is unique per fit and never resumed.
     */
   def fitStream(spark: SparkSession, dir: String, schema: StructType,
       spec: PipelineSpec, partitionsPerBatch: Int = 0,
@@ -76,10 +73,7 @@ object StreamingTrainer {
           rounds.stats.modelsShipped, rounds.stats.bytesShipped, theta)
       }
     }
-    val ckpt = Streaming.scratchDir("graft_ckpt_train_")
-    try Streaming.drain(spark, dir, schema, ckpt,
-      Streaming.Sink.Batches(trainBatch))(identity)
-    finally Streaming.cleanScratch(Seq(ckpt))
+    Streaming.drain(spark, dir, schema, Streaming.Sink.Batches(trainBatch))(identity)
     StreamFit(rounds.global.getOrElse(rounds.learner.init(1)), rounds.learner,
       rounds.protocolName, rounds.stats, curve.toSeq)
   }

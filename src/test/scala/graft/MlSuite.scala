@@ -148,6 +148,8 @@ class MlSuite extends AnyFunSuite {
     assert(Protocols.resolveName("FGM", "K-means", 8) == "SingleLearner")
     assert(Protocols.resolveName("Asynchronous", "PA", 1) == "CentralizedTraining")
     assert(Protocols.resolveName("EASGD", "PA", 8) == "EASGD")
+    // a negative staleness is rejected where it enters, not at round 1
+    intercept[IllegalArgumentException](Protocols.create("SSP", Map("staleness" -> -1.0)))
   }
 
   test("drift-gated protocol skips shipping when drift is under threshold") {

@@ -113,10 +113,30 @@ class R10OpsSuite extends AnyFunSuite {
       PipelineSpec(103, "PA", Map("C" -> 1.0), Nil, "Synchronous"),
       partitionsPerBatch = parts, routed = true)
     assert(fit.model.n == rows.size.toLong)
-    val left = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try assert(!left.iterator().asScala.exists(
-      _.getFileName.toString.startsWith("_ckpt_train_")))
-    finally left.close()
+    def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val it = java.nio.file.Files.list(p)
+      try it.iterator().asScala.toSeq finally it.close()
+    }
+    assert(ls(java.nio.file.Paths.get(dir)).forall(java.nio.file.Files.isRegularFile(_)))
+
+    // so does a memory drain over a memoized staged dir, and its
+    // run-once checkpoint is gone when the drain returns
+    import graft.streaming.Streaming
+    val staged = Streaming.stagedDir("r10_memdrain", dir)(Streaming.stage(spark, _,
+      Seq(1, 2).toDF("v"), Seq(3).toDF("v")))
+    val base = java.nio.file.Paths.get(Streaming.scratchDir("r10_base_")).getParent
+    def drainDirs(): Set[java.nio.file.Path] =
+      ls(base).filter(_.getFileName.toString.startsWith("graft_drain_")).toSet
+    val before = drainDirs()
+    var during = Set.empty[java.nio.file.Path]
+    val drained = Streaming.drain(spark, staged, Seq(1).toDF("v").schema,
+        Streaming.Sink.Memory("r10_memdrain")) { src => during = drainDirs() -- before; src }
+      .as[Int].collect().toSeq.sorted
+    assert(drained == Seq(1, 2, 3))
+    assert(during.size == 1, s"the drain's checkpoint dir: $during")
+    assert(!during.exists(java.nio.file.Files.exists(_)), s"$during outlived its drain")
+    assert(ls(java.nio.file.Paths.get(staged)).forall(java.nio.file.Files.isRegularFile(_)),
+      s"$staged holds more than its data files")
   }
 
   test("ml31 invariant at any fixture: FGM advances all-or-nothing per " +

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSession
+import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,15 +19,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class R13OpsSuite extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  /** Drive the ingest exactly as p07's foreachBatch does: append the
-    * batch's shingles to the sh ledger, then append bands + pair delta.
+  /** Drive the ingest exactly as p07's foreachBatch does: write batch k's
+    * shingles to the sh ledger, then its bands + pair delta.
     */
-  private def ingest(batches: Seq[DataFrame]): String = {
-    val out = graft.streaming.Streaming.scratchDir("graft_r13_pairs_")
-    batches.foreach { b =>
+  private def ingest(batches: Seq[DataFrame]): Streaming.Output = {
+    val out = Streaming.output("graft_r13_pairs_")
+    batches.zipWithIndex.foreach { case (b, k) =>
+      val w = new Streaming.Writer(out, k.toLong)
       val shb = Dedup.shingleRows(b).persist()
-      shb.write.mode("append").parquet(s"$out/sh")
-      Dedup.pairLedgerAppend(shb, out)
+      w.write("sh", shb)
+      Dedup.pairLedgerAppend(shb, w)
       shb.unpersist()
     }
     out
@@ -37,9 +39,9 @@ class R13OpsSuite extends AnyFunSuite {
         col("nb"), col("jaccard"))
       .collect().map(_.toString).sorted.toSeq
 
-  private def batchRef(out: String): Seq[String] = rowsOf(
+  private def batchRef(out: Streaming.Output): Seq[String] = rowsOf(
     Dedup.scoredCandidatePairsFromShingles(
-      Dedup.capShingleDf(spark.read.parquet(s"$out/sh"), Dedup.ShingleDfCap)))
+      Dedup.capShingleDf(out.read(spark, "sh"), Dedup.ShingleDfCap)))
 
   private def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
@@ -70,7 +72,8 @@ class R13OpsSuite extends AnyFunSuite {
     assert(served == ref)
     // the same ledger named by a file: URI: its probes go through the
     // path's FileSystem, so it serves the same rows
-    assert(rowsOf(Dedup.pairLedgerServe(spark, s"file:$out")) == served)
+    assert(rowsOf(Dedup.pairLedgerServe(spark,
+      Streaming.Output(s"file:${out.root}"))) == served)
     spark.catalog.clearCache()
   }
 
@@ -99,7 +102,7 @@ class R13OpsSuite extends AnyFunSuite {
         401L -> s"$r keep tail"))
     val out = ingest(Seq(t1, t2))
     // precondition: the hot shingle really exceeds the cap ledger-wide
-    val dfHot = spark.read.parquet(s"$out/sh")
+    val dfHot = out.read(spark, "sh")
       .filter(col("sh") === hot).count()
     assert(dfHot > Dedup.ShingleDfCap, s"hot shingle df=$dfHot must exceed cap")
     val served = rowsOf(Dedup.pairLedgerServe(spark, out))

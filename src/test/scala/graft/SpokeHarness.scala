@@ -27,7 +27,7 @@ object SpokeHarness {
     conf.foreach { case (k, v) => s2.conf.set(k, v) }
     val name = s"spoke_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     Streaming.drain(s2, s"$dir/data", Encoders.product[Envelope].schema,
-        s"$dir/data/_ckpt_$name", Streaming.Sink.Memory(name))(
+        Streaming.Sink.Memory(name))(
         src => TwsSpoke.run(src.as[Envelope](Encoders.product[Envelope]), testMode).toDF())
       .as[SpokeEvent](Encoders.product[SpokeEvent]).collect().toSeq
   }

@@ -34,19 +34,18 @@ class StreamingSuite extends AnyFunSuite {
     val spark = TestSession.spark
     import spark.implicits._
     val dir = Streaming.scratchDir("graft_stager_")
-    val ck = s"$dir/_ckpt"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Int])]()
-    val sink = Streaming.Sink.Batches { (b, id) =>
-      seen.add((id, b.as[Int].collect().toSeq.sorted))
+    val sink = Streaming.Sink.Writes(Streaming.output("graft_stager_out_")) { (b, w) =>
+      seen.add((w.id, b.as[Int].collect().toSeq.sorted))
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("value",
         org.apache.spark.sql.types.IntegerType)))
     def part(k: Int) = (0 until 5).map(i => k * 10 + i)
     Streaming.stage(spark, dir, (0 until 3).map(k => part(k).toDS()): _*)
-    Streaming.drain(spark, dir, schema, ck, sink)(identity)
+    Streaming.drain(spark, dir, schema, sink)(identity)
     Streaming.stage(spark, dir, part(3).toDS())
-    Streaming.drain(spark, dir, schema, ck, sink)(identity)
+    Streaming.drain(spark, dir, schema, sink)(identity)
     assert(seen.toArray.toSeq == (0 until 4).map(k => (k.toLong, part(k))))
   }
 
@@ -60,7 +59,7 @@ class StreamingSuite extends AnyFunSuite {
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try {
       val e = intercept[Exception] {
-        Streaming.drain(spark, dir, Seq(1).toDF().schema, s"$dir/_ckpt",
+        Streaming.drain(spark, dir, Seq(1).toDF().schema,
           Streaming.Sink.Batches { (_, id) =>
             if (id == 1) throw new IllegalStateException("sink failed on batch 1")
           })(identity)
@@ -70,6 +69,66 @@ class StreamingSuite extends AnyFunSuite {
       assert(spark.streams.active.isEmpty)
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "7")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
+  test("drain replay: a re-executed batch rewrites its own output once, " +
+    "and its earlier-batches read excludes its first write") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    val dir = Streaming.scratchDir("graft_replay_")
+    val out = Streaming.output("graft_replay_out_")
+    val schema = Seq(1).toDF().schema
+    def part(k: Int) = (0 until 5).map(i => k * 10 + i)
+    val earlier = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Int])]()
+    def run(): Unit = Streaming.drain(spark, dir, schema, Streaming.Sink.Writes(out) { (b, w) =>
+      earlier.add((w.id, out.read(spark, "rows", below = w.id, schema = schema)
+        .as[Int].collect().toSeq.sorted))
+      w.write("rows", b)
+    })(identity)
+    Streaming.stage(spark, dir, (0 until 3).map(k => part(k).toDS()): _*)
+    run()
+    assert(graft.operators.StreamOps.dropLastCommit(out) == 2L)
+    run()
+    assert(out.read(spark, "rows").as[Int].collect().toSeq.sorted ==
+      (0 until 3).flatMap(part), "a replayed batch's rows are not held once")
+    assert(earlier.toArray.toSeq == Seq((0L, Nil), (1L, part(0)),
+      (2L, part(0) ++ part(1)), (2L, part(0) ++ part(1))), earlier.toString)
+    assert(out.read(spark, "rows", below = 2L, latest = true).as[Int].collect()
+      .toSeq.sorted == part(1))
+    assert(out.read(spark, "none", schema = schema).count() == 0L)
+  }
+
+  test("Q1 replays a crashed last batch exactly once: predictions, " +
+    "responses and logs equal the per-key SpokeCore.step replay") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    def inst(id: Int, op: String) =
+      s"""{"id": $id, "operation": "$op", "numericalFeatures": [${id % 7}.0, 1.5], """ +
+        (if (op == "training") s""""target": ${id % 10}.0}""" else "\"target\": null}")
+    def req(pid: Int, r: String, reqId: Long, learner: String = "") =
+      s"""{"id": $pid, "request": "$r", "requestId": $reqId""" +
+        (if (learner.isEmpty) "}" else s""", "learner": {"name": "$learner"}}""")
+    val files = Seq(
+      (0 until 10).map(inst(_, "training")),
+      Seq(req(1, "Create", 1L, "PA"), req(2, "Create", 1L, "RegressorPA")) ++
+        (10 until 40).map(inst(_, "training")),
+      (40 until 45).map(inst(_, "forecasting")) ++
+        Seq(req(1, "Query", 9L), req(2, "Query", 9L), req(1, "Delete", 10L)))
+    val wireDir = Streaming.scratchDir("graft_q1replay_")
+    Streaming.stage(spark, wireDir, files.map(_.toDF("value")): _*)
+    val out = Streaming.output("graft_q1replay_out_")
+    graft.operators.JobTopology.runJob(spark, wireDir, out)
+    assert(graft.operators.StreamOps.dropLastCommit(out) == 2L)
+    graft.operators.JobTopology.runJob(spark, wireDir, out)
+    val want = SpokeHarness.replay(files.map(f =>
+      graft.operators.JobTopology.route(f.toDF("value")).collect().toSeq))
+    def got(name: String) = out.read(spark, name).as[SpokeEvent].collect().toSeq
+    for ((name, kind) <- Seq("predictions" -> "prediction",
+        "responses" -> "response", "logs" -> "log")) {
+      val w = want.filter(_.kind == kind)
+      assert(w.nonEmpty, s"the fixture emits no $name")
+      assert(SpokeHarness.diff(got(name), w) == "", name)
+    }
   }
 
   test("pre-Create data buffers, Create drains it into training") {
@@ -432,12 +491,13 @@ class StreamingSuite extends AnyFunSuite {
     val spark = Streaming.stateSession(TestSession.spark)
     import spark.implicits._
     val dir = Streaming.scratchDir("graft_k5k6_")
-    /** Drain `sub` through `op` on its own checkpoint; this drain's rows. */
+    /** Drain `sub` through `op` into its own output, resuming the last
+      * drain of `sub`; this drain's rows. */
     def drainOut[A: Encoder, B: Encoder](sub: String,
         op: Dataset[A] => Dataset[B]): Seq[B] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[B]()
       Streaming.drain(spark, s"$dir/$sub", implicitly[Encoder[A]].schema,
-        s"$dir/_ckpt_$sub", Streaming.Sink.Batches((b, _) =>
+        Streaming.Sink.Writes(Streaming.Output(s"$dir/out_$sub"))((b, _) =>
           b.as[B].collect().foreach(got.add)))(src => op(src.as[A]).toDF())
       got.asScala.toSeq
     }
