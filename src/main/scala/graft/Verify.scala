@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for the DuckDB compare and _verify.json (the requested
@@ -16,22 +15,9 @@ object Verify {
       System.err.println(s"[verify] unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
       sys.exit(1)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        graft.streaming.Streaming.scratchDir("graft_wh_"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — readable only as raw longs
-      // (rebuilt into micros timestamps by graft.T.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    Files.createDirectories(Paths.get(outDir))
     Files.deleteIfExists(Paths.get(outDir, "_verify.json"))
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

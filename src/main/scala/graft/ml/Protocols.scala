@@ -2,6 +2,7 @@ package graft.ml
 
 import graft.pipeline.PipelineSpec
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
@@ -251,8 +252,9 @@ object Protocols {
 
   /** One protocol round: the hub's ship/merge step of every
     * [[RoundDriver]] round that does not fold in a tree. `replicas` holds
-    * this round's trained replicas (at most one per partition), `global`
-    * the previous global; returns the next global, or None when no replica
+    * this round's trained replicas (at most one per partition), and
+    * `window` the round's broadcast stale-read window, whose head is the
+    * previous global; returns the next global, or None when no replica
     * trained.
     *
     * FGM with a global first runs its scalar phase: one drift norm per
@@ -262,18 +264,18 @@ object Protocols {
     * replicas that stay home send a 1-row marker instead of O(params) —
     * as <=maxMsgParams-double [[ParamBlock]]s, which are collected,
     * reassembled in partition order and folded by [[Protocol.aggregate]].
-    * The round's broadcast of `global` is destroyed when the round ends; a
-    * caller destroys its own broadcasts once `round` returns.
+    * The caller destroys `window` once `round` returns.
     */
-  def round(replicas: RDD[ModelState], global: Option[ModelState],
-      protocol: Protocol, learner: OnlineLearner, maxMsgParams: Int,
+  def round(replicas: RDD[ModelState],
+      window: Broadcast[IndexedSeq[Option[ModelState]]], protocol: Protocol,
+      learner: OnlineLearner, maxMsgParams: Int,
       stats: ProtocolStats): Option[ModelState] = {
-    val bcGlobal = replicas.sparkContext.broadcast(global)
+    val global = window.value.head
     def ship(repl: RDD[ModelState]): Option[ModelState] = {
       val collected = repl.mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         it.flatMap { m =>
-          if (protocol.ships(m, bcGlobal.value))
+          if (protocol.ships(m, window.value.head))
             ModelWire.chunk(m, maxMsgParams, pid).iterator.map(Option(_))
           else Iterator.single(Option.empty[ParamBlock])
         }
@@ -287,19 +289,19 @@ object Protocols {
         totalReplicas =
           collected.count(_.isEmpty).toLong + blocks.count(_.idx == 0)))
     }
-    try (protocol, global) match {
+    (protocol, global) match {
       case (fgm: FGM, Some(g)) =>
         val repl = replicas.persist(StorageLevel.MEMORY_AND_DISK)
         try {
           val drifts = repl
-            .map(m => driftNorm(m.params, bcGlobal.value.get.params))
+            .map(m => driftNorm(m.params, window.value.head.get.params))
             .collect()
           if (drifts.isEmpty) None
           else if (!fgm.decide(drifts.toSeq, stats)) Some(frozen(g))
           else ship(repl)
         } finally repl.unpersist(blocking = false)
       case _ => ship(replicas)
-    } finally bcGlobal.destroy()
+    }
   }
 
   /** Zero-advance round: a copy of the previous global with ZERO per-round
@@ -464,7 +466,7 @@ final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
     val merged =
       try {
         if (tree) treeMerge(replicas)
-        else Protocols.round(replicas, global, protocol, learner,
+        else Protocols.round(replicas, bcSeeds, protocol, learner,
           spec.maxMsgParams, stats)
       } finally bcSeeds.destroy()
     merged.foreach { m =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Op, T}
+import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -39,34 +40,26 @@ object Graph {
 
   private[graft] val Scale = 1000000000000L // 1e12: rank mass; 85x fits int64
 
-  private val edgeCache = scala.collection.concurrent.TrieMap[String, String]()
-
   /** The DIRECTED part co-purchase edge list (both orientations of every
     * co-ordered part pair, with `w` = number of shared orders),
-    * materialized to scratch parquet ONCE per fixture and shared by
-    * g01–g05 — the 100 TB shape: the item-item edge table is a built-once
-    * artifact every graph query reads, not a self-join each query
-    * repeats. The first graph query per JVM pays the lineitem self-join;
-    * the oracles still derive edges from lineitem directly, so the
-    * materialization is purely physical. (JVM-local cache keyed by
-    * fixture dir — within one process the fixture cannot change
-    * underneath it, so no fingerprint is needed.)
+    * materialized once per fixture in a [[Streaming.stagedDir]] and shared
+    * by g01–g05 — the 100 TB shape: the item-item edge table is a
+    * built-once artifact every graph query reads, not a self-join each
+    * query repeats. The first graph query per JVM pays the lineitem
+    * self-join; the oracles still derive edges from lineitem directly, so
+    * the materialization is purely physical.
     */
   private[graft] def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val path = edgeCache.getOrElseUpdate(d, {
+      d: String): DataFrame =
+    s.read.parquet(Streaming.stagedDir("edges", d) { p =>
       val li = T.lineitem(s, d).select("l_orderkey", "l_partkey")
-      val p = graft.streaming.Streaming.scratchDir("graft_edges_")
       li.as("l1")
         .join(li.as("l2"), col("l1.l_orderkey") === col("l2.l_orderkey") &&
           col("l1.l_partkey") =!= col("l2.l_partkey"))
         .select(col("l1.l_partkey").as("a"), col("l2.l_partkey").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("w"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   /** g02/g03's thinned undirected view of [[coPurchaseEdges]]: one
     * orientation per pair + the deterministic md5 1/16 sample.
@@ -92,25 +85,18 @@ object Graph {
       .filter(substring(md5(concat(col("a").cast("string"), lit(":"),
         col("b").cast("string"))), 1, 2) === "00")
 
-  private val labelCache = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Star-contraction CC labels over [[fineSampledUndirectedEdges]],
-    * materialized to scratch parquet ONCE per fixture and shared by
-    * g06/g07 — the 100 TB posture again: a community labeling is a
+    * materialized once per fixture in a [[Streaming.stagedDir]] and shared
+    * by g06/g07 — the 100 TB posture again: a community labeling is a
     * maintained artifact consumed by many queries, not a per-query
-    * recomputation. (JVM-local cache keyed by fixture dir, like
-    * [[coPurchaseEdges]].)
+    * recomputation.
     */
   private[graft] def fineCcLabels(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val path = labelCache.getOrElseUpdate(d, {
-      val p = graft.streaming.Streaming.scratchDir("graft_cclabels_")
+      d: String): DataFrame =
+    s.read.parquet(Streaming.stagedDir("cclabels", d) { p =>
       Dedup.connectedComponentsStar(fineSampledUndirectedEdges(s, d), "a", "b")
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   /** Oracle mirror of [[fineSampledUndirectedEdges]] + the recursive-CTE
     * min-label transitive closure: CTEs `und`/`bi`/`nodes`/`reach`/`lab`,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Op, T}
 import graft.Num._
+import graft.streaming.Streaming
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,48 +42,6 @@ object Relational2 {
         |  (SELECT CAST(MAX(t3 - t1) AS BIGINT)
         |     FROM s3 JOIN s1 USING (user_id)) AS max_convert_us""".stripMargin
 
-
-  /** Whether a completed write (its `_SUCCESS` marker) is at `dir`, probed
-    * through the path's Hadoop FileSystem. */
-  private def written(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Collision-free fixture fingerprint for cached derived artifacts
-    * (bucketed tables, compaction copies, the w09 Derby database): an md5
-    * of the full path PLUS the (name, size, mtime) of every parquet file in
-    * the fixture dir — so a REGENERATED fixture at the same path gets a
-    * fresh tag and stale caches are never served (a path-only or hashCode
-    * key would silently reuse them).
-    */
-  private[graft] def fixtureTag(d: String): String = {
-    // Files.walk (not listFiles): a directory-per-table layout nests the
-    // parquet parts one level down, and an empty fingerprint would silently
-    // degrade to a path-only tag — the stale-cache bug this exists to stop.
-    val root = java.nio.file.Paths.get(d)
-    val files =
-      if (!java.nio.file.Files.isDirectory(root)) Seq.empty
-      else {
-        val walk = java.nio.file.Files.walk(root, 2)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala
-            .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p))
-            .map(p => (root.relativize(p).toString,
-              java.nio.file.Files.size(p),
-              java.nio.file.Files.getLastModifiedTime(p).toMillis))
-            .toSeq.sortBy(_._1)
-        } finally walk.close()
-      }
-    require(files.nonEmpty,
-      s"fixtureTag: no parquet files under $d — refusing a path-only tag " +
-        "(it would serve stale cached artifacts for a regenerated fixture)")
-    val sig = files.map { case (n, sz, mt) => s"$n:$sz:$mt" }.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$sig".getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
 
   val ops: Seq[Op] = Seq(
     // ------------------------------------------------------------------
@@ -564,17 +523,14 @@ object Relational2 {
     Op(
       "q44_bucketed_join",
       (s, d) => {
-        val tag = Relational2.fixtureTag(d)
-        val (to, tl) = (s"graft_bo_$tag", s"graft_bl_$tag")
         // the bucketed layout is a one-time investment (OPTIMIZE-style
-        // maintenance, not query cost): build it once per fixture dir,
-        // reuse on every subsequent run against the same data
-        if (!s.catalog.tableExists(to))
-          T.orders(s, d).write
-            .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(to)
-        if (!s.catalog.tableExists(tl))
-          T.lineitem(s, d).write
-            .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(tl)
+        // maintenance, not query cost), projected to the columns read here
+        val to = StreamOps.bucketedArtifact(s, s"q44orders@v1#$d",
+          "q44_orders", "o_orderkey", "o_orderkey BIGINT, o_orderstatus STRING")(
+          T.orders(s, d).select("o_orderkey", "o_orderstatus"))
+        val tl = StreamOps.bucketedArtifact(s, s"q44lineitem@v1#$d",
+          "q44_lineitem", "l_orderkey", "l_orderkey BIGINT, l_extendedprice DOUBLE")(
+          T.lineitem(s, d).select("l_orderkey", "l_extendedprice"))
         s.table(tl)
           .join(s.table(to), col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderstatus")
@@ -604,17 +560,13 @@ object Relational2 {
     Op(
       "q46_range_layout",
       (s, d) => {
-        val tag = Relational2.fixtureTag(d)
-        val path = new java.io.File(
-          new java.io.File(sys.props("java.io.tmpdir"), s"graft_rl_$tag"),
-          "lineitem").toString
-        if (!written(s, path))
+        val cl = s.read.parquet(Streaming.stagedDir("rl", d) { p =>
           T.lineitem(s, d)
             .select("l_orderkey", "l_shipdate", "l_extendedprice", "l_discount")
             .repartitionByRange(8, col("l_shipdate"))
             .sortWithinPartitions("l_shipdate", "l_orderkey")
-            .write.mode("overwrite").parquet(path)
-        val cl = s.read.parquet(path)
+            .write.mode("overwrite").parquet(p)
+        })
         // layout proof: ≤8 files (one per range partition), ranges disjoint
         // in shipdate order (tiny per-file aggregate — ≤8 rows — so the
         // single-partition window is free)
@@ -660,17 +612,15 @@ object Relational2 {
     Op(
       "q48_compaction",
       (s, d) => {
-        val tag = Relational2.fixtureTag(d)
-        val base = new java.io.File(sys.props("java.io.tmpdir"), s"graft_cp_$tag")
-        val smallDir = new java.io.File(base, "small").toString
-        val bigDir = new java.io.File(base, "compact").toString
-        val ev = T.events(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        if (!written(s, smallDir))
-          ev.repartition(32).write.mode("overwrite").parquet(smallDir)
-        if (!written(s, bigDir))
+        val smallDir = Streaming.stagedDir("cp_small", d) { p =>
+          T.events(s, d)
+            .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+            .repartition(32).write.mode("overwrite").parquet(p)
+        }
+        val bigDir = Streaming.stagedDir("cp_compact", d) { p =>
           s.read.parquet(smallDir).repartition(4)
-            .write.mode("overwrite").parquet(bigDir)
+            .write.mode("overwrite").parquet(p)
+        }
         def stats(dir: String) = s.read.parquet(dir)
           // materialize the file name first: input_file_name() may not
           // appear directly inside an aggregate argument
@@ -944,10 +894,6 @@ object Relational2 {
     Op(
       "q55_zorder_layout",
       (s, d) => {
-        val tag = Relational2.fixtureTag(d)
-        val path = new java.io.File(
-          new java.io.File(sys.props("java.io.tmpdir"), s"graft_zo_$tag"),
-          "lineitem").toString
         val bounds = T.lineitem(s, d)
           .agg(max("l_orderkey"), max("l_partkey")).head()
         val (maxOk, maxPk) = (bounds.getLong(0), bounds.getLong(1))
@@ -957,15 +903,15 @@ object Relational2 {
         val morton = (0 until 10).map(i =>
           s"(shiftleft(($bo >> $i) & 1, ${2 * i}) + " +
             s"shiftleft(($bp >> $i) & 1, ${2 * i + 1}))").mkString(" + ")
-        if (!written(s, path))
+        val zl = s.read.parquet(Streaming.stagedDir("zo", d) { p =>
           T.lineitem(s, d)
             .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
               expr(morton).as("z"))
             .repartitionByRange(16, col("z"))
             .sortWithinPartitions("z")
             .drop("z")
-            .write.mode("overwrite").parquet(path)
-        val zl = s.read.parquet(path)
+            .write.mode("overwrite").parquet(p)
+        })
         // deterministic mid-range box on both dimensions
         val (lo1, hi1) = ((maxOk + 1) / 4, (maxOk + 1) * 2 / 5)
         val (lo2, hi2) = ((maxPk + 1) / 4, (maxPk + 1) * 2 / 5)

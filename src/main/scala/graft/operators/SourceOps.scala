@@ -193,19 +193,14 @@ object SourceOps {
     Op(
       "w09_jdbc_source",
       (s, d) => {
-        val tag = Relational2.fixtureTag(d)
-        val dbDir = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_derby_$tag")
-        val url = s"jdbc:derby:${dbDir.getAbsolutePath}/db;create=true"
         val props = new java.util.Properties()
         props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        val marker = new java.io.File(dbDir, "_loaded")
-        if (!marker.exists()) {
+        def url(dbDir: String) = s"jdbc:derby:$dbDir/db;create=true"
+        val dbDir = graft.streaming.Streaming.stagedDir("derby", d) { p =>
           T.orders(s, d)
             .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
               col("o_totalprice"), col("o_orderpriority"))
-            .write.mode("overwrite").jdbc(url, "graft_orders", props)
-          marker.createNewFile()
+            .write.mode("overwrite").jdbc(url(p), "graft_orders", props)
         }
         val bounds = T.orders(s, d)
           .agg(min("o_orderkey"), max("o_orderkey")).head()
@@ -214,7 +209,7 @@ object SourceOps {
           .option("lowerBound", bounds.getLong(0))
           .option("upperBound", bounds.getLong(1) + 1)
           .option("numPartitions", 4)
-          .jdbc(url, "graft_orders", props)
+          .jdbc(url(dbDir), "graft_orders", props)
           .filter(col("o_totalprice") > 100000.0)
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("revenue"),

@@ -18,52 +18,43 @@ import org.apache.spark.sql.types._
   */
 object StreamOps {
 
-  /** st46's standing corpus window index (16-byte md5 per 40-char window)
-    * as a HASH-BUCKETED external table on `h`, persisted once per fixture —
-    * the coPurchaseEdges shared-artifact pattern; production maintains it
-    * incrementally at ingest. Bucketing is the scale decision (r12, forced
-    * by the st48 100x probe): the per-trigger scrub left-semi-joins arrival
-    * windows against this corpus-sized index, and with a plain parquet
-    * index BOTH join sides exchange — ~2 GiB of standing index re-shuffled
-    * and re-sorted EVERY trigger at 100x (4.1 GiB shuffle over two
-    * triggers, 350 MiB spill, 115 s wall, measured). A bucketed table scan
-    * reports HashPartitioning(h, buckets), so EnsureRequirements exchanges
-    * only the arrival side — per-trigger shuffle is O(arrival windows),
-    * which is the claim these ops make in their Scaladoc.
-    */
-  private val artifactCache =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
   private val WinIdxBuckets = 32
 
-  /** Build-or-reuse a hash-bucketed standing-artifact table. Returns the
-    * table name. The cache survives the session that built the table dying
-    * (value carries the external-table path), so a later session in the
-    * same JVM re-registers the same files — but sessions over one
-    * SparkContext share the external catalog, so the DDL branch only fires
-    * on a fresh SparkContext. `schemaDdl` must match what `build` emits
-    * (used only by the re-register DDL).
+  /** Build-or-reuse a hash-bucketed standing-artifact table (the
+    * coPurchaseEdges shared-artifact pattern; production maintains it
+    * incrementally at ingest) and return the table name. Bucketing is the
+    * scale decision (r12, forced by the st48 100x probe): a per-trigger
+    * probe left-semi-joins arrival rows against a corpus-sized index, and
+    * with a plain parquet index BOTH join sides exchange — ~2 GiB of
+    * standing index re-shuffled and re-sorted EVERY trigger at 100x (4.1
+    * GiB shuffle over two triggers, 350 MiB spill, 115 s wall, measured).
+    * A bucketed table scan reports HashPartitioning(bucketCol, buckets),
+    * so EnsureRequirements exchanges only the arrival side.
+    *
+    * The files live in the [[Streaming.stagedDir]] of (`prefix`,
+    * `cacheKey`), so `build` runs once per JVM. A session whose catalog
+    * lacks the table (a fresh SparkContext: sessions over one context
+    * share the external catalog) re-registers the same files through DDL;
+    * `schemaDdl` must match what `build` emits.
     */
   private[graft] def bucketedArtifact(s: org.apache.spark.sql.SparkSession,
       cacheKey: String, prefix: String, bucketCol: String, schemaDdl: String)(
       build: => org.apache.spark.sql.DataFrame): String = {
-    val (tbl, path) = artifactCache.getOrElseUpdate(cacheKey, {
-      val p = Streaming.scratchDir(s"graft_${prefix}_")
-      // 128-bit digest, not String.hashCode: a 32-bit collision between two
-      // live cache keys would silently repoint the shared table name at the
-      // other artifact's data (review r12)
-      val t = s"graft_${prefix}_" + java.security.MessageDigest
-        .getInstance("MD5").digest(cacheKey.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
+    // 128-bit digest, not String.hashCode: a 32-bit collision between two
+    // live cache keys would silently repoint the shared table name at the
+    // other artifact's data (review r12)
+    val tbl = s"graft_${prefix}_" + java.security.MessageDigest
+      .getInstance("MD5").digest(cacheKey.getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+    val path = Streaming.stagedDir(prefix, cacheKey) { p =>
       // pre-partition on the bucket key: each task holds exactly one
       // bucket (repartition and bucketBy share murmur3 partitioning), so
       // the write emits one file per bucket instead of tasks x buckets
       build.repartition(WinIdxBuckets, col(bucketCol))
         .write.mode("overwrite")
         .bucketBy(WinIdxBuckets, bucketCol).sortBy(bucketCol)
-        .option("path", p).saveAsTable(t)
-      (t, p)
-    })
+        .option("path", p).saveAsTable(tbl)
+    }
     if (!s.catalog.tableExists(tbl))
       s.sql(s"CREATE TABLE $tbl ($schemaDdl) USING PARQUET " +
         s"CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) " +
@@ -71,45 +62,52 @@ object StreamOps {
     tbl
   }
 
-  /** The st46/st48 standing window index as a bucketed table on `h`. */
+  /** The st46/st48/st49 standing corpus window index (16-byte md5 per
+    * 40-char window of the non-arriving slice) as a bucketed table on `h`. */
   private[graft] def standingWinIndex(s: org.apache.spark.sql.SparkSession,
       d: String, docs: org.apache.spark.sql.DataFrame): String =
-    bucketedArtifact(s, s"winidx@v1#$d#${docsFingerprint(d)}", "st46_idx",
-      "h", "h BINARY") {
+    bucketedArtifact(s, s"winidx@v1#$d", "st46_idx", "h", "h BINARY") {
       docs.filter(col("doc_id") % 5 =!= 3 && col("n_chars") >= 40)
         .select(col("text"),
           explode(expr("sequence(1, cast(n_chars as int) - 39)")).as("pos"))
         .select(expr("unhex(md5(substring(text, pos, 40)))").as("h"))
     }
 
-  /** st47's standing pHash band index (doc_id, phash, band, bits of the
-    * non-arriving corpus slice) — same shared-artifact pattern/cache rules
-    * as [[artifactCache]].
-    */
-  private val phashIdxCache =
-    scala.collection.concurrent.TrieMap[String, String]()
+  /** The st47/st48 standing pHash band index (doc_id, phash, band, bits
+    * of the non-arriving corpus slice): a parquet dir, since its probe is
+    * a band equi-join against the small arrival side. */
+  private def standingPhashIndex(s: org.apache.spark.sql.SparkSession,
+      d: String, docs: org.apache.spark.sql.DataFrame): String =
+    Streaming.stagedDir("st47_idx", d) { p =>
+      Multimodal.phashBands(
+          Multimodal.phashOf(docs.filter(col("doc_id") % 5 =!= 3)))
+        .write.mode("overwrite").parquet(p)
+    }
 
-  /** Content fingerprint of a fixture's documents table (file mtimes) —
-    * cache keys carry it so regenerating a fixture in place invalidates
-    * persisted shared artifacts (ADVICE r10).
-    */
-  private def docsFingerprint(d: String): String =
-    tableFingerprint(d, "documents.parquet")
+  /** The st46/st47/st48 arrival stream: the doc_id % 5 == 3 slice in two
+    * triggers, split at doc_id 2500. */
+  private def stagedArrivals(s: org.apache.spark.sql.SparkSession,
+      d: String, arriving: org.apache.spark.sql.DataFrame): String =
+    Streaming.stagedDir("admit_arr", d)(Streaming.stage(s, _,
+      arriving.filter(col("doc_id") < 2500),
+      arriving.filter(col("doc_id") >= 2500)))
 
-  private def tableFingerprint(d: String, table: String): String = {
-    val p = java.nio.file.Paths.get(d, table)
-    val fp = new StringBuilder
-    if (java.nio.file.Files.isDirectory(p)) {
-      // Files.list holds an open DirectoryStream — close it deterministically
-      val s = java.nio.file.Files.list(p)
-      try s.sorted().forEach(f =>
-        fp.append(f.getFileName).append(':')
-          .append(java.nio.file.Files.getLastModifiedTime(f).toMillis)
-          .append(';'))
-      finally s.close()
-    } else if (java.nio.file.Files.exists(p))
-      fp.append(java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    fp.toString
+  /** The st05/st16/st43 training stream: the embeddings as (features,
+    * target) rows in 4 range files on vec_id, one trigger each. */
+  private def stagedTrainStream(s: org.apache.spark.sql.SparkSession,
+      d: String): (String, StructType) = {
+    val dir = Streaming.stagedDir("train", d) { dir =>
+      T.embeddings(s, d).select(
+          col("vec_id"),
+          col("embedding").cast(ArrayType(DoubleType)).as("features"),
+          when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
+        .repartitionByRange(4, col("vec_id"))
+        .select("features", "target")
+        .write.mode("append").parquet(dir)
+    }
+    (dir, StructType(Seq(
+      StructField("features", ArrayType(DoubleType)),
+      StructField("target", DoubleType))))
   }
 
   private def uniq(prefix: String): String =
@@ -300,18 +298,7 @@ object StreamOps {
     // per-batch learning curve + shipping stats.
     Op("st05_streaming_train", (s, d) => {
       import s.implicits._
-      val dir = Streaming.stagedDir("train", d) { dir =>
-        T.embeddings(s, d).select(
-            col("vec_id"),
-            col("embedding").cast(ArrayType(DoubleType)).as("features"),
-            when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-          .repartitionByRange(4, col("vec_id"))
-          .select("features", "target")
-          .write.mode("append").parquet(dir)
-      }
-      val schema = StructType(Seq(
-        StructField("features", ArrayType(DoubleType)),
-        StructField("target", DoubleType)))
+      val (dir, schema) = stagedTrainStream(s, d)
       val fit = StreamingTrainer.fitStream(s, dir, schema,
         graft.pipeline.PipelineSpec(11, "PA", Map("C" -> 0.01), Nil, "Synchronous"))
       // hash-gated curve invariants (the ml01-08 trainOp pattern applied to
@@ -356,20 +343,9 @@ object StreamOps {
     // MlSuite/PipelineSparkSuite).
     Op("st16_drift_stream_train", (s, d) => {
       import s.implicits._
-      // same staged layout as st05 (the drift gate lives in the protocol,
-      // not the data), so share the memoized staging
-      val dir = Streaming.stagedDir("train", d) { dir =>
-        T.embeddings(s, d).select(
-            col("vec_id"),
-            col("embedding").cast(ArrayType(DoubleType)).as("features"),
-            when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-          .repartitionByRange(4, col("vec_id"))
-          .select("features", "target")
-          .write.mode("append").parquet(dir)
-      }
-      val schema = StructType(Seq(
-        StructField("features", ArrayType(DoubleType)),
-        StructField("target", DoubleType)))
+      // same staged stream as st05 (the drift gate lives in the protocol,
+      // not the data)
+      val (dir, schema) = stagedTrainStream(s, d)
       val fit = StreamingTrainer.fitStream(s, dir, schema,
         graft.pipeline.PipelineSpec(16, "PA", Map("C" -> 0.01), Nil, "GM",
           protocolHp = Map("threshold" -> 1e12)),
@@ -1109,7 +1085,7 @@ object StreamOps {
       // side's exchange plus a pruned index scan; production maintains
       // this table incrementally at ingest (the d15 amortization story).
       val ebTbl = bucketedArtifact(s,
-        s"annserve@v1#$d#${tableFingerprint(d, "embeddings.parquet")}",
+        s"annserve@v1#$d",
         "st22_idx", "bucket",
         "vec_id BIGINT, embedding ARRAY<FLOAT>, bucket BIGINT") {
         val e = T.embeddings(s, d)
@@ -1699,7 +1675,7 @@ object StreamOps {
       // reads (§2.3); o_orderdate pre-cast to TIMESTAMP is exactly the
       // cast the as-of operator applied per trigger anyway.
       val ordersTbl = bucketedArtifact(s,
-        s"pitorders@v1#$d#${tableFingerprint(d, "orders.parquet")}",
+        s"pitorders@v1#$d",
         "st30_orders", "o_custkey",
         "o_custkey BIGINT, o_orderdate TIMESTAMP, o_orderkey BIGINT, " +
           "o_totalprice DOUBLE") {
@@ -2070,19 +2046,8 @@ object StreamOps {
     // or a quantum reset shipping vectors each flip a hashed boolean.
     Op("st43_fgm_stream_train", (s, d) => {
       import s.implicits._
-      // same staged layout as st05/st16 (the protocol is the variable)
-      val dir = Streaming.stagedDir("train", d) { dir =>
-        T.embeddings(s, d).select(
-            col("vec_id"),
-            col("embedding").cast(ArrayType(DoubleType)).as("features"),
-            when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-          .repartitionByRange(4, col("vec_id"))
-          .select("features", "target")
-          .write.mode("append").parquet(dir)
-      }
-      val schema = StructType(Seq(
-        StructField("features", ArrayType(DoubleType)),
-        StructField("target", DoubleType)))
+      // same staged stream as st05/st16 (the protocol is the variable)
+      val (dir, schema) = stagedTrainStream(s, d)
       val fit = StreamingTrainer.fitStream(s, dir, schema,
         graft.pipeline.PipelineSpec(43, "PA", Map("C" -> 0.01), Nil, "FGM",
           protocolHp = Map("threshold" -> 1e12)),
@@ -2244,20 +2209,12 @@ object StreamOps {
     Op("st46_stream_admission_scrub", (s, d) => {
       val docs = T.documents(s, d)
       // static side: the existing corpus's window index — 16-byte binary
-      // md5 per 40-char window, persisted ONCE per fixture and shared
-      // across invocations (the coPurchaseEdges/quantCache shared-artifact
-      // pattern: in production this is the store's standing dedup index,
-      // maintained incrementally, not rebuilt per query)
-      // Cache key carries a content fingerprint (documents parquet mtimes),
-      // not just the dir path — regenerating a fixture in place within one
-      // JVM session invalidates the persisted index (ADVICE r10).
+      // md5 per 40-char window, built once per fixture and shared across
+      // invocations (in production this is the store's standing dedup
+      // index, maintained incrementally, not rebuilt per query)
       val idxTbl = standingWinIndex(s, d, docs)
       val arriving = docs.filter(col("doc_id") % 5 === 3)
-      val dir = Streaming.scratchDir("graft_st46_src_")
-      arriving.filter(col("doc_id") < 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
-      arriving.filter(col("doc_id") >= 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
+      val dir = stagedArrivals(s, d, arriving)
       val out = Streaming.output("graft_st46_out_")
       val schema = arriving.schema
       Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
@@ -2356,19 +2313,9 @@ object StreamOps {
     // per arrival; nothing corpus-sized shuffles per trigger.
     Op("st47_stream_phash_admission", (s, d) => {
       val docs = T.documents(s, d)
-      val idxDir = phashIdxCache.getOrElseUpdate(s"$d#${docsFingerprint(d)}", {
-        val p = Streaming.scratchDir("graft_st47_idx_")
-        Multimodal.phashBands(
-            Multimodal.phashOf(docs.filter(col("doc_id") % 5 =!= 3)))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+      val idxDir = standingPhashIndex(s, d, docs)
       val arriving = docs.filter(col("doc_id") % 5 === 3)
-      val dir = Streaming.scratchDir("graft_st47_src_")
-      arriving.filter(col("doc_id") < 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
-      arriving.filter(col("doc_id") >= 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
+      val dir = stagedArrivals(s, d, arriving)
       val out = Streaming.output("graft_st47_out_")
       val schema = arriving.schema
       Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
@@ -2426,21 +2373,10 @@ object StreamOps {
     // cannot move a decision (both probes hit static indexes).
     Op("st48_stream_admit_scrub_composed", (s, d) => {
       val docs = T.documents(s, d)
-      val fp = docsFingerprint(d)
-      val phIdxDir = phashIdxCache.getOrElseUpdate(s"$d#$fp", {
-        val p = Streaming.scratchDir("graft_st47_idx_")
-        Multimodal.phashBands(
-            Multimodal.phashOf(docs.filter(col("doc_id") % 5 =!= 3)))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+      val phIdxDir = standingPhashIndex(s, d, docs)
       val winIdxTbl = standingWinIndex(s, d, docs)
       val arriving = docs.filter(col("doc_id") % 5 === 3)
-      val dir = Streaming.scratchDir("graft_st48_src_")
-      arriving.filter(col("doc_id") < 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
-      arriving.filter(col("doc_id") >= 2500).coalesce(1)
-        .write.mode("append").parquet(dir)
+      val dir = stagedArrivals(s, d, arriving)
       val out = Streaming.output("graft_st48_out_")
       val schema = arriving.schema
       Streaming.drain(s, dir, schema, Sink.Writes(out) { (b, w) =>
@@ -2707,10 +2643,12 @@ object StreamOps {
           .agg(count(lit(1)).as("n"), sum(Num.dec2(col("value"))).as("sv"))
           .select(col("event_type"),
             unix_micros(col("window.start")).as("day_us"), col("n"), col("sv")))
-    def nDataFiles(): Long =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(out.data))
-        .iterator().asScala
+    def nDataFiles(): Long = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out.data))
+      try walk.iterator().asScala
         .count(f => f.getFileName.toString.startsWith("part-")).toLong
+      finally walk.close()
+    }
     runToQuiescence()
     val filesBefore = nDataFiles()
     val last = dropLastCommit(out)

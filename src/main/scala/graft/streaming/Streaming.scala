@@ -121,11 +121,15 @@ object Streaming {
   private val stagedDirCache =
     scala.collection.concurrent.TrieMap[(String, String), String]()
 
-  /** Memoized scratch staging: `build` runs once per (key, sfDir) and the
-    * staged directory is shared by every later call — fixture staging is
-    * scaffolding, not operator cost, and re-writing the same parquet layout
-    * per bench pass would bill the query for it. The dir holds only the
-    * staged data files: every [[drain]] over it checkpoints elsewhere.
+  /** The one memo of an on-disk artifact derived from a fixture (staged
+    * streams, layout copies, standing indexes, bucketed tables, the w09
+    * database): `build` fills a fresh [[scratchDir]] on the first call per
+    * (key, sfDir), and every later call in the JVM gets that dir back.
+    * The policy: a fixture cannot change under a running JVM, so nothing
+    * fingerprints it; each artifact is built on its first use per JVM and
+    * deleted by the scratch exit hook, so none outlives it. Building is
+    * scaffolding, not operator cost. A staged stream's dir holds only its
+    * data files: every [[drain]] over it checkpoints elsewhere.
     */
   def stagedDir(key: String, sfDir: String)(build: String => Unit): String =
     stagedDirCache.getOrElseUpdate((key, sfDir), {

@@ -225,39 +225,6 @@ class OperatorSuite extends AnyFunSuite {
     }
   }
 
-  test("q44 fixture tags are collision-free where hashCode collides") {
-    // "Aa" and "BB" are the classic String.hashCode collision pair: the old
-    // d.hashCode cache key would have silently reused one dir's bucketed
-    // tables for the other
-    val parent =
-      java.nio.file.Paths.get(graft.streaming.Streaming.scratchDir("graft_tagtest_"))
-    def mk(name: String): String = {
-      val dir = parent.resolve(name)
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(dir.resolve("t.parquet"), name)
-      dir.toString
-    }
-    val d1 = mk("Aa"); val d2 = mk("BB")
-    assert("Aa".hashCode == "BB".hashCode, "precondition: hashCode collision pair")
-    assert(operators.Relational2.fixtureTag(d1) != operators.Relational2.fixtureTag(d2))
-    // and the tag is stable for the same dir (it keys a persistent catalog
-    // table, so it must not vary run to run)
-    assert(operators.Relational2.fixtureTag(d1) == operators.Relational2.fixtureTag(d1))
-    // nested directory-per-table layouts still fingerprint file-level
-    val d3dir = parent.resolve("nested").resolve("lineitem")
-    java.nio.file.Files.createDirectories(d3dir)
-    java.nio.file.Files.writeString(d3dir.resolve("part-0.parquet"), "x")
-    val t3a = operators.Relational2.fixtureTag(parent.resolve("nested").toString)
-    java.nio.file.Files.writeString(d3dir.resolve("part-0.parquet"), "regenerated!")
-    assert(operators.Relational2.fixtureTag(parent.resolve("nested").toString) != t3a,
-      "nested regeneration must change the tag")
-    // a fixture dir with no parquet anywhere must refuse a path-only tag
-    val empty = java.nio.file.Files.createDirectory(parent.resolve("empty"))
-    intercept[IllegalArgumentException] {
-      operators.Relational2.fixtureTag(empty.toString)
-    }
-  }
-
   test("sequence packing matches a sequential brute-force per source") {
     import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.001"

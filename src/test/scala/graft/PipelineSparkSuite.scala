@@ -8,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.warehouse.dir",
-      graft.streaming.Streaming.scratchDir("graft_wh_"))
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 }
 
 class PipelineSparkSuite extends AnyFunSuite {
@@ -276,8 +267,12 @@ class PipelineSparkSuite extends AnyFunSuite {
     def check(run: Protocol, ref: Protocol, reps: Seq[ModelState],
         prev: Option[ModelState]): ProtocolStats = {
       val (sRun, sRef) = (ProtocolStats(), ProtocolStats())
-      val got = Protocols.round(spark.sparkContext.parallelize(reps, reps.length),
-        prev, run, learner, maxP, sRun).get
+      // a one-entry stale-read window: its head is the previous global
+      val window = spark.sparkContext.broadcast(IndexedSeq(prev))
+      val got = try Protocols.round(
+        spark.sparkContext.parallelize(reps, reps.length), window, run,
+        learner, maxP, sRun).get
+      finally window.destroy()
       val want = replay(ref, reps, prev, sRef)
       assert(java.util.Arrays.equals(got.params, want.params),
         s"${run.name}: ${got.params.toSeq} != ${want.params.toSeq}")

@@ -29,6 +29,30 @@ class StreamingSuite extends AnyFunSuite {
     } finally Files.deleteIfExists(other)
   }
 
+  test("stagedDir builds once per (key, sfDir) under the scratch base, " +
+    "and a different sfDir gets a fresh dir") {
+    import java.nio.file.{Files, Paths}
+    val key = s"memo_test_${System.nanoTime()}"
+    var builds = 0
+    def staged(sfDir: String): String = Streaming.stagedDir(key, sfDir) { dir =>
+      builds += 1
+      Files.writeString(Paths.get(dir, "part"), sfDir)
+    }
+    val a = staged("/fixture/a")
+    assert(staged("/fixture/a") == a && builds == 1,
+      "build re-ran for the same (key, sfDir)")
+    val probe = Streaming.scratchDir("graft_memo_probe_")
+    assert(Paths.get(a).getParent == Paths.get(probe).getParent,
+      s"$a is not under the scratch base")
+    val b = staged("/fixture/b")
+    assert(b != a && builds == 2,
+      "a different sfDir was served another fixture's artifact")
+    assert(Files.readString(Paths.get(b, "part")) == "/fixture/b")
+    // the artifacts are scratch dirs: the exit hook's cleanScratch owns them
+    Streaming.cleanScratch(Seq(a, b, probe))
+    assert(!Files.exists(Paths.get(a)) && !Files.exists(Paths.get(b)))
+  }
+
   test("stager: file k is trigger k, and a part staged later is the next " +
     "drain's next trigger") {
     val spark = TestSession.spark
