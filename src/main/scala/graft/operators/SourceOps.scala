@@ -197,6 +197,9 @@ object SourceOps {
         props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
         def url(dbDir: String) = s"jdbc:derby:$dbDir/db;create=true"
         val dbDir = graft.streaming.Streaming.stagedDir("derby", d) { p =>
+          // Derby's log, read when it first boots, else derby.log in the
+          // working dir
+          System.setProperty("derby.stream.error.file", s"$p/derby.log")
           T.orders(s, d)
             .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
               col("o_totalprice"), col("o_orderpriority"))

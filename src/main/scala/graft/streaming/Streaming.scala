@@ -50,13 +50,16 @@ object Streaming {
     * on the caller's session. transformWithState needs the RocksDB
     * provider. The provider's default row-count metric
     * (`trackTotalNumberOfRows`) GETs the whole merged value on every state
-    * write, so it is off (PLANS.md r10).
+    * write, so it is off (PLANS.md r10). Its queries checkpoint through
+    * [[LocalCheckpointFileManager]], also those started on it directly
+    * rather than through [[drain]].
     */
   def stateSession(s: SparkSession): SparkSession = {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s2.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    LocalCheckpointFileManager.install(s2)
     s2
   }
 
@@ -72,8 +75,10 @@ object Streaming {
     * only dodges shared-disk fsync latency on the local bench — the
     * checkpoint protocol (offset/commit WAL, state-store deltas, recovery)
     * runs unchanged, and the restart tests prove recovery against the
-    * same layout. A cluster deployment points checkpoints at HDFS/S3
-    * instead.
+    * same layout. Every checkpoint here is a `file:` root, which
+    * [[LocalCheckpointFileManager]] writes without starting processes. A
+    * cluster deployment points checkpoints at HDFS/S3 instead, and gets
+    * Spark's default manager there.
     */
   private val scratchBase: java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
@@ -152,11 +157,18 @@ object Streaming {
     */
   val StreamShufflePartitions = 4
 
-  /** Run `body` with the session's shuffle partitions temporarily lowered to
-    * [[StreamShufflePartitions]] (streaming queries bake the value into their
-    * state checkpoint at start).
+  /** Run `body`, which starts streaming queries on `spark`, under the
+    * engine's query-scoped conf:
+    *  - the session's shuffle partitions temporarily lowered to
+    *    [[StreamShufflePartitions]] (streaming queries bake the value into
+    *    their state checkpoint at start), restored after `body`;
+    *  - [[LocalCheckpointFileManager]] as the checkpoint manager, left set
+    *    on `spark`. It must outlive `start()`: the stream thread builds the
+    *    file source, and its offset log, from the reader's session after
+    *    `start()` returns.
     */
   def withStreamShuffle[A](spark: SparkSession)(body: => A): A = {
+    LocalCheckpointFileManager.install(spark)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)

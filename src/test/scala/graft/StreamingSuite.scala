@@ -155,6 +155,169 @@ class StreamingSuite extends AnyFunSuite {
     }
   }
 
+  /** The thread name of every `jdk.ProcessStart` event while `body` runs,
+    * recorded in-process by JFR. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val f = java.nio.file.Paths.get(Streaming.scratchDir("graft_jfr_"), "starts.jfr")
+    try rec.dump(f) finally rec.close()
+    jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+      .map(e => Option(e.getThread).map(_.getJavaName).getOrElse(""))
+  }
+
+  test("no process starts on the stream execution thread or the state " +
+    "store's checksum threads: a staged drain and a TwsSpoke drain") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    val schema = Seq(1).toDF().schema
+    def drainThree(): Unit = {
+      // a fresh session: no earlier test's drain has set its conf
+      val s = spark.newSession()
+      val dir = Streaming.scratchDir("graft_nofork_")
+      Streaming.stage(s, dir, (0 until 3).map(k => Seq(k, k + 1).toDS()): _*)
+      Streaming.drain(s, dir, schema, Streaming.Sink.Batches((b, _) => b.count()))(identity)
+    }
+    val spoke = SpokeHarness.stage(spark, lifecycleFiles.take(3))
+    // one-time start-ups (Hadoop's Shell class init forks `setsid`) land on
+    // whichever thread gets there first: pay them off the record
+    drainThree()
+    SpokeHarness.runTws(spark, spoke)
+    val threads = processStarts {
+      drainThree()
+      SpokeHarness.runTws(spark, spoke)
+      // the recording sees a start on this thread
+      new ProcessBuilder("true").start().waitFor()
+    }
+    assert(threads.contains(Thread.currentThread().getName), threads.toString)
+    val onQuery = threads.filter(t => t.startsWith("stream execution thread") ||
+      t.startsWith("ChecksumCheckpointFileManager-Thread"))
+    assert(onQuery.isEmpty, s"${onQuery.size} process starts: ${onQuery.distinct}")
+  }
+
+  /** Write `text` to `p` through `fm`'s atomic stream. */
+  private def writeAtomic(fm: org.apache.spark.sql.execution.streaming.checkpointing
+      .CheckpointFileManager, p: org.apache.hadoop.fs.Path, text: String,
+      overwrite: Boolean): Unit = {
+    val o = fm.createAtomic(p, overwrite)
+    o.write(text.getBytes("UTF-8"))
+    o.close()
+  }
+
+  private def readAll(fm: org.apache.spark.sql.execution.streaming.checkpointing
+      .CheckpointFileManager, p: org.apache.hadoop.fs.Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("checkpoint manager: a non-overwriting rename onto a file throws and " +
+    "leaves it, cancel leaves no temp file, and a non-file root gets " +
+    "Spark's default manager") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
+    import java.nio.file.{Files, Paths}
+    // the Hadoop conf Spark hands its managers, from a session that has it
+    val session = TestSession.spark.newSession()
+    LocalCheckpointFileManager.install(session)
+    val conf = session.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+    val dir = Streaming.scratchDir("graft_ckptfm_")
+    val fm = CheckpointFileManager.create(new Path(dir), conf)
+    assert(fm.asInstanceOf[LocalCheckpointFileManager].underlying
+      .isInstanceOf[LocalCheckpointFileManager.Nio])
+    def entries() = Files.list(Paths.get(dir)).toArray.map(_.toString).sorted.toSeq
+    val a = new Path(s"$dir/log/0")
+    writeAtomic(fm, a, "first", overwrite = false)
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      writeAtomic(fm, a, "second", overwrite = false))
+    assert(readAll(fm, a) == "first")
+    assert(Files.list(Paths.get(s"$dir/log")).toArray.map(_.toString).toSeq ==
+      Seq(s"$dir/log/0"), "a failed rename left its temp file")
+    writeAtomic(fm, a, "third", overwrite = true)
+    assert(readAll(fm, a) == "third")
+    val before = entries()
+    val o = fm.createAtomic(new Path(s"$dir/cancelled"), false)
+    o.write(1)
+    o.cancel()
+    assert(entries() == before)
+    // a non-file root: the manager Spark would pick without the conf
+    conf.set("fs.AbstractFileSystem.graftremote.impl", classOf[RemoteTestFs].getName)
+    val remote = new Path("graftremote:/ckpt")
+    val picked = new LocalCheckpointFileManager(remote, conf).underlying
+    assert(picked.getClass == classOf[FileContextBasedCheckpointFileManager])
+    conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    assert(picked.getClass == CheckpointFileManager.create(remote, conf).getClass)
+  }
+
+  test("checkpoint manager: overwriting a file Spark's default manager wrote " +
+    "drops its stale .crc") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val dir = Streaming.scratchDir("graft_ckptcrc_")
+    val a = new Path(s"$dir/1.zip")
+    writeAtomic(new FileContextBasedCheckpointFileManager(new Path(dir), conf), a,
+      "default manager", overwrite = true)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, ".1.zip.crc")),
+      "Spark's default manager wrote no .crc")
+    val fm = new LocalCheckpointFileManager(new Path(dir), conf)
+    writeAtomic(fm, a, "engine", overwrite = true)
+    assert(readAll(fm, a) == "engine")
+  }
+
+  test("a spoke checkpoint begun under Spark's default manager resumes " +
+    "under the engine's, replaying its crashed last batch, and equals the " +
+    "per-key replay") {
+    import scala.jdk.CollectionConverters._
+    val files = lifecycleFiles
+    val spark = TestSession.spark
+    val dir = SpokeHarness.stage(spark, files.take(3))
+    val data = s"$dir/data"
+    val schema = org.apache.spark.sql.Encoders.product[Envelope].schema
+    val out = Streaming.output("graft_mixed_")
+    def spoke(src: org.apache.spark.sql.DataFrame) =
+      TwsSpoke.run(src.as[Envelope](org.apache.spark.sql.Encoders.product[Envelope])).toDF()
+    def write(b: org.apache.spark.sql.DataFrame, w: Streaming.Writer): Unit =
+      w.write("events", b)
+    // Spark's default manager: a state session with the conf unset
+    val s1 = Streaming.stateSession(spark)
+    s1.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    s1.conf.set("spark.sql.shuffle.partitions", Streaming.StreamShufflePartitions.toString)
+    val q = spoke(Streaming.source(s1, data, schema)).writeStream
+      .option("checkpointLocation", out.checkpoint)
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
+        write(b, new Streaming.Writer(out, id)))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out.checkpoint))
+    try assert(walk.iterator().asScala.exists(_.getFileName.toString.endsWith(".crc")),
+      "Spark's default manager wrote no .crc")
+    finally walk.close()
+    // batch 2 re-executes under the engine's manager, over its .crc'd files
+    assert(graft.operators.StreamOps.dropLastCommit(out) == 2L)
+    def resume(): Unit = Streaming.drain(Streaming.stateSession(spark), data, schema,
+      Streaming.Sink.Writes(out)(write))(spoke)
+    resume()
+    // a later incarnation reloads the state the replay wrote
+    Streaming.stage(spark, data, files.drop(3).map(f =>
+      spark.createDataset(f)(org.apache.spark.sql.Encoders.product[Envelope])): _*)
+    resume()
+    val got = out.read(spark, "events").as[SpokeEvent](
+      org.apache.spark.sql.Encoders.product[SpokeEvent]).collect().toSeq
+    assert(SpokeHarness.diff(got, SpokeHarness.replay(files)) == "")
+    // the log entries the resumed incarnations wrote have no .crc: the
+    // engine's manager wrote them
+    for (entry <- Seq("commits/2", "offsets/3", "commits/3", "offsets/4", "commits/4")) {
+      val f = java.nio.file.Paths.get(out.checkpoint, entry)
+      assert(java.nio.file.Files.exists(f), s"no $entry")
+      assert(!java.nio.file.Files.exists(f.resolveSibling(s".${f.getFileName}.crc")),
+        s"$entry has a .crc")
+    }
+  }
+
   test("pre-Create data buffers, Create drains it into training") {
     val st = new Steps()
     val out = st(data(0, 10, Some(1.0)), data(1, 11, Some(-1.0)),
@@ -743,3 +906,9 @@ class EvoProcV2
     Iterator.single(EvoOut(key, c, mx))
   }
 }
+
+/** An `AbstractFileSystem` for a scheme no file: path has, so that a
+  * checkpoint root on it is not local; only constructed, never written. */
+class RemoteTestFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new org.apache.hadoop.fs.RawLocalFileSystem(), conf, "graftremote", false)
