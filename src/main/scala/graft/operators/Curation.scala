@@ -27,14 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Curation {
 
-  // r13: row-local distinct-shingle kernel — the global distinct() this
-  // pipeline carried shuffled the full shingle-string table; per-doc
-  // distinct equals it because doc_id is unique in every caller's frame
-  // (equivalence argument at graft.functions.VectorOps.wordShingles5)
-  private def shingleSet(df: DataFrame): DataFrame = df
-    .select(col("doc_id"),
-      explode(graft.functions.F.wordShingles5(col("text"))).as("sh"))
-
   val ops: Seq[Op] = Seq(
     Op(
       "p01_corpus_curation",
@@ -61,10 +53,10 @@ object Curation {
         // benchmark shingle set is fixed (all src19 docs), broadcast to
         // the survivor shingles; contaminated >= 5% overlap is dropped,
         // and benchmark-source docs never enter the training corpus.
-        val bench = shingleSet(docs.filter(col("source") === "src19"))
+        val bench = Dedup.shingleRows(docs.filter(col("source") === "src19"))
           .select("sh").distinct()
         val corpus = dedup.filter(col("source") =!= "src19")
-        val csh = shingleSet(corpus)
+        val csh = Dedup.shingleRows(corpus)
         val sz = csh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
         val ov = csh.join(broadcast(bench), "sh")
           .groupBy("doc_id").agg(count(lit(1)).as("n_ov"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Op, T}
 import graft.functions.F
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -71,9 +71,124 @@ object Similarity {
   /** Embedding dimensionality of the fixture corpus. */
   private val EmbDim = 64
 
-  /** Memoized full-corpus coarse quantizer, shared by s03/s04/s07 and s09's
-    * coarse stage (the g08 shared-artifact pattern): all four train the SAME
-    * model — identical data, identical range-partitioning, identical online
+  /** The 16 query vectors every ANN op ranks the corpus against, as
+    * `(q_id, q_emb, extra...)`.
+    */
+  private def queries(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < 16)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb")) ++ extra: _*)
+
+  /** The cosine of every (query, candidate) pair in `pairs` (`q_id`,
+    * `q_emb`, `vec_id`, `embedding`), the query itself excluded.
+    */
+  private def cosines(pairs: DataFrame): DataFrame =
+    pairs.filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
+
+  /** The one per-query top-k kernel: `(q_id, vec_id, <score>)` rows to the
+    * k best per query as `(q_id, rk, vec_id, <score>)`, rk from 1, by score
+    * descending with ties to the lower vec_id; fewer than k candidates give
+    * the ones there are. It is the partial-mergeable bounded-heap aggregate
+    * (topk_structs / CollectTopK): each partition keeps an O(k) heap per
+    * query and heaps merge map-side, where a rank window would SORT every
+    * candidate row per query. Ascending on (-score, vec_id) is (score DESC,
+    * vec_id ASC); negation is a sign-bit flip, so the emitted score is
+    * bit-identical to the input.
+    *
+    * NaN guard, always on: a zero-norm vector scores cos = 0/0 = NaN, which
+    * a rank window (score DESC) sorts FIRST while the ascending heap sorts
+    * it last. Dropping NaN makes the heap equal the window unconditionally,
+    * not just on all-nonzero fixtures; the oracles filter identically. An
+    * integer score is never NaN, so there the guard keeps every row.
+    */
+  private[graft] def topK(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.filter(!isnan(col(score)))
+      .groupBy("q_id")
+      .agg(F.topkStructs(
+        struct((-col(score)).as("nc"), col("vec_id")), k).as("tk"))
+      .select(col("q_id"), posexplode(col("tk")))
+      .select(col("q_id"), (col("pos") + 1).cast(IntegerType).as("rk"),
+        col("col.vec_id").as("vec_id"), (-col("col.nc")).as(score))
+
+  /** Exact cosine top-k of the queries `q` over `corpus` (`vec_id`,
+    * `embedding`): one broadcast of the query set, one corpus pass, no
+    * shuffle until the per-query heaps.
+    */
+  private def exactTopK(corpus: DataFrame, q: DataFrame, k: Int): DataFrame =
+    topK(cosines(corpus.crossJoin(broadcast(q))), "cos", k)
+
+  /** The one IVF listing: the `n` centroids of `cents` nearest to the
+    * vectors in `emb`, nearest first. n = 1 is a vector's inverted list,
+    * n = nprobe a query's probes. The centroids ride as a plan literal (8 KB
+    * at nlist 16 x 64 dims) into the codegen'd nearest_centroids
+    * expression, not a per-row UDF closure.
+    */
+  private def nearestLists(emb: Column, cents: Array[Double], n: Int): Column =
+    F.nearestCentroids(emb.cast(ArrayType(DoubleType)), lit(cents), EmbDim, n)
+
+  /** `e` with each vector's inverted list as `bucket`. Listing under given
+    * centroids is row-local, so it needs no range exchange or sort.
+    */
+  private def listed(e: DataFrame, cents: Array[Double]): DataFrame =
+    e.withColumn("bucket", element_at(nearestLists(col("embedding"), cents, 1), 1))
+
+  /** The queries `q` with their nprobe probes, one row per (query, bucket). */
+  private def probes(q: DataFrame, cents: Array[Double], nprobe: Int): DataFrame =
+    q.select(col("*"), explode(nearestLists(col("q_emb"), cents, nprobe)).as("bucket"))
+
+  /** The recall@3 gate of s03, s04 and s19: every query's approximate
+    * top-3 is complete, and it recovers at least [[RecallThreshold]] of the
+    * exact top-3. Every side is bounded by the 16 queries at any corpus
+    * scale, so the joins broadcast.
+    */
+  private def recallAt3(approx: DataFrame, exact: DataFrame): DataFrame = {
+    val ids = approx.select("q_id", "vec_id")
+    val perQ = ids.groupBy("q_id").agg(count(lit(1)).as("n3"))
+    val hits = exact.select("q_id", "vec_id").join(broadcast(ids), Seq("q_id", "vec_id"))
+      .groupBy("q_id").agg(count(lit(1)).as("hits"))
+    perQ.join(broadcast(hits), Seq("q_id"), "left")
+      .agg(
+        count(lit(1)).as("n_queries"),
+        (min(col("n3")) === 3 && max(col("n3")) === 3).as("all_topk_complete"),
+        (sum(coalesce(col("hits"), lit(0L))).cast(DoubleType) /
+          (count(lit(1)) * 3) >= RecallThreshold).as("recall_at_3_ge_090"))
+  }
+
+  /** The oracle of [[recallAt3]]: its theorems hold on every fixture. */
+  private val recallOracle =
+    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
+      |  true AS all_topk_complete, true AS recall_at_3_ge_090
+      |FROM embeddings WHERE vec_id < 16""".stripMargin
+
+  /** `fd` (double-array) rows in the order an online K-means fit consumes
+    * them: 8 vec_id ranges, each sorted. The fit is order-dependent
+    * (MacQueen updates), so every fit input takes this order and nothing
+    * else does.
+    */
+  private def inFitOrder(df: DataFrame): DataFrame =
+    df.repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
+
+  /** Fit an online K-means of `k` centroids over the first (double-array)
+    * column of `vecs` through the engine's distributed Trainer, under
+    * pipeline id `id`; returns the filled centroids, flattened.
+    */
+  private def fitKMeans(s: SparkSession, id: Int, k: Int, vecs: DataFrame): Array[Double] = {
+    val fit = graft.pipeline.Trainer.fit(s,
+      graft.pipeline.PipelineSpec(id, "K-means", Map("k" -> k.toDouble), Nil,
+        "Asynchronous", rounds = 1),
+      vecs.rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
+    val km = fit.model.asInstanceOf[graft.ml.KMeansState]
+    km.centroids.slice(0, km.filled * km.dim)
+  }
+
+  /** The corpus as `(vec_id, fd)`, fd the embedding as doubles. */
+  private def doubles(s: SparkSession, d: String): DataFrame =
+    T.embeddings(s, d).select(col("vec_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("fd"))
+
+  /** Memoized full-corpus coarse quantizer, shared by s03/s04/s07/s19 and
+    * s09's coarse stage (the g08 shared-artifact pattern): all of them use
+    * the SAME model — identical data, identical fit order, identical online
     * K-means math (deterministic farthest-point seeding + MacQueen updates;
     * the pipeline-spec id never enters the math) — so the first op to need
     * it pays the one fit and the rest reuse the centroids. Keyed by
@@ -93,68 +208,17 @@ object Similarity {
   }
   private def fullCorpusQuantizer(s: SparkSession, d: String,
       nlist: Int): Array[Double] =
-    quantCache.getOrElseUpdate((d, nlist), {
-      val fd = T.embeddings(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast(ArrayType(DoubleType)).as("fd"))
-        .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-        .select("fd")
-      val quant = graft.pipeline.Trainer.fit(s,
-        graft.pipeline.PipelineSpec(21, "K-means",
-          Map("k" -> nlist.toDouble), Nil, "Asynchronous", rounds = 1),
-        fd.rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
-      val km = quant.model.asInstanceOf[graft.ml.KMeansState]
-      km.centroids.slice(0, km.filled * km.dim)
-    })
+    quantCache.getOrElseUpdate((d, nlist),
+      fitKMeans(s, 21, nlist, inFitOrder(doubles(s, d)).select("fd")))
 
   private val s03 = Op("s03_ann_ivf", (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val nlist = 16; val nprobe = 2
-    val feats = T.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-        col("embedding"))
-      .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-    // centroids as a plan literal (8 KB at nlist=16 x 64 dims): the probe is
-    // the codegen'd nearest_centroids expression, not a per-row UDF closure
-    val centsLit = lit(fullCorpusQuantizer(s, d, nlist))
-    val listed = feats.withColumn("bucket",
-      element_at(F.nearestCentroids(col("fd"), centsLit, EmbDim, 1), 1))
-    // nprobe nearest centroids per query vector
-    val q = listed.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(F.nearestCentroids(col("fd"), centsLit, EmbDim, nprobe)).as("bucket"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val ivf = listed.select(col("vec_id"), col("embedding"), col("bucket"))
-      .join(q, Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select("q_id", "vec_id")
-    // exact top-3 baseline: one broadcast of the query set, one corpus pass
-    val e = T.embeddings(s, d)
-    val qe = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val exact = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(qe))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val perQ = ivf.groupBy("q_id").agg(count(lit(1)).as("ivf_n"))
-    val hits = exact.join(ivf, Seq("q_id", "vec_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("hits"))
-    perQ.join(hits, Seq("q_id"), "left")
-      .agg(
-        count(lit(1)).as("n_queries"),
-        (min(col("ivf_n")) === 3 && max(col("ivf_n")) === 3).as("all_topk_complete"),
-        (sum(coalesce(col("hits"), lit(0L))).cast(DoubleType) /
-          (count(lit(1)) * 3) >= RecallThreshold).as("recall_at_3_ge_090"))
-  },
-    Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-      |  true AS all_topk_complete, true AS recall_at_3_ge_090
-      |FROM embeddings WHERE vec_id < 16""".stripMargin))
+    val cents = fullCorpusQuantizer(s, d, 16)
+    val e = T.embeddings(s, d).select("vec_id", "embedding")
+    val q = queries(e)
+    val ivf = topK(cosines(listed(e, cents)
+      .join(broadcast(probes(q, cents, 2)), Seq("bucket"))), "cos", 3)
+    recallAt3(ivf, exactTopK(e, q, 3))
+  }, Some(recallOracle))
 
   /** The IVF layout made physical (SCALE.md's "inverted lists become the
     * partitioning scheme"): the index is written `partitionBy(bucket)`, and
@@ -167,61 +231,22 @@ object Similarity {
     * reproduces (centroids themselves are not SQL-derivable).
     */
   private val s04 = Op("s04_ann_ivf_pruned", (s, d) => {
-    val nlist = 16; val nprobe = 2
-    val feats = T.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-        col("embedding"))
-      .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-    // list assignment + probe run through the codegen'd nearest_centroids
-    // expression (no per-row UDF closure); quantizer shared with s03/s07/s09
-    val centsLit = lit(fullCorpusQuantizer(s, d, nlist))
+    val cents = fullCorpusQuantizer(s, d, 16)
+    val e = T.embeddings(s, d).select("vec_id", "embedding")
     // materialize the index bucketed by inverted list
     val idxDir = graft.streaming.Streaming.scratchDir("graft_ivf_")
-    feats.withColumn("bucket",
-        element_at(F.nearestCentroids(col("fd"), centsLit, EmbDim, 1), 1))
-      .select("vec_id", "embedding", "bucket")
-      .write.partitionBy("bucket").mode("overwrite").parquet(idxDir)
-    val index = s.read.parquet(idxDir)
+    listed(e, cents).write.partitionBy("bucket").mode("overwrite").parquet(idxDir)
+    val q = queries(e)
     // queries + their nprobe nearest lists (tiny, driver/broadcast side)
-    val q = feats.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(F.nearestCentroids(col("fd"), centsLit, EmbDim, nprobe)).as("bucket"))
-    val probedLists = q.select("bucket").distinct()
+    val qp = probes(q, cents, 2)
+    val probedLists = qp.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val pruned = index
+    val pruned = s.read.parquet(idxDir)
       // static partition filter: only the probed inverted lists are read
       .filter(col("bucket").isin(probedLists: _*))
-      .join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select("q_id", "vec_id")
-    // exact top-3 baseline (s01's kernel) for the recall gate
-    val e = T.embeddings(s, d)
-    val qe = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val exact = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(qe))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val perQ = pruned.groupBy("q_id").agg(count(lit(1)).as("ivf_n"))
-    val hits = exact.join(pruned, Seq("q_id", "vec_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("hits"))
-    perQ.join(hits, Seq("q_id"), "left")
-      .agg(
-        count(lit(1)).as("n_queries"),
-        (min(col("ivf_n")) === 3 && max(col("ivf_n")) === 3).as("all_topk_complete"),
-        (sum(coalesce(col("hits"), lit(0L))).cast(DoubleType) /
-          (count(lit(1)) * 3) >= RecallThreshold).as("recall_at_3_ge_090"))
-  },
-    Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-      |  true AS all_topk_complete, true AS recall_at_3_ge_090
-      |FROM embeddings WHERE vec_id < 16""".stripMargin))
+      .join(broadcast(qp), Seq("bucket"))
+    recallAt3(topK(cosines(pruned), "cos", 3), exactTopK(e, q, 3))
+  }, Some(recallOracle))
 
   /** The nprobe quality sweep an IVF deployment tunes before fixing its
     * recall/cost point. The gates are THEOREMS of the candidate-superset
@@ -236,38 +261,19 @@ object Similarity {
   private val s07 = Op("s07_ivf_recall_curve", (s, d) => {
     import s.implicits._
     val nlist = 16
-    val feats = T.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-        col("embedding"))
-      .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-    val centsLit = lit(fullCorpusQuantizer(s, d, nlist))
-    val listed = feats.withColumn("bucket",
-        element_at(F.nearestCentroids(col("fd"), centsLit, EmbDim, 1), 1))
-      .select("vec_id", "embedding", "bucket").cache()
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val e = T.embeddings(s, d)
-    val qe = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val exact = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(qe))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-      .select(col("q_id"), col("vec_id")).cache()
-    val nq = qe.count()
-    val qf = feats.filter(col("vec_id") < 16)
+    val cents = fullCorpusQuantizer(s, d, nlist)
+    val e = T.embeddings(s, d).select("vec_id", "embedding")
+    val index = listed(e, cents).cache()
+    val q = queries(e)
+    val exact = exactTopK(e, q, 3).select("q_id", "vec_id").cache()
+    val nq = q.count()
     def hitsAt(nprobe: Int): Long = {
-      val q = qf.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        explode(F.nearestCentroids(col("fd"), centsLit, EmbDim, nprobe)).as("bucket"))
-      val ivf = listed.join(broadcast(q), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select("q_id", "vec_id")
-      exact.join(ivf, Seq("q_id", "vec_id")).count()
+      val ivf = topK(cosines(index.join(broadcast(probes(q, cents, nprobe)),
+        Seq("bucket"))), "cos", 3)
+      exact.join(ivf.select("q_id", "vec_id"), Seq("q_id", "vec_id")).count()
     }
-    val probes = Seq(1, 2, 4, nlist)
-    val hits = probes.map(p => p -> hitsAt(p))
+    val probeCounts = Seq(1, 2, 4, nlist)
+    val hits = probeCounts.map(p => p -> hitsAt(p))
     val rows = hits.zip(Long.MinValue +: hits.map(_._2)).map {
       case ((p, h), prev) =>
         (p.toLong, nq, h >= prev, p != nlist || h == 3L * nq)
@@ -295,56 +301,32 @@ object Similarity {
     */
   private val s08 = Op("s08_ivf_index_append", (s, d) => {
     import s.implicits._
-    val nlist = 16
-    val feats = T.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-        col("embedding"))
-      .withColumn("ingest", expr(
-        "CAST(conv(substring(md5(CAST(CAST(vec_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 100") >= 90)
-      .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-    val base = feats.filter(!col("ingest"))
-    val newb = feats.filter(col("ingest"))
-    val quant = graft.pipeline.Trainer.fit(s,
-      graft.pipeline.PipelineSpec(24, "K-means", Map("k" -> nlist.toDouble), Nil,
-        "Asynchronous", rounds = 1),
-      base.select("fd").rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
-    val km = quant.model.asInstanceOf[graft.ml.KMeansState]
-    val centsLit = lit(km.centroids.slice(0, km.filled * km.dim))
-    def listed(df: DataFrame): DataFrame = df.withColumn("bucket",
-        element_at(F.nearestCentroids(col("fd"), centsLit, km.dim, 1), 1))
-      .select("vec_id", "embedding", "bucket")
+    val ingest = expr(
+      "CAST(conv(substring(md5(CAST(CAST(vec_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 100 >= 90")
+    val e = T.embeddings(s, d).select("vec_id", "embedding")
+    val cents = fitKMeans(s, 24, 16,
+      inFitOrder(doubles(s, d).filter(!ingest)).select("fd"))
     // fresh scratch dir per run: base build, then the ingest APPEND —
     // partition-wise, no rebuild of existing lists
     val idxDir = graft.streaming.Streaming.scratchDir("graft_ivfa_")
-    listed(base).write.partitionBy("bucket").mode("overwrite").parquet(idxDir)
-    listed(newb).write.partitionBy("bucket").mode("append").parquet(idxDir)
+    listed(e.filter(!ingest), cents)
+      .write.partitionBy("bucket").mode("overwrite").parquet(idxDir)
+    listed(e.filter(ingest), cents)
+      .write.partitionBy("bucket").mode("append").parquet(idxDir)
     val index = s.read.parquet(idxDir)
-    // ONE lightweight aggregation for both slice sizes (was two counts, each
-    // re-executing the repartitionByRange+sort staging pipeline) — computed
-    // from the raw table, bypassing the sort entirely (guide §1.2)
-    val sliceN: Map[Boolean, Long] = T.embeddings(s, d)
-      .groupBy(expr(
-        "CAST(conv(substring(md5(CAST(CAST(vec_id AS STRING) AS BINARY)), 1, 8), 16, 10) AS BIGINT) % 100 >= 90")
-        .as("ingest"))
+    // ONE aggregation for both slice sizes, from the raw table
+    val sliceN: Map[Boolean, Long] = e.groupBy(ingest.as("ingest"))
       .count().collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
     val nBase = sliceN.getOrElse(false, 0L); val nNew = sliceN.getOrElse(true, 0L)
     val appendComplete = index.count() == nBase + nNew
     // full probe over the appended index vs brute force over the corpus
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val qe = T.embeddings(s, d).filter(col("vec_id") < 16)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    def top3(corpus: DataFrame): DataFrame = corpus
-      .crossJoin(broadcast(qe))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-      .select(col("q_id"), col("rk"), col("vec_id"))
+    val q = queries(e)
     // persist the index-probe top3: it is consumed twice (the match join and
-    // its own cardinality check) and each uncached run re-scans the index +
-    // re-sorts the rank window (guide §5 reuse rule)
-    val viaIndex = top3(index.select("vec_id", "embedding")).persist()
-    val exact = top3(T.embeddings(s, d).select("vec_id", "embedding"))
-    val nq = qe.count()
+    // its own cardinality check)
+    val viaIndex = exactTopK(index.select("vec_id", "embedding"), q, 3)
+      .select("q_id", "rk", "vec_id").persist()
+    val exact = exactTopK(e, q, 3).select("q_id", "rk", "vec_id")
+    val nq = q.count()
     val matched = viaIndex.join(exact, Seq("q_id", "rk", "vec_id")).count()
     val probeExact = matched == 3L * nq && viaIndex.count() == 3L * nq
     viaIndex.unpersist()
@@ -368,35 +350,10 @@ object Similarity {
     Op(
       "s01_topk_bruteforce",
       (s, d) => {
-        // per-query top-5 via the partial-mergeable bounded-heap aggregate
-        // (topk_structs / CollectTopK): each partition keeps an O(k) heap
-        // per query and heaps merge map-side — the rank-window form this
-        // replaced SORTED every candidate row per query, which is the
-        // difference between O(n) and O(n log n) per query over a 100 TB
-        // corpus. Ascending on (-cos, vec_id) == (cos DESC, vec_id ASC);
-        // double negation is a sign-bit flip, so the emitted cos is
-        // bit-identical to the window form and the oracle.
+        // exact per-query top-5 (the kernel's bounded heap): one broadcast
+        // of the query set, one corpus pass
         val e = T.embeddings(s, d)
-        val q = e.filter(col("vec_id") < 16)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-        // NaN guard (r7 advice): a zero-norm vector scores cos = 0/0 = NaN,
-        // which the old rank window (cos DESC) sorts FIRST in both engines
-        // while the ascending heap on (-cos, ...) drops (NaN sorts greatest
-        // ascending too). Filtering NaN before the heap makes the rewrite
-        // equivalent unconditionally, not just on all-nonzero fixtures;
-        // the oracle filters identically. s16 needs no guard — its scores
-        // are exact integers and zero-norm codes are excluded up front.
-        e.select(col("vec_id"), col("embedding"))
-          .crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-          .filter(!isnan(col("cos")))
-          .groupBy("q_id")
-          .agg(F.topkStructs(
-            struct((-col("cos")).as("nc"), col("vec_id")), 5).as("tk"))
-          .select(col("q_id"), posexplode(col("tk")))
-          .select(col("q_id"), (col("pos") + 1).cast(IntegerType).as("rk"),
-            col("col.vec_id").as("vec_id"), (-col("col.nc")).as("cos"))
+        exactTopK(e.select(col("vec_id"), col("embedding")), queries(e), 5)
           .orderBy("q_id", "rk")
       },
       Some(s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 16),
@@ -601,25 +558,13 @@ object Similarity {
     Op(
       "s09_pq_adc",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val m = 8; val sub = 8; val kCodes = 32; val dim = 64
-        val feats = T.embeddings(s, d)
-          .select(col("vec_id"),
-            col("embedding").cast(ArrayType(DoubleType)).as("fd"))
-          .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-          // shared by the coarse fit, 8 codebook fits, coding, SSE and the
-          // rerank — persist once, released by the harness per-query cleanup
-          .persist()
-        def kmeans(id: Int, k: Int, vecs: DataFrame): Array[Double] = {
-          val fit = graft.pipeline.Trainer.fit(s,
-            graft.pipeline.PipelineSpec(id, "K-means",
-              Map("k" -> k.toDouble), Nil, "Asynchronous", rounds = 1),
-            vecs.rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
-          val km = fit.model.asInstanceOf[graft.ml.KMeansState]
-          km.centroids.slice(0, km.filled * km.dim)
-        }
-        // coarse quantizer shared with s03/s04/s07 (bit-identical fit:
-        // same data, same partitioning, same deterministic K-means)
+        // in fit order: the 8 codebook fits read the residuals derived
+        // from it. Shared by those fits, coding, SSE and the rerank —
+        // persist once, released by the harness per-query cleanup
+        val feats = inFitOrder(doubles(s, d)).persist()
+        // coarse quantizer shared with s03/s04/s07/s19 (bit-identical fit:
+        // same data, same fit order, same deterministic K-means)
         val coarse = fullCorpusQuantizer(s, d, 16)
         val resid = feats.withColumn("cc", lit(coarse))
           .withColumn("bucket",
@@ -638,7 +583,7 @@ object Similarity {
         // wall time of one fit instead of m sequential driver jobs
         val books: Seq[Array[Double]] = graft.Subjobs.runAll(resid.sparkSession,
           (0 until m).map(j =>
-            () => kmeans(31 + j, kCodes, resid.select(sliceExpr(j).as("sl")))))
+            () => fitKMeans(s, 31 + j, kCodes, resid.select(sliceExpr(j).as("sl")))))
         // global mean = the rank-0 reconstruction baseline
         val meanRow = feats.select(
           (0 until dim).map(i => avg(expr(s"fd[$i]")).as(s"m$i")): _*).collect()(0)
@@ -973,44 +918,16 @@ object Similarity {
     // the probe reads nprobe lists AND pushes the label predicate into
     // the pruned scan — candidate volume is (nprobe/nlist) x selectivity.
     Op("s13_filtered_ann", (s, d) => {
-      val nlist = 16; val nprobe = 4
-      val feats = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-          col("embedding"), col("label"))
-        .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-      val quant = graft.pipeline.Trainer.fit(s,
-        graft.pipeline.PipelineSpec(24, "K-means", Map("k" -> nlist.toDouble), Nil,
-          "Asynchronous", rounds = 1),
-        feats.select("fd").rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
-      val km = quant.model.asInstanceOf[graft.ml.KMeansState]
-      val centsLit = lit(km.centroids.slice(0, km.filled * km.dim))
-      val listed = feats.withColumn("bucket",
-        element_at(F.nearestCentroids(col("fd"), centsLit, km.dim, 1), 1))
-        .select("vec_id", "embedding", "label", "bucket")
-        .persist()
-      val q = listed.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          col("label").as("q_label"))
-      val qProbes = feats.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"),
-          explode(F.nearestCentroids(col("fd"), centsLit, km.dim, nprobe))
-            .as("bucket"))
-        .join(q, "q_id")
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-      val filteredIvf = listed
-        .join(broadcast(qProbes), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id") && col("label") === col("q_label"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      val cents = fitKMeans(s, 24, 16, inFitOrder(doubles(s, d)).select("fd"))
+      val e = T.embeddings(s, d).select("vec_id", "embedding", "label")
+      val index = listed(e, cents).persist()
+      val q = queries(e, col("label").as("q_label"))
+      def sameLabel(pairs: DataFrame) = pairs.filter(col("label") === col("q_label"))
+      val filteredIvf = topK(cosines(sameLabel(index
+        .join(broadcast(probes(q, cents, 4)), Seq("bucket")))), "cos", 3)
         .select("q_id", "vec_id")
       // exact pre-filtered baseline: filter by class FIRST, then scan
-      val exact = listed.select(col("vec_id"), col("embedding"), col("label"))
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("q_id") && col("label") === col("q_label"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+      val exact = topK(cosines(sameLabel(e.crossJoin(broadcast(q)))), "cos", 3)
         .select("q_id", "vec_id")
       // anchor the rollup on the QUERY SET, not on queries that happened
       // to produce candidates: a query whose class lands entirely outside
@@ -1183,23 +1100,12 @@ object Similarity {
       // this replaced allocated a 64-element array per query x candidate
       // PAIR — measured 15x slower than the float kernel at 2M vectors,
       // SCALE.md r10 ANN probe)
-      val codes = T.embeddings(s, d)
-        .select(col("vec_id"), F.i8Codes(col("embedding")).as("q"))
-        .filter(size(col("q")) > 0)
-      val qs = codes.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("q").as("qv"))
-      // bounded-heap top-5 per query (see s01): integer scores negate
-      // losslessly, so ascending (-iscore, vec_id) is exactly
-      // (iscore DESC, vec_id ASC) — no per-query candidate sort anywhere
-      codes.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("iscore", F.dotLL(col("qv"), col("q")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("iscore")).as("ns"), col("vec_id")), 5).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).cast(LongType).as("rk"),
-          col("col.vec_id").as("vec_id"), (-col("col.ns")).as("iscore"))
+      // the kernel's bounded heap: integer scores negate losslessly, so
+      // no per-query candidate sort anywhere
+      val codes = int8Codes(T.embeddings(s, d))
+      int8TopK(codes.crossJoin(broadcast(int8Queries(codes))), 5)
+        .select(col("q_id"), col("rk").cast(LongType).as("rk"), col("vec_id"),
+          col("iscore"))
         .orderBy("q_id", "rk")
     }, Some("""WITH v AS (
       |  SELECT vec_id,
@@ -1253,19 +1159,11 @@ object Similarity {
       val e = T.embeddings(s, d)
       val qd = e.filter(col("vec_id") < 3)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // dense arm: cosine top-k by (cos DESC, cand) — s01's bounded heap,
-      // same NaN guard (zero-norm corpus vectors score 0/0)
-      val dense = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(qd))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("cos")).as("nc"), col("vec_id")), k).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).cast(LongType).as("rk_d"),
-          col("col.vec_id").as("cand"))
+      // dense arm: cosine top-k by (cos DESC, cand) — s01's kernel, with
+      // its NaN guard (zero-norm corpus vectors score 0/0)
+      val dense = exactTopK(e.select(col("vec_id"), col("embedding")), qd, k)
+        .select(col("q_id"), col("rk").cast(LongType).as("rk_d"),
+          col("vec_id").as("cand"))
       // sparse arm: distinct-token Jaccard top-k vs the same seeds' texts.
       // The token table feeds four subtrees (postings, sizes, and their
       // seed-filtered views); cached columnar it tokenizes the corpus ONCE
@@ -1283,16 +1181,16 @@ object Similarity {
       val inter = toks.join(broadcast(stoks), "term")
         .filter(col("doc_id") =!= col("q_id"))
         .groupBy("q_id", "doc_id").agg(count(lit(1)).as("inter"))
-      val sparse = inter.join(sizes, "doc_id")
+      // the kernel's heap again; a Jaccard divides by |union| >= 1, so the
+      // NaN guard keeps every row
+      val sparse = topK(inter.join(sizes, "doc_id")
         .join(broadcast(ssz), "q_id")
-        .withColumn("jac", col("inter").cast(DoubleType) /
-          (col("q_sz") + col("sz") - col("inter")).cast(DoubleType))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("jac")).as("nj"), col("doc_id")), k).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).cast(LongType).as("rk_s"),
-          col("col.doc_id").as("cand"))
+        .select(col("q_id"), col("doc_id").as("vec_id"),
+          (col("inter").cast(DoubleType) /
+            (col("q_sz") + col("sz") - col("inter")).cast(DoubleType)).as("jac")),
+        "jac", k)
+        .select(col("q_id"), col("rk").cast(LongType).as("rk_s"),
+          col("vec_id").as("cand"))
       val rrfD = "COALESCE(CAST(ROUND(1.0 / (60.0 + CAST(rk_d AS DOUBLE))" +
         ", 9) AS DECIMAL(18,9)), CAST(0 AS DECIMAL(18,9)))"
       val rrfS = "COALESCE(CAST(ROUND(1.0 / (60.0 + CAST(rk_s AS DOUBLE))" +
@@ -1379,38 +1277,12 @@ object Similarity {
     // int8 codes are 4x smaller than the floats they summarize.
     Op("s18_quantized_rerank", (s, d) => {
       val e = T.embeddings(s, d)
-      // codegen'd one-pass quantizer + long-dot kernels (see s16 note:
-      // the higher-order-function form was 15x slower at 2M vectors)
-      val codes = e
-        .select(col("vec_id"), F.i8Codes(col("embedding")).as("q"))
-        .filter(size(col("q")) > 0)
-      val qs = codes.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("q").as("qv"))
       // stage 1: int8 coarse scan — bounded heap of (iscore DESC, vec_id)
-      val cands = codes.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("iscore", F.dotLL(col("qv"), col("q")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
-        .select(col("q_id"), explode(col("tk")).as("c"))
-        .select(col("q_id"), col("c.vec_id").as("vec_id"))
-      // stage 2: exact cosine over the survivors only; the candidate list
-      // and query vectors broadcast, so this is one more corpus scan with
-      // O(|Q|xC) float kernels and no shuffle before the final heaps
-      val qemb = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      e.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cands), "vec_id")
-        .join(broadcast(qemb), "q_id")
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("cos")).as("nc"), col("vec_id")), 5).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).cast(LongType).as("rk"),
-          col("col.vec_id").as("vec_id"), (-col("col.nc")).as("cos"))
+      val codes = int8Codes(e)
+      val cands = int8TopK(codes.crossJoin(broadcast(int8Queries(codes))), 40)
+      // stage 2: exact cosine over the survivors only
+      rerank(e, cands, 5)
+        .select(col("q_id"), col("rk").cast(LongType).as("rk"), col("vec_id"), col("cos"))
         .orderBy("q_id", "rk")
     }, Some(rerankOracle)),
     // ------------------------------------------------------------------
@@ -1447,33 +1319,12 @@ object Similarity {
     // join O(|Q| x 5) — driver-free, output O(#C values).
     Op("s20_rerank_recall_curve", (s, d) => {
       val e = T.embeddings(s, d)
-      val codes = e
-        .select(col("vec_id"), F.i8Codes(col("embedding")).as("q"))
-        .filter(size(col("q")) > 0)
-      val qs = codes.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("q").as("qv"))
+      val codes = int8Codes(e)
       // one C=40 heap; each smaller pool is a rank prefix of it
-      val pool = codes.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("iscore", F.dotLL(col("qv"), col("q")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).as("rc"),
-          col("col.vec_id").as("vec_id"))
-      val qe = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val exact5 = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(qe))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("cos")).as("nc"), col("vec_id")), 5).as("tk"))
-        .select(col("q_id"), explode(col("tk")).as("c"))
-        .select(col("q_id"), col("c.vec_id").as("vec_id"))
+      val pool = int8TopK(codes.crossJoin(broadcast(int8Queries(codes))), 40)
+        .select(col("q_id"), col("rk").as("rc"), col("vec_id"))
+      val exact5 = exactTopK(e.select(col("vec_id"), col("embedding")),
+        queries(e), 5).select("q_id", "vec_id")
       val nQ = 16L
       val hitsByRank = pool.join(exact5, Seq("q_id", "vec_id"))
         .select(col("rc"))
@@ -1538,70 +1389,20 @@ object Similarity {
       |  ON hits.rc <= t.pool_c
       |GROUP BY t.pool_c ORDER BY pool_c""".stripMargin)),
     Op("s19_ivf_quantized_rerank", (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val nlist = 16; val nprobe = 2; val cpool = 20
-      val feats = T.embeddings(s, d)
-        .select(col("vec_id"),
-          col("embedding").cast(ArrayType(DoubleType)).as("fd"),
-          col("embedding"))
-        .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-      val centsLit = lit(fullCorpusQuantizer(s, d, nlist))
-      val listed = feats
-        .withColumn("bucket",
-          element_at(F.nearestCentroids(col("fd"), centsLit, EmbDim, 1), 1))
-        .withColumn("q8", F.i8Codes(col("embedding")))
-        .filter(size(col("q8")) > 0)
-      val q = listed.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("q8").as("qv"),
-          explode(F.nearestCentroids(col("fd"), centsLit, EmbDim, nprobe))
-            .as("bucket"))
+      val cents = fullCorpusQuantizer(s, d, 16)
+      val e = T.embeddings(s, d).select("vec_id", "embedding")
+      val q = queries(e)
       // stage 2: int8 over the probed lists only, C-bounded heap
-      val cands = listed.select(col("vec_id"), col("bucket"), col("q8"))
-        .join(q, Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("iscore", F.dotLL(col("qv"), col("q8")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("iscore")).as("ns"), col("vec_id")), cpool).as("tk"))
-        .select(col("q_id"), explode(col("tk")).as("c"))
-        .select(col("q_id"), col("c.vec_id").as("vec_id"))
-      // stage 3: exact rerank of the C survivors
-      val e = T.embeddings(s, d)
-      val qe = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos").desc, col("vec_id"))
-      val served = e.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cands), "vec_id")
-        .join(broadcast(qe), "q_id")
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select("q_id", "vec_id")
-      // exact top-3 baseline (s01's kernel) for the recall gate
-      val exact = e.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(qe))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-        .select("q_id", "vec_id")
-      // gate arithmetic over O(|Q|) rows — every side is bounded by the
-      // 16-query predicate at ANY corpus scale, so the joins broadcast
-      val perQ = served.groupBy("q_id").agg(count(lit(1)).as("n3"))
-      val hits = exact.join(broadcast(served), Seq("q_id", "vec_id"))
-        .groupBy("q_id").agg(count(lit(1)).as("hits"))
-      perQ.join(broadcast(hits), Seq("q_id"), "left")
-        .agg(
-          count(lit(1)).as("n_queries"),
-          (min(col("n3")) === 3 && max(col("n3")) === 3)
-            .as("all_topk_complete"),
-          (sum(coalesce(col("hits"), lit(0L))).cast(DoubleType) /
-            (count(lit(1)) * 3) >= RecallThreshold).as("recall_at_3_ge_090"))
-    },
-      Some(s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  true AS all_topk_complete, true AS recall_at_3_ge_090
-        |FROM embeddings WHERE vec_id < 16""".stripMargin)),
+      val index = listed(e, cents)
+        .select(col("vec_id"), col("bucket"), F.i8Codes(col("embedding")).as("q"))
+        .filter(size(col("q")) > 0)
+      val qp = probes(q, cents, 2)
+        .select(col("q_id"), col("bucket"), F.i8Codes(col("q_emb")).as("qv"))
+        .filter(size(col("qv")) > 0)
+      val cands = int8TopK(index.join(broadcast(qp), Seq("bucket")), 20)
+      // stage 3: exact rerank of the C survivors, against s01's exact top-3
+      recallAt3(rerank(e, cands, 3), exactTopK(e, q, 3))
+    }, Some(recallOracle)),
     // ------------------------------------------------------------------
     // MIPS SERVING — s15's reduction on the deployment path (r10 verdict
     // #6). s15 is the PARITY GATE: it must emit every row's rank under
@@ -1662,6 +1463,38 @@ object Similarity {
       |SELECT q_id, CAST(rk AS BIGINT) AS rk, vec_id, ip, mips_cos
       |FROM r WHERE rk <= 5 ORDER BY q_id, rk""".stripMargin)),
   )
+
+  /** The int8 codes (s05's per-vector max-abs scheme) of the nonzero
+    * vectors of `e`, as `(vec_id, q)`, through the codegen'd one-pass
+    * quantizer (the higher-order-function form was 15x slower at 2M
+    * vectors, SCALE.md r10 ANN probe).
+    */
+  private[operators] def int8Codes(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), F.i8Codes(col("embedding")).as("q"))
+      .filter(size(col("q")) > 0)
+
+  /** The 16 queries' codes out of [[int8Codes]], as `(q_id, qv)`. */
+  private[operators] def int8Queries(codes: DataFrame): DataFrame =
+    codes.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("q_id"), col("q").as("qv"))
+
+  /** The `c` best candidates per query of `pairs` (`q_id`, `qv`, `vec_id`,
+    * `q`) by the exact integer dot product of their codes, as
+    * `(q_id, rk, vec_id, iscore)`.
+    */
+  private[operators] def int8TopK(pairs: DataFrame, c: Int): DataFrame =
+    topK(pairs.filter(col("vec_id") =!= col("q_id"))
+      .withColumn("iscore", F.dotLL(col("qv"), col("q"))), "iscore", c)
+
+  /** The exact cosine top-k of each query's candidates `cands` (`q_id`,
+    * `vec_id`) over the corpus `e`. The candidate list and the query
+    * vectors broadcast, so this is one more corpus scan with O(|Q| x C)
+    * float kernels and no shuffle before the heaps.
+    */
+  private[operators] def rerank(e: DataFrame, cands: DataFrame, k: Int): DataFrame =
+    topK(cosines(e.select(col("vec_id"), col("embedding"))
+      .join(broadcast(cands.select("q_id", "vec_id")), "vec_id")
+      .join(broadcast(queries(e)), "q_id")), "cos", k)
 
   /** s18's two-stage oracle (int8 top-40 candidates, exact cosine top-5) —
     * shared with the streaming serve twin (st44), whose trigger boundaries

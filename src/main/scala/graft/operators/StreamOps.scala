@@ -93,17 +93,20 @@ object StreamOps {
       arriving.filter(col("doc_id") >= 2500)))
 
   /** The st05/st16/st43 training stream: the embeddings as (features,
-    * target) rows in 4 range files on vec_id, one trigger each. */
+    * target) rows in 4 equal-width vec_id ranges, staged in vec_id order,
+    * so range k is trigger k. */
   private def stagedTrainStream(s: org.apache.spark.sql.SparkSession,
       d: String): (String, StructType) = {
     val dir = Streaming.stagedDir("train", d) { dir =>
-      T.embeddings(s, d).select(
+      val rows = T.embeddings(s, d).select(
           col("vec_id"),
           col("embedding").cast(ArrayType(DoubleType)).as("features"),
           when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-        .repartitionByRange(4, col("vec_id"))
-        .select("features", "target")
-        .write.mode("append").parquet(dir)
+      val ids = rows.agg(min("vec_id").cast(LongType), max("vec_id").cast(LongType)).head()
+      val (lo, step) = (ids.getLong(0), (ids.getLong(1) - ids.getLong(0)) / 4 + 1)
+      Streaming.stage(s, dir, (0 until 4).map(k => rows
+        .filter(col("vec_id") >= lo + k * step && col("vec_id") < lo + (k + 1) * step)
+        .select("features", "target")): _*)
     }
     (dir, StructType(Seq(
       StructField("features", ArrayType(DoubleType)),
@@ -226,7 +229,7 @@ object StreamOps {
   val ops: Seq[Op] = Seq(
     // ------------------------------------------------------------------
     Op("st01_tumbling_window", (s, d) => {
-      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d)
       val name = uniq("st01")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
@@ -244,7 +247,7 @@ object StreamOps {
         |ORDER BY window_start_us, event_type""".stripMargin)),
     // ------------------------------------------------------------------
     Op("st02_sliding_window", (s, d) => {
-      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d)
       val name = uniq("st02")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
@@ -268,7 +271,7 @@ object StreamOps {
         |ORDER BY window_start_us, event_type""".stripMargin)),
     // ------------------------------------------------------------------
     Op("st03_session_window", (s, d) => {
-      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d)
       val name = uniq("st03")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
@@ -419,7 +422,7 @@ object StreamOps {
       // 2 data files (3 triggers with the sentinel): the join runs BOTH
       // sides' file sources per trigger, so trigger count is twice as
       // expensive here as in the single-source window queries.
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       def side(name: String, tsAlias: String, idAlias: String) =
         Streaming.source(s, dir, schema)
           .filter(col("event_type") === name)
@@ -457,7 +460,7 @@ object StreamOps {
     Op("st10_late_data", (s, d) => {
       // schema + maxTs come from the shared staged-events cache (same
       // source table); the late-arrival file layout is memoized separately
-      val (_, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
+      val (_, schema, maxTs) = Streaming.stageEventsCached(s, d)
       val dir = Streaming.stagedDir("late", d) { dir =>
         val ev = T.events(s, d)
         val minTs = ev.agg(min(unix_micros(col("ts")))).head().getLong(0)
@@ -467,11 +470,7 @@ object StreamOps {
           ev.filter(unix_micros(col("ts")) >= cutoff && unix_micros(col("ts")) < mid),
           ev.filter(unix_micros(col("ts")) >= mid),
           ev.filter(unix_micros(col("ts")) < cutoff),
-          ev.limit(1)
-            .select(timestamp_micros(lit(maxTs + 40L * 86400L * 1000000L)).as("ts"),
-              lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-              lit(0.0).as("value"), col("event_id"), col("props"))
-            .select(ev.columns.map(col).toSeq: _*))
+          Streaming.eventsSentinel(ev, maxTs + 40L * 86400L * 1000000L))
       }
       val name = uniq("st10")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
@@ -506,7 +505,7 @@ object StreamOps {
       // (and the optimizer pushes post-watermark filters down anyway), so
       // each side keeps its own events PLUS the sentinel (user_id -1,
       // removed from the output).
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       def side(name: String, tsAlias: String, idAlias: String) =
         Streaming.source(s, dir, schema)
           .filter(col("event_type") === name || col("event_type") === "sentinel")
@@ -541,7 +540,7 @@ object StreamOps {
     // only dedup that survives an unbounded 100 TB stream. Key includes the
     // event day (at-most-one-event-per-user/type/day ingestion dedup).
     Op("st14_dedup_within_watermark", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val name = uniq("st14")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
@@ -561,7 +560,7 @@ object StreamOps {
     // Streaming deduplication: distinct (user_id, event_type) keys over the
     // stream (dropDuplicates keyed state).
     Op("st09_stream_distinct", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val name = uniq("st09")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.select(col("user_id"), col("event_type")).dropDuplicates())
@@ -577,7 +576,7 @@ object StreamOps {
     // trigger probes the broadcast table, so at scale this costs exactly one
     // broadcast + per-batch probe.
     Op("st11_stream_static_join", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val cust = broadcast(T.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey")))
       val name = uniq("st11")
@@ -596,7 +595,7 @@ object StreamOps {
     // (Append mode + watermark is the scale path — complete mode keeps all
     // groups in state and re-emits them, right only for small cardinality.)
     Op("st12_complete_agg", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val name = uniq("st12")
       Streaming.drain(s, dir, schema, Sink.Memory(name, "complete"))(
         _.filter(col("event_type") =!= "sentinel")
@@ -612,7 +611,7 @@ object StreamOps {
     // transaction log makes the write exactly-once; the batch read-back
     // honors the log, and the aggregate hash-matches the fixture oracle.
     Op("st13_file_sink", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val out = Streaming.output("graft_sink_")
       Streaming.drain(s, dir, schema, Sink.Files(out))(
         _.filter(col("event_type") =!= "sentinel")
@@ -980,7 +979,7 @@ object StreamOps {
     // input volume, and compaction can fold into the same read. Sums stay
     // integer (floor(value*1000)) so partial-merge order cannot move a bit.
     Op("st19_foreachbatch_upsert", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val out = Streaming.output("graft_upsert_")
       Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
         w.write("partials", batch.groupBy("event_type")
@@ -1314,7 +1313,7 @@ object StreamOps {
     // aggregate over all events — any double-count, lost batch, or decimal
     // drift through the JDBC type boundary breaks the gate.
     Op("st25_stream_jdbc_upsert", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val dbDir = Streaming.scratchDir("graft_derbysink_")
       val url = s"jdbc:derby:$dbDir/db;create=true"
       // create the target table once, driver-side
@@ -1384,7 +1383,7 @@ object StreamOps {
     // asserted engine-side against a batch-exact join, and the exact
     // per-window row counts hash-match the oracle directly.
     Op("st27_stream_hll", (s, d) => {
-      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, maxTs) = Streaming.stageEventsCached(s, d)
       val name = uniq("st27")
       val res = Streaming.drain(s, dir, schema, Sink.Memory(name))(src =>
         src.withWatermark("ts", "35 days")
@@ -1661,7 +1660,7 @@ object StreamOps {
     // with the dimension bucketed by customer the exchanges vanish, and
     // the partial log stays O(event types x triggers).
     Op("st30_stream_pit_enrich", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       // r13 (verdict #3; guide §3/§6 — the st22/st46 standing-artifact
       // rule): the per-trigger as-of merge requires
       // ClusteredDistribution(o_custkey) + a (key, time, tie) sort on the
@@ -1773,7 +1772,7 @@ object StreamOps {
     // the moment state is O(event types), the scoring pass is stateless
     // scan-cost, and the partials log is O(types × triggers).
     Op("st38_stream_zscore", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       val (moments, scores) = (Streaming.output("graft_zsc_m_"),
         Streaming.output("graft_zsc_s_"))
       val v100: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -1922,7 +1921,7 @@ object StreamOps {
     // entries were re-written; `reexecuted` pins that new output files
     // appeared (the orphans alone would not change the count).
     Op("st40_crash_recovery", (s, d) => {
-      val (dir, schema, _) = Streaming.stageEventsCached(s, d, 2)
+      val (dir, schema, _) = Streaming.stageEventsCached(s, d)
       // The two provider runs are fully independent (own child sessions, own
       // scratch/checkpoint/sink dirs) but each is a long chain of tiny
       // single-trigger jobs with commit-protocol gaps between them — run
@@ -2091,40 +2090,20 @@ object StreamOps {
     // ledger shape is unchanged.
     Op("st44_stream_rerank_serve", (s, d) => {
       val e = T.embeddings(s, d)
-      val codes = e.select(col("vec_id"), F.i8Codes(col("embedding")).as("q"))
-        .filter(size(col("q")) > 0)
-      val qs = codes.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("q").as("qv"))
+      val codes = Similarity.int8Codes(e)
+      val qs = Similarity.int8Queries(codes)
       val schema = qs.schema
       val dir = Streaming.scratchDir("graft_st44q_")
       // two genuine probe triggers, queries disjoint across them
       Streaming.stage(s, dir, qs.filter(col("q_id") < 8), qs.filter(col("q_id") >= 8))
       val out = Streaming.output("graft_st44c_")
       Streaming.drain(s, dir, schema, Sink.Writes(out) { (batch, w) =>
-        w.write("cand", batch.withColumn("k", lit(1))
-          .join(codes.withColumn("k", lit(1)), "k")
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("iscore", F.dotLL(col("qv"), col("q")))
-          .groupBy("q_id")
-          .agg(F.topkStructs(
-            struct((-col("iscore")).as("ns"), col("vec_id")), 40).as("tk"))
-          .select(col("q_id"), explode(col("tk")).as("c"))
-          .select(col("q_id"), col("c.vec_id").as("vec_id")))
+        w.write("cand", Similarity.int8TopK(batch.withColumn("k", lit(1))
+          .join(codes.withColumn("k", lit(1)), "k"), 40)
+          .select("q_id", "vec_id"))
       })(identity)
-      val cands = out.read(s, "cand")
-      val qemb = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      e.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cands), "vec_id")
-        .join(broadcast(qemb), "q_id")
-        .withColumn("cos", F.cosineSim(col("q_emb"), col("embedding")))
-        .filter(!isnan(col("cos")))
-        .groupBy("q_id")
-        .agg(F.topkStructs(
-          struct((-col("cos")).as("nc"), col("vec_id")), 5).as("tk"))
-        .select(col("q_id"), posexplode(col("tk")))
-        .select(col("q_id"), (col("pos") + 1).cast(LongType).as("rk"),
-          col("col.vec_id").as("vec_id"), (-col("col.nc")).as("cos"))
+      Similarity.rerank(e, out.read(s, "cand"), 5)
+        .select(col("q_id"), col("rk").cast(LongType).as("rk"), col("vec_id"), col("cos"))
         .orderBy("q_id", "rk")
     }, Some(Similarity.rerankOracle)),
     // ------------------------------------------------------------------

@@ -33,13 +33,9 @@ import scala.reflect.runtime.universe.TypeTag
   * produced by watermark progress, not by query shutdown. The drain owns
   * every checkpoint and the per-batch output layout ([[Streaming.Output]]):
   * a replayed batch rewrites its own output instead of appending twice. A
-  * far-future sentinel row (+40 days) closes the tail windows; rows derived
-  * from it are filtered out after the run (the oracle never sees the
-  * sentinel).
-  * Only [[Streaming.stageEvents]] writes files that share one mtime, and
-  * those can be listed in any order: its callers must pick a watermark
-  * delay LARGER than the staged data's time span, or a smaller delay would
-  * silently late-drop an out-of-order file's data.
+  * far-future sentinel row ([[Streaming.eventsSentinel]]) closes the tail
+  * windows; rows derived from it are filtered out after the run (the
+  * oracle never sees the sentinel).
   */
 object Streaming {
 
@@ -62,13 +58,6 @@ object Streaming {
     LocalCheckpointFileManager.install(s2)
     s2
   }
-
-  /** Staged-events cache: the fixture staging (a full write of the events
-    * table) is identical across the streaming ops, so stage once per
-    * (sfDir, nFiles) and share the directory.
-    */
-  private val stageCache =
-    scala.collection.concurrent.TrieMap[(String, Int), (String, StructType, Long)]()
 
   /** Base for scratch dirs (staged fixtures, checkpoints, operator
     * output): RAM-backed tmpfs when available, else java.io.tmpdir. This
@@ -143,9 +132,42 @@ object Streaming {
       dir
     })
 
-  def stageEventsCached(spark: SparkSession, sfDir: String, nFiles: Int): (String, StructType, Long) =
-    stageCache.getOrElseUpdate((sfDir, nFiles),
-      stageEvents(spark, graft.T.events(spark, sfDir), nFiles))
+  /** Days past the events' last ts at which [[stageEventsCached]] puts its
+    * sentinel. It must exceed watermarkDelay + any join/window range the
+    * query needs flushed (outer joins hold unmatched rows until watermark >
+    * ts + range); 120 covers the 35-day delays + 7-day ranges used across
+    * the streaming set, and a farther sentinel is always safe (it only
+    * closes windows sooner relative to the data).
+    */
+  val SentinelDays = 120
+
+  /** The far-future sentinel row of an events stream: one row of `events`
+    * moved to event time `tsMicros` with user_id -1, event_type "sentinel"
+    * and value 0. Staged last, it closes every real window.
+    */
+  def eventsSentinel(events: DataFrame, tsMicros: Long): DataFrame =
+    events.limit(1)
+      .withColumn("ts", timestamp_micros(lit(tsMicros)))
+      .withColumn("user_id", lit(-1L))
+      .withColumn("event_type", lit("sentinel"))
+      .withColumn("value", lit(0.0))
+
+  /** The events fixture as a staged stream shared by the streaming ops:
+    * its two ts-range halves, then the [[SentinelDays]] sentinel, one
+    * trigger each in that order. Returns (dir, schema, maxTs-in-micros).
+    */
+  def stageEventsCached(spark: SparkSession, sfDir: String): (String, StructType, Long) = {
+    val events = graft.T.events(spark, sfDir)
+    val ts = unix_micros(col("ts"))
+    val range = events.agg(min(ts), max(ts)).head()
+    val (minTs, maxTs) = (range.getLong(0), range.getLong(1))
+    val dir = stagedDir("events", sfDir) { dir =>
+      val mid = minTs + (maxTs - minTs) / 2
+      stage(spark, dir, events.filter(ts <= mid), events.filter(ts > mid),
+        eventsSentinel(events, maxTs + SentinelDays.toLong * 86400L * 1000000L))
+    }
+    (dir, events.schema, maxTs)
+  }
 
   /** Streaming state-store partition count. Each stateful operator opens one
     * state store per shuffle partition per trigger; at local bench scale 4
@@ -172,30 +194,6 @@ object Streaming {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Stage a batch DataFrame as n time-ranged parquet files + a sentinel
-    * file; returns (dir, schema, maxTs-in-micros). `sentinelDays` must
-    * exceed watermarkDelay + any join/window range the query needs flushed
-    * (outer joins hold unmatched rows until watermark > ts + range); 120
-    * covers the 35-day delays + 7-day ranges used across the streaming set,
-    * and a farther sentinel is always safe (it only closes windows sooner
-    * relative to the data).
-    */
-  def stageEvents(spark: SparkSession, events: DataFrame, nFiles: Int,
-      sentinelDays: Int = 120): (String, StructType, Long) = {
-    val dir = scratchDir("graft_stream_")
-    val maxTs = events.agg(max(unix_micros(col("ts")))).head().getLong(0)
-    events.repartitionByRange(nFiles, col("ts"))
-      .write.mode("append").parquet(dir)
-    // sentinel: one far-future row per schema, closes all real windows
-    val sentinel = events.limit(1)
-      .withColumn("ts", timestamp_micros(lit(maxTs + sentinelDays.toLong * 86400L * 1000000L)))
-      .withColumn("user_id", lit(-1L))
-      .withColumn("event_type", lit("sentinel"))
-      .withColumn("value", lit(0.0))
-    sentinel.coalesce(1).write.mode("append").parquet(dir)
-    (dir, events.schema, maxTs)
   }
 
   /** Append each part to `dir` as one parquet file, so file k is trigger k

@@ -811,6 +811,31 @@ class OperatorSuite extends AnyFunSuite {
       "gaps-and-islands must reproduce session_window's sessions exactly")
   }
 
+  test("per-query top-k kernel: a tie goes to the lower vec_id, a zero-norm " +
+    "vector's NaN cosine is dropped, and fewer than k candidates give those " +
+    "that exist") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val q = Array(1f, 0f)
+    // query 1: vecs 5 and 3 tie at cos 1, vec 6 scores 0 and vec 4 is
+    // zero-norm (cos 0/0 = NaN), so k = 4 leaves room for the NaN row;
+    // query 2 has one candidate
+    val scored = Seq(
+        (1L, 5L, q, Array(2f, 0f)), (1L, 3L, q, Array(1f, 0f)),
+        (1L, 4L, q, Array(0f, 0f)), (1L, 6L, q, Array(0f, 1f)),
+        (2L, 7L, q, Array(1f, 1f)))
+      .toDF("q_id", "vec_id", "q_emb", "embedding")
+      .select(col("q_id"), col("vec_id"),
+        graft.functions.F.cosineSim(col("q_emb"), col("embedding")).as("cos"))
+    assert(scored.filter(col("vec_id") === 4L).head().getDouble(2).isNaN)
+    val got = graft.operators.Similarity.topK(scored, "cos", 4).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("rk"),
+        r.getAs[Long]("vec_id"), r.getAs[Double]("cos"))).sortBy(r => (r._1, r._2))
+    assert(got.map(r => (r._1, r._2, r._3)).toSeq ==
+      Seq((1L, 1, 3L), (1L, 2, 5L), (1L, 3, 6L), (2L, 1, 7L)), got.mkString(", "))
+    assert(got.take(2).forall(_._4 == 1.0) && got(2)._4 == 0.0)
+  }
+
   test("IVF index append: no vectors lost, probe covers both generations") {
     val sf = "/root/testdata/sf0.001"
     val r = SparkEntry.queries("s08_ivf_index_append")(spark, sf).collect().head

@@ -780,6 +780,28 @@ class StreamingSuite extends AnyFunSuite {
     }
   }
 
+  test("a drain over the staged events stream sees its batches in staging " +
+    "order: the ts-range halves in ts order, then the sentinel alone") {
+    import org.apache.spark.sql.functions._
+    val spark = TestSession.spark
+    val sf = "/root/testdata/sf0.001"
+    val (dir, schema, maxTs) = Streaming.stageEventsCached(spark, sf)
+    // (batch id, rows, sentinel rows, min ts, max ts)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long, Long, Long)]()
+    Streaming.drain(spark, dir, schema, Streaming.Sink.Batches { (b, id) =>
+      val r = b.agg(count(lit(1)),
+        sum(when(col("event_type") === "sentinel", 1L).otherwise(0L)),
+        min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+      seen.add((id, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    })(identity)
+    val bs = seen.toArray(Array.empty[(Long, Long, Long, Long, Long)]).sortBy(_._1)
+    assert(bs.map(_._1).toSeq == Seq(0L, 1L, 2L), bs.mkString(", "))
+    assert(bs(0)._5 <= bs(1)._4, s"batch 0 holds a ts past batch 1's first: ${bs.mkString(", ")}")
+    assert(bs(0)._3 == 0L && bs(1)._3 == 0L, "a data batch holds the sentinel")
+    assert(bs(2)._2 == 1L && bs(2)._3 == 1L && bs(2)._4 > maxTs,
+      s"the last batch is not the sentinel alone: ${bs(2)}")
+  }
+
   test("crash between WAL write and sink commit recovers exactly-once " +
     "(both state-store providers)") {
     // drives the same crashRecoveryRun the driver-gated st40 uses: clean
@@ -791,7 +813,7 @@ class StreamingSuite extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark = TestSession.spark
     val sf = "/root/testdata/sf0.001"
-    val (dir, schema, _) = Streaming.stageEventsCached(spark, sf, 2)
+    val (dir, schema, _) = Streaming.stageEventsCached(spark, sf)
     val expected = T.events(spark, sf)
       .groupBy(col("event_type"),
         unix_micros(date_trunc("day", col("ts"))).as("day_us"))
