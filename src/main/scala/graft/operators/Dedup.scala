@@ -563,29 +563,19 @@ object Dedup {
 
   private[operators] def bandsOf(sh: DataFrame): DataFrame = minhashBands(sh)
 
-  /** SemDeDup-style semantic dedup core (d16): K-means-cluster the
-    * embeddings with the engine's own trainer, then near-dup ONLY within
+  /** SemDeDup-style semantic dedup core (d16): cluster the embeddings
+    * under the full-corpus K-means quantizer the IVF ops share (the
+    * engine's own trainer, fit once per JVM), then near-dup ONLY within
     * clusters (drop the larger id of any within-cluster pair with cosine
     * >= tau). Returns the dropped set (vec_id, dup_cos) for gates/tests.
     */
   def semanticDedupDropped(s: SparkSession, d: String, k: Int,
       tau: Double): DataFrame = {
-    val feats = T.embeddings(s, d)
-      .select(col("vec_id"),
-        col("embedding").cast(ArrayType(DoubleType)).as("fd"), col("embedding"))
-      .repartitionByRange(8, col("vec_id")).sortWithinPartitions("vec_id")
-    val quant = graft.pipeline.Trainer.fit(s,
-      graft.pipeline.PipelineSpec(25, "K-means", Map("k" -> k.toDouble), Nil,
-        "Asynchronous", rounds = 1),
-      feats.select("fd").rdd.map(r => (r.getSeq[Double](0).toArray, 0.0)))
-    val km = quant.model.asInstanceOf[graft.ml.KMeansState]
-    val centsLit = lit(km.centroids.slice(0, km.filled * km.dim))
-    val clustered = feats.withColumn("c",
-        element_at(F.nearestCentroids(col("fd"), centsLit, km.dim, 1), 1))
-      .select("vec_id", "embedding", "c").cache()
+    val clustered = Similarity.listed(T.embeddings(s, d).select("vec_id", "embedding"),
+      Similarity.fullCorpusQuantizer(s, d, k)).cache()
     clustered.as("a")
       .join(clustered.as("b"),
-        col("a.c") === col("b.c") && col("a.vec_id") < col("b.vec_id"))
+        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", F.cosineSim(col("a.embedding"), col("b.embedding")))
       .filter(col("cos") >= tau)
       .groupBy(col("b.vec_id").as("vec_id"))

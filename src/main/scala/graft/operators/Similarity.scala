@@ -129,7 +129,7 @@ object Similarity {
   /** `e` with each vector's inverted list as `bucket`. Listing under given
     * centroids is row-local, so it needs no range exchange or sort.
     */
-  private def listed(e: DataFrame, cents: Array[Double]): DataFrame =
+  private[operators] def listed(e: DataFrame, cents: Array[Double]): DataFrame =
     e.withColumn("bucket", element_at(nearestLists(col("embedding"), cents, 1), 1))
 
   /** The queries `q` with their nprobe probes, one row per (query, bucket). */
@@ -186,12 +186,13 @@ object Similarity {
     T.embeddings(s, d).select(col("vec_id"),
       col("embedding").cast(ArrayType(DoubleType)).as("fd"))
 
-  /** Memoized full-corpus coarse quantizer, shared by s03/s04/s07/s19 and
-    * s09's coarse stage (the g08 shared-artifact pattern): all of them use
-    * the SAME model — identical data, identical fit order, identical online
-    * K-means math (deterministic farthest-point seeding + MacQueen updates;
-    * the pipeline-spec id never enters the math) — so the first op to need
-    * it pays the one fit and the rest reuse the centroids. Keyed by
+  /** Memoized full-corpus coarse quantizer, shared by s03/s04/s07/s19,
+    * s09's coarse stage and d16's clusters (the g08 shared-artifact
+    * pattern): all of them use the SAME model — identical data, identical
+    * fit order, identical online K-means math (deterministic
+    * farthest-point seeding + MacQueen updates; the pipeline-spec id
+    * never enters the math) — so the first op to need it pays the one
+    * fit and the rest reuse the centroids. Keyed by
     * (sfDir, k); the artifact is a plain double array with no session
     * references, so it is safe across sessions and concurrent callers.
     */
@@ -206,7 +207,7 @@ object Similarity {
     fullCorpusQuantizer(s, d, 16)
     ()
   }
-  private def fullCorpusQuantizer(s: SparkSession, d: String,
+  private[operators] def fullCorpusQuantizer(s: SparkSession, d: String,
       nlist: Int): Array[Double] =
     quantCache.getOrElseUpdate((d, nlist),
       fitKMeans(s, 21, nlist, inFitOrder(doubles(s, d)).select("fd")))

@@ -27,7 +27,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * default manager has them).
   *
   * Spark builds it from the conf [[LocalCheckpointFileManager.install]]
-  * sets on a session.
+  * sets on a session, which also turns on the RocksDB state store's
+  * changelog checkpointing: each state commit is then one changelog file
+  * written through this manager, and the snapshot uploads (whose Hadoop
+  * copy forks a `chmod` per file) move to Spark's background maintenance.
   */
 class LocalCheckpointFileManager(path: Path, conf: Configuration)
     extends CheckpointFileManager {
@@ -51,11 +54,17 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration)
 
 object LocalCheckpointFileManager {
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
+  private val ChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   /** Every streaming query later started on `spark`, and every source or
-    * state store built from its conf, checkpoints through this manager. */
-  def install(spark: SparkSession): Unit =
+    * state store built from its conf, checkpoints through this manager; a
+    * RocksDB state store among them commits changelogs. A checkpoint begun
+    * with either conf unset resumes under both. */
+  def install(spark: SparkSession): Unit = {
     spark.conf.set(Key, classOf[LocalCheckpointFileManager].getName)
+    spark.conf.set(ChangelogKey, "true")
+  }
 
   /** A path without a scheme resolves against the default file system. */
   private def isFile(path: Path, conf: Configuration): Boolean =

@@ -48,7 +48,9 @@ object Streaming {
     * (`trackTotalNumberOfRows`) GETs the whole merged value on every state
     * write, so it is off (PLANS.md r10). Its queries checkpoint through
     * [[LocalCheckpointFileManager]], also those started on it directly
-    * rather than through [[drain]].
+    * rather than through [[drain]], and their RocksDB stores commit each
+    * version as a changelog file, uploading snapshots in the background
+    * ([[LocalCheckpointFileManager.install]] sets both).
     */
   def stateSession(s: SparkSession): SparkSession = {
     val s2 = s.newSession()
@@ -75,8 +77,10 @@ object Streaming {
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Every dir [[scratchDir]] created and [[cleanScratch]] has not yet
-    * deleted. */
+  /** Every dir [[scratchDir]] created. One that [[cleanScratch]] deleted
+    * stays listed, so the exit hook deletes it again: RocksDB's background
+    * maintenance uploads a stopped query's last snapshot into its
+    * checkpoint, and so can recreate a drain's deleted scratch dir. */
   private val scratchCreated =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -101,7 +105,7 @@ object Streaming {
     * them all. */
   def cleanScratch(dirs: Iterable[String] = scratchCreated.toArray(
       Array.empty[String]).toSeq): Unit =
-    dirs.filter(scratchCreated.remove).foreach { d =>
+    dirs.filter(scratchCreated.contains).foreach { d =>
       try {
         val walk = Files.walk(java.nio.file.Paths.get(d))
         try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -184,10 +188,11 @@ object Streaming {
     *  - the session's shuffle partitions temporarily lowered to
     *    [[StreamShufflePartitions]] (streaming queries bake the value into
     *    their state checkpoint at start), restored after `body`;
-    *  - [[LocalCheckpointFileManager]] as the checkpoint manager, left set
-    *    on `spark`. It must outlive `start()`: the stream thread builds the
-    *    file source, and its offset log, from the reader's session after
-    *    `start()` returns.
+    *  - [[LocalCheckpointFileManager]] as the checkpoint manager, with
+    *    RocksDB changelog checkpointing, left set on `spark`. The manager
+    *    must outlive `start()`: the stream thread builds the file source,
+    *    and its offset log, from the reader's session after `start()`
+    *    returns.
     */
   def withStreamShuffle[A](spark: SparkSession)(body: => A): A = {
     LocalCheckpointFileManager.install(spark)
@@ -558,22 +563,24 @@ object SpokeCore {
   * chunks, with tracking ON or OFF (both pinned by the R10 suite load
   * test). Appends within a trigger stage in task memory and flush once
   * after the step, so per-row state-store work is amortized O(1).
+  *
+  * The state encoders come in built ([[TwsSpoke.run]] builds them once per
+  * query): Spark calls `init` for every state partition in every trigger,
+  * and `Encoders.product` derives its encoder through Scala reflection.
   */
-class TwsSpokeProcessor(testMode: Boolean = false)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Int, Envelope, SpokeEvent] {
+class TwsSpokeProcessor(stateEncoder: Encoder[SpokeState],
+    chunkEncoder: Encoder[BufChunk], testMode: Boolean = false)
+    extends StatefulProcessor[Int, Envelope, SpokeEvent] {
   import org.apache.spark.sql.streaming.{MapState, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.{Encoders, streaming}
 
   @transient private var state: ValueState[SpokeState] = _
   @transient private var bufChunks: MapState[Long, BufChunk] = _
   @transient private var bufMeta: ValueState[Long] = _
 
-  override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    state = getHandle.getValueState[SpokeState]("spokeState",
-      Encoders.product[SpokeState], TTLConfig.NONE)
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    state = getHandle.getValueState[SpokeState]("spokeState", stateEncoder, TTLConfig.NONE)
     bufChunks = getHandle.getMapState[Long, BufChunk]("preCreateChunks",
-      Encoders.scalaLong, Encoders.product[BufChunk], TTLConfig.NONE)
+      Encoders.scalaLong, chunkEncoder, TTLConfig.NONE)
     bufMeta = getHandle.getValueState[Long]("preCreateChunkCount",
       Encoders.scalaLong, TTLConfig.NONE)
   }
@@ -640,7 +647,8 @@ object TwsSpoke {
   def run(envelopes: Dataset[Envelope], testMode: Boolean = false): Dataset[SpokeEvent] = {
     import envelopes.sparkSession.implicits._
     envelopes.groupByKey(_.pipelineId)
-      .transformWithState(new TwsSpokeProcessor(testMode),
+      .transformWithState(new TwsSpokeProcessor(Encoders.product[SpokeState],
+        Encoders.product[BufChunk], testMode),
         TimeMode.None(), OutputMode.Append())
   }
 }

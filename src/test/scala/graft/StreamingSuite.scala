@@ -282,9 +282,16 @@ class StreamingSuite extends AnyFunSuite {
       TwsSpoke.run(src.as[Envelope](org.apache.spark.sql.Encoders.product[Envelope])).toDF()
     def write(b: org.apache.spark.sql.DataFrame, w: Streaming.Writer): Unit =
       w.write("events", b)
-    // Spark's default manager: a state session with the conf unset
+    def ckptFiles(suffix: String): Int = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out.checkpoint))
+      try walk.iterator().asScala.count(_.getFileName.toString.endsWith(suffix))
+      finally walk.close()
+    }
+    // Spark's default manager and RocksDB snapshot commits: a state session
+    // with both of the engine's checkpoint confs unset
     val s1 = Streaming.stateSession(spark)
     s1.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    s1.conf.unset("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
     s1.conf.set("spark.sql.shuffle.partitions", Streaming.StreamShufflePartitions.toString)
     val q = spoke(Streaming.source(s1, data, schema)).writeStream
       .option("checkpointLocation", out.checkpoint)
@@ -292,10 +299,10 @@ class StreamingSuite extends AnyFunSuite {
         write(b, new Streaming.Writer(out, id)))
       .start()
     try q.processAllAvailable() finally q.stop()
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out.checkpoint))
-    try assert(walk.iterator().asScala.exists(_.getFileName.toString.endsWith(".crc")),
-      "Spark's default manager wrote no .crc")
-    finally walk.close()
+    assert(ckptFiles(".crc") > 0, "Spark's default manager wrote no .crc")
+    // RocksDB committed every state version as a snapshot .zip
+    assert(ckptFiles(".zip") > 0 && ckptFiles(".changelog") == 0,
+      "the first incarnation's state is not snapshot-only")
     // batch 2 re-executes under the engine's manager, over its .crc'd files
     assert(graft.operators.StreamOps.dropLastCommit(out) == 2L)
     def resume(): Unit = Streaming.drain(Streaming.stateSession(spark), data, schema,
@@ -308,6 +315,8 @@ class StreamingSuite extends AnyFunSuite {
     val got = out.read(spark, "events").as[SpokeEvent](
       org.apache.spark.sql.Encoders.product[SpokeEvent]).collect().toSeq
     assert(SpokeHarness.diff(got, SpokeHarness.replay(files)) == "")
+    // the resumed incarnations committed their state as changelogs
+    assert(ckptFiles(".changelog") > 0, "no state changelog written on resume")
     // the log entries the resumed incarnations wrote have no .crc: the
     // engine's manager wrote them
     for (entry <- Seq("commits/2", "offsets/3", "commits/3", "offsets/4", "commits/4")) {
