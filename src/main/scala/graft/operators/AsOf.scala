@@ -8,24 +8,26 @@ import org.apache.spark.sql.types._
 
 /** As-of (most-recent-event) join — an operator Spark lacks natively.
   *
-  * Implemented by composition (preference (a) of the build guidance): tag and
-  * union both sides, then a single partition-by-key sort and
-  * `last(_, ignoreNulls)` window carries the latest right-hand row forward
-  * onto each left-hand row. One shuffle + one sort, no join explosion, no
-  * per-key collect — at 100 TB this is strictly cheaper than the
-  * join+filter+row_number alternative (which materializes every candidate
-  * pair before pruning). The right payload rides in a single struct column so
-  * all attached fields always come from the same right row.
+  * Two plans behind one contract, picked by what the session can run (see
+  * `dispatch`): the native single-pass merge join
+  * ([[graft.plans.AsOfJoinNode]]) wherever [[graft.GraftExtensions]] is
+  * installed, else a composition of built-ins: tag and union both sides,
+  * then a single partition-by-key sort and `last(_, ignoreNulls)` window
+  * carries the latest right-hand row forward onto each left-hand row. One
+  * shuffle + one sort, no join explosion, no per-key collect — cheaper than
+  * the join+filter+row_number alternative (which materializes every
+  * candidate pair before pruning). The right payload rides in a single
+  * struct column so all attached fields always come from the same right row.
   */
 object AsOf {
 
   /** Non-null contract, enforced (not just documented): the native merge
     * compares keys/times through interpreted orderings that NPE on null,
-    * while the window fallback would silently group null keys / sort null
-    * times first — the two conf-switched paths would diverge on the same
-    * input. Both paths therefore run their key/time columns through this
-    * guard, which raises a clear error on the first null row (codegen'd
-    * null-check per row; `raise_error` only evaluates on the null branch).
+    * while the window encoding would silently group null keys / sort null
+    * times first — the two plans would diverge on the same input. Both
+    * plans therefore run their key/time columns through this guard, which
+    * raises a clear error on the first null row (codegen'd null-check per
+    * row; `raise_error` only evaluates on the null branch).
     */
   private def nonNullGuard(c: Column, what: String): Column =
     when(c.isNull, raise_error(lit(
@@ -56,23 +58,38 @@ object AsOf {
       leftKey: String, rightKey: String,
       leftTime: Column, rightTime: Column,
       rightCols: Seq[String],
-      tieBreak: String): DataFrame = {
-    // Default path: the native whole-operator merge join (custom logical
-    // node + strategy + physical single-pass merge, plans/AsOfPlan.scala).
-    // `spark.graft.asof.native=false` falls back to the declarative
-    // union+window encoding below; the parity test pins their equality.
-    // A session built WITHOUT graft.GraftExtensions has no planner
-    // strategy for the node — fall back rather than fail at plan time.
-    val native = nativeUsable(left) &&
-      left.sparkSession.conf
-        .getOption("spark.graft.asof.native").forall(_.toBoolean)
-    if (native)
+      tieBreak: String): DataFrame =
+    dispatch(left, right, leftKey, rightKey, leftTime, rightTime, rightCols,
+      tieBreak, forward = false)
+
+  /** Forward as-of join: for each left row, attach the right row with the
+    * SMALLEST `rightTime >= leftTime` within the same key; ties on
+    * `rightTime` resolved by the smallest `tieBreak` column. Same
+    * single-sort carry as the backward join, iterated in descending time.
+    */
+  def asofJoinForward(
+      left: DataFrame,
+      right: DataFrame,
+      leftKey: String, rightKey: String,
+      leftTime: Column, rightTime: Column,
+      rightCols: Seq[String],
+      tieBreak: String): DataFrame =
+    dispatch(left, right, leftKey, rightKey, leftTime, rightTime, rightCols,
+      tieBreak, forward = true)
+
+  /** The one plan choice, made from what the session can run: the native
+    * merge join (plans/AsOfPlan.scala) wherever the planner has its
+    * strategy, else the union+window encoding [[asofWindow]].
+    */
+  private def dispatch(left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String, leftTime: Column, rightTime: Column,
+      rightCols: Seq[String], tieBreak: String, forward: Boolean): DataFrame =
+    if (nativeUsable(left))
       asofNative(left, right, leftKey, rightKey, leftTime, rightTime,
-        rightCols, tieBreak)
+        rightCols, tieBreak, forward)
     else
-      asofImpl(left, right, leftKey, rightKey, leftTime, rightTime, rightCols,
-        tieBreak, forward = false)
-  }
+      asofWindow(left, right, leftKey, rightKey, leftTime, rightTime,
+        rightCols, tieBreak, forward)
 
   /** The custom strategy only exists in sessions that installed
     * GraftExtensions (every engine entry point does; an ad-hoc downstream
@@ -95,14 +112,15 @@ object AsOf {
       leftTime: Column, rightTime: Column,
       rightCols: Seq[String],
       tieBreak: String,
-      forward: Boolean = false): DataFrame = {
+      forward: Boolean): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val spark = left.sparkSession
     // cast both times to one comparable type (the window path's contract;
     // order-preserving, so semantics coincide). Keys and times run through
-    // the non-null guard so this path fails identically to the fallback on
-    // null input instead of NPE-ing inside the interpreted ordering.
+    // the non-null guard so this path fails identically to the window
+    // encoding on null input instead of NPE-ing inside the interpreted
+    // ordering.
     val lDf = nonNullRowGuard(left, col(leftKey), s"left key $leftKey")
       .withColumn("__asof_lt",
         nonNullGuard(leftTime.cast(TimestampType), "left time"))
@@ -122,7 +140,7 @@ object AsOf {
       rDf.queryExecution.analyzed)
     // resolve through the session's analyzer resolver (honors
     // spark.sql.caseSensitive) so this path binds the same column the
-    // fallback's df.col(...) resolution would; ambiguity fails loudly
+    // window encoding's df.col(...) resolution would; ambiguity fails loudly
     // instead of first-match-wins
     val resolver = spark.sessionState.analyzer.resolver
     def attr(out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
@@ -143,30 +161,11 @@ object AsOf {
       .drop("__asof_lt").drop("__asof_lk")
   }
 
-  /** Forward as-of join: for each left row, attach the right row with the
-    * SMALLEST `rightTime >= leftTime` within the same key; ties on
-    * `rightTime` resolved by the smallest `tieBreak` column. Same
-    * single-sort carry as the backward join, iterated in descending time.
+  /** The union+window encoding: the plan of sessions built without
+    * [[graft.GraftExtensions]], and the reference the parity tests hold the
+    * native merge join to.
     */
-  def asofJoinForward(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: Column, rightTime: Column,
-      rightCols: Seq[String],
-      tieBreak: String): DataFrame = {
-    val native = nativeUsable(left) &&
-      left.sparkSession.conf
-        .getOption("spark.graft.asof.native").forall(_.toBoolean)
-    if (native)
-      asofNative(left, right, leftKey, rightKey, leftTime, rightTime,
-        rightCols, tieBreak, forward = true)
-    else
-      asofImpl(left, right, leftKey, rightKey, leftTime, rightTime, rightCols,
-        tieBreak, forward = true)
-  }
-
-  private def asofImpl(
+  private[graft] def asofWindow(
       left: DataFrame,
       right: DataFrame,
       leftKey: String, rightKey: String,

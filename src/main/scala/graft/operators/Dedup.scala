@@ -73,7 +73,8 @@ object Dedup {
 
 
   /** Near-dup pairs at Jaccard >= 0.1 over word-5-gram shingles (the d02
-    * pipeline without the reporting columns) — shared by d02 and d06.
+    * pipeline without the reporting columns) — the graph [[clusterLabels]]
+    * clusters.
     */
   private def neardupPairs(s: SparkSession, d: String): DataFrame = {
     val sh = cappedShingles(s, d).cache()
@@ -88,54 +89,33 @@ object Dedup {
       .select("doc_a", "doc_b")
   }
 
-  /** Connected components over an undirected pair list: min-label
-    * propagation to fixpoint, returning (node, label) with label = the
-    * component's minimum node id.
-    *
-    * Labels only decrease, so a stable label-sum is a true fixpoint (== a
-    * recursive-CTE transitive closure); iterations needed = component
-    * diameter, tiny for near-dup graphs. Each iteration truncates lineage
-    * with localCheckpoint — stacked iterative joins would otherwise send the
-    * analyzer/optimizer superlinear (same rule as GraphX/ALS). At
-    * 100TB-graph scale the loop becomes large-star/small-star contraction
-    * (O(log n) rounds of the same join/agg primitives) — see SCALE.md.
+  /** (node, label) connected components of the [[neardupPairs]] graph —
+    * the near-dup clusters d06, d09 and d12 report.
     */
-  /** Rounds the last [[connectedComponents]] call took to converge
-    * (driver-side telemetry: the number is the graph diameter + 1, the
-    * quantity that decides label-prop vs star-contraction — see SCALE.md).
-    */
-  @volatile private[graft] var lastCcRounds: Int = 0
+  private def clusterLabels(s: SparkSession, d: String): DataFrame =
+    connectedComponents(neardupPairs(s, d).cache(), "doc_a", "doc_b")
 
-  def connectedComponents(pairs: DataFrame, a: String, b: String): DataFrame = {
-    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
-      .unionByName(pairs.select(col(b).as("src"), col(a).as("dst")))
-      .cache()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var prevSig = -1L
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val prop = edges.join(labels, col("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      labels = labels.join(prop, col("node") === col("src"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint()
-      val sig = labels.agg(sum(col("label"))).head().getLong(0)
-      converged = sig == prevSig
-      prevSig = sig
-      rounds += 1
-    }
-    lastCcRounds = rounds
-    labels
-  }
+  /** d06/d09: one row per near-dup cluster with its sorted member list. */
+  private def dedupClusters(s: SparkSession, d: String): DataFrame =
+    clusterLabels(s, d).groupBy(col("label").as("cluster_id"))
+      .agg(count(lit(1)).as("size"),
+        expr("concat_ws(',', transform(sort_array(collect_list(node)), x -> cast(x as string)))")
+          .as("members"))
+      .orderBy("cluster_id")
 
-  /** Connected components by alternating large-star/small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the O(log n)-round algorithm for 100TB-scale graphs where
-    * label propagation's diameter-bound round count is unacceptable.
-    * Returns (node, label) like [[connectedComponents]].
+  private def dedupClustersOracle: String =
+    s"""WITH RECURSIVE $sqlCappedCtes,
+      |$sqlClusterLabCtes
+      |SELECT label AS cluster_id, COUNT(*) AS size,
+      |  string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members
+      |FROM lab GROUP BY label ORDER BY cluster_id""".stripMargin
+
+  /** Connected components over an undirected pair list, returning
+    * (node, label) with label = the component's minimum node id, by
+    * alternating large-star/small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14): O(log n)
+    * rounds, where min-label propagation needs one round per unit of graph
+    * diameter.
     *
     * Each round is two self-contained map/reduce steps over the edge list:
     *  - large-star: every node attaches its larger neighbors to its current
@@ -143,8 +123,10 @@ object Dedup {
     *  - small-star: every node attaches its smaller-or-equal neighbors to
     *    the minimum.
     * The edge multiset converges to a star forest; roots are the labels.
+    * Each round truncates lineage with localCheckpoint — stacked iterative
+    * joins would otherwise send the analyzer/optimizer superlinear.
     */
-  def connectedComponentsStar(pairs: DataFrame, a: String, b: String): DataFrame = {
+  def connectedComponents(pairs: DataFrame, a: String, b: String): DataFrame = {
     var edges = pairs.select(col(a).as("u"), col(b).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
@@ -188,9 +170,8 @@ object Dedup {
 
     var converged = false
     // signature: edge count + sum of endpoints (monotone toward the fixed
-    // star forest). Carried across rounds (r12): round k's `prev` IS round
-    // k-1's `sig`, so recomputing it was one redundant aggregate job per
-    // round per CC consumer (mm11/mm12/d06/d09/g06 all iterate this loop).
+    // star forest), carried across rounds: round k's `prev` IS round k-1's
+    // `sig`.
     var prevSig = edges.agg(count(lit(1)), sum(col("u") + col("v"))).head()
     while (!converged) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
@@ -271,6 +252,29 @@ object Dedup {
     s"""sh0 AS ($sqlShingles),
       |sh AS (SELECT sh0.* FROM sh0 WHERE sh NOT IN (
       |       SELECT sh FROM sh0 GROUP BY sh HAVING count(*) > $ShingleDfCap))""".stripMargin
+
+  /** Oracle mirror of [[clusterLabels]]: the d02 near-dup pairs over an
+    * existing `sh` CTE, then their recursive-CTE transitive closure — CTEs
+    * `sz`/`pr`/`pairs`/`edges`/`nodes`/`reach`/`lab`, where `lab` is
+    * (node, label = the component's minimum node id). Shared by d06, d09
+    * and d12; splice after `WITH RECURSIVE $sqlCappedCtes,`.
+    */
+  private val sqlClusterLabCtes =
+    """sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+      |       FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      |       GROUP BY 1, 2),
+      |pairs AS (SELECT doc_a, doc_b FROM pr
+      |          JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
+      |          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.1),
+      |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
+      |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+      |nodes AS (SELECT DISTINCT s AS node FROM edges),
+      |reach(node, label) AS (
+      |  SELECT node, node FROM nodes
+      |  UNION
+      |  SELECT e.s, r.label FROM edges e JOIN reach r ON r.node = e.t),
+      |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)""".stripMargin
 
   /** Oracle mirror of [[minhashBands]] + the band-collision self-join:
     * CTEs `hs`/`pm`/`mh`/`bands`/`cand` over an existing `sh` CTE. Shared
@@ -684,77 +688,14 @@ object Dedup {
     // ------------------------------------------------------------------
     // Connected-components clustering of the near-dup pair graph — the step
     // a real dedup pipeline runs after pair generation (keep one doc per
-    // component). Iterative min-label propagation over the (tiny) pair
-    // graph: each iteration is one join + aggregate; at corpus scale this is
-    // the standard O(log n)-round CC (cluster diameters here are far below
-    // the 10-round cap, so the fixpoint is reached; oracle computes the true
-    // transitive closure with a recursive CTE).
-    Op(
-      "d06_dedup_clusters",
-      (s, d) => {
-        val pairs = neardupPairs(s, d).cache()
-        val labels = connectedComponents(pairs, "doc_a", "doc_b")
-        labels.groupBy(col("label").as("cluster_id"))
-          .agg(count(lit(1)).as("size"),
-            expr("concat_ws(',', transform(sort_array(collect_list(node)), x -> cast(x as string)))")
-              .as("members"))
-          .orderBy("cluster_id")
-      },
-      Some(s"""WITH RECURSIVE $sqlCappedCtes,
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |pairs AS (SELECT doc_a, doc_b FROM pr
-        |          JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-        |          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.1),
-        |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |nodes AS (SELECT DISTINCT s AS node FROM edges),
-        |reach(node, label) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT e.s, r.label FROM edges e JOIN reach r ON r.node = e.t),
-        |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)
-        |SELECT label AS cluster_id, COUNT(*) AS size,
-        |  string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members
-        |FROM lab GROUP BY label ORDER BY cluster_id""".stripMargin)),
+    // component): `clusterLabels` (star contraction, O(log n) rounds),
+    // then one row per cluster. The oracle computes the true transitive
+    // closure with a recursive CTE.
+    Op("d06_dedup_clusters", dedupClusters, Some(dedupClustersOracle)),
     // ------------------------------------------------------------------
-    // Same clusters as d06 but via large-star/small-star contraction — the
-    // O(log n)-round CC that replaces label propagation at 100TB graph
-    // scale. Shares d06's recursive-CTE oracle (identical output proves the
-    // two algorithms agree on the fixture, on top of the randomized
-    // equivalence tests in OperatorSuite).
-    Op(
-      "d09_dedup_clusters_star",
-      (s, d) => {
-        val pairs = neardupPairs(s, d).cache()
-        val labels = connectedComponentsStar(pairs, "doc_a", "doc_b")
-        labels.groupBy(col("label").as("cluster_id"))
-          .agg(count(lit(1)).as("size"),
-            expr("concat_ws(',', transform(sort_array(collect_list(node)), x -> cast(x as string)))")
-              .as("members"))
-          .orderBy("cluster_id")
-      },
-      Some(s"""WITH RECURSIVE $sqlCappedCtes,
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |pairs AS (SELECT doc_a, doc_b FROM pr
-        |          JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-        |          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.1),
-        |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |nodes AS (SELECT DISTINCT s AS node FROM edges),
-        |reach(node, label) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT e.s, r.label FROM edges e JOIN reach r ON r.node = e.t),
-        |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)
-        |SELECT label AS cluster_id, COUNT(*) AS size,
-        |  string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members
-        |FROM lab GROUP BY label ORDER BY cluster_id""".stripMargin)),
+    // The same query under its second name: the driver contract lists both
+    // d06 and d09.
+    Op("d09_dedup_clusters_star", dedupClusters, Some(dedupClustersOracle)),
     // ------------------------------------------------------------------
     // SimHash near-dup pairs at Hamming distance <= 3, found by 4x8-bit
     // banding: 3 differing bits can dirty at most 3 of the 4 bands, so every
@@ -938,17 +879,15 @@ object Dedup {
     // Representative selection after near-dup clustering: each cluster
     // keeps its highest-quality member (longest text; ties to the smallest
     // doc_id) — the standard "keep best, drop rest" step between dedup and
-    // training. Reuses d06's cluster labels; the winner is picked with one
+    // training. Reuses d06's `clusterLabels`; the winner is picked with one
     // max_by aggregation per cluster (a single shuffle on cluster_id — no
     // window sort needed), so the step adds one map-side-combinable agg on
     // top of the clustering cost at any scale.
     Op(
       "d12_keep_best_per_cluster",
       (s, d) => {
-        val pairs = neardupPairs(s, d).cache()
-        val labels = connectedComponents(pairs, "doc_a", "doc_b")
         val quality = T.documents(s, d).select(col("doc_id"), col("n_chars"))
-        labels.join(quality, col("node") === col("doc_id"))
+        clusterLabels(s, d).join(quality, col("node") === col("doc_id"))
           .groupBy(col("label").as("cluster_id"))
           .agg(
             count(lit(1)).as("size"),
@@ -958,21 +897,7 @@ object Dedup {
           .orderBy("cluster_id")
       },
       Some(s"""WITH RECURSIVE $sqlCappedCtes,
-        |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        |       FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |       GROUP BY 1, 2),
-        |pairs AS (SELECT doc_a, doc_b FROM pr
-        |          JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-        |          WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.1),
-        |edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |nodes AS (SELECT DISTINCT s AS node FROM edges),
-        |reach(node, label) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT e.s, r.label FROM edges e JOIN reach r ON r.node = e.t),
-        |lab AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
+        |$sqlClusterLabCtes,
         |ranked AS (SELECT l.label, l.node, d.n_chars,
         |  ROW_NUMBER() OVER (PARTITION BY l.label
         |    ORDER BY d.n_chars DESC, l.node ASC) AS rk

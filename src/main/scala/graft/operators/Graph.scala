@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.DoubleType
   * positive, so floor == truncate).
   *
   * Scale shape: two physical strategies behind one integer recurrence.
-  * (a) BROADCAST (node count ≤ spark.graft.pagerank.broadcastMaxNodes):
+  * (a) BROADCAST (node count ≤ [[Graph.BroadcastMaxNodes]]):
   * degree folds into the persisted edge list once; each iteration is ONE
   * broadcast join of the O(nodes) rank table against the edge scan + ONE
   * aggregation on the destination — the edge list never re-shuffles.
@@ -94,15 +94,10 @@ object Graph {
   private[graft] def fineCcLabels(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
     s.read.parquet(Streaming.stagedDir("cclabels", d) { p =>
-      Dedup.connectedComponentsStar(fineSampledUndirectedEdges(s, d), "a", "b")
+      Dedup.connectedComponents(fineSampledUndirectedEdges(s, d), "a", "b")
         .write.mode("overwrite").parquet(p)
     })
 
-  /** Oracle mirror of [[fineSampledUndirectedEdges]] + the recursive-CTE
-    * min-label transitive closure: CTEs `und`/`bi`/`nodes`/`reach`/`lab`,
-    * shared by g06 (histogram) and g07 (modularity). Splice after
-    * `WITH RECURSIVE`.
-    */
   /** Oracle mirror of [[fineSampledUndirectedEdges]] alone (the `und` CTE
     * + both orientations `bi`) — shared by the CC closure below and g09's
     * Louvain pass, which needs the edges but not the recursive closure.
@@ -118,6 +113,11 @@ object Graph {
       |               1, 2) = '00'),
       |bi AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
 
+  /** Oracle mirror of [[fineSampledUndirectedEdges]] + the recursive-CTE
+    * min-label transitive closure: CTEs `und`/`bi`/`nodes`/`reach`/`lab`,
+    * shared by g06 (histogram) and g07 (modularity). Splice after
+    * `WITH RECURSIVE`.
+    */
   private val sqlFineCcCtes =
     s"""$sqlUndCtes,
       |nodes AS (SELECT DISTINCT a AS n FROM bi),
@@ -132,18 +132,16 @@ object Graph {
     * co-partitioned plan takes over (~16 B/row → 1M nodes ≈ 16 MB, past
     * the point a per-iteration driver broadcast is sane on a real cluster).
     */
-  private[graft] val BroadcastMaxNodesKey = "spark.graft.pagerank.broadcastMaxNodes"
+  private val BroadcastMaxNodes = 1000000L
 
   /** Fixed-point integer PageRank over a DIRECTED edge list (a -> b),
     * `iters` rounds; picks broadcast vs co-partitioned per the node count.
     * Exposed for the randomized brute-force parity test.
     */
   private[graft] def pagerankFp(es: DataFrame, iters: Int): DataFrame = {
-    val maxBcast = es.sparkSession.conf
-      .getOption(BroadcastMaxNodesKey).map(_.toLong).getOrElse(1000000L)
     val deg = es.groupBy("a").agg(count(lit(1)).as("deg"))
     val n = deg.count()
-    if (n <= maxBcast) pagerankFpBroadcast(es, deg, n, iters)
+    if (n <= BroadcastMaxNodes) pagerankFpBroadcast(es, deg, n, iters)
     else pagerankFpCoPartitioned(es, deg, n, iters)
   }
 
@@ -169,11 +167,6 @@ object Graph {
     ranks
   }
 
-  /** ONE-TIME cost of the co-partitioned plan: hash-partition the
-    * degree-annotated edge list by source and pin it. deg is already
-    * partitioned by a (it came from groupBy(a)), so this join itself only
-    * exchanges the raw edge scan. Exposed for the PlanSuite guard.
-    */
   /** Frontier-expansion BFS: `rounds` layers of (hop, node) from `src`
     * over a directed edge list (a -> b). Joins only the CURRENT frontier
     * (O(layer), not O(visited)) against the edge list each round; visited
@@ -222,6 +215,11 @@ object Graph {
     visited
   }
 
+  /** ONE-TIME cost of the co-partitioned plan: hash-partition the
+    * degree-annotated edge list by source and pin it. deg is already
+    * partitioned by a (it came from groupBy(a)), so this join itself only
+    * exchanges the raw edge scan. Exposed for the PlanSuite guard.
+    */
   private[graft] def coPartPrep(es: DataFrame, p: Int): DataFrame = {
     val ej = es.repartition(p, col("a"))
       .join(es.groupBy("a").agg(count(lit(1)).as("deg"))
@@ -248,7 +246,10 @@ object Graph {
         (lit(15L * base / 100L) + expr("(85 * s) DIV 100")).as("r"))
   }
 
-  private def pagerankFpCoPartitioned(
+  /** The co-partitioned strategy; exposed so that its parity test runs it
+    * on a graph below [[BroadcastMaxNodes]].
+    */
+  private[graft] def pagerankFpCoPartitioned(
       es: DataFrame, deg: DataFrame, n: Long, iters: Int): DataFrame = {
     val p = es.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val ej = coPartPrep(es, p)
@@ -561,19 +562,19 @@ object Graph {
     // ------------------------------------------------------------------
     // Whole-graph connected components as a first-class GRAPH query (the
     // community/cluster primitive d06/d09 apply to near-dup pairs, here
-    // over the shared co-purchase edge table): runs the O(log n)
-    // large-star/small-star contraction (Kiveris et al., SoCC'14) — the
-    // 100 TB path, where label propagation's diameter-bound round count is
-    // unacceptable — and rolls the labeling up into a component-size
-    // histogram with a sum-of-labels checksum per size class. The label of
-    // a component is its minimum node id (an engine-independent canonical
-    // choice), so the histogram plus checksum hash-matches a DuckDB
-    // recursive-CTE transitive closure exactly. Scale shape: every
-    // contraction round is two (min-aggregate + equi-join + distinct)
-    // passes over a monotonically shrinking edge multiset — no windows, no
-    // per-node neighborhood arrays (a celebrity node never materializes
-    // its neighbor list in one task), lineage truncated per round; the
-    // rollup is two map-side-combinable aggregations.
+    // over the shared co-purchase edge table): runs the engine's one CC
+    // kernel, Dedup.connectedComponents (O(log n) large-star/small-star
+    // contraction, Kiveris et al., SoCC'14), and rolls the labeling up
+    // into a component-size histogram with a sum-of-labels checksum per
+    // size class. The label of a component is its minimum node id (an
+    // engine-independent canonical choice), so the histogram plus checksum
+    // hash-matches a DuckDB recursive-CTE transitive closure exactly.
+    // Scale shape: every contraction round is two (min-aggregate +
+    // equi-join + distinct) passes over a monotonically shrinking edge
+    // multiset — no windows, no per-node neighborhood arrays (a celebrity
+    // node never materializes its neighbor list in one task), lineage
+    // truncated per round; the rollup is two map-side-combinable
+    // aggregations.
     Op(
       "g06_connected_components",
       (s, d) => {

@@ -423,8 +423,8 @@ object Multimodal {
     // in clique size BY CONTRACT (a 100-member clique is 4,950 pairs;
     // 131M pairs at 100x), so the shape a deployment runs is
     // cluster-valued — band buckets -> hamming-verified pairs ->
-    // star-contraction connected components (d09's O(log n)-round
-    // machinery) -> ONE row per cluster: representative (the min member,
+    // star-contraction connected components (Dedup.connectedComponents,
+    // O(log n) rounds) -> ONE row per cluster: representative (the min member,
     // which IS the CC label), member count, and the max hamming radius
     // to the representative (members' phashes joined back once). Output
     // is O(clusters); the only O(pairs) stage is the banded candidate
@@ -437,7 +437,7 @@ object Multimodal {
       // CacheManager entry outlives the query (r11 advisor note).
       val ph = phashOf(T.documents(s, d)).localCheckpoint()
       val pairs = phashNeardupPairs(phashBands(ph)).select("doc_a", "doc_b")
-      val labels = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
+      val labels = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       val members = labels.join(ph, col("node") === col("doc_id"))
         .select(col("label"), col("node"), col("phash"))
       // the CC label is the component's min node = the representative;
@@ -502,7 +502,7 @@ object Multimodal {
             .partitionBy("band", "bits").orderBy("doc_id")))
         .filter(col("rn") <= W).drop("rn")
       val pairs = phashNeardupPairs(capped).select("doc_a", "doc_b")
-      val labels = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
+      val labels = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       val members = labels.join(ph, col("node") === col("doc_id"))
         .select(col("label"), col("node"), col("phash"))
       val reps = members.filter(col("node") === col("label"))

@@ -13,8 +13,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
   * option (c): a custom logical node, planner strategy and physical operator
   * registered through `SparkSessionExtensions`, used where composing
   * built-ins costs more than the semantics require. The declarative
-  * union+window encoding (AsOf.asofImpl, kept as the forward-join and
-  * fallback path) materializes BOTH streams into one sorted window pass —
+  * union+window encoding (AsOf.asofWindow, kept for sessions without this
+  * strategy and as the parity tests' reference) materializes BOTH streams into one sorted window pass —
   * 2x the row volume through the sort and a window carry whose state is a
   * struct per row. This operator instead asks Catalyst for the SAME
   * distribution/ordering guarantees a sort-merge join gets (children
@@ -35,7 +35,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
   *
   * Contract: join keys and times are non-null — ENFORCED at the
   * [[graft.operators.AsOf.asofJoin]] API boundary (both paths wrap
-  * key/time columns in a raise-on-null guard, so native and fallback fail
+  * key/time columns in a raise-on-null guard, so native and window fail
   * identically instead of diverging); time columns on both sides share a
   * comparable type ordering (timestamp/long/int — the cast the window
   * path applies is order-preserving, so results coincide).

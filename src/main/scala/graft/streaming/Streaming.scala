@@ -361,7 +361,7 @@ case class SpokeEvent(
   * steps [[SpokeCore]] without a [[SpokeBuffer]] (the per-key replays) keeps
   * the rows inline in `buffered`; [[TwsSpoke]] keeps them in chunked
   * MapState and leaves `buffered` Nil while tracking the size in
-  * `bufferedCount`.
+  * `bufferedCount`, from which it also derives the number of chunks.
   */
 case class SpokeState(
     learnerName: String,
@@ -575,38 +575,40 @@ class TwsSpokeProcessor(stateEncoder: Encoder[SpokeState],
 
   @transient private var state: ValueState[SpokeState] = _
   @transient private var bufChunks: MapState[Long, BufChunk] = _
-  @transient private var bufMeta: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     state = getHandle.getValueState[SpokeState]("spokeState", stateEncoder, TTLConfig.NONE)
     bufChunks = getHandle.getMapState[Long, BufChunk]("preCreateChunks",
       Encoders.scalaLong, chunkEncoder, TTLConfig.NONE)
-    bufMeta = getHandle.getValueState[Long]("preCreateChunkCount",
-      Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Int, rows: Iterator[Envelope],
       timerValues: TimerValues): Iterator[SpokeEvent] = {
     val prev = if (state.exists()) Some(state.get()) else None
+    // rows in chunked state: the previous step's `bufferedCount` (every
+    // chunk is full but the last), 0 once this step drains the buffer
+    var stored = prev.fold(0)(_.bufferedCount)
+    def storedChunks: Long =
+      (stored + TwsSpoke.ChunkSize - 1) / TwsSpoke.ChunkSize
     // appends stage here during the step; flushed to chunked state below
     val pending = scala.collection.mutable.ArrayBuffer.empty[BufRow]
     val ext = new SpokeBuffer {
       override def append(features: Seq[Double], target: Option[Double]): Unit =
         pending += BufRow(features, target)
       override def drain(): Seq[(Seq[Double], Option[Double])] = {
-        val nc = if (bufMeta.exists()) bufMeta.get() else 0L
-        val stored = (0L until nc).iterator
+        val nc = storedChunks
+        val held = (0L until nc).iterator
           .flatMap(i => bufChunks.getValue(i).rows)
           .map(r => (r.features, r.target)).toSeq
-        if (nc > 0) { bufChunks.clear(); bufMeta.clear() }
-        val all = stored ++ pending.map(r => (r.features, r.target))
+        if (nc > 0) { bufChunks.clear(); stored = 0 }
+        val all = held ++ pending.map(r => (r.features, r.target))
         pending.clear()
         all
       }
     }
     val (out, next) = SpokeCore.step(key, rows, prev, Some(ext), testMode)
     if (pending.nonEmpty) {
-      var nc = if (bufMeta.exists()) bufMeta.get() else 0L
+      var nc = storedChunks
       var tail =
         if (nc > 0)
           scala.collection.mutable.ArrayBuffer.from(bufChunks.getValue(nc - 1).rows)
@@ -620,7 +622,6 @@ class TwsSpokeProcessor(stateEncoder: Encoder[SpokeState],
         tail += r
       }
       bufChunks.updateValue(nc - 1, BufChunk(tail.toSeq))
-      bufMeta.update(nc)
     }
     next.foreach(state.update)
     out.iterator

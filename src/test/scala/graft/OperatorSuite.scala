@@ -11,8 +11,8 @@ class OperatorSuite extends AnyFunSuite {
   test("connected components converges past any fixed iteration budget") {
     import spark.implicits._
     // A 40-edge path (diameter 40) plus a disjoint triangle and a singleton
-    // pair: min-label propagation must run to the true fixpoint, not a
-    // fixed round budget.
+    // pair: the kernel must run to the true fixpoint, not a fixed round
+    // budget.
     val path = (0L until 40L).map(i => (i, i + 1))
     val tri = Seq((100L, 101L), (101L, 102L), (100L, 102L))
     val pair = Seq((200L, 201L))
@@ -22,12 +22,9 @@ class OperatorSuite extends AnyFunSuite {
     assert((0L to 40L).forall(labels(_) == 0L))
     assert(Seq(100L, 101L, 102L).forall(labels(_) == 100L))
     assert(Seq(200L, 201L).forall(labels(_) == 200L))
-    // rounds telemetry = diameter + 1 (the last round only detects the
-    // stable signature); the d06-vs-d09 algorithm choice reads this
-    assert(Dedup.lastCcRounds == 41, s"rounds=${Dedup.lastCcRounds}")
   }
 
-  test("large-star/small-star CC agrees with label propagation on random graphs") {
+  test("large-star/small-star CC agrees with a driver-side union-find on random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(424242)
     for (trial <- 1 to 4) {
@@ -35,12 +32,21 @@ class OperatorSuite extends AnyFunSuite {
       val edges = (0 until n).map(_ =>
         (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
         .filter { case (x, y) => x != y }
-      val df = edges.toDF("doc_a", "doc_b")
-      val lp = Dedup.connectedComponents(df, "doc_a", "doc_b")
+      // reference: union-find over the same edges, label = component min
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (x, y) =>
+        val (rx, ry) = (find(x), find(y))
+        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+      }
+      val uf = parent.keys.toSeq.map(x => x -> find(x)).toMap
+      val ls = Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"),
+          "doc_a", "doc_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ls = Dedup.connectedComponentsStar(df, "doc_a", "doc_b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(ls == lp, s"trial $trial: star-contraction disagrees")
+      assert(ls == uf, s"trial $trial: star-contraction disagrees")
     }
   }
 
@@ -49,7 +55,7 @@ class OperatorSuite extends AnyFunSuite {
     // one hub connected to everyone + a disjoint pair; the join-based star
     // steps never materialize the hub's neighborhood as a single array
     val edges = (1L to 5000L).map(i => (0L, i)) ++ Seq((900001L, 900002L))
-    val labels = Dedup.connectedComponentsStar(
+    val labels = Dedup.connectedComponents(
       edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 5003)
@@ -1071,13 +1077,11 @@ class OperatorSuite extends AnyFunSuite {
     val df = (half ++ half.map(_.swap)).distinct.toDF("a", "b")
     val bcast = Graph.pagerankFp(df, 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set(Graph.BroadcastMaxNodesKey, "1") // force co-partitioned
-    try {
-      val copart = Graph.pagerankFp(df, 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(copart == bcast,
-        "co-partitioned plan drifted from the broadcast recurrence")
-    } finally spark.conf.unset(Graph.BroadcastMaxNodesKey)
+    val deg = df.groupBy("a").count().withColumnRenamed("count", "deg")
+    val copart = Graph.pagerankFpCoPartitioned(df, deg, deg.count(), 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(copart == bcast,
+      "co-partitioned plan drifted from the broadcast recurrence")
   }
 
   test("oriented triangle count matches brute force on random graphs") {

@@ -504,6 +504,15 @@ class PipelineSparkSuite extends AnyFunSuite {
     assert(p.target.contains(1.0))
   }
 
+  /** The as-of join on the plan a parity test names: the session's own
+    * choice (the native merge join, under GraftExtensions) or the
+    * union+window encoding.
+    */
+  private def asof(native: Boolean, fwd: Boolean = false) =
+    if (!native) graft.operators.AsOf.asofWindow(_, _, _, _, _, _, _, _, fwd)
+    else if (fwd) graft.operators.AsOf.asofJoinForward _
+    else graft.operators.AsOf.asofJoin _
+
   test("as-of join semantics: <=, tie-break on greatest key, null for no match") {
     import spark.implicits._
     val left = Seq(
@@ -577,22 +586,17 @@ class PipelineSparkSuite extends AnyFunSuite {
     val right = (1 to 400).map(i =>
       (1000L + i, (rnd.nextInt(8) + 4).toLong, rnd.nextInt(40).toLong))
       .toDF("rid", "user", "rt")
-    def run(fwd: Boolean): Seq[(Long, Any, Any)] = {
-      val j = if (fwd) graft.operators.AsOf.asofJoinForward _
-        else graft.operators.AsOf.asofJoin _
-      j(left, right, "user", "user",
+    def run(fwd: Boolean, native: Boolean): Seq[(Long, Any, Any)] =
+      asof(native, fwd)(left, right, "user", "user",
         org.apache.spark.sql.functions.col("t").cast("timestamp"),
         org.apache.spark.sql.functions.col("rt").cast("timestamp"),
         Seq("rid", "rt"), "rid")
         .collect().map(r => (r.getAs[Long]("lid"),
           r.getAs[Any]("rid"), r.getAs[Any]("rt")))
         .sortBy(_._1).toSeq
-    }
     for (fwd <- Seq(false, true)) {
-      val native = run(fwd)
-      spark.conf.set("spark.graft.asof.native", "false")
-      val window = try run(fwd) finally
-        spark.conf.unset("spark.graft.asof.native")
+      val native = run(fwd, native = true)
+      val window = run(fwd, native = false)
       assert(native == window, s"fwd=$fwd first diff: " +
         s"${native.zip(window).find(p => p._1 != p._2)}")
     }
@@ -607,17 +611,13 @@ class PipelineSparkSuite extends AnyFunSuite {
     val right0 = Seq((100L, 5L, 8L), (100L, 5L, 8L), (101L, 5L, 15L))
       .toDF("rid", "user", "rt")
     val right = right0.unionAll(right0)
-    def run(native: Boolean): Seq[(Long, Long)] = {
-      if (!native) spark.conf.set("spark.graft.asof.native", "false")
-      try graft.operators.AsOf.asofJoin(
-          left, right, "user", "user",
-          org.apache.spark.sql.functions.col("t").cast("timestamp"),
-          org.apache.spark.sql.functions.col("rt").cast("timestamp"),
-          Seq("rid"), "rid")
+    def run(native: Boolean): Seq[(Long, Long)] =
+      asof(native)(left, right, "user", "user",
+        org.apache.spark.sql.functions.col("t").cast("timestamp"),
+        org.apache.spark.sql.functions.col("rt").cast("timestamp"),
+        Seq("rid"), "rid")
         .collect().map(r => (r.getLong(0), r.getLong(3)))
         .sortBy(identity).toSeq
-      finally if (!native) spark.conf.unset("spark.graft.asof.native")
-    }
     val expect = Seq((1L, 100L), (1L, 100L), (2L, 101L), (2L, 101L))
     assert(run(native = true) == expect)
     assert(run(native = false) == expect)
@@ -638,17 +638,13 @@ class PipelineSparkSuite extends AnyFunSuite {
     val right = (1 to 500).map(i =>
       (1000L + i, keys(rnd.nextInt(keys.size)), rnd.nextInt(30).toLong))
       .toDF("rid", "user", "rt")
-    def run(native: Boolean): Seq[(Long, Any)] = {
-      if (!native) spark.conf.set("spark.graft.asof.native", "false")
-      try graft.operators.AsOf.asofJoin(
-          left, right, "user", "user",
-          org.apache.spark.sql.functions.col("t").cast("timestamp"),
-          org.apache.spark.sql.functions.col("rt").cast("timestamp"),
-          Seq("rid"), "rid")
+    def run(native: Boolean): Seq[(Long, Any)] =
+      asof(native)(left, right, "user", "user",
+        org.apache.spark.sql.functions.col("t").cast("timestamp"),
+        org.apache.spark.sql.functions.col("rt").cast("timestamp"),
+        Seq("rid"), "rid")
         .collect().map(r => (r.getAs[Long]("lid"), r.getAs[Any]("rid")))
         .sortBy(_._1).toSeq
-      finally if (!native) spark.conf.unset("spark.graft.asof.native")
-    }
     val native = run(native = true)
     val window = run(native = false)
     assert(native == window,
@@ -660,15 +656,11 @@ class PipelineSparkSuite extends AnyFunSuite {
     val left = Seq((1L, Some(5L), Some(10L)), (2L, None, Some(20L)))
       .toDF("lid", "user", "t")
     val right = Seq((100L, 5L, 8L)).toDF("rid", "user", "rt")
-    def run(native: Boolean): Unit = {
-      if (!native) spark.conf.set("spark.graft.asof.native", "false")
-      try graft.operators.AsOf.asofJoin(
-          left, right, "user", "user",
-          org.apache.spark.sql.functions.col("t").cast("timestamp"),
-          org.apache.spark.sql.functions.col("rt").cast("timestamp"),
-          Seq("rid"), "rid").collect()
-      finally if (!native) spark.conf.unset("spark.graft.asof.native")
-    }
+    def run(native: Boolean): Unit =
+      asof(native)(left, right, "user", "user",
+        org.apache.spark.sql.functions.col("t").cast("timestamp"),
+        org.apache.spark.sql.functions.col("rt").cast("timestamp"),
+        Seq("rid"), "rid").collect()
     for (native <- Seq(true, false)) {
       val e = intercept[Exception](run(native))
       def msgs(t: Throwable): Seq[String] =
