@@ -418,9 +418,9 @@ final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
     * row when that global is None, on the rows its `HeldOutRing(testCap)`
     * lets through; an empty partition trains none. The replicas fold
     * through [[Protocols.round]], or [[treeMerge]] for a plain average over
-    * more than `treeMergeThreshold` partitions. Returns the next global,
-    * counters set to the running totals, or None when no partition had a
-    * row. */
+    * at least [[RoundDriver.TreeMergeMinPartitions]] partitions. Returns
+    * the next global, counters set to the running totals, or None when no
+    * partition had a row. */
   def round(data: RDD[(Array[Double], Double)],
       testCap: Int): Option[ModelState] = {
     val protocol = current.get
@@ -462,7 +462,7 @@ final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
     // the admit-all fold coincides with SSP.aggregate
     val tree =
       Set("Synchronous", "Asynchronous", "SSP").contains(protocol.name) &&
-        learner.mergeIsAssociative && numParts > spec.treeMergeThreshold
+        learner.mergeIsAssociative && numParts >= RoundDriver.TreeMergeMinPartitions
     val merged =
       try {
         if (tree) treeMerge(replicas)
@@ -489,7 +489,7 @@ final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
     * (SCALE.md). Charges the ledger as [[Protocols.round]] would: one
     * model and its bytes per replica, which enters the tree once as
     * ceil(payload / maxMsgParams) transport blocks. */
-  private def treeMerge(replicas: RDD[ModelState]): Option[ModelState] = {
+  private[graft] def treeMerge(replicas: RDD[ModelState]): Option[ModelState] = {
     type Part = Option[(ModelState, Long, Long)]
     val l = learner
     val add: (Part, Part) => Part = {
@@ -508,4 +508,14 @@ final class RoundDriver(spec: PipelineSpec, init: Option[ModelState]) {
         m
       }
   }
+}
+
+object RoundDriver {
+  /** From this many training partitions on, a plain average merges its
+    * replicas in [[RoundDriver.treeMerge]]'s log-depth tree instead of a
+    * driver `collect` (SCALE.md: at 1000 executors the driver would
+    * otherwise hold W models at once). The driver picks the merge from the
+    * partition count it observes; local runs stay below it, and
+    * PipelineSparkSuite checks the two merges against each other. */
+  val TreeMergeMinPartitions = 64
 }

@@ -631,9 +631,9 @@ object MLOps {
     // hash-compares actual learned values across engines. Feature dim is
     // held at 3 (+bias => 4x4 system) so the oracle solves in closed form
     // (Cramer via generated Leibniz expansions). The fitted SET is exactly
-    // reproducible too: partitions are id % 8 sorted by id (explicit
-    // partitioner — not sampled ranges), and the 2-of-10 held-out ring
-    // keeps only the LAST <=256 test points per partition out of training
+    // reproducible too: partitions are id % 8 sorted by id (routedById —
+    // not sampled ranges), and the 2-of-10 held-out ring keeps only the
+    // LAST <=256 test points per partition out of training
     // (earlier ring slots are evicted back into the fit), which the oracle
     // replays with two window functions. Weights quantized to 6 decimals
     // absorb the engines' different summation orders (~1e-12 apart).
@@ -642,16 +642,9 @@ object MLOps {
         expr("transform(slice(embedding, 1, 3), x -> CAST(x AS DOUBLE))")
           .as("features"),
         col("label").cast(DoubleType).as("target"))
-      val keyed = base.rdd
-        .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-      val byMod = new org.apache.spark.Partitioner {
-        def numPartitions: Int = 8
-        def getPartition(key: Any): Int = (key.asInstanceOf[Long] % 8L).toInt
-      }
-      val rdd = keyed.repartitionAndSortWithinPartitions(byMod).map(_._2)
       val fitted = Trainer.fit(s,
         PipelineSpec(17, "ORR", Map("lambda" -> 1.0), Nil, "Synchronous",
-          rounds = 1), rdd)
+          rounds = 1), routedById(base, 8))
       val w = fitted.model.asInstanceOf[graft.ml.RlsModel].w
       import s.implicits._
       w.toSeq.zipWithIndex
@@ -786,13 +779,14 @@ object MLOps {
     // slot, or the split-now verdict), then hash-compares ONLY class-(a)
     // values: the split attr/threshold, both children's raw Welford
     // state, counts, and cumulative loss. Sequence: vec_id < 155 on one
-    // sorted partition through the Trainer ring (31 diverted points never
-    // fill the 256 ring, so fitted = the 125 cnt%10<8 points); grace=64
-    // puts the one split exactly at fitted step 64 and leaves each child
-    // < 64 points — no second boundary, so the replay needs exactly one
-    // decision. The oracle replays root then children as two recursive
-    // CTEs and recomputes the decision inline; if its decision differed,
-    // the children CTE goes empty and the gate fails loudly.
+    // vec_id-sorted partition (routedById) through the Trainer ring (31
+    // diverted points never fill the 256 ring, so fitted = the 125
+    // cnt%10<8 points); grace=64 puts the one split exactly at fitted
+    // step 64 and leaves each child < 64 points — no second boundary, so
+    // the replay needs exactly one decision. The oracle replays root then
+    // children as two recursive CTEs and recomputes the decision inline;
+    // if its decision differed, the children CTE goes empty and the gate
+    // fails loudly.
     Op("ml24_ht_value_parity", (s, d) => {
       val base = T.embeddings(s, d).filter(col("vec_id") < 155)
         .select(col("vec_id").as("id"),
@@ -800,17 +794,10 @@ object MLOps {
             .as("features"),
           when(element_at(col("embedding"), 1) > 0, 1.0).otherwise(0.0)
             .as("target"))
-      val keyed = base.rdd
-        .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-      val one = new org.apache.spark.Partitioner {
-        def numPartitions: Int = 1
-        def getPartition(key: Any): Int = 0
-      }
-      val rdd = keyed.repartitionAndSortWithinPartitions(one).map(_._2)
       val fitted = Trainer.fit(s,
         PipelineSpec(24, "HT", Map("delta" -> 0.05, "tau" -> 0.05,
           "grace" -> 64.0, "classes" -> 2.0), Nil, "Synchronous", rounds = 1),
-        rdd)
+        routedById(base, 1))
       val root = fitted.model.asInstanceOf[graft.ml.HTModel].root
       require(!root.isLeaf && root.left.isLeaf && root.right.isLeaf,
         s"ml24 expects exactly one root split; tree has ${root.countNodes} nodes")
@@ -846,25 +833,19 @@ object MLOps {
     // (bias-seeded ascending dot, tanh, linear output), squared-error
     // loss, and the full backprop update order (dH from PRE-update w2,
     // then w2 -= lr*dOut*h, then g = dH*(1-h^2) into w1). Sequence:
-    // vec_id < 40 through the Trainer ring (8 diverted, no evictions) =
-    // 32 fitted points; target = x0, so errors stay O(0.4).
+    // vec_id < 40 on one vec_id-sorted partition (routedById) through the
+    // Trainer ring (8 diverted, no evictions) = 32 fitted points;
+    // target = x0, so errors stay O(0.4).
     Op("ml25_nn_value_parity", (s, d) => {
       val base = T.embeddings(s, d).filter(col("vec_id") < 40)
         .select(col("vec_id").as("id"),
           expr("transform(slice(embedding, 1, 2), x -> CAST(x AS DOUBLE))")
             .as("features"),
           element_at(col("embedding"), 1).cast(DoubleType).as("target"))
-      val keyed = base.rdd
-        .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-      val one = new org.apache.spark.Partitioner {
-        def numPartitions: Int = 1
-        def getPartition(key: Any): Int = 0
-      }
-      val rdd = keyed.repartitionAndSortWithinPartitions(one).map(_._2)
       val fitted = Trainer.fit(s,
         PipelineSpec(25, "NN", Map("hidden" -> 2.0, "classes" -> 1.0,
           "seed" -> 42.0, "lr" -> 0.05), Nil, "Synchronous", rounds = 1),
-        rdd)
+        routedById(base, 1))
       val m = fitted.model.asInstanceOf[graft.ml.MlpModel]
       import s.implicits._
       ((m.w1.toSeq.zipWithIndex.map { case (w, i) => (1L, i.toLong, w) } ++
@@ -1313,7 +1294,7 @@ object MLOps {
   private def fgmFalseAlarmThreshold = 1.2
 
   /** Engine side of ml31: stage the three batch slices as three
-    * triggers, run the STREAMING trainer in routed mode — row (pid, seq)
+    * triggers, run the STREAMING trainer — row (pid, seq)
     * lands on worker pid and trains in seq order, the reference's
     * partitionCustom assignment — and emit the raw final model plus the
     * post-decision quanta of batches 1 and 2. */
@@ -1327,14 +1308,11 @@ object MLOps {
               .as("features"),
             when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target"))
       }: _*))
-    val schema = StructType(Seq(
-      StructField("pid", LongType), StructField("seq", LongType),
-      StructField("features", ArrayType(DoubleType)),
-      StructField("target", DoubleType)))
-    val fit = graft.streaming.StreamingTrainer.fitStream(s, dir, schema,
+    val fit = graft.streaming.StreamingTrainer.fitStream(s, dir,
+      graft.streaming.StreamingTrainer.RoutedSchema,
       PipelineSpec(31, "PA", Map("C" -> 1.0), Nil, "FGM",
         protocolHp = Map("threshold" -> fgmFalseAlarmThreshold)),
-      partitionsPerBatch = 2, routed = true)
+      partitionsPerBatch = 2)
     val m = fit.model.asInstanceOf[graft.ml.LinearModel]
     val c = fit.curve.sortBy(_.batch)
     require(c.size == 3, s"fgm31 expected 3 micro-batches, got ${c.size}")
@@ -1451,10 +1429,11 @@ object MLOps {
        |ORDER BY dim""".stripMargin
   }
 
-  /** Shared engine side of ml26/ml27/ml28: a 2-partition (vec_id % 2)
-    * deterministic PA fit through the full Trainer machinery (ring split,
-    * ModelWire chunking, protocol aggregate), emitting the raw unrounded
-    * final global — w per dim, b as dim 4, cumulative loss as dim 5.
+  /** Shared engine side of ml26-ml30: a deterministic 2-partition PA fit
+    * (vec_id < 320 routed by vec_id, see [[routedById]]) through the full
+    * Trainer machinery (ring split, ModelWire chunking, protocol
+    * aggregate), emitting the raw unrounded final global — w per dim, b as
+    * dim 4, cumulative loss as dim 5.
     */
   private def twoWorkerProtocolFit(s: SparkSession, d: String, id: Int,
       protocol: String, protocolHp: Map[String, Double],
@@ -1464,16 +1443,9 @@ object MLOps {
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
           .as("features"),
         when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target"))
-    val keyed = base.rdd
-      .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-    val byMod = new org.apache.spark.Partitioner {
-      def numPartitions: Int = 2
-      def getPartition(key: Any): Int = (key.asInstanceOf[Long] % 2L).toInt
-    }
-    val rdd = keyed.repartitionAndSortWithinPartitions(byMod).map(_._2)
     val fitted = Trainer.fit(s,
       PipelineSpec(id, "PA", Map("C" -> 1.0), Nil, protocol,
-        protocolHp = protocolHp, rounds = rounds), rdd)
+        protocolHp = protocolHp, rounds = rounds), routedById(base, 2))
     val m = fitted.model.asInstanceOf[graft.ml.LinearModel]
     import s.implicits._
     ((m.w.toSeq.zipWithIndex.map { case (wi, i) => (i.toLong, wi) } :+
@@ -1483,28 +1455,29 @@ object MLOps {
       .orderBy("dim")
   }
 
-  /** Engine side of ml19/ml20: pin the stream to ONE vec_id-sorted
+  /** The (features, target) rows of `base`'s (id, features, target) on
+    * `k` training partitions: id % k picks the partition and id orders it.
+    * This is the streaming trainer's router with pid = seq = id, so the
+    * batch parity gates and the streaming trainer share one data path. */
+  private[graft] def routedById(base: DataFrame, k: Int)
+      : RDD[(Array[Double], Double)] =
+    graft.streaming.StreamingTrainer.routedRows(base.select(
+      col("id").as("pid"), col("id").as("seq"), col("features"),
+      col("target")), k)
+
+  /** One vec_id-sorted partition of (4-dim features, target) — the
+    * replayable-sequence input shared by the ml19-ml23 trajectory gates. */
+  private def seqRdd(s: SparkSession, d: String,
+      target: org.apache.spark.sql.Column): RDD[(Array[Double], Double)] =
+    routedById(T.embeddings(s, d).select(col("vec_id").as("id"),
+      expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
+        .as("features"),
+      target.as("target")), 1)
+
+  /** Engine side of ml19-ml21: pin the stream to ONE vec_id-sorted
     * partition (SingleLearner shape), fit one round through Trainer (ring
     * diversion and all), and emit the raw unrounded model — w per dim,
     * b as dim 4, cumulative loss as dim 5. */
-  /** One vec_id-sorted partition of (4-dim features, target) — the
-    * replayable-sequence input shared by the ml19-ml22 trajectory gates. */
-  private def seqRdd(s: SparkSession, d: String,
-      target: org.apache.spark.sql.Column)
-      : org.apache.spark.rdd.RDD[(Array[Double], Double)] = {
-    val base = T.embeddings(s, d).select(col("vec_id").as("id"),
-      expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
-        .as("features"),
-      target.as("target"))
-    val keyed = base.rdd
-      .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-    val one = new org.apache.spark.Partitioner {
-      def numPartitions: Int = 1
-      def getPartition(key: Any): Int = 0
-    }
-    keyed.repartitionAndSortWithinPartitions(one).map(_._2)
-  }
-
   private def seqParityFit(s: SparkSession, d: String, id: Int,
       learner: String, hp: Map[String, Double],
       target: org.apache.spark.sql.Column =

@@ -92,26 +92,24 @@ object StreamOps {
       arriving.filter(col("doc_id") < 2500),
       arriving.filter(col("doc_id") >= 2500)))
 
-  /** The st05/st16/st43 training stream: the embeddings as (features,
-    * target) rows in 4 equal-width vec_id ranges, staged in vec_id order,
-    * so range k is trigger k. */
+  /** The st05/st16/st43 training stream: the embeddings as
+    * [[StreamingTrainer.RoutedSchema]] rows with pid = seq = vec_id, in 4
+    * equal-width vec_id ranges staged in vec_id order, so range k is
+    * trigger k and training partition p of k folds the ids = p mod k in
+    * id order. */
   private def stagedTrainStream(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, StructType) = {
-    val dir = Streaming.stagedDir("train", d) { dir =>
+      d: String): String =
+    Streaming.stagedDir("train", d) { dir =>
       val rows = T.embeddings(s, d).select(
-          col("vec_id"),
+          col("vec_id").cast(LongType).as("pid"),
+          col("vec_id").cast(LongType).as("seq"),
           col("embedding").cast(ArrayType(DoubleType)).as("features"),
           when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-      val ids = rows.agg(min("vec_id").cast(LongType), max("vec_id").cast(LongType)).head()
+      val ids = rows.agg(min("pid"), max("pid")).head()
       val (lo, step) = (ids.getLong(0), (ids.getLong(1) - ids.getLong(0)) / 4 + 1)
-      Streaming.stage(s, dir, (0 until 4).map(k => rows
-        .filter(col("vec_id") >= lo + k * step && col("vec_id") < lo + (k + 1) * step)
-        .select("features", "target")): _*)
+      Streaming.stage(s, dir, (0 until 4).map(k =>
+        rows.filter(col("pid") >= lo + k * step && col("pid") < lo + (k + 1) * step)): _*)
     }
-    (dir, StructType(Seq(
-      StructField("features", ArrayType(DoubleType)),
-      StructField("target", DoubleType))))
-  }
 
   private def uniq(prefix: String): String =
     s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -296,13 +294,13 @@ object StreamOps {
         |ORDER BY user_id, session_start_us""".stripMargin)),
     // ------------------------------------------------------------------
     // Continuous training: 4 staged files = 4 micro-batches = 4 protocol
-    // rounds, per-batch replica merge from the running global (the
-    // reference's continuous PS exchange, SURVEY §3.2/§3.4(b)). Output: the
-    // per-batch learning curve + shipping stats.
+    // rounds on one routed training partition, each seeded from the
+    // running global (the reference's continuous PS exchange, SURVEY
+    // §3.2/§3.4(b)). Output: the per-batch learning curve + shipping stats.
     Op("st05_streaming_train", (s, d) => {
       import s.implicits._
-      val (dir, schema) = stagedTrainStream(s, d)
-      val fit = StreamingTrainer.fitStream(s, dir, schema,
+      val fit = StreamingTrainer.fitStream(s, stagedTrainStream(s, d),
+        StreamingTrainer.RoutedSchema,
         graft.pipeline.PipelineSpec(11, "PA", Map("C" -> 0.01), Nil, "Synchronous"))
       // hash-gated curve invariants (the ml01-08 trainOp pattern applied to
       // the STREAMING curve): batch ids are exactly 0..3 (four staged
@@ -346,10 +344,10 @@ object StreamOps {
     // MlSuite/PipelineSparkSuite).
     Op("st16_drift_stream_train", (s, d) => {
       import s.implicits._
-      // same staged stream as st05 (the drift gate lives in the protocol,
-      // not the data)
-      val (dir, schema) = stagedTrainStream(s, d)
-      val fit = StreamingTrainer.fitStream(s, dir, schema,
+      // same staged stream as st05, routed by vec_id % 4 (the drift gate
+      // lives in the protocol, not the data)
+      val fit = StreamingTrainer.fitStream(s, stagedTrainStream(s, d),
+        StreamingTrainer.RoutedSchema,
         graft.pipeline.PipelineSpec(16, "PA", Map("C" -> 0.01), Nil, "GM",
           protocolHp = Map("threshold" -> 1e12)),
         partitionsPerBatch = 4)
@@ -2045,9 +2043,10 @@ object StreamOps {
     // or a quantum reset shipping vectors each flip a hashed boolean.
     Op("st43_fgm_stream_train", (s, d) => {
       import s.implicits._
-      // same staged stream as st05/st16 (the protocol is the variable)
-      val (dir, schema) = stagedTrainStream(s, d)
-      val fit = StreamingTrainer.fitStream(s, dir, schema,
+      // same staged stream as st05/st16, routed by vec_id % 4 (the
+      // protocol is the variable)
+      val fit = StreamingTrainer.fitStream(s, stagedTrainStream(s, d),
+        StreamingTrainer.RoutedSchema,
         graft.pipeline.PipelineSpec(43, "PA", Map("C" -> 0.01), Nil, "FGM",
           protocolHp = Map("threshold" -> 1e12)),
         partitionsPerBatch = 4)

@@ -22,13 +22,6 @@ case class PipelineSpec(
       * [[graft.ml.HeldOutRing]]); 0 holds nothing out, so every point
       * trains and the held-out scores read 0. */
     testCap: Int = 256,
-    /** Replica-merge strategy switchover: above this many training
-      * partitions, plain-averaging protocols merge replicas in a log-depth
-      * tree instead of a driver `collect`, in either trainer (SCALE.md — at
-      * 1000 executors the driver would otherwise hold W models at once).
-      * Local gate runs stay below it, so both paths are equivalence-tested
-      * explicitly in PipelineSparkSuite. */
-    treeMergeThreshold: Int = 64,
     /** Message cap on shipped model payloads, in doubles (reference
       * `maxMsgParams`, DefaultJobParameters.scala:6): every shipped replica
       * is split into <=maxMsgParams-double [[graft.ml.ParamBlock]]s and

@@ -4,8 +4,7 @@ import graft.ml._
 import graft.pipeline.PipelineSpec
 import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
@@ -29,41 +28,41 @@ object StreamingTrainer {
   final case class StreamFit(model: ModelState, learner: OnlineLearner,
       protocolName: String, stats: ProtocolStats, curve: Seq[BatchPoint])
 
-  /** `dir` holds parquet files of (features: array<double>, target: double);
-    * each file becomes one micro-batch (one protocol round).
-    * `partitionsPerBatch` > 0 re-spreads each micro-batch to that many
-    * training partitions — a single small file arrives as ONE partition,
-    * which the resolution rules force to CentralizedTraining; multi-replica
-    * protocols (GM/FGM gating, averaging) need the spread.
+  /** The schema of a training stream: (pid, seq, features, target). */
+  val RoutedSchema: StructType = StructType(Seq(
+    StructField("pid", LongType), StructField("seq", LongType),
+    StructField("features", ArrayType(DoubleType)),
+    StructField("target", DoubleType)))
+
+  /** `dir` holds parquet files of [[RoutedSchema]] rows; each file becomes
+    * one micro-batch (one protocol round). Rows are routed
+    * deterministically — the reference's partitionCustom record-to-worker
+    * assignment (FlinkLearning.scala:70-87, random_partitioner replaced by
+    * an explicit key): row (pid, seq) lands on training partition
+    * pid % partitionsPerBatch, and each partition trains in ascending
+    * (pid, seq) order, so two pids share a partition whenever
+    * pid >= partitionsPerBatch and each keeps its rows in seq order. One
+    * partition forces CentralizedTraining under the resolution rules;
+    * multi-replica protocols (GM/FGM gating, averaging) need more. The
+    * routed batch crosses the shuffle as columnar [[Block]]s, at most one
+    * per (source task, training partition), see [[routedRows]].
     *
-    * `routed` = true switches to DETERMINISTIC worker routing — the
-    * reference's partitionCustom record-to-worker assignment
-    * (FlinkLearning.scala:70-87, random_partitioner replaced by an explicit
-    * key): the schema becomes (pid: long, seq: long, features, target), row
-    * (pid, seq) lands on training partition pid % partitionsPerBatch and
-    * partitions train in ascending (pid, seq) order: two pids share a
-    * partition whenever pid >= partitionsPerBatch, and each keeps its rows
-    * in seq order. Replayable trajectories (ml31's cross-engine FGM gate)
-    * need this; the default mode's round-robin repartition does not
-    * guarantee either assignment or order. The routed batch crosses the
-    * shuffle as columnar [[Block]]s, at most one per (source task,
-    * training partition), see [[routedRows]].
+    * `routed` names no choice: routing is the only data path, and the
+    * argument must be true. It stays in the signature only because
+    * perfbench's train_stream passes `routed = true` by name.
     */
   def fitStream(spark: SparkSession, dir: String, schema: StructType,
-      spec: PipelineSpec, partitionsPerBatch: Int = 0,
-      routed: Boolean = false,
+      spec: PipelineSpec, partitionsPerBatch: Int = 1,
+      routed: Boolean = true,
       init: Option[ModelState] = None): StreamFit = {
+    require(routed, "fitStream has one data path: routed = true")
+    require(partitionsPerBatch >= 1,
+      s"partitionsPerBatch must be at least 1, got $partitionsPerBatch")
     val rounds = new RoundDriver(spec, init)
     val curve = ArrayBuffer[BatchPoint]()
 
     val trainBatch: (DataFrame, Long) => Unit = { (df, batchId) =>
-      val rdd =
-        if (routed) routedRows(df, math.max(1, partitionsPerBatch))
-        else {
-          val rdd0 = df.queryExecution.toRdd.map(point(_, 0))
-          if (partitionsPerBatch > 0) rdd0.repartition(partitionsPerBatch)
-          else rdd0
-        }
+      val rdd = routedRows(df, partitionsPerBatch)
       rounds.round(rounds.resolve(rdd), testCap = 0).foreach { merged =>
         val theta = rounds.protocol match {
           case Some(f: FGM) => f.theta
@@ -77,11 +76,6 @@ object StreamingTrainer {
     StreamFit(rounds.global.getOrElse(rounds.learner.init(1)), rounds.learner,
       rounds.protocolName, rounds.stats, curve.toSeq)
   }
-
-  /** The one row reader of both modes: (features, target) at columns `at`
-    * and `at + 1` of a batch's `InternalRow`. */
-  private def point(row: InternalRow, at: Int): (Array[Double], Double) =
-    (row.getArray(at).toDoubleArray(), row.getDouble(at + 1))
 
   /** One source task's rows of one training partition, in columns: row i
     * is (pid(i), seq(i)) with features x(off(i) until off(i + 1)) and
@@ -131,19 +125,20 @@ object StreamingTrainer {
       seq.result(), off.result(), x.result(), y.result())
   }
 
-  /** The routed mode's data path: each source task packs its rows into one
-    * [[Block]] per training partition (pid % parts), a plain partitionBy
-    * moves at most (source tasks x parts) blocks, and each training
-    * partition merges its blocks lazily by (pid, seq), ties going to the
-    * lower source task. Reads columns (pid, seq, features, target) and
-    * yields the (features, target) rows of each training partition. */
+  /** The one data path into every trainer's training partitions: each
+    * source task packs its rows into one [[Block]] per training partition
+    * (pid % parts), a plain partitionBy moves at most (source tasks x
+    * parts) blocks, and each training partition merges its blocks lazily
+    * by (pid, seq), ties going to the lower source task. Reads
+    * [[RoutedSchema]] columns and yields the (features, target) rows of
+    * each training partition. */
   private[graft] def routedRows(df: DataFrame, parts: Int) =
     df.queryExecution.toRdd.mapPartitionsWithIndex { (src, rows) =>
       val blocks = Array.fill(parts)(new BlockPacker)
       rows.foreach { row =>
         val pid = row.getLong(0)
-        val (x, y) = point(row, 2)
-        blocks((pid % parts).toInt).add(pid, row.getLong(1), x, y)
+        blocks((pid % parts).toInt).add(pid, row.getLong(1),
+          row.getArray(2).toDoubleArray(), row.getDouble(3))
       }
       blocks.iterator.zipWithIndex.collect {
         case (b, tp) if !b.isEmpty => (tp, b.result(src))

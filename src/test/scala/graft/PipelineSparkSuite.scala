@@ -138,25 +138,35 @@ class PipelineSparkSuite extends AnyFunSuite {
   }
 
   test("treeReduce merge path matches the collect merge path") {
-    val data = spark.sparkContext.parallelize(synthetic(6000, 5, 77L), 8)
-    val collectFit = Trainer.fit(spark,
-      PipelineSpec(41, "PA", Map("C" -> 0.01), Nil, "Synchronous",
-        rounds = 2, treeMergeThreshold = 1000), data)
-    val treeFit = Trainer.fit(spark,
-      PipelineSpec(41, "PA", Map("C" -> 0.01), Nil, "Synchronous",
-        rounds = 2, treeMergeThreshold = 2), data)
-    assert(treeFit.model.n == collectFit.model.n)
-    val a = collectFit.model.params
-    val b = treeFit.model.params
+    val spec = PipelineSpec(41, "PA", Map("C" -> 0.01), Nil, "Synchronous")
+    val driver = new RoundDriver(spec, None)
+    val l = driver.learner
+    // 8 replicas, each trained on its own partition
+    val replicas = spark.sparkContext.parallelize(synthetic(6000, 5, 77L), 8)
+      .mapPartitions { it =>
+        val m = l.init(5)
+        it.foreach { case (x, y) => l.fit(m, x, y) }
+        l.finish(m)
+        Iterator.single(m)
+      }
+    val treeFit = driver.treeMerge(replicas).get
+    val collectStats = ProtocolStats()
+    val window = spark.sparkContext.broadcast(IndexedSeq(Option.empty[ModelState]))
+    val collectFit =
+      try Protocols.round(replicas, window, Protocols.create("Synchronous", Map.empty),
+        l, spec.maxMsgParams, collectStats).get
+      finally window.destroy()
+    assert(treeFit.n == collectFit.n && treeFit.n == 6000L)
+    val a = collectFit.params
+    val b = treeFit.params
     assert(a.length == b.length)
     // same weighted average up to float re-association in the tree fold
     a.zip(b).foreach { case (x, y) =>
       assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(x)),
         s"param drift: $x vs $y")
     }
-    assert(math.abs(treeFit.score - collectFit.score) < 1e-6)
     // the tree charges the ledger as the collect round does
-    assert(treeFit.stats == collectFit.stats)
+    assert(driver.stats == collectStats && collectStats.modelsShipped == 8L)
   }
 
   test("map-side drift gate: non-drifted replicas never reach the driver merge") {
@@ -362,12 +372,14 @@ class PipelineSparkSuite extends AnyFunSuite {
     val fitted = Trainer.fit(spark, spec, data)
     assert(fitted.model.n > 0)
     assert(fitted.responses(1L).nonEmpty)
-    // the same rows as one micro-batch, spread over 16 partitions
+    // the same rows as one micro-batch, routed over 16 partitions by row
+    // index (pid = seq), so 11 of them are empty
     val dir = Streaming.scratchDir("tiny_train_")
-    val df = rows.toDF("features", "target")
+    val df = rows.zipWithIndex.map { case ((x, y), i) => (i.toLong, i.toLong, x, y) }
+      .toDF("pid", "seq", "features", "target")
     Streaming.stage(spark, dir, df)
-    val streamed = StreamingTrainer.fitStream(spark, dir, df.schema, spec,
-      partitionsPerBatch = 16)
+    val streamed = StreamingTrainer.fitStream(spark, dir,
+      StreamingTrainer.RoutedSchema, spec, partitionsPerBatch = 16)
     assert(streamed.model.n == rows.size.toLong)
     assert(streamed.protocolName == "Synchronous")
     // no row at all: nothing to train on
@@ -404,8 +416,8 @@ class PipelineSparkSuite extends AnyFunSuite {
       val spec = PipelineSpec(45, "PA", Map("C" -> 0.01), Nil, proto,
         protocolHp = hp, rounds = 3, testCap = 0)
       val batch = Trainer.fit(spark, spec, data)
-      val stream = StreamingTrainer.fitStream(spark, dir, df.schema, spec,
-        partitionsPerBatch = parts, routed = true)
+      val stream = StreamingTrainer.fitStream(spark, dir,
+        StreamingTrainer.RoutedSchema, spec, partitionsPerBatch = parts)
       val (b, st) = (batch.model, stream.model)
       Seq(
         "protocol" -> (stream.protocolName == proto && batch.protocolName == proto),

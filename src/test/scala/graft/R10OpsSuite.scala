@@ -10,34 +10,30 @@ import scala.jdk.CollectionConverters._
 
 /** Semantic regression guards for the round-10 additions: the streaming
   * trainer's two-phase FGM path (frozen micro-batches must move scalars,
-  * never parameter blocks), the deterministic pid-routed mode behind ml31,
+  * never parameter blocks), the deterministic pid routing behind ml31,
   * and ml31's all-or-nothing invariant at any fixture.
   */
 class R10OpsSuite extends AnyFunSuite {
   lazy val spark = TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def trainSchema = StructType(Seq(
-    StructField("features", ArrayType(DoubleType)),
-    StructField("target", DoubleType)))
-
-  private def stagePlain(nFiles: Int): String = {
+  /** `nFiles` vec_id-range files of routed rows, pid = seq = vec_id. */
+  private def stageRanges(nFiles: Int): String = {
     val dir = graft.streaming.Streaming.scratchDir("r10_train_")
     T.embeddings(spark, sf).select(
-        col("vec_id"),
+        col("vec_id").as("pid"), col("vec_id").as("seq"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
           .as("features"),
         when(col("label") >= 5, 1.0).otherwise(-1.0).as("target"))
-      .repartitionByRange(nFiles, col("vec_id"))
-      .select("features", "target")
+      .repartitionByRange(nFiles, col("pid"))
       .write.mode("append").parquet(dir)
     dir
   }
 
   test("streaming FGM frozen micro-batches collect ZERO parameter blocks " +
     "— the blocks and bytes ledgers agree (r9 advisor medium)") {
-    val dir = stagePlain(4)
-    val fit = StreamingTrainer.fitStream(spark, dir, trainSchema,
+    val dir = stageRanges(4)
+    val fit = StreamingTrainer.fitStream(spark, dir, StreamingTrainer.RoutedSchema,
       PipelineSpec(101, "PA", Map("C" -> 0.01), Nil, "FGM",
         protocolHp = Map("threshold" -> 1e12)),
       partitionsPerBatch = 4)
@@ -65,13 +61,9 @@ class R10OpsSuite extends AnyFunSuite {
           .as("features"),
         when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target"))
       .coalesce(1).write.parquet(dir)
-    val schema = StructType(Seq(
-      StructField("pid", LongType), StructField("seq", LongType),
-      StructField("features", ArrayType(DoubleType)),
-      StructField("target", DoubleType)))
-    def run() = StreamingTrainer.fitStream(spark, dir, schema,
+    def run() = StreamingTrainer.fitStream(spark, dir, StreamingTrainer.RoutedSchema,
       PipelineSpec(102, "PA", Map("C" -> 1.0), Nil, "Synchronous"),
-      partitionsPerBatch = 2, routed = true)
+      partitionsPerBatch = 2)
     val a = run(); val b = run()
     assert(a.model.params.sameElements(b.model.params),
       "routed fit is not replayable — partition assignment or order drifted")
@@ -104,14 +96,37 @@ class R10OpsSuite extends AnyFunSuite {
     }
     assert(got.count(_._1 == 3) == 0)
 
+    // the batch parity ops' input: pid = seq = a random, unique id over 3
+    // source partitions. Each training partition must hold exactly the
+    // rows, in the order, of the reference: key by id, send id % k to
+    // partition k and sort by id
+    val ids = new scala.util.Random(11).shuffle((0L until 2000L).toList).take(300)
+    val byId = spark.sparkContext.parallelize(ids.map(id =>
+      (id, id, Array(id * 0.5, -id.toDouble), id % 7 - 3.0)), 3)
+    Seq(2, 8).foreach { k =>
+      val routed = StreamingTrainer.routedRows(
+        byId.toDF("pid", "seq", "features", "target"), k)
+        .mapPartitions(it => Iterator.single(it.map { case (x, y) => (x.toSeq, y) }.toList))
+        .collect().toSeq
+      val reference = byId.map { case (id, _, x, y) => (id, (x.toSeq, y)) }
+        .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
+          def numPartitions: Int = k
+          def getPartition(key: Any): Int = (key.asInstanceOf[Long] % k).toInt
+        })
+        .mapPartitions(it => Iterator.single(it.map(_._2).toList))
+        .collect().toSeq
+      assert(routed.size == k && routed == reference,
+        s"k = $k: the routed partitions differ from the per-id partitioner's")
+    }
+
     // a routed fit checkpoints outside its input dir
     val dir = graft.streaming.Streaming.scratchDir("r10_ckpt_")
     graft.streaming.Streaming.stage(spark, dir,
       rows.map { case (pid, seq, _, y) => (pid, seq, Array(seq.toDouble, 1.0), y) }
         .toDF("pid", "seq", "features", "target"))
-    val fit = StreamingTrainer.fitStream(spark, dir, df.schema,
+    val fit = StreamingTrainer.fitStream(spark, dir, StreamingTrainer.RoutedSchema,
       PipelineSpec(103, "PA", Map("C" -> 1.0), Nil, "Synchronous"),
-      partitionsPerBatch = parts, routed = true)
+      partitionsPerBatch = parts)
     assert(fit.model.n == rows.size.toLong)
     def ls(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val it = java.nio.file.Files.list(p)

@@ -126,15 +126,12 @@ class R12OpsSuite extends AnyFunSuite {
     "with no shared seed, and trains fine once seeded (ADVICE r11 medium)") {
     val dir = graft.streaming.Streaming.scratchDir("r12_mbk_")
     T.embeddings(spark, "/root/testdata/sf0.001").select(
-        col("vec_id"),
+        col("vec_id").as("pid"), col("vec_id").as("seq"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
           .as("features"), lit(0.0).as("target"))
-      .repartitionByRange(2, col("vec_id"))
-      .select("features", "target")
+      .repartitionByRange(2, col("pid"))
       .write.mode("append").parquet(dir)
-    val schema = StructType(Seq(
-      StructField("features", ArrayType(DoubleType)),
-      StructField("target", DoubleType)))
+    val schema = StreamingTrainer.RoutedSchema
     val spec = PipelineSpec(120, "MiniBatchKMeans", Map("k" -> 4.0), Nil,
       "Synchronous")
     // unseeded: the guard must surface through the streaming query, not

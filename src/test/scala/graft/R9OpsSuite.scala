@@ -56,20 +56,14 @@ class R9OpsSuite extends AnyFunSuite {
       < 1e-12)
   }
 
-  private def twoWorkerRdd() = {
-    val base = T.embeddings(spark, sf).filter(col("vec_id") < 320)
+  /** ml26-ml30's input: vec_id < 320 on 2 partitions routed by vec_id. */
+  private def twoWorkerRdd() =
+    graft.operators.MLOps.routedById(T.embeddings(spark, sf)
+      .filter(col("vec_id") < 320)
       .select(col("vec_id").as("id"),
         expr("transform(slice(embedding, 1, 4), x -> CAST(x AS DOUBLE))")
           .as("features"),
-        when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target"))
-    val keyed = base.rdd
-      .map(r => (r.getLong(0), (r.getSeq[Double](1).toArray, r.getDouble(2))))
-    val byMod = new org.apache.spark.Partitioner {
-      def numPartitions: Int = 2
-      def getPartition(key: Any): Int = (key.asInstanceOf[Long] % 2L).toInt
-    }
-    keyed.repartitionAndSortWithinPartitions(byMod).map(_._2)
-  }
+        when(col("label") % 2 === 1, 1.0).otherwise(-1.0).as("target")), 2)
 
   private def fitParams(protocol: String, hp: Map[String, Double],
       rounds: Int): (Array[Double], Long) = {
